@@ -31,8 +31,16 @@ query surface already proves individually:
 Scale posture: every stage up to the gold agg is map-only (canonical
 text, signals, gate, bucket) except the digest-keyed dedup window (ONE
 shuffle on the 32-char digest — text never shuffles twice) and the
-final (split, lang) hash-agg. The optional near-dedup stage shuffles on
-(doc_id)/(band_hash) only, per operators/dedup.py's posture.
+final (split, lang) hash-agg. ``run_pipeline`` builds each layer
+once: silver is written, and the dedup reads the written silver back;
+the corpus is written, and gold aggregates the written corpus; the
+returned gold is ``gold.parquet`` read back. No layer is derived from
+``documents`` twice, and every read-back uses the schema the layer was
+written with, so it runs no schema-inference job. ``build_deduped``
+(and the registered ``q_corpus_pipeline`` above it) composes the same
+silver and dedup steps as one plan. The optional near-dedup stage
+shuffles on (doc_id)/(band_hash) only, per operators/dedup.py's
+posture.
 """
 
 from __future__ import annotations
@@ -99,16 +107,22 @@ def build_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def build_deduped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-gated docs, exact-deduplicated on the canonical digest
-    (first doc_id per digest survives — one shuffle on the digest)."""
-    silver = build_silver(spark, sf_dir).filter(F.col("keep"))
+def exact_dedup(silver: DataFrame) -> DataFrame:
+    """Quality-gated docs of ``silver``, exact-deduplicated on the
+    canonical digest (first doc_id per digest survives — one shuffle on
+    the digest)."""
     w = Window.partitionBy("digest").orderBy("doc_id")
     return (
-        silver.withColumn("__rn", F.row_number().over(w))
+        silver.filter(F.col("keep"))
+        .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
+
+
+def build_deduped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`exact_dedup` over :func:`build_silver`, as one plan."""
+    return exact_dedup(build_silver(spark, sf_dir))
 
 
 def build_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -173,6 +187,13 @@ def build_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _write_and_read(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+    """Write ``df`` as parquet (overwrite) and return the written layer,
+    read back with the schema it was written with (no inference job)."""
+    df.write.mode("overwrite").parquet(path)
+    return spark.read.schema(df.schema).parquet(path)
+
+
 def run_pipeline(
     spark: SparkSession,
     sf_dir: str,
@@ -181,13 +202,18 @@ def run_pipeline(
 ) -> DataFrame:
     """Materialize silver/dedup/gold layers as parquet (overwrite — the
     reference's WRITE_TRUNCATE refresh semantics, dump_bigq.py:137).
-    With ``near_dedup=True``, MinHash-LSH near-duplicate pairs over the
+    Each layer is built ONCE, from the previous layer's parquet read
+    back (the reference's checkpoint-then-reload flow, main.py:123-133
+    → dump_bigq.py:88-132), and the returned gold is ``gold.parquet``
+    read back, so nothing upstream is recomputed. With
+    ``near_dedup=True``, MinHash-LSH near-duplicate pairs over the
     surviving canonical texts additionally drop the larger doc_id of
     each verified pair before the gold accounting (the q_dedup_minhash
     operator as a pipeline stage)."""
-    silver = build_silver(spark, sf_dir)
-    silver.write.mode("overwrite").parquet(os.path.join(out_dir, "silver.parquet"))
-    kept = build_deduped(spark, sf_dir)
+    silver = _write_and_read(
+        spark, build_silver(spark, sf_dir), os.path.join(out_dir, "silver.parquet")
+    )
+    kept = exact_dedup(silver)
     if near_dedup:
         from stockmarketdata_dwb_etl_spark.operators.dedup import (
             minhash_near_dups,
@@ -201,14 +227,13 @@ def run_pipeline(
             F.greatest("id_a", "id_b").alias("doc_id")
         ).distinct()
         kept = kept.join(losers, "doc_id", "left_anti")
-    kept.write.mode("overwrite").parquet(os.path.join(out_dir, "corpus.parquet"))
+    corpus = _write_and_read(spark, kept, os.path.join(out_dir, "corpus.parquet"))
     gold = (
-        kept.groupBy("split", "lang")
+        corpus.groupBy("split", "lang")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("n_tokens").cast("bigint").alias("total_tokens"),
         )
         .orderBy("split", "lang")
     )
-    gold.write.mode("overwrite").parquet(os.path.join(out_dir, "gold.parquet"))
-    return gold
+    return _write_and_read(spark, gold, os.path.join(out_dir, "gold.parquet"))

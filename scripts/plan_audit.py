@@ -2,6 +2,10 @@
 
 Usage: python scripts/plan_audit.py [sf_dir] [query ...]
 
+With no query names every query is audited and PLANS.md is rewritten;
+with names, only their rows are replaced in PLANS.md (a name without a
+row is inserted in sorted position) and every other line is kept.
+
 For each query: shuffle count, broadcast count, join strategies, codegen
 spans, Python boundary kind, pushdown/pruning evidence. Streaming queries
 are skipped (their construction runs a real stream); write-at-construction
@@ -115,7 +119,9 @@ def main() -> None:
     out.append("`Kckpt:Nsh+Mbc` = K checkpoints taken during build+execute,")
     out.append("whose pre-truncation plans together held N shuffle and M")
     out.append("broadcast exchanges — the superstep work the final plan no")
-    out.append("longer shows. Their main shuffles column is therefore only")
+    out.append("longer shows; each exchange counts once across the loop (a")
+    out.append("persisted build prints under every superstep but runs once).")
+    out.append("Their main shuffles column is therefore only")
     out.append("the post-loop tail, and a loop-body regression now surfaces")
     out.append("here instead of hiding behind the checkpoint.")
     out.append("")
@@ -123,17 +129,36 @@ def main() -> None:
         "| query | shuffles | bcasts | joins | codegen | python | pushdown | top-k | loop |"
     )
     out.append("|---|---|---|---|---|---|---|---|---|")
-    for name, desc in rows:
-        out.append(f"| {name} {desc}" if desc.startswith("|") else f"| {name} | {desc} |")
-    report = "\n".join(out) + "\n"
+    out += [_row_line(name, desc) for name, desc in rows]
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
     if only:
-        # subset runs are for iteration — print only, never clobber the
-        # full PLANS.md with a partial table
-        print(report)
-        return
-    with open(os.path.join(os.path.dirname(os.path.dirname(__file__)), "PLANS.md"), "w") as f:
-        f.write(report)
-    print(report)
+        with open(path) as f:
+            out = _splice(f.read().splitlines(), rows)
+    with open(path, "w") as f:
+        f.write("\n".join(out) + "\n")
+    print("\n".join(_row_line(name, desc) for name, desc in rows))
+
+
+def _row_line(name: str, desc: str) -> str:
+    return f"| {name} {desc}" if desc.startswith("|") else f"| {name} | {desc} |"
+
+
+def _row_name(line: str) -> str | None:
+    """The query name of a PLANS.md table row, None for any other line."""
+    return line.split("|")[1].strip() if line.startswith("| q_") else None
+
+
+def _splice(lines: list[str], rows: list[tuple[str, str]]) -> list[str]:
+    """Replace the table rows of ``rows``' queries in ``lines`` in place;
+    insert a query without a row before the first row sorting after it
+    (or after the last row). Every other line is returned unchanged."""
+    new = {name: _row_line(name, desc) for name, desc in rows}
+    out = [new.pop(_row_name(ln), ln) for ln in lines]
+    for name, line in sorted(new.items()):
+        at = [i for i, ln in enumerate(out) if _row_name(ln)]
+        after = [i for i in at if _row_name(out[i]) > name]
+        out.insert(after[0] if after else at[-1] + 1, line)
+    return out
 
 
 if __name__ == "__main__":

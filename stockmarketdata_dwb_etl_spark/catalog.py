@@ -9,6 +9,7 @@ the identical plan runs at any scale (TESTDATA.md).
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,6 +95,35 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
+#: session -> {(scan path, fixture tag, nanosAsLong): inferred schema}
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _read_parquet(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema once per session.
+
+    Schema inference runs a Spark job over the parquet footers on every
+    plain read; the first read of a (scan path, fixture vintage, nanos
+    conf) in a session keeps its schema, and later reads hand it to
+    ``spark.read.schema``. Only the schema is cached: each call still
+    builds a fresh relation (so two loads self-join unambiguously) and
+    lists the files. The key holds every input the inferred schema
+    depends on here: the session (its conf), the resolved scan path, the
+    fixture fingerprint (a table rewritten in place re-infers) and the
+    nanosAsLong conf that types NANOS timestamps."""
+    from stockmarketdata_dwb_etl_spark.scratch import fixture_tag
+
+    key = (path, fixture_tag(sf_dir), spark.conf.get(_NANOS_CONF, "false"))
+    schemas = _SCHEMAS.setdefault(spark, {})
+    schema = schemas.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    schemas[key] = df.schema
+    return df
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. Parquet scan → columnar vectorized read;
@@ -113,8 +143,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Runtime-settable SQL conf: works under ANY caller-provided session,
         # not just the one session.py builds (the external driver passes its
         # own vanilla SparkSession). A no-op for the MICROS fixture vintage.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(_splittable_path(sf_dir, name))
+        spark.conf.set(_NANOS_CONF, "true")
+    df = _read_parquet(spark, sf_dir, _splittable_path(sf_dir, name))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # NANOS vintage: truncate to micros on the naive epoch (NTZ), the
         # session-timezone-independent equivalent of DuckDB's read.

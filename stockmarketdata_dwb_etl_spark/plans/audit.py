@@ -12,7 +12,9 @@ for the whole registry.
 
 from __future__ import annotations
 
+import itertools
 import re
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -63,35 +65,38 @@ class PlanAudit:
 def _final_plan_only(plan: str) -> str:
     """Drop AQE '== Initial Plan ==' sections: after execution the plan
     string prints the final plan followed by the pre-AQE initial plan,
-    which would double-count every node."""
-    out, skipping = [], False
+    which would double-count every node. A section ends at the first
+    line indented less deep than its marker: adaptive plans nest (every
+    persisted table's build prints as its own AdaptiveSparkPlan under
+    its InMemoryRelation), and the outer plan's nodes resume after a
+    nested section without another marker."""
+    out, skip_depth = [], None
     for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :|+-"))
+        if skip_depth is not None and depth >= skip_depth:
+            continue
+        skip_depth = None
         if "== Initial Plan ==" in line:
-            skipping = True
-            continue
-        if "== Final Plan ==" in line:
-            skipping = False
-            continue
-        if not skipping:
+            skip_depth = depth
+        elif "== Final Plan ==" not in line:
             out.append(line)
     return "\n".join(out)
 
 
-def _count_exchanges(plan: str) -> tuple[int, int]:
-    """(shuffle_exchanges, broadcast_exchanges), counting each EXECUTED
-    exchange once.
+def _exchange_ids(plan: str, noid: Iterator[int]) -> tuple[set[str], set[str]]:
+    """(shuffle, broadcast) ids of the exchanges in ``plan``, one id per
+    EXECUTED exchange.
 
     The plan printer repeats a persisted table's full build plan under
     EVERY InMemoryTableScan that references it, so a base cached via
     bounded_persist and consumed by three branches would triple-count
     its build exchanges — but the build executes exactly once. Exchange
     nodes carry a stable ``[plan_id=N]``: repeated prints of the same
-    physical node share the id, so distinct-id counting is the executed
-    count. Lines without a plan_id (truncated by the printer) fall back
-    to per-occurrence counting."""
+    physical node share the id, so distinct ids are the executed
+    exchanges. Lines without a plan_id (truncated by the printer) get a
+    fresh id from ``noid`` each, i.e. count per occurrence."""
     shuffle_ids: set[str] = set()
     bcast_ids: set[str] = set()
-    fallback = 0
     # Drop ReusedExchange/ReusedSubquery lines up front: a reuse line
     # echoes the original exchange's text ("ReusedExchange [...],
     # BroadcastExchange ... [plan_id=N]") and would otherwise match at
@@ -108,21 +113,19 @@ def _count_exchanges(plan: str) -> tuple[int, int]:
         if not is_bcast and rest.startswith("SinglePartition"):
             continue
         idm = re.search(r"\[plan_id=(\d+)\]", rest)
-        if idm:
-            (bcast_ids if is_bcast else shuffle_ids).add(idm.group(1))
-        else:
-            if is_bcast:
-                bcast_ids.add(f"__noid_{fallback}")
-            else:
-                shuffle_ids.add(f"__noid_{fallback}")
-            fallback += 1
-    return len(shuffle_ids), len(bcast_ids)
+        key = idm.group(1) if idm else f"__noid_{next(noid)}"
+        (bcast_ids if is_bcast else shuffle_ids).add(key)
+    return shuffle_ids, bcast_ids
+
+
+def _plan_string(df: DataFrame) -> str:
+    return _final_plan_only(df._jdf.queryExecution().executedPlan().toString())
 
 
 def audit(df: DataFrame) -> PlanAudit:
     """Audit a DataFrame's executed plan (final AQE plan if the DataFrame
     has been executed; the initial physical plan otherwise)."""
-    plan = _final_plan_only(df._jdf.queryExecution().executedPlan().toString())
+    plan = _plan_string(df)
     a = PlanAudit()
     # the plan printer truncates long lines ("..."), sometimes inside the
     # filter list itself — accept either a closing bracket or a truncation
@@ -136,8 +139,9 @@ def audit(df: DataFrame) -> PlanAudit:
         a.read_schemas.append(m.group(1))
     # "Exchange hashpartitioning/rangepartitioning/..." = a real shuffle;
     # BroadcastExchange ships a small side to every executor (cheap, counted
-    # separately). Distinct-plan_id counting: see _count_exchanges.
-    a.n_exchanges, a.n_broadcast_exchanges = _count_exchanges(plan)
+    # separately). Distinct-plan_id counting: see _exchange_ids.
+    shuffles, bcasts = _exchange_ids(plan, itertools.count())
+    a.n_exchanges, a.n_broadcast_exchanges = len(shuffles), len(bcasts)
     for node in _JOIN_NODES:
         a.joins += [node] * plan.count(node)
     a.n_codegen_spans = len(set(re.findall(r"\*\((\d+)\)", plan)))
@@ -149,6 +153,26 @@ def audit(df: DataFrame) -> PlanAudit:
     return a
 
 
+def plan_nodes(df: DataFrame) -> list[str]:
+    """One line per node of ``df``'s physical plan (the node's own
+    ``simpleString``; for an adaptive plan not yet executed, its initial
+    plan). Walks ``children`` only, so a persisted table's build (an
+    inner child of its InMemoryTableScan) and a nested adaptive plan
+    leave their nodes out: a shape check over these lines sees the
+    frame's own operators, anchored on node lines rather than on a
+    substring that could sit in an expression or a cached subtree."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    lines, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        lines.append(node.simpleString(1000))
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return lines
+
+
 @dataclass
 class CheckpointAudit:
     """Accumulated pre-truncation facts for every localCheckpoint taken
@@ -156,14 +180,29 @@ class CheckpointAudit:
     INSIDE iterative operators, whose final plan hides each superstep's
     exchanges behind the checkpoint (the r11 verdict's blind spot:
     q_ppr_seed's row read "0 shuffles" while every superstep shuffled
-    edge⋈rank)."""
+    edge⋈rank).
+
+    Exchanges count once per executed exchange across ALL the
+    checkpoints (distinct plan_id over the capture): a persisted table's
+    build prints under every superstep that scans it but runs once."""
 
     n_checkpoints: int = 0
-    n_exchanges: int = 0
-    n_broadcast_exchanges: int = 0
+    shuffle_ids: set[str] = field(default_factory=set)
+    bcast_ids: set[str] = field(default_factory=set)
     joins: list[str] = field(default_factory=list)
     row_python_nodes: int = 0
     arrow_python_nodes: int = 0
+    noid: Iterator[int] = field(default_factory=itertools.count)
+    #: per checkpoint, the cut frame's :func:`plan_nodes`
+    plans: list[list[str]] = field(default_factory=list)
+
+    @property
+    def n_exchanges(self) -> int:
+        return len(self.shuffle_ids)
+
+    @property
+    def n_broadcast_exchanges(self) -> int:
+        return len(self.bcast_ids)
 
 
 def capture_checkpoints():
@@ -196,9 +235,11 @@ def capture_checkpoints():
         def _make(orig):
             def patched(self, eager=True):
                 sub = audit(self)
+                shuffles, bcasts = _exchange_ids(_plan_string(self), acc.noid)
                 acc.n_checkpoints += 1
-                acc.n_exchanges += sub.n_exchanges
-                acc.n_broadcast_exchanges += sub.n_broadcast_exchanges
+                acc.shuffle_ids |= shuffles
+                acc.bcast_ids |= bcasts
+                acc.plans.append(plan_nodes(self))
                 acc.joins += sub.joins
                 acc.row_python_nodes += sub.row_python_nodes
                 acc.arrow_python_nodes += sub.arrow_python_nodes

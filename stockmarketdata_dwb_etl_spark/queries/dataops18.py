@@ -404,58 +404,33 @@ def q_ppr_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Three supersteps from the seed indicator vector; contributions
     round at 12dp before the exact-DECIMAL in-sum and ranks round at
     12dp per superstep (the pagerank discipline), so walk mass is
-    bit-identical across engines; top-10 by (rank, node). Scale: each
-    superstep is ONE edge⋈rank shuffle; rank state is node-sized;
-    restart is a map-side CASE."""
-    from stockmarketdata_dwb_etl_spark.queries.graph import _graph
+    bit-identical across engines; top-10 by (rank, node). Runs on the
+    shared :func:`queries.graph._in_sum_iterate`: each superstep is
+    ONE per-node sum shuffle over the edge⋈rank messages; rank state is
+    node-sized; the seed indicator is carried on the zero-message rows
+    and restart is a map-side product."""
+    from stockmarketdata_dwb_etl_spark.queries.graph import (
+        _in_sum_iterate,
+        _norm_graph,
+    )
 
-    from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
-
-    edges, wdeg, nodes = _graph(spark, sf_dir)
-    # normalized edge table is consumed once per superstep — persist it
-    # (the q_pagerank_iter / q_katz_centrality discipline) so the
-    # wdeg aggregation doesn't re-run inside every superstep job
-    edges = bounded_persist(edges.join(wdeg, "src"), "ppr-edges")
-    seed = nodes.agg(F.min("node").alias("seed"))
-    ranks = nodes.crossJoin(F.broadcast(seed)).select(
+    edges, nodes = _norm_graph(spark, sf_dir)
+    # driver scalar: one job here instead of a global-min stage in every
+    # superstep; the seed indicator rides on the zero-message rows
+    seed = nodes.agg(F.min("node")).first()[0]
+    base = nodes.select(
         "node",
-        F.when(F.col("node") == F.col("seed"), F.lit(1.0))
+        F.when(F.col("node") == F.lit(seed), F.lit(1.0))
         .otherwise(F.lit(0.0))
-        .alias("rank"),
+        .alias("r"),
     )
-    contrib = portable_round(
-        F.col("rank") * (F.col("w").cast("double") / F.col("wdeg")), 12
-    )
-    for _ in range(_PPR_ITERS):
-        contribs = (
-            edges.join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst"), contrib.alias("c"))
-            .groupBy("dst")
-            .agg(
-                F.sum(F.col("c").cast("decimal(38,12)"))
-                .cast("double")
-                .alias("s")
-            )
-        )
-        ranks = (
-            nodes.crossJoin(F.broadcast(seed))
-            .join(contribs.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                portable_round(
-                    F.lit(_PPR_RESTART)
-                    * F.when(
-                        F.col("node") == F.col("seed"), F.lit(1.0)
-                    ).otherwise(F.lit(0.0))
-                    + F.lit(1.0 - _PPR_RESTART)
-                    * F.coalesce(F.col("s"), F.lit(0.0)),
-                    12,
-                )
-                .cast("double")
-                .alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    update = portable_round(
+        F.lit(_PPR_RESTART) * F.col("r")
+        + F.lit(1.0 - _PPR_RESTART) * F.col("s"),
+        12,
+    ).cast("double")
+    ranks = base.select("node", F.col("r").alias("rank"))
+    ranks = _in_sum_iterate(edges, base, ranks, "rank", update, _PPR_ITERS)
     return (
         ranks.orderBy(F.col("rank").desc(), "node")
         .limit(10)

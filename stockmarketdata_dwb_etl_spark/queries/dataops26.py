@@ -34,7 +34,12 @@ from pyspark.sql.window import Window
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
 from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
-from stockmarketdata_dwb_etl_spark.queries.graph import _GRAPH_SQL, _graph
+from stockmarketdata_dwb_etl_spark.queries.graph import (
+    _GRAPH_SQL,
+    _graph,
+    _in_sum_iterate,
+    _norm_graph,
+)
 from stockmarketdata_dwb_etl_spark.queries.stats_q import _dsum2, _ssum2
 from stockmarketdata_dwb_etl_spark.queries.timeseries import (
     _DUCK_ORD,
@@ -109,40 +114,19 @@ def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_pagerank_iter (no 1/N redistribution, so leaves keep β exactly
     and hubs accumulate reachability). The stochastic normalization is
     what keeps α·A convergent at ANY data scale — raw weighted degrees
-    grow with the corpus. Each superstep is ONE edges⋈x join shuffled
-    on src with per-dst partial aggregation, localCheckpoint at the
-    boundary (the Pregel shape); the vector re-rounds to 12dp per step
-    so both engines iterate identical values. Scales: state is one
-    node-sized vector; contributions shuffle on edge keys only."""
-    edges, wdeg, nodes = _graph(spark, sf_dir)
-    edges = bounded_persist(edges.join(wdeg, "src"), "katz-edges")
+    grow with the corpus. Each superstep is the shared
+    :func:`queries.graph._in_sum_iterate`: the edges⋈x messages and
+    one zero message per node sum in ONE shuffle keyed on node, with a
+    lazy localCheckpoint at the boundary (the Pregel shape); the vector
+    re-rounds to 12dp per step so both engines iterate identical
+    values. Scales: state is one node-sized vector; contributions
+    shuffle on node keys only."""
+    edges, nodes = _norm_graph(spark, sf_dir)
+    update = portable_round(
+        F.lit(_KATZ_BETA) + F.lit(_KATZ_ALPHA) * F.col("s"), 12
+    )
     x = nodes.select("node", F.lit(1.0).alias("x"))
-    for _ in range(_KATZ_ITERS):
-        contrib = (
-            edges.join(x, edges["src"] == x["node"])
-            .select(
-                "dst",
-                portable_round(
-                    F.col("x")
-                    * (F.col("w").cast("double") / F.col("wdeg")),
-                    12,
-                ).cast("decimal(38,12)").alias("t"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("t").cast("double").alias("s"))
-        )
-        x = (
-            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-            .select(
-                "node",
-                portable_round(
-                    F.lit(_KATZ_BETA)
-                    + F.lit(_KATZ_ALPHA) * F.coalesce("s", F.lit(0.0)),
-                    12,
-                ).alias("x"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    x = _in_sum_iterate(edges, nodes, x, "x", update, _KATZ_ITERS)
     return x.select(
         "node", portable_round(F.col("x"), 6).cast("double").alias("katz")
     ).orderBy(F.col("katz").desc(), "node")

@@ -89,6 +89,62 @@ def _graph(spark: SparkSession, sf_dir: str):
     return edges, wdeg, nodes
 
 
+def _norm_graph(spark: SparkSession, sf_dir: str):
+    """Row-normalized edges ``(src, dst, wn = w / wdeg(src))`` in ONE slot
+    shared by PageRank, PPR and Katz, plus the node list."""
+    edges, wdeg, nodes = _graph(spark, sf_dir)
+    wn = F.col("w").cast("double") / F.col("wdeg")
+    norm = edges.join(wdeg, "src").select("src", "dst", wn.alias("wn"))
+    return bounded_persist(norm, "graph-norm-edges"), nodes
+
+
+def _in_sum_iterate(edges, base, state, col: str, update, iters: int) -> DataFrame:
+    """``iters`` supersteps x'(v) = update(s(v)) of the weighted
+    in-neighbour-sum family, s(v) = Σ_{u→v} round12(x(u)·wn(u→v)).
+
+    ``state`` is (node, ``col``); ``base`` is one row per node: the node
+    and any per-node constant ``update`` reads (PPR's seed indicator).
+    A superstep UNION ALLs the edge⋈state messages with one exact zero
+    message per node carrying ``base``'s constants, and sums them in ONE
+    shuffle keyed on node: a node without in-edges sums to exactly 0,
+    as ``coalesce(NULL, 0.0)`` did after a left join from the node list.
+    ``update`` reads ``s`` (the DOUBLE sum) and the constants.
+
+    Each superstep is cut by a LAZY ``localCheckpoint``: the next plan
+    reads a LogicalRDD leaf and no count job materializes the cut.
+    Building superstep k runs its map stages; its final stage (sum and
+    update) runs inside the first stage of superstep k+1 that reads the
+    state (the last one's inside the caller's job). When the planner
+    broadcasts the state (the smaller side by estimate; at fixture
+    scale the edge table is broadcast from the second superstep on),
+    that stage is the state broadcast, so superstep k's final stage sits
+    under ``spark.sql.broadcastTimeout`` (300 s default, not set by the
+    engine): node-sized state keeps it small, but a graph whose
+    per-superstep sum nears the timeout needs an eager cut."""
+    carried = [c for c in base.columns if c != "node"]
+    nulls = [F.lit(None).cast(base.schema[c].dataType).alias(c) for c in carried]
+    zeros = base.select("node", F.lit(0).cast("decimal(38,12)").alias("t"), *carried)
+    # contributions round at 12dp before the exact-DECIMAL sum: the raw
+    # double->DECIMAL cast is engine-asymmetric (DuckDB converts via
+    # float scaling), and x·wn <= 2 keeps the 12dp floor term far under
+    # the 2^53 round-trip bound
+    t = portable_round(F.col(col) * F.col("wn"), 12).cast("decimal(38,12)")
+    for _ in range(iters):
+        msgs = edges.join(state.select(F.col("node").alias("src"), col), "src")
+        state = (
+            msgs.select(F.col("dst").alias("node"), t.alias("t"), *nulls)
+            .unionByName(zeros)
+            .groupBy("node")
+            .agg(
+                F.sum("t").cast("double").alias("s"),
+                *(F.max(c).alias(c) for c in carried),
+            )
+            .select("node", update.alias(col))
+            .localCheckpoint(eager=False)
+        )
+    return state
+
+
 def _pr_level_sql(prev: str, out: str) -> str:
     return f"""
     {out} AS (
@@ -130,54 +186,23 @@ def _pr_level_sql(prev: str, out: str) -> str:
 def q_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank, 5 supersteps, damping 0.85, over the brand
     co-purchase graph — the iterative message-passing family (Pregel
-    shape). Each superstep is ONE shuffle: edges join the current rank
-    vector on src (at fixture scale the rank vector broadcasts; at
-    billion-node scale the same plan hash-co-partitions edges and ranks
-    on src across supersteps), contributions partial-aggregate per dst,
-    and dangling/isolated nodes keep the teleport term via the left join.
-    Ranks re-round to 12dp every superstep so both engines iterate on
-    identical values."""
-    edges, wdeg, nodes = _graph(spark, sf_dir)
-    edges = bounded_persist(edges.join(wdeg, "src"), "pagerank-edges")
+    shape), run by the shared :func:`_in_sum_iterate`. Each superstep
+    is ONE shuffle: edges join the current rank vector on src (at
+    fixture scale the rank vector broadcasts; at billion-node scale the
+    same plan hash-co-partitions edges and ranks on src across
+    supersteps), contributions plus one zero message per node
+    partial-aggregate per node, so dangling/isolated nodes keep the
+    teleport term with no join back to the node list. Ranks re-round to
+    12dp every superstep so both engines iterate on identical values."""
+    edges, nodes = _norm_graph(spark, sf_dir)
     n_nodes = nodes.count()  # driver scalar: node count bounds the loop math
     ranks = nodes.select(
         "node", portable_round(F.lit(1.0) / n_nodes, 12).cast("double").alias("rank")
     )
-    # contributions round at 12dp before the exact-DECIMAL sum: the raw
-    # double->DECIMAL(38,18) cast is engine-asymmetric (DuckDB converts
-    # via float scaling), and rank*(w/wdeg) <= 1 keeps the 12dp floor
-    # term far under the 2^53 round-trip bound
-    contrib_expr = portable_round(
-        F.col("rank") * (F.col("w").cast("double") / F.col("wdeg")), 12
-    )
-    for _ in range(_ITERS):
-        contribs = (
-            edges.join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst"), contrib_expr.alias("c"))
-            .groupBy("dst")
-            .agg(F.sum(F.col("c").cast("decimal(38,12)")).cast("double").alias("s"))
-        )
-        ranks = (
-            nodes.join(
-                contribs.withColumnRenamed("dst", "node"), "node", "left"
-            )
-            .select(
-                "node",
-                portable_round(
-                    F.lit(0.15) / n_nodes
-                    + F.lit(0.85) * F.coalesce(F.col("s"), F.lit(0.0)),
-                    12,
-                )
-                .cast("double")
-                .alias("rank"),
-            )
-            # materialize the superstep boundary (node-count rows): the
-            # same lineage cut as q_power_iteration / q_bfs_distance —
-            # without it the final plan re-executes every prior
-            # superstep in each join branch (audited: 73 exchanges
-            # unmaterialized vs one superstep per stage)
-            .localCheckpoint(eager=True)
-        )
+    update = portable_round(
+        F.lit(0.15) / n_nodes + F.lit(0.85) * F.col("s"), 12
+    ).cast("double")
+    ranks = _in_sum_iterate(edges, nodes, ranks, "rank", update, _ITERS)
     return ranks.orderBy(F.desc("rank"), "node")
 
 

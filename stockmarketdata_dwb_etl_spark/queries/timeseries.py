@@ -20,7 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
+from stockmarketdata_dwb_etl_spark.functions.exact import (
+    portable_round,
+    sql_portable_round,
+    sql_term_sum,
+)
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -588,7 +592,7 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT symbol, field,
            CAST(COUNT(*) AS BIGINT) AS n_bars,
-           CAST((CAST(floor(CAST((AVG(v)) AS DOUBLE) * 10000.0 + 0.5) AS DOUBLE) / 10000.0) AS DOUBLE) AS avg_value
+           CAST({sql_portable_round(sql_term_sum("v") + " / COUNT(*)", 4)} AS DOUBLE) AS avg_value
     FROM long GROUP BY symbol, field
     """,
 )
@@ -619,7 +623,12 @@ def q_unpivot_long(spark: SparkSession, sf_dir: str) -> DataFrame:
         variableColumnName="field",
         valueColumnName="v",
     )
+    # exact order-independent Σ (functions/exact.py::sql_term_sum): a
+    # double AVG depends on the order partial sums merge, and DuckDB's
+    # threads made the oracle flip at 4dp half boundaries between runs
+    total = F.sum(portable_round("v", 12).cast("decimal(38,12)")).cast("double")
+    n = F.count(F.lit(1))
     return long.groupBy("symbol", "field").agg(
-        F.count(F.lit(1)).alias("n_bars"),
-        portable_round(F.avg("v"), 4).alias("avg_value"),
+        n.alias("n_bars"),
+        portable_round(total / n, 4).alias("avg_value"),
     )

@@ -40,3 +40,32 @@ def test_audit_flags_row_python(spark):
     a = audit(df)
     assert a.row_python_nodes >= 1
     assert not a.python_is_arrow_only
+
+
+def test_nested_initial_plan_section_ends_at_outer_node():
+    """A persisted table's build prints as a nested adaptive plan with
+    its own Final/Initial sections; the outer plan's nodes after it are
+    kept, and only the nested initial plan is dropped."""
+    from stockmarketdata_dwb_etl_spark.plans.audit import _final_plan_only
+
+    plan = "\n".join(
+        [
+            "AdaptiveSparkPlan isFinalPlan=false",
+            "+- HashAggregate(keys=[dst#1])",
+            "   +- Exchange hashpartitioning(dst#1, 2), [plan_id=9]",
+            "      +- InMemoryTableScan [x#2]",
+            "            +- InMemoryRelation [x#2]",
+            "                  +- AdaptiveSparkPlan isFinalPlan=true",
+            "                     +- == Final Plan ==",
+            "                        ResultQueryStage 1",
+            "                        +- Exchange hashpartitioning(x#2, 2), [plan_id=5]",
+            "                     +- == Initial Plan ==",
+            "                        HashAggregate(keys=[x#2])",
+            "                        +- Exchange hashpartitioning(x#2, 2), [plan_id=3]",
+            "      :  +- BroadcastExchange HashedRelationBroadcastMode, [plan_id=8]",
+        ]
+    )
+    kept = _final_plan_only(plan)
+    assert "[plan_id=5]" in kept and "[plan_id=9]" in kept
+    assert "[plan_id=8]" in kept, "outer node after the nested section was dropped"
+    assert "[plan_id=3]" not in kept and "== " not in kept

@@ -85,3 +85,22 @@ def test_corpus_pipeline_materializes_and_near_dedup_only_removes(
     assert extra == 0
     # gold totals reconcile with the materialized corpus
     assert sum(r["n_docs"] for r in rows) == n_corpus
+
+
+def test_corpus_pipeline_layers_match_build_functions(spark, tmp_path):
+    """Without near-dedup, each layer run_pipeline builds from the
+    previous layer's parquet equals the one-plan build_* function of that layer,
+    and the returned gold is gold.parquet (exceptAll both ways)."""
+    from pipelines.corpus_curation import build_deduped, build_silver, run_pipeline
+
+    out = str(tmp_path / "corpus_out")
+    gold = run_pipeline(spark, SF_DIR, out, near_dedup=False)
+
+    def same(a, b) -> None:
+        assert a.count() > 0
+        assert a.exceptAll(b).count() == 0
+        assert b.exceptAll(a).count() == 0
+
+    same(spark.read.parquet(f"{out}/silver.parquet"), build_silver(spark, SF_DIR))
+    same(spark.read.parquet(f"{out}/corpus.parquet"), build_deduped(spark, SF_DIR))
+    same(gold, spark.read.parquet(f"{out}/gold.parquet"))

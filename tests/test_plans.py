@@ -510,3 +510,44 @@ def test_probe_pool_brute_path_is_bounded_bnlj_only(spark):
         "BroadcastNestedLoopJoin",
         "BroadcastHashJoin",
     }, a
+
+
+def test_plan_audit_subset_splices_rows_in_place():
+    """A subset run of scripts/plan_audit.py replaces only its queries'
+    rows of PLANS.md (inserting a new query in sorted position) and
+    leaves every other line as it was."""
+    import importlib.util
+    import os
+
+    script = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts",
+        "plan_audit.py",
+    )
+    spec = importlib.util.spec_from_file_location("plan_audit", script)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    lines = [
+        "# PLANS",
+        "| query | shuffles |",
+        "|---|---|",
+        "| q_a | 1 |",
+        "| q_c | 3 |",
+        "| q_e | 5 |",
+        "",
+        "trailer",
+    ]
+    got = mod._splice(lines, [("q_c", "| 30 |"), ("q_d", "| 4 |"), ("q_z", "| 9 |")])
+    assert got == [
+        "# PLANS",
+        "| query | shuffles |",
+        "|---|---|",
+        "| q_a | 1 |",
+        "| q_c | 30 |",
+        "| q_d | 4 |",
+        "| q_e | 5 |",
+        "| q_z | 9 |",
+        "",
+        "trailer",
+    ]

@@ -7,8 +7,8 @@
   duplicate edges (the property the flag relies on).
 - the markov value-iteration fold and single-window journey extraction
   are covered end-to-end by the oracle differential; here we pin the
-  cheap structural invariant: the journey plan carries ONE Window sort
-  order (no DESC re-sort).
+  cheap structural invariant: the journey plan, taken before its
+  checkpoint, carries ONE user-keyed Window sort (no DESC re-sort).
 """
 
 from __future__ import annotations
@@ -105,13 +105,19 @@ def test_connected_components_duplicate_edges_idempotent(spark):
 
 def test_markov_journey_single_sort_order(spark):
     """The journey extraction shares ONE (user_id, ord_key ASC) sort: the
-    physical plan must not contain a descending user-keyed sort (the old
-    row_number(DESC) loss-edge pass)."""
+    journey plan must carry exactly one user-keyed Sort node and no
+    descending Sort (the old row_number(DESC) loss-edge pass). The final
+    plan reads the eager checkpoint's RDD and shows neither, so the
+    check runs on the plan handed to the checkpoint."""
+    from stockmarketdata_dwb_etl_spark.plans.audit import capture_checkpoints
     from stockmarketdata_dwb_etl_spark.registry import QUERIES, load_all
 
     load_all()
-    df = QUERIES["q_markov_attribution"](spark, SF_DIR)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    assert "DESC" not in plan, "journey pass reintroduced a DESC sort"
+    with capture_checkpoints() as acc:
+        QUERIES["q_markov_attribution"](spark, SF_DIR)
+    assert len(acc.plans) == 1, "expected the one journey checkpoint"
+    sorts = [n for n in acc.plans[0] if n.startswith("Sort [")]
+    user_sorts = [n for n in sorts if n.startswith("Sort [user_id#")]
+    assert len(user_sorts) == 1, sorts
+    assert "ord_key" in user_sorts[0], sorts
+    assert not [n for n in sorts if " DESC " in n], "journey pass reintroduced a DESC sort"
