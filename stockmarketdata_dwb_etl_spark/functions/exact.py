@@ -11,12 +11,44 @@ by :func:`sql_exact_sum` / :func:`sql_exact_avg`.
 This costs one decimal conversion per row in exchange for scale-independent
 determinism — a deliberate trade the engine only makes in the oracle-checked
 query surface; interactive pipelines are free to use plain double aggs.
+
+Rounded-term sums. Every other exact Σ in the package goes through the
+helpers below, each a Spark Column builder paired with the DuckDB text
+that builds the identical computation: round each double term with the
+portable floor form at n digits, accumulate exactly in DECIMAL, emit
+DOUBLE. The rules they share, stated once:
+
+- Round-trip bound: n must keep |term|·10ⁿ < 2^53 ≈ 9.0e15, not merely
+  under the int64 9.2e18 bound where Spark's BIGINT ``floor`` saturates.
+  Past 2^53 the rounded k/10ⁿ no longer round-trips through a double's
+  ≤17 significant digits, so Spark's shortest-repr double→DECIMAL and
+  DuckDB's float-scaled conversion produce different approximations
+  (observed: q_anova_hod s_g ~1e6-scale terms at 12dp flipped an 8dp
+  output round). 12dp holds to |term| < ~9e3 and 8dp to |term| < ~9e7;
+  terms with a wider dynamic range use :func:`split_term_sum`. The same
+  bound holds for the total, |Σ|·10ⁿ < 2^53: DuckDB's DECIMAL(38,n) →
+  DOUBLE cast is not correctly rounded above it (a 24962.669977337202
+  total at 12dp comes back as 24962.6699773372, one ulp off Spark).
+- Cast scale equals rounding digits: a rounded k/10ⁿ converts exactly at
+  scale n on both engines, while DuckDB's double→DECIMAL(38,18) goes
+  through float scaling and mangles sub-precision digits (the
+  q_levene_bf sf0.1 divergence).
+- Two-long-bucket sums (:func:`hilo_term_sum`) need n ≥ 6 and both
+  BIGINT bucket sums under 2^63: BIGINT sums wrap silently under
+  non-ANSI, so each call site states its term bound.
+- In-array folds (:func:`fold_term_sum`) accumulate at precision 28, not
+  38, so every fold step stays exact.
+
+Every helper takes n explicitly: the digit count is a per-call-site
+decision from the term's magnitude bound, and the Spark and DuckDB sides
+of one query must name the same n.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 # 38 total digits, 6 fractional: holds sums over ~1e13 rows of ~1e12-scale
 # values without overflow while keeping sub-cent precision.
@@ -82,35 +114,120 @@ def sql_portable_round(expr: str, ndigits: int) -> str:
     return f"(CAST(floor(CAST(({expr}) AS DOUBLE) * {scale} + 0.5) AS DOUBLE) / {scale})"
 
 
-def sql_term_sum(expr: str, ndigits: int = 12) -> str:
-    """Order-independent oracle Σ over per-row double terms: round each
-    term with the portable floor form (identical double tree on both
-    engines), accumulate in exact DECIMAL(38,18), emit DOUBLE.
+def term(col: Column | str, n: int) -> Column:
+    """One rounded term: n-dp portable round, cast DECIMAL(38,n)."""
+    return portable_round(col, n).cast(f"decimal(38,{n})")
 
-    A plain double SUM is accumulation-order dependent — DuckDB's
-    scan-order sum vs Spark's partial-aggregation tree (or in-array
-    fold) can differ by an ulp, enough to flip a later rounded
-    threshold/argmin decision. The rounded-DECIMAL Σ is bit-identical
-    however the rows arrive. ndigits must keep |term|·10^n < 2^53
-    ≈ 9.0e15 — NOT merely under the int64 9.2e18 floor-saturation
-    bound: once k = round(|term|·10^n) exceeds 2^53, the double k/10^n
-    no longer round-trips through ≤17 significant digits, so Spark's
-    shortest-repr double→DECIMAL and DuckDB's float-scaled conversion
-    produce DIFFERENT approximations (observed round 11: q_anova_hod
-    s_g ~1e6-scale terms at 12dp flipped an 8dp output round). 12dp
-    therefore holds to |term| < ~9e3; for wider dynamic ranges use a
-    two-bucket split sum (stats_q._ssum2/_dsum2). The cast scale equals the
-    rounding digits: a rounded k/10^n converts exactly at scale n on
-    both engines, while DuckDB's double→DECIMAL(38,18) goes through
-    float scaling and mangles sub-precision digits (the q_levene_bf
-    sf0.1 divergence)."""
+
+def sql_term(expr: str, n: int) -> str:
+    """DuckDB twin of :func:`term`."""
+    return f"CAST({sql_portable_round(expr, n)} AS DECIMAL(38,{n}))"
+
+
+def term_sum(col: Column | str, n: int) -> Column:
+    """Order-independent Σ of double terms: exact DECIMAL(38,n) sum of
+    the n-dp rounded terms, DOUBLE out. A plain double SUM depends on
+    accumulation order (DuckDB's scan order vs Spark's partial
+    aggregation tree) and can differ by an ulp, enough to flip a later
+    rounded threshold or argmin; this Σ is bit-identical however the
+    rows arrive."""
+    return F.sum(term(col, n)).cast("double")
+
+
+def sql_term_sum(expr: str, n: int) -> str:
+    """DuckDB twin of :func:`term_sum`: accumulates in DECIMAL(38,n)."""
+    return f"CAST(SUM({sql_term(expr, n)}) AS DOUBLE)"
+
+
+def split_term_sum(
+    col: Column | str, fine: int, coarse: int, window: WindowSpec | None = None
+) -> Column:
+    """Two-bucket :func:`term_sum` for terms with a wide dynamic range:
+    |x| < 1 terms round at ``fine`` dp and |x| ≥ 1 terms at ``coarse``
+    dp, each bucket summed exactly at its own scale, the two added as
+    doubles. Each bucket keeps the round-trip bound on its own (coarse=8
+    holds to |x| < 9e7) while sub-1 terms keep full fine-dp precision.
+    The branch predicate compares identical doubles, so both engines
+    split identically. With ``window`` both bucket sums run over the
+    same frame, so the second bucket costs no extra sort."""
+    if isinstance(col, str):
+        col = F.col(col)
+
+    def bucket_sum(in_bucket: Column, n: int) -> Column:
+        s = F.sum(
+            F.when(in_bucket, term(col, n)).otherwise(
+                F.lit(0).cast(f"decimal(38,{n})")
+            )
+        )
+        return (s if window is None else s.over(window)).cast("double")
+
+    return bucket_sum(F.abs(col) < 1.0, fine) + bucket_sum(F.abs(col) >= 1.0, coarse)
+
+
+def sql_split_term_sum(
+    expr: str, fine: int, coarse: int, over: str | None = None
+) -> str:
+    """DuckDB twin of :func:`split_term_sum`; ``over`` is the full
+    ``OVER ...`` clause text (e.g. ``"OVER f"``) of the windowed form."""
+    small = (
+        f"CASE WHEN abs({expr}) < 1.0 THEN {sql_term(expr, fine)}"
+        f" ELSE CAST(0 AS DECIMAL(38,{fine})) END"
+    )
+    big = (
+        f"CASE WHEN abs({expr}) >= 1.0 THEN {sql_term(expr, coarse)}"
+        f" ELSE CAST(0 AS DECIMAL(38,{coarse})) END"
+    )
+    frame = f" {over}" if over else ""
     return (
-        f"CAST(SUM(CAST({sql_portable_round(expr, ndigits)}"
-        f" AS DECIMAL(38,{ndigits}))) AS DOUBLE)"
+        f"(CAST(SUM({small}){frame} AS DOUBLE)"
+        f" + CAST(SUM({big}){frame} AS DOUBLE))"
     )
 
 
-def fold_term_sum(arr: Column, ndigits: int = 12) -> Column:
+_HILO_SPLIT = 1_000_000  # 10^6 — hi/lo split point of the scaled term
+
+
+def hilo_term_sum(col: Column, n: int) -> tuple[Column, Column]:
+    """Two-long-bucket form of :func:`term_sum` for hot aggregations:
+    the scaled term k = floor(x·10ⁿ + 0.5), the exact integer the
+    DECIMAL(38,n) path accumulates, splits into hi = (k − k mod 10⁶)/10⁶
+    and lo = k mod 10⁶, each summed as a plain BIGINT. The per-row cost
+    drops from a BigDecimal construction and add to two primitive long
+    adds inside whole-stage codegen; :func:`hilo_finish` reassembles the
+    exact value once per group.
+
+    Σk = 10⁶·Σhi + Σlo exactly (pmod keeps lo ∈ [0, 10⁶) for either
+    sign), and the finisher rebuilds Σk/10ⁿ in exact DECIMAL before one
+    double cast, so the result is the double :func:`term_sum` returns.
+    With |x| < 1 and n = 12 each bucket term is < 10⁶, which holds to
+    ~9.2e12 rows per group; wider terms need the bound rechecked."""
+    if n < 6:
+        raise ValueError(f"hilo_term_sum needs n >= 6, got {n}")
+    k = F.floor(col.cast("double") * F.lit(float(10**n)) + F.lit(0.5))
+    lo = F.pmod(k, F.lit(_HILO_SPLIT))
+    # (k − lo) is an exact multiple of 10⁶ and < 2^53, so the double
+    # division is exact and the bigint cast lossless
+    hi = ((k - lo) / F.lit(float(_HILO_SPLIT))).cast("bigint")
+    return F.sum(hi), F.sum(lo)
+
+
+def hilo_finish(hi_sum: Column, lo_sum: Column, n: int) -> Column:
+    """Finisher for :func:`hilo_term_sum`: Σhi/10ⁿ⁻⁶ + Σlo/10ⁿ in exact
+    DECIMAL, one double cast. Both divisions are exact: the dividends
+    are bigints cast to DECIMAL(20,0) and the result scales (8 and
+    n+2 ≥ n) cover every fractional digit the quotients can have, so no
+    HALF_UP rounding ever fires; the final addition is exact at scale
+    max and precision ≤ 35 < 38. Runs once per group."""
+    hi_dec = hi_sum.cast("decimal(20,0)") / F.lit(10 ** (n - 6)).cast(
+        f"decimal({n - 5},0)"
+    )
+    lo_dec = lo_sum.cast("decimal(20,0)") / F.lit(10**n).cast(
+        f"decimal({n + 1},0)"
+    )
+    return (hi_dec + lo_dec).cast("double")
+
+
+def fold_term_sum(arr: Column, ndigits: int) -> Column:
     """Spark twin of :func:`sql_term_sum` for in-array folds (zip_with /
     transform products): round each element, fold in exact DECIMAL,
     emit DOUBLE. Precision 28 (NOT 38) is load-bearing: (28,n)+(28,n)

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
+from stockmarketdata_dwb_etl_spark.functions.exact import portable_round, term_sum
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import exact_sum, sql_exact_sum
 from stockmarketdata_dwb_etl_spark.registry import query
@@ -900,10 +900,7 @@ def q_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("total").cast("bigint").alias("n_transitions"),
         F.count(F.lit(1)).cast("bigint").alias("n_cells"),
         F.countDistinct("prev_type").cast("bigint").alias("n_states"),
-        F.sum(
-            portable_round(-p_joint * F.log(p_cond), 12).cast("decimal(38,12)")
-        )
-        .cast("double")
+        term_sum(-p_joint * F.log(p_cond), 12)
         .alias("h"),
     )
     return agg.select(

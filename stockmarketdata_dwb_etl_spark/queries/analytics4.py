@@ -22,6 +22,10 @@ from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
+    sql_term,
+    sql_term_sum,
+    term,
+    term_sum,
 )
 from stockmarketdata_dwb_etl_spark.queries.timeseries import (
     _DUCK_ORD,
@@ -66,12 +70,11 @@ from stockmarketdata_dwb_etl_spark.registry import query
     ),
     credit AS (
         SELECT channel,
-               CAST({sql_portable_round(
+               {sql_term(
                    "CASE WHEN n_touch = 1 THEN 1.0"
                    " WHEN n_touch = 2 THEN 0.5"
                    " WHEN pos = 1 OR pos = n_touch THEN 0.4"
-                   " ELSE 0.2 / (n_touch - 2) END", 8)}
-                   AS DECIMAL(38,8)) AS w
+                   " ELSE 0.2 / (n_touch - 2) END", 8)} AS w
         FROM touches
     )
     SELECT channel,
@@ -172,7 +175,7 @@ def q_attribution_position(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0.2) / (F.col("n_touch") - 2))
     )
     credit = touches.select(
-        "channel", portable_round(weight, 8).cast("decimal(38,8)").alias("w")
+        "channel", term(weight, 8).alias("w")
     )
     # __c stays DECIMAL through the grand-total window sum (a double
     # window SUM is accumulation-order dependent; DECIMAL Σ is exact) —
@@ -315,8 +318,7 @@ def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(dayofweek(bar_ts) AS INT) AS dow,
            CAST(COUNT(*) AS BIGINT) AS n_bars,
            CAST({sql_portable_round(
-               "CAST(SUM(CAST(" + sql_portable_round("r", 12)
-               + " AS DECIMAL(38,12))) AS DOUBLE) / COUNT(*)", 8)}
+               sql_term_sum("r", 12) + " / COUNT(*)", 8)}
                AS DOUBLE) AS mean_ret,
            CAST(COUNT(*) FILTER (WHERE r > 0) AS BIGINT) AS n_up
     FROM rets GROUP BY symbol, dow ORDER BY symbol, dow
@@ -345,9 +347,7 @@ def q_weekday_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_bars"),
             portable_round(
-                F.sum(
-                    portable_round(F.col("r"), 12).cast("decimal(38,12)")
-                ).cast("double")
+                term_sum(F.col("r"), 12)
                 / F.count(F.lit(1)),
                 8,
             )

@@ -69,11 +69,11 @@ _TOPK = 100
         SELECT idx, val FROM ex WHERE vec_id = 0
     ), nrm AS (
         SELECT vec_id,
-               {sql_portable_round(sql_term_sum("val * val"), 9)} AS n2
+               {sql_portable_round(sql_term_sum("val * val", 12), 9)} AS n2
         FROM ex GROUP BY vec_id
     ), dots AS (
         SELECT e.vec_id AS doc_id,
-               {sql_portable_round(sql_term_sum("e.val * p.val"), 9)} AS dot
+               {sql_portable_round(sql_term_sum("e.val * p.val", 12), 9)} AS dot
         FROM ex e JOIN pv p ON p.idx = e.idx
         WHERE e.vec_id <> 0
         GROUP BY e.vec_id
@@ -143,7 +143,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("pv"),
         portable_round(
-            fold_term_sum(F.transform("embedding", lambda x: x * x)), 9
+            fold_term_sum(F.transform("embedding", lambda x: x * x), 12), 9
         ).alias("n0"),
     )
     sem100 = (
@@ -154,14 +154,14 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             portable_round(
                 portable_round(
                     fold_term_sum(
-                        F.zip_with("embedding", "pv", lambda x, y: x * y)
+                        F.zip_with("embedding", "pv", lambda x, y: x * y), 12
                     ),
                     9,
                 )
                 / F.sqrt(
                     portable_round(
                         fold_term_sum(
-                            F.transform("embedding", lambda x: x * x)
+                            F.transform("embedding", lambda x: x * x), 12
                         ),
                         9,
                     )

@@ -39,6 +39,8 @@ from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
+    sql_term_sum,
+    term_sum,
 )
 from stockmarketdata_dwb_etl_spark.functions.text import tokenize
 from stockmarketdata_dwb_etl_spark.registry import query
@@ -61,75 +63,6 @@ def _duck_md5_int(expr: str, k: int) -> str:
 def _md5_int(col: Column, k: int) -> Column:
     """Spark twin of :func:`_duck_md5_int`."""
     return F.conv(F.substring(F.md5(col), 1, k), 16, 10).cast("bigint")
-
-
-def _ssum(col: Column, n: int = 8) -> Column:
-    """Order-independent Σ of double terms: n-dp portable round, exact
-    DECIMAL accumulation, DOUBLE out (stats_q2._sterm discipline).
-
-    Pick n so |term|·10^n < 2^53 ≈ 9.0e15 — NOT the int64 9.2e18 floor
-    bound: beyond 2^53 the rounded k/10^n stops round-tripping through
-    a double's ≤17 significant digits, so Spark's shortest-repr and
-    DuckDB's float-scaled double→DECIMAL conversions become DIFFERENT
-    approximations (the q_anova_hod failure). Terms with a wide dynamic
-    range that can't fit one n: use stats_q._ssum2/_dsum2."""
-    return F.sum(portable_round(col, n).cast(f"decimal(38,{n})")).cast("double")
-
-
-def _dsum(expr: str, n: int = 8) -> str:
-    """DuckDB twin of :func:`_ssum`."""
-    return (
-        f"CAST(SUM(CAST({sql_portable_round(expr, n)}"
-        f" AS DECIMAL(38,{n}))) AS DOUBLE)"
-    )
-
-
-_SSUM_SPLIT = 1_000_000  # 10^6 — hi/lo split point of the scaled term
-
-
-def _ssum_hilo(col: Column, n: int = 12) -> tuple[Column, Column]:
-    """Two-long-bucket form of :func:`_ssum` for HOT aggregations (the
-    d²-fan pair sums): the n-dp-scaled term k = floor(x·10ⁿ + 0.5) — the
-    exact integer the DECIMAL(38,n) path accumulates — splits into
-    hi = (k − k mod 10⁶)/10⁶ and lo = k mod 10⁶, each summed as a plain
-    BIGINT. The per-row cost drops from one BigDecimal construction +
-    BigDecimal add (a non-compact Decimal agg buffer) to two primitive
-    long adds inside whole-stage codegen; :func:`_ssum_fin` reassembles
-    the exact value once per GROUP.
-
-    Equivalence: Σk = 10⁶·Σhi + Σlo exactly (pmod keeps lo ∈ [0, 10⁶)
-    for either sign, so the split is lossless integer arithmetic), and
-    the finisher rebuilds Σk/10ⁿ in exact DECIMAL before one double
-    cast — the identical rational value, hence the identical double,
-    as the DECIMAL(38,n) sum.
-
-    Overflow bound (document per site): BIGINT sums wrap silently under
-    non-ANSI, so both buckets need |Σ| < 2^63 ≈ 9.2e18. With |x| < 1
-    and n = 12 each bucket term is < 10⁶, which holds to ~9.2e12 rows
-    PER GROUP — two orders beyond a 100 TB embedding corpus; wider
-    terms need the bound rechecked. Requires n ≥ 6."""
-    k = F.floor(col.cast("double") * F.lit(float(10**n)) + F.lit(0.5))
-    lo = F.pmod(k, F.lit(_SSUM_SPLIT))
-    # (k − lo) is an exact multiple of 10⁶ and < 2^53, so the double
-    # division is exact and the bigint cast lossless
-    hi = ((k - lo) / F.lit(float(_SSUM_SPLIT))).cast("bigint")
-    return F.sum(hi), F.sum(lo)
-
-
-def _ssum_fin(hi_sum: Column, lo_sum: Column, n: int = 12) -> Column:
-    """Finisher for :func:`_ssum_hilo`: Σhi/10ⁿ⁻⁶ + Σlo/10ⁿ in exact
-    DECIMAL, one double cast. Both divisions are exact: the dividends
-    are bigints cast to DECIMAL(20,0) and the result scales (8 and
-    n+2 ≥ n) cover every fractional digit the quotients can have, so no
-    HALF_UP rounding ever fires; the final addition is exact at scale
-    max and precision ≤ 35 < 38. Runs once per group — d²-bounded."""
-    hi_dec = hi_sum.cast("decimal(20,0)") / F.lit(10 ** (n - 6)).cast(
-        f"decimal({n - 5},0)"
-    )
-    lo_dec = lo_sum.cast("decimal(20,0)") / F.lit(10**n).cast(
-        f"decimal({n + 1},0)"
-    )
-    return (hi_dec + lo_dec).cast("double")
 
 
 # ---------------------------------------------------------------------------
@@ -465,13 +398,13 @@ _ZIPF_TOPK = 10_000
     ),
     s AS (
         SELECT lang, CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum("log10(CAST(r AS DOUBLE))")} AS sx,
-               {_dsum("log10(CAST(f AS DOUBLE))")} AS sy,
-               {_dsum("log10(CAST(r AS DOUBLE)) * log10(CAST(r AS DOUBLE))")}
+               {sql_term_sum("log10(CAST(r AS DOUBLE))", 8)} AS sx,
+               {sql_term_sum("log10(CAST(f AS DOUBLE))", 8)} AS sy,
+               {sql_term_sum("log10(CAST(r AS DOUBLE)) * log10(CAST(r AS DOUBLE))", 8)}
                    AS sxx,
-               {_dsum("log10(CAST(f AS DOUBLE)) * log10(CAST(f AS DOUBLE))")}
+               {sql_term_sum("log10(CAST(f AS DOUBLE)) * log10(CAST(f AS DOUBLE))", 8)}
                    AS syy,
-               {_dsum("log10(CAST(r AS DOUBLE)) * log10(CAST(f AS DOUBLE))")}
+               {sql_term_sum("log10(CAST(r AS DOUBLE)) * log10(CAST(f AS DOUBLE))", 8)}
                    AS sxy
         FROM ranked GROUP BY lang
     )
@@ -519,11 +452,11 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = F.log10(F.col("f").cast("double"))
     s = ranked.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum(x).alias("sx"),
-        _ssum(y).alias("sy"),
-        _ssum(x * x).alias("sxx"),
-        _ssum(y * y).alias("syy"),
-        _ssum(x * y).alias("sxy"),
+        term_sum(x, 8).alias("sx"),
+        term_sum(y, 8).alias("sy"),
+        term_sum(x * x, 8).alias("sxx"),
+        term_sum(y * y, 8).alias("syy"),
+        term_sum(x * y, 8).alias("sxy"),
     )
     n = F.col("n")
     cov = n * F.col("sxy") - F.col("sx") * F.col("sy")
@@ -570,17 +503,17 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     s AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum("log10(CAST(n_cum AS DOUBLE))")} AS sx,
-               {_dsum("log10(CAST(v_cum AS DOUBLE))")} AS sy,
-               {_dsum(
+               {sql_term_sum("log10(CAST(n_cum AS DOUBLE))", 8)} AS sx,
+               {sql_term_sum("log10(CAST(v_cum AS DOUBLE))", 8)} AS sy,
+               {sql_term_sum(
                    "log10(CAST(n_cum AS DOUBLE))"
-                   " * log10(CAST(n_cum AS DOUBLE))")} AS sxx,
-               {_dsum(
+                   " * log10(CAST(n_cum AS DOUBLE))", 8)} AS sxx,
+               {sql_term_sum(
                    "log10(CAST(v_cum AS DOUBLE))"
-                   " * log10(CAST(v_cum AS DOUBLE))")} AS syy,
-               {_dsum(
+                   " * log10(CAST(v_cum AS DOUBLE))", 8)} AS syy,
+               {sql_term_sum(
                    "log10(CAST(n_cum AS DOUBLE))"
-                   " * log10(CAST(v_cum AS DOUBLE))")} AS sxy
+                   " * log10(CAST(v_cum AS DOUBLE))", 8)} AS sxy
         FROM cum WHERE n_cum > 0 AND v_cum > 0
     )
     SELECT n AS n_docs,
@@ -640,11 +573,11 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = F.log10(F.col("v_cum").cast("double"))
     s = cum.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum(x).alias("sx"),
-        _ssum(y).alias("sy"),
-        _ssum(x * x).alias("sxx"),
-        _ssum(y * y).alias("syy"),
-        _ssum(x * y).alias("sxy"),
+        term_sum(x, 8).alias("sx"),
+        term_sum(y, 8).alias("sy"),
+        term_sum(x * x, 8).alias("sxx"),
+        term_sum(y * y, 8).alias("syy"),
+        term_sum(x * y, 8).alias("sxy"),
     )
     n = F.col("n")
     cov = n * F.col("sxy") - F.col("sx") * F.col("sy")

@@ -38,13 +38,10 @@ from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
+    sql_term_sum,
+    term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.dataops11 import (
-    _duck_md5_int,
-    _dsum,
-    _md5_int,
-    _ssum,
-)
+from stockmarketdata_dwb_etl_spark.queries.dataops11 import _duck_md5_int, _md5_int
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -320,9 +317,9 @@ def _duck_cos(a: str, b: str, d: int) -> str:
     SELECT CAST(dims AS BIGINT) AS dims,
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
            CAST({sql_portable_round(
-               f"{_dsum('c')} / COUNT(*)", 6)} AS DOUBLE) AS mean_cos,
+               f"{sql_term_sum('c', 8)} / COUNT(*)", 6)} AS DOUBLE) AS mean_cos,
            CAST({sql_portable_round(
-               f"{_dsum('abs(c - c64)')} / COUNT(*)", 6)} AS DOUBLE)
+               f"{sql_term_sum('abs(c - c64)', 8)} / COUNT(*)", 6)} AS DOUBLE)
                AS mean_abs_dev
     FROM stacked GROUP BY dims ORDER BY dims
     """,
@@ -383,11 +380,11 @@ def q_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         stacked.groupBy("dims")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-            portable_round(_ssum(F.col("c")) / F.count(F.lit(1)), 6)
+            portable_round(term_sum(F.col("c"), 8) / F.count(F.lit(1)), 6)
             .cast("double")
             .alias("mean_cos"),
             portable_round(
-                _ssum(F.abs(F.col("c") - F.col("c64"))) / F.count(F.lit(1)),
+                term_sum(F.abs(F.col("c") - F.col("c64")), 8) / F.count(F.lit(1)),
                 6,
             )
             .cast("double")
@@ -481,7 +478,7 @@ _PL_DMIN = 2
         SELECT CAST((SELECT COUNT(*) FROM deg) AS BIGINT) AS n_nodes,
                CAST(COUNT(*) AS BIGINT) AS n_tail,
                CAST(MAX(d) AS BIGINT) AS max_degree,
-               {_dsum(f"ln(CAST(d AS DOUBLE) / ({_PL_DMIN} - 0.5))")}
+               {sql_term_sum(f"ln(CAST(d AS DOUBLE) / ({_PL_DMIN} - 0.5))", 8)}
                    AS sum_ln
         FROM tail
     )
@@ -514,8 +511,8 @@ def q_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = tail.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_tail"),
         F.max("d").cast("bigint").alias("max_degree"),
-        _ssum(
-            F.log(F.col("d").cast("double") / (_PL_DMIN - 0.5))
+        term_sum(
+            F.log(F.col("d").cast("double") / (_PL_DMIN - 0.5)), 8
         ).alias("sum_ln"),
     )
     return (

@@ -33,15 +33,13 @@ from pyspark.sql.window import Window
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
+    split_term_sum,
     sql_portable_round,
+    sql_split_term_sum,
+    sql_term_sum,
+    term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.dataops11 import (
-    _TWIN_SQL,
-    _dsum,
-    _linkage_records,
-    _ssum,
-)
-from stockmarketdata_dwb_etl_spark.queries.stats_q import _dsum2, _ssum2
+from stockmarketdata_dwb_etl_spark.queries.dataops11 import _TWIN_SQL, _linkage_records
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -96,7 +94,7 @@ from stockmarketdata_dwb_etl_spark.registry import query
     ),
     agg AS (
         SELECT rep, CAST(COUNT(*) AS BIGINT) AS n_members,
-               {_dsum("bal")} AS sbal
+               {sql_term_sum("bal", 8)} AS sbal
         FROM members GROUP BY rep
     )
     SELECT CAST(a.rep AS BIGINT) AS cluster_rep, a.n_members,
@@ -181,7 +179,7 @@ def q_er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = members.groupBy("rep").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members"),
-        _ssum(F.col("bal")).alias("sbal"),
+        term_sum(F.col("bal"), 8).alias("sbal"),
     )
     return (
         agg.filter(F.col("n_members") > 1)
@@ -242,8 +240,8 @@ _CROSTON_ALPHA = 0.1
     ),
     fit AS (
         SELECT part, CAST(MAX(n) AS BIGINT) AS n_demands,
-               {_dsum("z_term")} AS z,
-               {_dsum("p_term")} AS p
+               {sql_term_sum("z_term", 8)} AS z,
+               {sql_term_sum("p_term", 8)} AS p
         FROM terms GROUP BY part
         HAVING MAX(n) >= 2
     )
@@ -310,8 +308,8 @@ def q_croston_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("part")
         .agg(
             F.max("n").cast("bigint").alias("n_demands"),
-            _ssum(F.col("zt")).alias("z"),
-            _ssum(F.col("pt")).alias("p"),
+            term_sum(F.col("zt"), 8).alias("z"),
+            term_sum(F.col("pt"), 8).alias("p"),
         )
         .filter(F.col("n_demands") >= 2)
     )
@@ -339,7 +337,7 @@ def _duck_esd_round(prev: str, rnd: int) -> str:
     return f"""
     m{rnd} AS (
         SELECT symbol, CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("x", 12, 8)} AS s, {_dsum2("x * x", 12, 6)} AS ss
+               {sql_split_term_sum("x", 12, 8)} AS s, {sql_split_term_sum("x * x", 12, 6)} AS ss
         FROM {prev} GROUP BY symbol
     ),
     top{rnd} AS (
@@ -437,8 +435,8 @@ def q_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         # x^2 at (12,6) -> |x^2|*1e6 ~ 1e14, both < 9.0e15.
         m = keep.groupBy("symbol").agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
-            _ssum2(F.col("x"), 12, 8).alias("s"),
-            _ssum2(F.col("x") * F.col("x"), 12, 6).alias("ss"),
+            split_term_sum(F.col("x"), 12, 8).alias("s"),
+            split_term_sum(F.col("x") * F.col("x"), 12, 6).alias("ss"),
         )
         j = keep.join(m, "symbol")
         w = Window.partitionBy("symbol").orderBy(

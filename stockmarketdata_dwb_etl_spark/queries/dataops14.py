@@ -31,13 +31,10 @@ from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
+    sql_term_sum,
+    term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.dataops11 import (
-    _duck_md5_int,
-    _dsum,
-    _md5_int,
-    _ssum,
-)
+from stockmarketdata_dwb_etl_spark.queries.dataops11 import _duck_md5_int, _md5_int
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -293,10 +290,10 @@ def q_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS ntr,
-               {_dsum("CAST(t AS DOUBLE)")} AS sx,
-               {_dsum("close", 8)} AS sy,
-               {_dsum("CAST(t AS DOUBLE) * CAST(t AS DOUBLE)", 4)} AS sxx,
-               {_dsum("CAST(t AS DOUBLE) * close", 4)} AS sxy
+               {sql_term_sum("CAST(t AS DOUBLE)", 8)} AS sx,
+               {sql_term_sum("close", 8)} AS sy,
+               {sql_term_sum("CAST(t AS DOUBLE) * CAST(t AS DOUBLE)", 4)} AS sxx,
+               {sql_term_sum("CAST(t AS DOUBLE) * close", 4)} AS sxy
         FROM marked WHERE split = 'train' GROUP BY symbol
     ),
     coef AS (
@@ -379,10 +376,10 @@ def q_conformal_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("symbol")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("ntr"),
-            _ssum(td).alias("sx"),
-            _ssum(F.col("close")).alias("sy"),
-            _ssum(td * td, 4).alias("sxx"),
-            _ssum(td * F.col("close"), 4).alias("sxy"),
+            term_sum(td, 8).alias("sx"),
+            term_sum(F.col("close"), 8).alias("sy"),
+            term_sum(td * td, 4).alias("sxx"),
+            term_sum(td * F.col("close"), 4).alias("sxy"),
         )
     )
     ntr = F.col("ntr")
@@ -463,8 +460,8 @@ _DID_SPLIT = "1998-01-01"
     cells AS (
         SELECT treated, post,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum("y", 6)} AS s,
-               {_dsum("y * y", 2)} AS ss
+               {sql_term_sum("y", 6)} AS s,
+               {sql_term_sum("y * y", 2)} AS ss
         FROM panel GROUP BY treated, post
     ),
     wide AS (
@@ -520,8 +517,8 @@ def q_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells = panel.groupBy("treated", "post").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum(F.col("y"), 6).alias("s"),
-        _ssum(F.col("y") * F.col("y"), 2).alias("ss"),
+        term_sum(F.col("y"), 6).alias("s"),
+        term_sum(F.col("y") * F.col("y"), 2).alias("ss"),
     )
     mean = F.col("s") / F.col("n")
     var_of_mean = (

@@ -31,8 +31,9 @@ from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
+    sql_term_sum,
+    term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.dataops11 import _dsum, _ssum
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -93,7 +94,7 @@ _POPCNT_SQL = (
         JOIN vtab w ON w.s = (wo.s | c.bit)
     )
     SELECT ch AS channel,
-           CAST({sql_portable_round(_dsum("t", 12), 6)} AS DOUBLE)
+           CAST({sql_portable_round(sql_term_sum("t", 12), 6)} AS DOUBLE)
                AS shapley_phi,
            CAST((SELECT {sql_portable_round("MAX(v)", 6)}
                  FROM vtab WHERE s = 15) AS DOUBLE) AS v_grand,
@@ -195,10 +196,10 @@ def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         terms.groupBy("channel")
         .agg(
             # the 8 coalition terms per channel are unrounded doubles;
-            # _ssum (12dp round → exact DECIMAL Σ) makes the per-channel
+            # term_sum (12dp round → exact DECIMAL Σ) makes the per-channel
             # sum accumulation-order independent across engines
             # (|t| ≤ 1, so the 12dp floor term is nowhere near int64)
-            portable_round(_ssum(F.col("t"), 12), 6)
+            portable_round(term_sum(F.col("t"), 12), 6)
             .cast("double")
             .alias("shapley_phi")
         )
@@ -348,7 +349,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_matched_pairs_att",
     oracle=f"""
     WITH y AS (
-        SELECT o_custkey AS ck, {_dsum("o_totalprice", 6)} AS spend
+        SELECT o_custkey AS ck, {sql_term_sum("o_totalprice", 6)} AS spend
         FROM orders GROUP BY o_custkey
     ),
     pop AS (
@@ -369,14 +370,14 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     matched AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n_matched,
-               {_dsum("t_y - c_y", 4)} AS s_diff,
-               {_dsum("abs(t_bal - c_bal)", 6)} AS s_gap
+               {sql_term_sum("t_y - c_y", 4)} AS s_diff,
+               {sql_term_sum("abs(t_bal - c_bal)", 6)} AS s_gap
         FROM pairs WHERE rn = 1
     ),
     naive AS (
-        SELECT {_dsum("CASE WHEN treated = 1 THEN spend END", 6)}
+        SELECT {sql_term_sum("CASE WHEN treated = 1 THEN spend END", 6)}
                    / SUM(CASE WHEN treated = 1 THEN 1 ELSE 0 END)
-             - {_dsum("CASE WHEN treated = 0 THEN spend END", 6)}
+             - {sql_term_sum("CASE WHEN treated = 0 THEN spend END", 6)}
                    / SUM(CASE WHEN treated = 0 THEN 1 ELSE 0 END) AS nd
         FROM pop
     )
@@ -409,7 +410,7 @@ def q_matched_pairs_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     y = orders.groupBy(F.col("o_custkey").alias("ck")).agg(
-        _ssum(F.col("o_totalprice"), 6).alias("spend")
+        term_sum(F.col("o_totalprice"), 6).alias("spend")
     )
     pop = cust.join(y, cust["c_custkey"] == y["ck"], "left").select(
         F.col("c_custkey").alias("ck"),
@@ -447,14 +448,14 @@ def q_matched_pairs_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     magg = matched.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_matched"),
-        _ssum(F.col("t_y") - F.col("c_y"), 4).alias("s_diff"),
-        _ssum(F.abs(F.col("t_bal") - F.col("c_bal")), 6).alias("s_gap"),
+        term_sum(F.col("t_y") - F.col("c_y"), 4).alias("s_diff"),
+        term_sum(F.abs(F.col("t_bal") - F.col("c_bal")), 6).alias("s_gap"),
     )
     naive = pop.agg(
         (
-            _ssum(F.when(F.col("treated") == 1, F.col("spend")), 6)
+            term_sum(F.when(F.col("treated") == 1, F.col("spend")), 6)
             / F.sum(F.col("treated"))
-            - _ssum(F.when(F.col("treated") == 0, F.col("spend")), 6)
+            - term_sum(F.when(F.col("treated") == 0, F.col("spend")), 6)
             / F.sum(1 - F.col("treated"))
         ).alias("nd")
     )

@@ -18,7 +18,7 @@ batch 7).
 Determinism: all counts exact integers; covariate/metric moment sums
 round-then-cast into exact DECIMAL (2dp products — per-customer spend
 sums reach ~5e6, so 2dp keeps |term|·10^n under the int64 floor bound);
-IPF scale factors divide margin targets by _ssum/_dsum
+IPF scale factors divide margin targets by term_sum/sql_term_sum
 (8dp-round-then-DECIMAL) cell-weight sums so every SUM(wgt * n_s) is
 accumulation-order independent across engines; the per-cell wgt * f
 updates are then exact products of identical doubles; emitted doubles
@@ -34,8 +34,9 @@ from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
+    sql_term_sum,
+    term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.dataops11 import _dsum, _ssum
 from stockmarketdata_dwb_etl_spark.registry import query
 
 _CUPED_SPLIT = "1998-01-01"
@@ -46,10 +47,10 @@ _CUPED_SPLIT = "1998-01-01"
     oracle=f"""
     WITH per_cust AS (
         SELECT o_custkey AS ck,
-               {_dsum(
+               {sql_term_sum(
                    "CASE WHEN o_orderdate < TIMESTAMP '" + _CUPED_SPLIT
                    + "' THEN o_totalprice ELSE 0.0 END", 6)} AS x,
-               {_dsum(
+               {sql_term_sum(
                    "CASE WHEN o_orderdate >= TIMESTAMP '" + _CUPED_SPLIT
                    + "' THEN o_totalprice ELSE 0.0 END", 6)} AS y
         FROM orders GROUP BY o_custkey
@@ -63,11 +64,11 @@ _CUPED_SPLIT = "1998-01-01"
     mo AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(t) AS BIGINT) AS nt,
-               {_dsum("x", 6)} AS sx, {_dsum("y", 6)} AS sy,
-               {_dsum("x * x", 2)} AS sxx, {_dsum("x * y", 2)} AS sxy,
-               {_dsum("y * y", 2)} AS syy,
-               {_dsum("CASE WHEN t = 1 THEN x ELSE 0.0 END", 6)} AS sxt,
-               {_dsum("CASE WHEN t = 1 THEN y ELSE 0.0 END", 6)} AS syt
+               {sql_term_sum("x", 6)} AS sx, {sql_term_sum("y", 6)} AS sy,
+               {sql_term_sum("x * x", 2)} AS sxx, {sql_term_sum("x * y", 2)} AS sxy,
+               {sql_term_sum("y * y", 2)} AS syy,
+               {sql_term_sum("CASE WHEN t = 1 THEN x ELSE 0.0 END", 6)} AS sxt,
+               {sql_term_sum("CASE WHEN t = 1 THEN y ELSE 0.0 END", 6)} AS syt
         FROM pop
     ),
     fit AS (
@@ -109,12 +110,12 @@ def q_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     split = F.lit(_CUPED_SPLIT).cast("timestamp")
     per_cust = orders.groupBy(F.col("o_custkey").alias("ck")).agg(
-        _ssum(
+        term_sum(
             F.when(F.col("o_orderdate") < split, F.col("o_totalprice"))
             .otherwise(0.0),
             6,
         ).alias("x"),
-        _ssum(
+        term_sum(
             F.when(F.col("o_orderdate") >= split, F.col("o_totalprice"))
             .otherwise(0.0),
             6,
@@ -128,15 +129,15 @@ def q_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     mo = pop.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("t").cast("bigint").alias("nt"),
-        _ssum(F.col("x"), 6).alias("sx"),
-        _ssum(F.col("y"), 6).alias("sy"),
-        _ssum(F.col("x") * F.col("x"), 2).alias("sxx"),
-        _ssum(F.col("x") * F.col("y"), 2).alias("sxy"),
-        _ssum(F.col("y") * F.col("y"), 2).alias("syy"),
-        _ssum(F.when(F.col("t") == 1, F.col("x")).otherwise(0.0), 6).alias(
+        term_sum(F.col("x"), 6).alias("sx"),
+        term_sum(F.col("y"), 6).alias("sy"),
+        term_sum(F.col("x") * F.col("x"), 2).alias("sxx"),
+        term_sum(F.col("x") * F.col("y"), 2).alias("sxy"),
+        term_sum(F.col("y") * F.col("y"), 2).alias("syy"),
+        term_sum(F.when(F.col("t") == 1, F.col("x")).otherwise(0.0), 6).alias(
             "sxt"
         ),
-        _ssum(F.when(F.col("t") == 1, F.col("y")).otherwise(0.0), 6).alias(
+        term_sum(F.when(F.col("t") == 1, F.col("y")).otherwise(0.0), 6).alias(
             "syt"
         ),
     )
@@ -194,7 +195,7 @@ def _duck_ipf_round(prev: str, rnd: int) -> str:
     then to the segment margin."""
     return f"""
     nscale{rnd} AS (
-        SELECT c.nation, tn.target / {_dsum("c.wgt * c.n_s", 8)} AS f
+        SELECT c.nation, tn.target / {sql_term_sum("c.wgt * c.n_s", 8)} AS f
         FROM {prev} c JOIN ntarget tn ON tn.nation = c.nation
         GROUP BY c.nation, tn.target
     ),
@@ -203,7 +204,7 @@ def _duck_ipf_round(prev: str, rnd: int) -> str:
         FROM {prev} c JOIN nscale{rnd} ns ON ns.nation = c.nation
     ),
     sscale{rnd} AS (
-        SELECT c.segment, ts.target / {_dsum("c.wgt * c.n_s", 8)} AS f
+        SELECT c.segment, ts.target / {sql_term_sum("c.wgt * c.n_s", 8)} AS f
         FROM half{rnd} c JOIN starget ts ON ts.segment = c.segment
         GROUP BY c.segment, ts.target
     ),
@@ -237,9 +238,9 @@ def _duck_ipf_round(prev: str, rnd: int) -> str:
     SELECT c.segment,
            CAST(ts.target AS DOUBLE) AS target_n,
            CAST({sql_portable_round(
-               _dsum("c.wgt * c.n_s", 8), 4)} AS DOUBLE) AS achieved_n,
+               sql_term_sum("c.wgt * c.n_s", 8), 4)} AS DOUBLE) AS achieved_n,
            CAST({sql_portable_round(
-               f"abs({_dsum('c.wgt * c.n_s', 8)} - ts.target) / ts.target",
+               f"abs({sql_term_sum('c.wgt * c.n_s', 8)} - ts.target) / ts.target",
                6)}
                AS DOUBLE) AS rel_err,
            CAST({sql_portable_round("MIN(c.wgt)", 6)} AS DOUBLE)
@@ -284,7 +285,7 @@ def q_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("double").alias("s_target")
     )
     for _rnd in range(_IPF_ROUNDS):
-        # Every SUM(wgt * n_s) routes through _ssum/_dsum (8dp round →
+        # Every SUM(wgt * n_s) routes through term_sum/sql_term_sum (8dp round →
         # exact DECIMAL Σ): from the first scaling onward wgt is an
         # arbitrary double, so a plain double sum would be accumulation-
         # order dependent (Spark partial-agg tree vs DuckDB scan order)
@@ -293,7 +294,7 @@ def q_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 8dp floor term is far under the int64 saturation bound.
         nscale = (
             cells.groupBy("nation")
-            .agg(_ssum(F.col("wgt") * F.col("n_s"), 8).alias("cur"))
+            .agg(term_sum(F.col("wgt") * F.col("n_s"), 8).alias("cur"))
             .join(F.broadcast(ntarget), "nation")
             .select("nation", (F.col("n_target") / F.col("cur")).alias("f"))
         )
@@ -302,7 +303,7 @@ def q_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sscale = (
             cells.groupBy("segment")
-            .agg(_ssum(F.col("wgt") * F.col("n_s"), 8).alias("cur"))
+            .agg(term_sum(F.col("wgt") * F.col("n_s"), 8).alias("cur"))
             .join(F.broadcast(starget), "segment")
             .select(
                 "segment", (F.col("s_target") / F.col("cur")).alias("f")
@@ -314,7 +315,7 @@ def q_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cells.groupBy("segment")
         .agg(
-            _ssum(F.col("wgt") * F.col("n_s"), 8).alias("achieved"),
+            term_sum(F.col("wgt") * F.col("n_s"), 8).alias("achieved"),
             F.min("wgt").alias("wmin"),
             F.max("wgt").alias("wmax"),
         )

@@ -23,7 +23,7 @@ curation and training:
   / decorrelation transform is fit.
 
 Determinism: counts exact integers; wide-range moment sums route
-through the two-bucket split sums (stats_q._ssum2/_dsum2); array
+through the two-bucket split sums (functions/exact.py::split_term_sum); array
 folds are sequential (element order is fixed, so unrounded left folds
 are cross-engine identical — the q_mutual_knn contract) with results
 rounded before any ranking decision; Φ(z) uses the Abramowitz–Stegun
@@ -39,11 +39,15 @@ from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import (
+    hilo_finish,
+    hilo_term_sum,
     portable_round,
+    split_term_sum,
     sql_portable_round,
+    sql_split_term_sum,
+    sql_term_sum,
+    term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.dataops11 import _dsum, _ssum, _ssum_fin, _ssum_hilo
-from stockmarketdata_dwb_etl_spark.queries.stats_q import _dsum2, _ssum2
 from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -74,7 +78,7 @@ _CB_BETA = 0.999
         FROM cls c CROSS JOIN tot t
     ),
     norm AS (
-        SELECT CAST(k AS BIGINT) AS k2, {_dsum("cb_raw", 12)} AS cb_sum
+        SELECT CAST(k AS BIGINT) AS k2, {sql_term_sum("cb_raw", 12)} AS cb_sum
         FROM w GROUP BY k
     )
     SELECT w.lang, w.n_docs,
@@ -117,7 +121,7 @@ def q_class_balance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         cb_raw.alias("cb_raw"),
     )
-    norm = w.groupBy("k").agg(_ssum(F.col("cb_raw"), 12).alias("cb_sum"))
+    norm = w.groupBy("k").agg(term_sum(F.col("cb_raw"), 12).alias("cb_sum"))
     return (
         w.crossJoin(F.broadcast(norm.select("cb_sum", F.col("k").alias("k2"))))
         .select(
@@ -158,7 +162,7 @@ _MIX_ALPHA = 0.3
                    AS tempered
         FROM cls c CROSS JOIN tot t
     ),
-    z AS (SELECT {_dsum("tempered", 12)} AS zsum FROM t)
+    z AS (SELECT {sql_term_sum("tempered", 12)} AS zsum FROM t)
     SELECT t.lang, t.n_docs,
            CAST({sql_portable_round("t.share", 6)} AS DOUBLE) AS share,
            CAST({sql_portable_round(
@@ -191,7 +195,7 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         share.alias("share"),
         F.exp(F.lit(_MIX_ALPHA) * F.log(share)).alias("tempered"),
     )
-    z = t.agg(_ssum(F.col("tempered"), 12).alias("zsum"))
+    z = t.agg(term_sum(F.col("tempered"), 12).alias("zsum"))
     return (
         t.crossJoin(F.broadcast(z))
         .select(
@@ -267,8 +271,8 @@ def _spark_p_two(z: Column) -> Column:
     ),
     m AS (
         SELECT symbol, CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("x", 12, 8)} AS s,
-               {_dsum2("x * x", 12, 6)} AS ss
+               {sql_split_term_sum("x", 12, 8)} AS s,
+               {sql_split_term_sum("x * x", 12, 6)} AS ss
         FROM rets GROUP BY symbol
     ),
     zt AS (
@@ -332,8 +336,8 @@ def q_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("x"), 12, 8).alias("s"),
-        _ssum2(F.col("x") * F.col("x"), 12, 6).alias("ss"),
+        split_term_sum(F.col("x"), 12, 8).alias("s"),
+        split_term_sum(F.col("x") * F.col("x"), 12, 6).alias("ss"),
     )
     var = (F.col("ss") - F.col("s") * F.col("s") / F.col("n")) / (
         F.col("n") - 1
@@ -684,13 +688,13 @@ def q_label_noise_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     dims AS (
         SELECT idx, CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum("val", 12)} AS sx,
-               {_dsum("val * val", 12)} AS sxx
+               {sql_term_sum("val", 12)} AS sx,
+               {sql_term_sum("val * val", 12)} AS sxx
         FROM ex GROUP BY idx
     ),
     pairs AS (
         SELECT a.idx AS da, b.idx AS db,
-               {_dsum("a.val * b.val", 12)} AS sxy
+               {sql_term_sum("a.val * b.val", 12)} AS sxy
         FROM ex a JOIN ex b ON a.vec_id = b.vec_id AND a.idx < b.idx
         GROUP BY a.idx, b.idx
     ),
@@ -739,8 +743,8 @@ def q_whitening_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", (F.col("idx0") + 1).alias("idx"), "val")
     dims = ex.groupBy("idx").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum(F.col("val"), 12).alias("sx"),
-        _ssum(F.col("val") * F.col("val"), 12).alias("sxx"),
+        term_sum(F.col("val"), 12).alias("sx"),
+        term_sum(F.col("val") * F.col("val"), 12).alias("sxx"),
     )
     from stockmarketdata_dwb_etl_spark.functions.vectors import (
         dim_pair_products,
@@ -749,19 +753,19 @@ def q_whitening_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair products generate MAP-SIDE from each vector's own array (no
     # exploded self-join; the groupBy partial-aggregates the d(d−1)/2
     # keys per partition before its only shuffle — dim_pair_products)
-    hi, lo = _ssum_hilo(F.col("prod"), 12)
+    hi, lo = hilo_term_sum(F.col("prod"), 12)
     pairs = (
         dim_pair_products(
             emb.select(F.col("embedding").cast("array<double>").alias("v"))
         )
         .filter(F.col("ia") < F.col("ib"))
         .groupBy(F.col("ia").alias("da"), F.col("ib").alias("db"))
-        # two-long-bucket sum (r13): bit-identical to the DECIMAL _ssum,
+        # two-long-bucket sum (r13): bit-identical to the DECIMAL term_sum,
         # ~2× cheaper per row on this d²·n hot agg; |prod| < 1 keeps the
         # bigint buckets exact to ~9.2e12 rows per (da, db) group
         .agg(hi.alias("__sh"), lo.alias("__sl"))
         .select(
-            "da", "db", _ssum_fin(F.col("__sh"), F.col("__sl"), 12).alias("sxy")
+            "da", "db", hilo_finish(F.col("__sh"), F.col("__sl"), 12).alias("sxy")
         )
     )
     dx = dims.select(

@@ -40,8 +40,9 @@ from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
+    sql_term_sum,
+    term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.dataops11 import _dsum, _ssum
 from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -600,7 +601,7 @@ _JS_VOCAB = 200
     )
     SELECT source_a, source_b,
            CAST({sql_portable_round(
-               _dsum("term", 12), 6)} AS DOUBLE) AS js_divergence
+               sql_term_sum("term", 12), 6)} AS DOUBLE) AS js_divergence
     FROM pair_terms
     GROUP BY source_a, source_b
     ORDER BY source_a, source_b
@@ -671,7 +672,7 @@ def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source_a", "source_b", term.alias("term"))
         .groupBy("source_a", "source_b")
         .agg(
-            portable_round(_ssum(F.col("term"), 12), 6)
+            portable_round(term_sum(F.col("term"), 12), 6)
             .cast("double")
             .alias("js_divergence")
         )
@@ -720,9 +721,9 @@ def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_probes,
            CAST({sql_portable_round(
-               _dsum("mu", 10) + " / COUNT(*)", 6)} AS DOUBLE) AS mean_mu,
+               sql_term_sum("mu", 10) + " / COUNT(*)", 6)} AS DOUBLE) AS mean_mu,
            CAST({sql_portable_round(
-               "COUNT(*) / " + _dsum("mu", 10), 4)} AS DOUBLE) AS id_twonn
+               "COUNT(*) / " + sql_term_sum("mu", 10), 4)} AS DOUBLE) AS id_twonn
     FROM mu
     """,
 )
@@ -783,12 +784,12 @@ def q_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mu.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_probes"),
         portable_round(
-            _ssum(F.col("mu"), 10) / F.count(F.lit(1)), 6
+            term_sum(F.col("mu"), 10) / F.count(F.lit(1)), 6
         )
         .cast("double")
         .alias("mean_mu"),
         portable_round(
-            F.count(F.lit(1)) / _ssum(F.col("mu"), 10), 4
+            F.count(F.lit(1)) / term_sum(F.col("mu"), 10), 4
         )
         .cast("double")
         .alias("id_twonn"),

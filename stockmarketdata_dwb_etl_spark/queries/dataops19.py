@@ -21,7 +21,7 @@ Reference scope: the reference's BigQuery tier is the analytics
 surface these extend (dump_bigq.py:135-149 delegates all querying).
 
 Determinism policy: counts and ranks are exact integers; every
-accumulation-order-dependent double Σ routes through _ssum/_ssum2
+accumulation-order-dependent double Σ routes through term_sum/split_term_sum
 (round-then-DECIMAL, 2^53-bounded buckets — see dataops11._ssum);
 ln/sqrt/cos evaluate identical expression trees on both engines and
 round past the compare precision; quantile picks are row_number over
@@ -36,11 +36,16 @@ from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import (
+    hilo_finish,
+    hilo_term_sum,
     portable_round,
+    split_term_sum,
     sql_portable_round,
+    sql_split_term_sum,
+    sql_term_sum,
+    term,
+    term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.dataops11 import _dsum, _ssum, _ssum_fin, _ssum_hilo
-from stockmarketdata_dwb_etl_spark.queries.stats_q import _dsum2, _ssum2
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -152,7 +157,7 @@ def q_collocation_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def term(k, r, c):
+    def g2_cell(k, r, c):
         return F.when(
             F.col(k) > 0,
             F.col(k)
@@ -163,10 +168,10 @@ def q_collocation_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.lit(0.0))
 
     g2 = F.lit(2.0) * (
-        term("k11", F.col("c_a"), F.col("c_b"))
-        + term("k12", F.col("c_a"), F.col("n_big") - F.col("c_b"))
-        + term("k21", F.col("n_big") - F.col("c_a"), F.col("c_b"))
-        + term(
+        g2_cell("k11", F.col("c_a"), F.col("c_b"))
+        + g2_cell("k12", F.col("c_a"), F.col("n_big") - F.col("c_b"))
+        + g2_cell("k21", F.col("n_big") - F.col("c_a"), F.col("c_b"))
+        + g2_cell(
             "k22", F.col("n_big") - F.col("c_a"), F.col("n_big") - F.col("c_b")
         )
     )
@@ -206,7 +211,7 @@ _NEYMAN_BUDGET = 1000
         FROM s
     ),
     tot AS (
-        SELECT {_dsum("n_h * s_h", 6)} AS denom FROM sd
+        SELECT {sql_term_sum("n_h * s_h", 6)} AS denom FROM sd
     )
     SELECT segment, n_h,
            CAST({sql_portable_round("s_h", 4)} AS DOUBLE) AS s_h,
@@ -240,7 +245,7 @@ def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     mu = F.col("sx") / F.col("n_h")
     s_h = F.sqrt(F.greatest(F.col("sxx") / F.col("n_h") - mu * mu, F.lit(0.0)))
     sd = s.select("segment", "n_h", s_h.alias("s_h"))
-    tot = sd.agg(_ssum(F.col("n_h") * F.col("s_h"), 6).alias("denom"))
+    tot = sd.agg(term_sum(F.col("n_h") * F.col("s_h"), 6).alias("denom"))
     share = portable_round(
         F.col("n_h") * F.col("s_h") / F.col("denom"), 6
     )
@@ -304,7 +309,7 @@ _BM25_B = 0.75
         CROSS JOIN stats s
     )
     SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_terms_hit,
-           CAST({sql_portable_round(_dsum("c", 8), 6)} AS DOUBLE) AS bm25
+           CAST({sql_portable_round(sql_term_sum("c", 8), 6)} AS DOUBLE) AS bm25
     FROM contrib GROUP BY doc_id
     ORDER BY bm25 DESC, doc_id
     LIMIT 10
@@ -360,7 +365,7 @@ def q_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         contrib.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_terms_hit"),
-            portable_round(_ssum(F.col("c"), 8), 6)
+            portable_round(term_sum(F.col("c"), 8), 6)
             .cast("double")
             .alias("bm25"),
         )
@@ -405,8 +410,8 @@ def q_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     m AS (
         SELECT event_type, MAX(n) AS n, MAX(p10) AS p10, MAX(p90) AS p90,
                CAST(SUM(clamped) AS BIGINT) AS n_clamped,
-               {_dsum2("cx", 12, 6)} AS s,
-               {_dsum2("cx * cx", 12, 2)} AS ss
+               {sql_split_term_sum("cx", 12, 6)} AS s,
+               {sql_split_term_sum("cx * cx", 12, 2)} AS ss
         FROM cl GROUP BY event_type
     )
     SELECT event_type, n, n_clamped,
@@ -472,8 +477,8 @@ def q_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("p10").alias("p10"),
         F.max("p90").alias("p90"),
         F.sum("clamped").cast("bigint").alias("n_clamped"),
-        _ssum2(F.col("cx"), 12, 6).alias("s"),
-        _ssum2(F.col("cx") * F.col("cx"), 12, 2).alias("ss"),
+        split_term_sum(F.col("cx"), 12, 6).alias("s"),
+        split_term_sum(F.col("cx") * F.col("cx"), 12, 2).alias("ss"),
     )
     mu = F.col("s") / F.col("n")
     sd = F.sqrt(F.greatest(F.col("ss") / F.col("n") - mu * mu, F.lit(0.0)))
@@ -516,7 +521,7 @@ def _duck_haar_level(prev: str, lvl: int) -> str:
     ),
     e{lvl} AS (
         SELECT symbol, CAST(COUNT(*) AS BIGINT) AS np,
-               {_dsum2("d * d", 12, 6)} AS e
+               {sql_split_term_sum("d * d", 12, 6)} AS e
         FROM a{lvl} GROUP BY symbol
     )"""
 
@@ -614,7 +619,7 @@ def q_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         energies.append(
             nxt.groupBy("symbol").agg(
-                _ssum2(F.col("d") * F.col("d"), 12, 6).alias(f"_e{lvl}")
+                split_term_sum(F.col("d") * F.col("d"), 12, 6).alias(f"_e{lvl}")
             )
         )
         cur = nxt
@@ -649,11 +654,11 @@ def _duck_hits_iter(rnd: int) -> str:
     return f"""
     araw{rnd} AS (
         SELECT e.dst AS node,
-               {_dsum("h.h * e.w", 8)} AS raw
+               {sql_term_sum("h.h * e.w", 8)} AS raw
         FROM edges e JOIN {prev} h ON h.node = e.src
         GROUP BY e.dst
     ),
-    atot{rnd} AS (SELECT {_dsum("raw", 8)} AS t FROM araw{rnd}),
+    atot{rnd} AS (SELECT {sql_term_sum("raw", 8)} AS t FROM araw{rnd}),
     auth{rnd} AS (
         SELECT n.node,
                CAST({sql_portable_round("COALESCE(a.raw, 0.0) / t.t", 12)}
@@ -663,11 +668,11 @@ def _duck_hits_iter(rnd: int) -> str:
     ),
     hraw{rnd} AS (
         SELECT e.src AS node,
-               {_dsum("a.a * e.w", 8)} AS raw
+               {sql_term_sum("a.a * e.w", 8)} AS raw
         FROM edges e JOIN auth{rnd} a ON a.node = e.dst
         GROUP BY e.src
     ),
-    htot{rnd} AS (SELECT {_dsum("raw", 8)} AS t FROM hraw{rnd}),
+    htot{rnd} AS (SELECT {sql_term_sum("raw", 8)} AS t FROM hraw{rnd}),
     hub{rnd} AS (
         SELECT n.node,
                CAST({sql_portable_round("COALESCE(h.raw, 0.0) / t.t", 12)}
@@ -717,14 +722,13 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             edges.join(hub.withColumnRenamed("node", "src"), "src")
             .select(
                 "dst",
-                portable_round(F.col("h") * F.col("w"), 8)
-                .cast("decimal(38,8)")
+                term(F.col("h") * F.col("w"), 8)
                 .alias("c"),
             )
             .groupBy("dst")
             .agg(F.sum("c").cast("double").alias("raw"))
         )
-        atot = araw.agg(_ssum(F.col("raw"), 8).alias("t"))
+        atot = araw.agg(term_sum(F.col("raw"), 8).alias("t"))
         auth = (
             nodes.crossJoin(F.broadcast(atot))
             .join(araw.withColumnRenamed("dst", "node"), "node", "left")
@@ -742,14 +746,13 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             edges.join(auth.withColumnRenamed("node", "dst"), "dst")
             .select(
                 "src",
-                portable_round(F.col("a") * F.col("w"), 8)
-                .cast("decimal(38,8)")
+                term(F.col("a") * F.col("w"), 8)
                 .alias("c"),
             )
             .groupBy("src")
             .agg(F.sum("c").cast("double").alias("raw"))
         )
-        htot = hraw.agg(_ssum(F.col("raw"), 8).alias("t"))
+        htot = hraw.agg(term_sum(F.col("raw"), 8).alias("t"))
         hub = (
             nodes.crossJoin(F.broadcast(htot))
             .join(hraw.withColumnRenamed("src", "node"), "node", "left")
@@ -818,7 +821,7 @@ def _mmd_oracle() -> str:
     ),
     m AS (
         SELECT side, j, CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum("z", 8)} AS sz
+               {sql_term_sum("z", 8)} AS sz
         FROM feats GROUP BY side, j
     ),
     d AS (
@@ -828,7 +831,7 @@ def _mmd_oracle() -> str:
     )
     SELECT CAST(MAX(n_a) AS BIGINT) AS n_a, CAST(MAX(n_b) AS BIGINT) AS n_b,
            CAST({sql_portable_round(
-               f"(2.0 / {_MMD_D}.0) * ({_dsum('dm * dm', 14)})", 8)}
+               f"(2.0 / {_MMD_D}.0) * ({sql_term_sum('dm * dm', 14)})", 8)}
                AS DOUBLE) AS mmd2
     FROM d
     """
@@ -870,7 +873,7 @@ def q_mmd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("side", "j", z.alias("z"))
     m = feats.groupBy("side", "j").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum(F.col("z"), 8).alias("sz"),
+        term_sum(F.col("z"), 8).alias("sz"),
     )
     x = m.filter(F.col("side") == 0).select(
         "j", F.col("n").alias("n_a"), F.col("sz").alias("sza")
@@ -889,7 +892,7 @@ def q_mmd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n_a").cast("bigint").alias("n_a"),
         F.max("n_b").cast("bigint").alias("n_b"),
         portable_round(
-            F.lit(2.0 / _MMD_D) * _ssum(F.col("dm") * F.col("dm"), 14), 8
+            F.lit(2.0 / _MMD_D) * term_sum(F.col("dm") * F.col("dm"), 14), 8
         )
         .cast("double")
         .alias("mmd2"),
@@ -913,12 +916,12 @@ def q_mmd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     dims AS (
         SELECT idx, CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum("val", 12)} AS sx
+               {sql_term_sum("val", 12)} AS sx
         FROM ex GROUP BY idx
     ),
     pairs AS (
         SELECT a.idx AS ia, b.idx AS ib,
-               {_dsum("a.val * b.val", 12)} AS sxy
+               {sql_term_sum("a.val * b.val", 12)} AS sxy
         FROM ex a JOIN ex b ON a.vec_id = b.vec_id
         WHERE NOT (a.idx > 32 AND b.idx <= 32)
         GROUP BY 1, 2
@@ -934,7 +937,7 @@ def q_mmd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN dims y ON y.idx = p.ib
     ),
     h AS (
-        SELECT blk, {_dsum("cov * cov", 16)} AS hs FROM cov GROUP BY blk
+        SELECT blk, {sql_term_sum("cov * cov", 16)} AS hs FROM cov GROUP BY blk
     ),
     piv AS (
         SELECT MAX(CASE WHEN blk = 'xy' THEN hs END) AS hxy,
@@ -975,7 +978,7 @@ def q_cka_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", (F.col("idx0") + 1).alias("idx"), "val")
     dims = ex.groupBy("idx").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum(F.col("val"), 12).alias("sx"),
+        term_sum(F.col("val"), 12).alias("sx"),
     )
     from stockmarketdata_dwb_etl_spark.functions.vectors import (
         dim_pair_products,
@@ -984,19 +987,19 @@ def q_cka_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair products generate MAP-SIDE from each vector's own array (no
     # exploded self-join: the groupBy partial-aggregates d² keys per
     # partition before its only shuffle — see dim_pair_products)
-    hi, lo = _ssum_hilo(F.col("prod"), 12)
+    hi, lo = hilo_term_sum(F.col("prod"), 12)
     pairs = (
         dim_pair_products(
             emb.select(F.col("embedding").cast("array<double>").alias("v"))
         )
         .filter(~((F.col("ia") > 32) & (F.col("ib") <= 32)))
         .groupBy("ia", "ib")
-        # two-long-bucket sum (r13): bit-identical to the DECIMAL _ssum,
+        # two-long-bucket sum (r13): bit-identical to the DECIMAL term_sum,
         # ~2× cheaper per row on this d²·n hot agg; |prod| < 1 keeps the
         # bigint buckets exact to ~9.2e12 rows per (ia, ib) group
         .agg(hi.alias("__sh"), lo.alias("__sl"))
         .select(
-            "ia", "ib", _ssum_fin(F.col("__sh"), F.col("__sl"), 12).alias("sxy")
+            "ia", "ib", hilo_finish(F.col("__sh"), F.col("__sl"), 12).alias("sxy")
         )
     )
     dx = dims.select(
@@ -1024,7 +1027,7 @@ def q_cka_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(dy), "ib")
         .select(blk.alias("blk"), cov.alias("cov"))
         .groupBy("blk")
-        .agg(_ssum(F.col("cov") * F.col("cov"), 16).alias("hs"))
+        .agg(term_sum(F.col("cov") * F.col("cov"), 16).alias("hs"))
     )
     piv = h.agg(
         F.max(F.when(F.col("blk") == "xy", F.col("hs"))).alias("hxy"),

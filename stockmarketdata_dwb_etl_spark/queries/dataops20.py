@@ -24,7 +24,7 @@ surface these extend (dump_bigq.py:135-149 delegates all querying).
 
 Determinism: prefix sums accumulate 8dp/6dp-rounded terms in exact
 DECIMAL over the (day) window order; centroid means and NLL terms are
-identical-tree doubles over _ssum-reduced exact sums; argmin picks are
+identical-tree doubles over term_sum-reduced exact sums; argmin picks are
 rounded-cost orders with integer tie-breaks.
 """
 
@@ -36,11 +36,16 @@ from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import (
+    hilo_finish,
+    hilo_term_sum,
     portable_round,
     sql_portable_round,
+    sql_term,
+    sql_term_sum,
+    term,
+    term_sum,
 )
 from stockmarketdata_dwb_etl_spark.queries.dataops5 import _DUCK_SCORED_EN
-from stockmarketdata_dwb_etl_spark.queries.dataops11 import _dsum, _ssum, _ssum_fin, _ssum_hilo
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -68,10 +73,9 @@ from stockmarketdata_dwb_etl_spark.registry import query
     ),
     pre AS (
         SELECT symbol, day, rn, n,
-               CAST(SUM(CAST({sql_portable_round("v", 8)} AS DECIMAL(38,8)))
+               CAST(SUM({sql_term("v", 8)})
                     OVER (PARTITION BY symbol ORDER BY rn) AS DOUBLE) AS sp,
-               CAST(SUM(CAST({sql_portable_round("v * v", 6)}
-                    AS DECIMAL(38,6)))
+               CAST(SUM({sql_term("v * v", 6)})
                     OVER (PARTITION BY symbol ORDER BY rn) AS DOUBLE) AS spp
         FROM x
     ),
@@ -144,12 +148,12 @@ def q_binseg_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         "rn",
         "n",
-        F.sum(portable_round(F.col("v"), 8).cast("decimal(38,8)"))
+        F.sum(term(F.col("v"), 8))
         .over(wcum)
         .cast("double")
         .alias("sp"),
         F.sum(
-            portable_round(F.col("v") * F.col("v"), 6).cast("decimal(38,6)")
+            term(F.col("v") * F.col("v"), 6)
         )
         .over(wcum)
         .cast("double")
@@ -212,7 +216,7 @@ _SEMOUT_K = 5
     ),
     cent AS (
         SELECT label, idx,
-               {sql_portable_round(f"({_dsum('val', 12)}) / COUNT(*)", 10)}
+               {sql_portable_round(f"({sql_term_sum('val', 12)}) / COUNT(*)", 10)}
                    AS mu
         FROM ex GROUP BY label, idx
     ),
@@ -267,7 +271,7 @@ def q_semantic_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "label", (F.col("idx0") + 1).alias("idx"), "val")
     cent = ex.groupBy("label", "idx").agg(
         portable_round(
-            _ssum(F.col("val"), 12) / F.count(F.lit(1)), 10
+            term_sum(F.col("val"), 12) / F.count(F.lit(1)), 10
         ).alias("mu")
     )
     cvec = cent.groupBy("label").agg(
@@ -334,12 +338,12 @@ def q_semantic_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     dims AS (
         SELECT idx, CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum("val", 12)} AS sx
+               {sql_term_sum("val", 12)} AS sx
         FROM ex GROUP BY idx
     ),
     pairs AS (
         SELECT a.idx AS ia, b.idx AS ib,
-               {_dsum("a.val * b.val", 12)} AS sxy
+               {sql_term_sum("a.val * b.val", 12)} AS sxy
         FROM ex a JOIN ex b ON a.vec_id = b.vec_id
         GROUP BY 1, 2
     ),
@@ -353,8 +357,8 @@ def q_semantic_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     agg AS (
         SELECT
-            {_dsum("CASE WHEN ia = ib THEN cov ELSE 0.0 END", 12)} AS tr_c,
-            {_dsum("cov * cov", 16)} AS tr_c2,
+            {sql_term_sum("CASE WHEN ia = ib THEN cov ELSE 0.0 END", 12)} AS tr_c,
+            {sql_term_sum("cov * cov", 16)} AS tr_c2,
             CAST(COUNT(DISTINCT ia) AS BIGINT) AS d
         FROM cov
     )
@@ -388,25 +392,25 @@ def q_effective_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", (F.col("idx0") + 1).alias("idx"), "val")
     dims = ex.groupBy("idx").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum(F.col("val"), 12).alias("sx"),
+        term_sum(F.col("val"), 12).alias("sx"),
     )
     from stockmarketdata_dwb_etl_spark.functions.vectors import (
         dim_pair_products,
     )
 
     # map-side pair products — no exploded self-join (dim_pair_products)
-    hi, lo = _ssum_hilo(F.col("prod"), 12)
+    hi, lo = hilo_term_sum(F.col("prod"), 12)
     pairs = (
         dim_pair_products(
             emb.select(F.col("embedding").cast("array<double>").alias("v"))
         )
         .groupBy("ia", "ib")
-        # two-long-bucket sum (r13): bit-identical to the DECIMAL _ssum,
+        # two-long-bucket sum (r13): bit-identical to the DECIMAL term_sum,
         # ~2× cheaper per row on this d²·n hot agg; |prod| < 1 keeps the
         # bigint buckets exact to ~9.2e12 rows per (ia, ib) group
         .agg(hi.alias("__sh"), lo.alias("__sl"))
         .select(
-            "ia", "ib", _ssum_fin(F.col("__sh"), F.col("__sl"), 12).alias("sxy")
+            "ia", "ib", hilo_finish(F.col("__sh"), F.col("__sl"), 12).alias("sxy")
         )
     )
     dx = dims.select(
@@ -430,13 +434,13 @@ def q_effective_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("ia", "ib", cov.alias("cov"))
     )
     agg = covt.agg(
-        _ssum(
+        term_sum(
             F.when(F.col("ia") == F.col("ib"), F.col("cov")).otherwise(
                 F.lit(0.0)
             ),
             12,
         ).alias("tr_c"),
-        _ssum(F.col("cov") * F.col("cov"), 16).alias("tr_c2"),
+        term_sum(F.col("cov") * F.col("cov"), 16).alias("tr_c2"),
         F.countDistinct("ia").cast("bigint").alias("d"),
     )
     return agg.select(
@@ -476,7 +480,7 @@ def _temp_grid_sql() -> str:
     grid(t) AS (VALUES {_temp_grid_sql()}),
     nlls AS (
         SELECT g.t,
-               {_dsum(
+               {sql_term_sum(
                    "-(y * LN(1.0 / (1.0 + exp(-(LN(p / (1.0 - p)) / g.t))))"
                    " + (1 - y) * LN(1.0 - 1.0 /"
                    " (1.0 + exp(-(LN(p / (1.0 - p)) / g.t)))))", 8)} AS nll,
@@ -527,7 +531,7 @@ def q_temperature_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("t", nll_term.alias("term"))
         .groupBy("t")
         .agg(
-            _ssum(F.col("term"), 8).alias("nll"),
+            term_sum(F.col("term"), 8).alias("nll"),
             F.count(F.lit(1)).cast("bigint").alias("n"),
         )
     )

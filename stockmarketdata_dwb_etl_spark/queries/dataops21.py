@@ -23,7 +23,7 @@ surface these extend (dump_bigq.py:135-149 delegates all querying).
 
 Determinism: risk sets, event counts, threshold ranks, and label
 counts are exact integers; O−E/variance/Gini/weight terms are
-identical-tree doubles routed through _ssum at magnitude-bounded
+identical-tree doubles routed through term_sum at magnitude-bounded
 digits; thresholds are exact order statistics over total orders.
 """
 
@@ -37,8 +37,9 @@ from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
+    sql_term_sum,
+    term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.dataops11 import _dsum, _ssum
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -97,8 +98,8 @@ _TENURE_SQL = """
     ),
     agg AS (
         SELECT CAST(SUM(d1) AS BIGINT) AS o1,
-               {_dsum("e1", 10)} AS e1,
-               {_dsum("v", 10)} AS v,
+               {sql_term_sum("e1", 10)} AS e1,
+               {sql_term_sum("v", 10)} AS v,
                CAST(COUNT(*) AS BIGINT) AS n_times
         FROM terms
     )
@@ -186,8 +187,8 @@ def q_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = risk.agg(
         F.sum("d1").cast("bigint").alias("o1"),
-        _ssum(e1, 10).alias("e1"),
-        _ssum(v, 10).alias("v"),
+        term_sum(e1, 10).alias("e1"),
+        term_sum(v, 10).alias("v"),
         F.count(F.lit(1)).cast("bigint").alias("n_times"),
     )
     return agg.select(
@@ -237,13 +238,13 @@ _IPW_CLAMP = 0.05
     ),
     agg AS (
         SELECT
-            {_dsum("CASE WHEN trt = 1 THEN wt ELSE 0.0 END", 8)} AS sw1,
-            {_dsum("CASE WHEN trt = 1 THEN wt * y ELSE 0.0 END", 2)} AS swy1,
-            {_dsum("CASE WHEN trt = 0 THEN wt ELSE 0.0 END", 8)} AS sw0,
-            {_dsum("CASE WHEN trt = 0 THEN wt * y ELSE 0.0 END", 2)} AS swy0,
-            {_dsum("CASE WHEN trt = 1 THEN wt * wt ELSE 0.0 END", 8)}
+            {sql_term_sum("CASE WHEN trt = 1 THEN wt ELSE 0.0 END", 8)} AS sw1,
+            {sql_term_sum("CASE WHEN trt = 1 THEN wt * y ELSE 0.0 END", 2)} AS swy1,
+            {sql_term_sum("CASE WHEN trt = 0 THEN wt ELSE 0.0 END", 8)} AS sw0,
+            {sql_term_sum("CASE WHEN trt = 0 THEN wt * y ELSE 0.0 END", 2)} AS swy0,
+            {sql_term_sum("CASE WHEN trt = 1 THEN wt * wt ELSE 0.0 END", 8)}
                 AS sww1,
-            {_dsum("CASE WHEN trt = 0 THEN wt * wt ELSE 0.0 END", 8)}
+            {sql_term_sum("CASE WHEN trt = 0 THEN wt * wt ELSE 0.0 END", 8)}
                 AS sww0,
             CAST(SUM(trt) AS BIGINT) AS n1,
             CAST(SUM(1 - trt) AS BIGINT) AS n0
@@ -298,20 +299,20 @@ def q_ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = base.select("y", "trt", wt.alias("wt"))
     t1 = F.col("trt") == 1
     agg = w.agg(
-        _ssum(F.when(t1, F.col("wt")).otherwise(F.lit(0.0)), 8).alias("sw1"),
-        _ssum(
+        term_sum(F.when(t1, F.col("wt")).otherwise(F.lit(0.0)), 8).alias("sw1"),
+        term_sum(
             F.when(t1, F.col("wt") * F.col("y")).otherwise(F.lit(0.0)), 2
         ).alias("swy1"),
-        _ssum(F.when(~t1, F.col("wt")).otherwise(F.lit(0.0)), 8).alias(
+        term_sum(F.when(~t1, F.col("wt")).otherwise(F.lit(0.0)), 8).alias(
             "sw0"
         ),
-        _ssum(
+        term_sum(
             F.when(~t1, F.col("wt") * F.col("y")).otherwise(F.lit(0.0)), 2
         ).alias("swy0"),
-        _ssum(
+        term_sum(
             F.when(t1, F.col("wt") * F.col("wt")).otherwise(F.lit(0.0)), 8
         ).alias("sww1"),
-        _ssum(
+        term_sum(
             F.when(~t1, F.col("wt") * F.col("wt")).otherwise(F.lit(0.0)), 8
         ).alias("sww0"),
         F.sum("trt").cast("bigint").alias("n1"),
@@ -513,11 +514,11 @@ _FRESH_HALF_DAYS = 30.0
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(age_days) AS BIGINT) AS sage,
-               {_dsum("w", 12)} AS sw,
-               {_dsum("w * w", 12)} AS sww
+               {sql_term_sum("w", 12)} AS sw,
+               {sql_term_sum("w * w", 12)} AS sww
         FROM aged GROUP BY event_type
     ),
-    tot AS (SELECT {_dsum("sw", 6)} AS swt FROM agg)
+    tot AS (SELECT {sql_term_sum("sw", 6)} AS swt FROM agg)
     SELECT event_type, n,
            CAST({sql_portable_round("CAST(sage AS DOUBLE) / n", 4)}
                AS DOUBLE) AS mean_age_days,
@@ -552,12 +553,12 @@ def q_freshness_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = aged.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("age_days").cast("bigint").alias("sage"),
-        _ssum(F.col("w"), 12).alias("sw"),
-        _ssum(F.col("w") * F.col("w"), 12).alias("sww"),
+        term_sum(F.col("w"), 12).alias("sw"),
+        term_sum(F.col("w") * F.col("w"), 12).alias("sww"),
     )
     # type-level sums can reach the row count, so the total re-rounds at
     # 6dp (|sw|·1e6 ≪ 2^53 to ~9e9 rows per type)
-    tot = agg.agg(_ssum(F.col("sw"), 6).alias("swt"))
+    tot = agg.agg(term_sum(F.col("sw"), 6).alias("swt"))
     return (
         agg.crossJoin(F.broadcast(tot))
         .select(

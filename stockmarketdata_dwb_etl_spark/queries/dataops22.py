@@ -23,7 +23,7 @@ surface these extend (dump_bigq.py:135-149 delegates all querying).
 
 Determinism: journey transition counts, bin counts, and moment inputs
 are exact integers; value-iteration vectors round 12dp per superstep;
-OLS/AIPW sums route through _ssum at magnitude-bounded digits; the
+OLS/AIPW sums route through term_sum at magnitude-bounded digits; the
 max-min isotonic fit compares exact-integer ratios.
 """
 
@@ -37,9 +37,11 @@ from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
+    sql_term_sum,
+    term,
+    term_sum,
 )
 from stockmarketdata_dwb_etl_spark.queries.dataops5 import _DUCK_SCORED_EN
-from stockmarketdata_dwb_etl_spark.queries.dataops11 import _dsum, _ssum
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -104,7 +106,7 @@ def _duck_mkv_iter(rnd: int) -> str:
     it{rnd} AS (
         SELECT v.variant, pr.src AS s,
                CAST({sql_portable_round(
-                   _dsum(
+                   sql_term_sum(
                        f"CASE WHEN pr.dst = '{_CONV}' THEN pr.p"
                        f" WHEN pr.dst = '__loss' THEN 0.0"
                        f" WHEN pr.dst = v.variant THEN 0.0"
@@ -149,7 +151,7 @@ def _duck_mkv_iter(rnd: int) -> str:
                p0, p_rem
         FROM rem, base
     ),
-    tot AS (SELECT {_dsum("removal_effect", 8)} AS s FROM eff)
+    tot AS (SELECT {sql_term_sum("removal_effect", 8)} AS s FROM eff)
     SELECT channel,
            CAST({sql_portable_round("p0", 6)} AS DOUBLE) AS base_conv,
            CAST({sql_portable_round("p_rem", 6)} AS DOUBLE)
@@ -262,7 +264,7 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         """round12(Σ round14(c) as DECIMAL(38,14)) over s's out-edges
         under removal variant v — the (variant, src) superstep cell."""
 
-        def term(e):
+        def scaled_cell(e):
             pos = F.array_position(F.col("states"), e["dst"]).cast("int")
             prev_val = F.when(
                 pos > 0, F.element_at(F.element_at(prev_b, vi + 1), pos)
@@ -284,7 +286,7 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ksum = F.aggregate(
             F.filter(F.col("edges"), lambda e: (e["src"] == s) & (s != v)),
             F.lit(0).cast("bigint"),
-            lambda acc, e: acc + term(e),
+            lambda acc, e: acc + scaled_cell(e),
         )
         return portable_round(ksum.cast("double") / F.lit(1e14), 12)
 
@@ -359,7 +361,7 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             8,
         ).alias("removal_effect"),
     )
-    tot = eff.agg(_ssum(F.col("removal_effect"), 8).alias("s"))
+    tot = eff.agg(term_sum(F.col("removal_effect"), 8).alias("s"))
     return (
         eff.crossJoin(F.broadcast(tot))
         .select(
@@ -522,9 +524,9 @@ def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     m AS (
         SELECT brand, CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum("x", 10)} AS sx, {_dsum("y", 10)} AS sy,
-               {_dsum("x * y", 10)} AS sxy, {_dsum("x * x", 10)} AS sxx,
-               {_dsum("y * y", 10)} AS syy
+               {sql_term_sum("x", 10)} AS sx, {sql_term_sum("y", 10)} AS sy,
+               {sql_term_sum("x * y", 10)} AS sxy, {sql_term_sum("x * x", 10)} AS sxx,
+               {sql_term_sum("y * y", 10)} AS syy
         FROM obs GROUP BY brand
     )
     SELECT brand, n,
@@ -561,11 +563,11 @@ def q_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = obs.groupBy("brand").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum(F.col("x"), 10).alias("sx"),
-        _ssum(F.col("y"), 10).alias("sy"),
-        _ssum(F.col("x") * F.col("y"), 10).alias("sxy"),
-        _ssum(F.col("x") * F.col("x"), 10).alias("sxx"),
-        _ssum(F.col("y") * F.col("y"), 10).alias("syy"),
+        term_sum(F.col("x"), 10).alias("sx"),
+        term_sum(F.col("y"), 10).alias("sy"),
+        term_sum(F.col("x") * F.col("y"), 10).alias("sxy"),
+        term_sum(F.col("x") * F.col("x"), 10).alias("sxx"),
+        term_sum(F.col("y") * F.col("y"), 10).alias("syy"),
     )
     vx = F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n")
     vy = F.col("syy") - F.col("sy") * F.col("sy") / F.col("n")
@@ -619,7 +621,7 @@ _AIPW_CLAMP = 0.05
     agg AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(trt) AS BIGINT) AS n_treated,
-               {_dsum("psi", 2)} AS spsi
+               {sql_term_sum("psi", 2)} AS spsi
         FROM terms
     )
     SELECT n, n_treated,
@@ -671,7 +673,7 @@ def q_aipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = base.select(psi.alias("psi"), "trt").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("trt").cast("bigint").alias("n_treated"),
-        _ssum(F.col("psi"), 2).alias("spsi"),
+        term_sum(F.col("psi"), 2).alias("spsi"),
     )
     return agg.select(
         "n",

@@ -23,7 +23,7 @@ surface these extend (dump_bigq.py:135-149 delegates all querying).
 Determinism: trials/conversions/revenue are exact integers/DECIMALs;
 LLR and Weiszfeld steps round per superstep on identical trees; the
 phonetic key is pure string algebra (translate + bounded replace
-passes); every Σ routes through _ssum at magnitude-bounded digits.
+passes); every Σ routes through term_sum at magnitude-bounded digits.
 """
 
 from __future__ import annotations
@@ -36,8 +36,9 @@ from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
+    sql_term_sum,
+    term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.dataops11 import _dsum, _ssum
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -461,11 +462,11 @@ def _duck_gm_iter(rnd: int) -> str:
                    " (x, y) -> x + y))", 10)}, {_GM_EPS}) AS w
         FROM ev e CROSS JOIN {prev} c
     ),
-    sw{rnd} AS (SELECT {_dsum("w", 8)} AS swt FROM dw{rnd}),
+    sw{rnd} AS (SELECT {sql_term_sum("w", 8)} AS swt FROM dw{rnd}),
     cent{rnd} AS (
         SELECT u.idx,
                {sql_portable_round(
-                   f"({_dsum('d.w * d.v[u.idx]', 8)}) / MAX(s.swt)", 10)}
+                   f"({sql_term_sum('d.w * d.v[u.idx]', 8)}) / MAX(s.swt)", 10)}
                    AS mu
         FROM dw{rnd} d
         CROSS JOIN (SELECT UNNEST(generate_series(1, 64)) AS idx) u
@@ -490,7 +491,7 @@ def _duck_gm_iter(rnd: int) -> str:
     ),
     cent0 AS (
         SELECT idx, {sql_portable_round(
-            f"({_dsum('val', 12)}) / COUNT(*)", 10)} AS mu
+            f"({sql_term_sum('val', 12)}) / COUNT(*)", 10)} AS mu
         FROM ex GROUP BY idx
     ),
     c0 AS (SELECT list(mu ORDER BY idx) AS c FROM cent0),
@@ -532,7 +533,7 @@ def q_geometric_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.posexplode("v").alias("idx0", "val")
     ).select((F.col("idx0") + 1).alias("idx"), "val")
     cent0 = ex.groupBy("idx").agg(
-        portable_round(_ssum(F.col("val"), 12) / F.count(F.lit(1)), 10).alias(
+        portable_round(term_sum(F.col("val"), 12) / F.count(F.lit(1)), 10).alias(
             "mu"
         )
     )
@@ -588,8 +589,8 @@ def q_geometric_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select((F.col("idx0") + 1).alias("idx"), "w", "val")
             .groupBy("idx")
             .agg(
-                _ssum(F.col("w") * F.col("val"), 8).alias("swv"),
-                _ssum(F.col("w"), 8).alias("swt"),
+                term_sum(F.col("w") * F.col("val"), 8).alias("swv"),
+                term_sum(F.col("w"), 8).alias("swt"),
             )
             .select(
                 "idx",

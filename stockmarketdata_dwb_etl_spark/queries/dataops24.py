@@ -21,7 +21,7 @@ surface these extend (dump_bigq.py:135-149 delegates all querying).
 
 Determinism: counts and ranks are exact integers; trig/log terms are
 identical-tree doubles over integer-derived arguments, routed through
-_ssum at magnitude-bounded digits; boundary constants are identical
+term_sum at magnitude-bounded digits; boundary constants are identical
 literals on both engines.
 """
 
@@ -36,10 +36,12 @@ from pyspark.sql.window import Window
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
+    split_term_sum,
     sql_portable_round,
+    sql_split_term_sum,
+    sql_term_sum,
+    term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.dataops11 import _dsum, _ssum
-from stockmarketdata_dwb_etl_spark.queries.stats_q import _dsum2
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -76,7 +78,7 @@ _SPEC_KS = (1, 2, 3, 5, 7, 10, 15, 21)  # cycles per series
     ),
     coef AS (
         SELECT symbol, k, CAST(MAX(n) AS BIGINT) AS n,
-               {_dsum2("ct", 12, 6)} AS c, {_dsum2("st", 12, 6)} AS s
+               {sql_split_term_sum("ct", 12, 6)} AS c, {sql_split_term_sum("st", 12, 6)} AS s
         FROM terms GROUP BY symbol, k
     ),
     pw AS (
@@ -85,7 +87,7 @@ _SPEC_KS = (1, 2, 3, 5, 7, 10, 15, 21)  # cycles per series
         FROM coef
     ),
     tot AS (
-        SELECT symbol, {_dsum("power", 10)} AS ptot FROM pw GROUP BY symbol
+        SELECT symbol, {sql_term_sum("power", 10)} AS ptot FROM pw GROUP BY symbol
     )
     SELECT pw.symbol, CAST(pw.k AS BIGINT) AS k, pw.n,
            CAST({sql_portable_round("pw.power", 6)} AS DOUBLE) AS power,
@@ -109,7 +111,6 @@ def q_spectral_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-bucket split (|v| can reach ~1e4 on degenerate opens). Scale:
     the harmonic fan is a CONSTANT 8× map-side explode into one
     (symbol, k) hash-agg."""
-    from stockmarketdata_dwb_etl_spark.queries.stats_q import _ssum2
     from stockmarketdata_dwb_etl_spark.queries.timeseries import _spark_ord
 
     bars = (
@@ -146,8 +147,8 @@ def q_spectral_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     coef = terms.groupBy("symbol", "k").agg(
         F.max("n").cast("bigint").alias("n"),
-        _ssum2(F.col("ct"), 12, 6).alias("c"),
-        _ssum2(F.col("st"), 12, 6).alias("s"),
+        split_term_sum(F.col("ct"), 12, 6).alias("c"),
+        split_term_sum(F.col("st"), 12, 6).alias("s"),
     )
     pw = coef.select(
         "symbol",
@@ -161,7 +162,7 @@ def q_spectral_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation + 8× harmonic fan: cut it once so building the
     # broadcast `tot` and the final join don't each re-run that pass
     ).localCheckpoint(eager=True)
-    tot = pw.groupBy("symbol").agg(_ssum(F.col("power"), 10).alias("ptot"))
+    tot = pw.groupBy("symbol").agg(term_sum(F.col("power"), 10).alias("ptot"))
     return (
         pw.join(F.broadcast(tot), "symbol")
         .select(
@@ -206,7 +207,7 @@ _BR_CANDS = (2, 4, 6, 8, 10, 15, 20, 30, 40, 60)
     ),
     ll AS (
         SELECT b.d,
-               {_dsum("CASE WHEN b.cnt > 0 THEN b.cnt"
+               {sql_term_sum("CASE WHEN b.cnt > 0 THEN b.cnt"
                       " * LN(b.cnt * b.d::DOUBLE / s.n) ELSE 0.0 END", 4)}
                    AS loglik,
                CAST(MAX(s.n) AS BIGINT) AS n
@@ -271,7 +272,7 @@ def q_histogram_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).otherwise(F.lit(0.0))
     ll = binned.groupBy("d").agg(
-        _ssum(term, 4).alias("loglik"),
+        term_sum(term, 4).alias("loglik"),
         F.max("n").cast("bigint").alias("n"),
     )
     pen = portable_round(
@@ -502,16 +503,16 @@ def _duck_ols_sse(pre: str) -> str:
     halves AS (
         SELECT symbol, CASE WHEN t <= n / 2.0 THEN 1 ELSE 2 END AS h,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum("t", 6)} AS sx, {_dsum("y", 6)} AS sy,
-               {_dsum("t * y", 2)} AS sxy, {_dsum("t * t", 2)} AS sxx,
-               {_dsum("y * y", 2)} AS syy
+               {sql_term_sum("t", 6)} AS sx, {sql_term_sum("y", 6)} AS sy,
+               {sql_term_sum("t * y", 2)} AS sxy, {sql_term_sum("t * t", 2)} AS sxx,
+               {sql_term_sum("y * y", 2)} AS syy
         FROM x GROUP BY symbol, 2
     ),
     pooled AS (
         SELECT symbol, CAST(SUM(n) AS BIGINT) AS n,
-               {_dsum("sx", 6)} AS sx, {_dsum("sy", 6)} AS sy,
-               {_dsum("sxy", 2)} AS sxy, {_dsum("sxx", 2)} AS sxx,
-               {_dsum("syy", 2)} AS syy
+               {sql_term_sum("sx", 6)} AS sx, {sql_term_sum("sy", 6)} AS sy,
+               {sql_term_sum("sxy", 2)} AS sxy, {sql_term_sum("sxx", 2)} AS sxx,
+               {sql_term_sum("syy", 2)} AS syy
         FROM halves GROUP BY symbol
     ),
     sse AS (
@@ -568,19 +569,19 @@ def q_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("t") <= F.col("n") / 2.0, 1).otherwise(2).alias("h"),
     ).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum(F.col("t"), 6).alias("sx"),
-        _ssum(F.col("y"), 6).alias("sy"),
-        _ssum(F.col("t") * F.col("y"), 2).alias("sxy"),
-        _ssum(F.col("t") * F.col("t"), 2).alias("sxx"),
-        _ssum(F.col("y") * F.col("y"), 2).alias("syy"),
+        term_sum(F.col("t"), 6).alias("sx"),
+        term_sum(F.col("y"), 6).alias("sy"),
+        term_sum(F.col("t") * F.col("y"), 2).alias("sxy"),
+        term_sum(F.col("t") * F.col("t"), 2).alias("sxx"),
+        term_sum(F.col("y") * F.col("y"), 2).alias("syy"),
     )
     pooled = halves.groupBy("symbol").agg(
         F.sum("n").cast("bigint").alias("n"),
-        _ssum(F.col("sx"), 6).alias("sx"),
-        _ssum(F.col("sy"), 6).alias("sy"),
-        _ssum(F.col("sxy"), 2).alias("sxy"),
-        _ssum(F.col("sxx"), 2).alias("sxx"),
-        _ssum(F.col("syy"), 2).alias("syy"),
+        term_sum(F.col("sx"), 6).alias("sx"),
+        term_sum(F.col("sy"), 6).alias("sy"),
+        term_sum(F.col("sxy"), 2).alias("sxy"),
+        term_sum(F.col("sxx"), 2).alias("sxx"),
+        term_sum(F.col("syy"), 2).alias("syy"),
     )
 
     def sse(nc, sx, sy, sxy, sxx, syy):

@@ -20,7 +20,7 @@ Reference scope: the reference's BigQuery tier is the analytics surface
 these extend (dump_bigq.py:135-149 delegates all querying).
 
 Determinism: counts are exact integers; every cross-row double sum
-routes through the two-bucket split sum (stats_q._ssum2/_dsum2, 2^53
+routes through the two-bucket split sum (functions/exact.py::split_term_sum, 2^53
 rule) or exact-scale rounded terms; all closed-form arithmetic
 (sqrt/exp/Φ chains) uses the identical expression tree on both engines
 before the portable floor round.
@@ -33,8 +33,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
-from stockmarketdata_dwb_etl_spark.queries.stats_q import _dsum2, _ssum2
+from stockmarketdata_dwb_etl_spark.functions.exact import (
+    portable_round,
+    split_term_sum,
+    sql_split_term_sum,
+)
 from stockmarketdata_dwb_etl_spark.queries.timeseries import (
     _DUCK_ORD,
     _spark_ord,
@@ -87,7 +90,7 @@ _CS_DEN = "(3.0 - 2.0 * sqrt(2.0))"
     )
     SELECT symbol,
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST((CAST(floor(CAST(({_dsum2("s", 12, 8)}) / COUNT(*)
+           CAST((CAST(floor(CAST(({sql_split_term_sum("s", 12, 8)}) / COUNT(*)
                  AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0)
                 AS DOUBLE) AS cs_spread,
            CAST(COUNT(*) FILTER (WHERE s > 0) AS BIGINT) AS n_positive
@@ -146,7 +149,7 @@ def q_corwin_schultz(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
             portable_round(
-                _ssum2(F.col("s"), 12, 8) / F.count(F.lit(1)), 6
+                split_term_sum(F.col("s"), 12, 8) / F.count(F.lit(1)), 6
             )
             .cast("double")
             .alias("cs_spread"),
@@ -326,10 +329,10 @@ def _spark_phi(z: Column) -> Column:
     m AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("r", 12, 8)} AS s1,
-               {_dsum2("r * r", 12, 8)} AS s2,
-               {_dsum2("r * r * r", 12, 5)} AS s3,
-               {_dsum2("r * r * r * r", 12, 2)} AS s4
+               {sql_split_term_sum("r", 12, 8)} AS s1,
+               {sql_split_term_sum("r * r", 12, 8)} AS s2,
+               {sql_split_term_sum("r * r * r", 12, 5)} AS s3,
+               {sql_split_term_sum("r * r * r * r", 12, 2)} AS s4
         FROM rets GROUP BY symbol
     ),
     cm AS (
@@ -393,10 +396,10 @@ def q_prob_sharpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = F.col("r")
     m = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(r, 12, 8).alias("s1"),
-        _ssum2(r * r, 12, 8).alias("s2"),
-        _ssum2(r * r * r, 12, 5).alias("s3"),
-        _ssum2(r * r * r * r, 12, 2).alias("s4"),
+        split_term_sum(r, 12, 8).alias("s1"),
+        split_term_sum(r * r, 12, 8).alias("s2"),
+        split_term_sum(r * r * r, 12, 5).alias("s3"),
+        split_term_sum(r * r * r * r, 12, 2).alias("s4"),
     ).filter(F.col("n") >= 3)
     n = F.col("n")
     mu = F.col("s1") / n
@@ -469,7 +472,7 @@ def q_prob_sharpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     dsum AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n_spells,
-               {_dsum2("depth * depth", 12, 8)} AS sdd
+               {sql_split_term_sum("depth * depth", 12, 8)} AS sdd
         FROM spells GROUP BY symbol
     ),
     rets AS (
@@ -481,7 +484,7 @@ def q_prob_sharpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     mr AS (
         SELECT symbol, CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("r", 12, 8)} / COUNT(*) AS mean_r
+               {sql_split_term_sum("r", 12, 8)} / COUNT(*) AS mean_r
         FROM rets GROUP BY symbol
     )
     SELECT m.symbol, m.n, d.n_spells,
@@ -531,7 +534,7 @@ def q_burke_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dsum = spells.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_spells"),
-        _ssum2(F.col("depth") * F.col("depth"), 12, 8).alias("sdd"),
+        split_term_sum(F.col("depth") * F.col("depth"), 12, 8).alias("sdd"),
     )
     rets = bars.select(
         "symbol",
@@ -539,7 +542,7 @@ def q_burke_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("r").isNotNull())
     mr = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        (_ssum2(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("mean_r"),
+        (split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("mean_r"),
     )
     return (
         mr.join(dsum, "symbol")

@@ -32,7 +32,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
+from stockmarketdata_dwb_etl_spark.functions.exact import (
+    portable_round,
+    split_term_sum,
+    sql_split_term_sum,
+    term,
+)
 from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
 from stockmarketdata_dwb_etl_spark.queries.graph import (
     _GRAPH_SQL,
@@ -40,7 +45,6 @@ from stockmarketdata_dwb_etl_spark.queries.graph import (
     _in_sum_iterate,
     _norm_graph,
 )
-from stockmarketdata_dwb_etl_spark.queries.stats_q import _dsum2, _ssum2
 from stockmarketdata_dwb_etl_spark.queries.timeseries import (
     _DUCK_ORD,
     _spark_ord,
@@ -284,9 +288,9 @@ def q_pref_attachment(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT symbol, CAST(MAX(n) AS BIGINT) AS n,
                CAST(SUM(rn) AS BIGINT) AS sx,
                CAST(SUM(rn * rn) AS BIGINT) AS sxx,
-               {_dsum2("e2", 12, 5)} AS sy,
-               {_dsum2("e2 * rn", 12, 2)} AS sxy,
-               {_dsum2("e2 * e2", 12, 2)} AS syy
+               {sql_split_term_sum("e2", 12, 5)} AS sy,
+               {sql_split_term_sum("e2 * rn", 12, 2)} AS sxy,
+               {sql_split_term_sum("e2 * e2", 12, 2)} AS syy
         FROM res GROUP BY symbol
     ),
     r2 AS (
@@ -343,12 +347,10 @@ def q_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("rn").cast("bigint").alias("sx"),
             F.sum(F.col("rn") * F.col("rn")).cast("bigint").alias("sxx"),
             F.sum(
-                portable_round(F.col("close"), 12).cast("decimal(38,12)")
+                term(F.col("close"), 12)
             ).alias("sy"),
             F.sum(
-                portable_round(F.col("close") * F.col("rn"), 6).cast(
-                    "decimal(38,6)"
-                )
+                term(F.col("close") * F.col("rn"), 6)
             ).alias("sxy"),
         )
         .filter(
@@ -379,9 +381,9 @@ def q_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n").cast("bigint").alias("n"),
         F.sum("rn").cast("bigint").alias("sx"),
         F.sum(F.col("rn") * F.col("rn")).cast("bigint").alias("sxx"),
-        _ssum2(F.col("e2"), 12, 5).alias("sy"),
-        _ssum2(F.col("e2") * F.col("rn"), 12, 2).alias("sxy"),
-        _ssum2(F.col("e2") * F.col("e2"), 12, 2).alias("syy"),
+        split_term_sum(F.col("e2"), 12, 5).alias("sy"),
+        split_term_sum(F.col("e2") * F.col("rn"), 12, 2).alias("sxy"),
+        split_term_sum(F.col("e2") * F.col("e2"), 12, 2).alias("syy"),
     )
     n = F.col("n")
     vx = n * F.col("sxx") - F.col("sx").cast("double") * F.col("sx")

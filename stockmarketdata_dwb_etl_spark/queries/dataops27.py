@@ -31,8 +31,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
-from stockmarketdata_dwb_etl_spark.queries.stats_q import _dsum2, _ssum2
+from stockmarketdata_dwb_etl_spark.functions.exact import (
+    portable_round,
+    split_term_sum,
+    sql_split_term_sum,
+)
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -69,10 +72,10 @@ _RDD_MOMS = """
     sides AS (
         SELECT treated,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("x", 12, 4)} AS sx,
-               {_dsum2("y", 12, 2)} AS sy,
-               {_dsum2("x * y", 12, 2)} AS sxy,
-               {_dsum2("x * x", 12, 2)} AS sxx
+               {sql_split_term_sum("x", 12, 4)} AS sx,
+               {sql_split_term_sum("y", 12, 2)} AS sy,
+               {sql_split_term_sum("x * y", 12, 2)} AS sxy,
+               {sql_split_term_sum("x * x", 12, 2)} AS sxx
         FROM obs GROUP BY treated
     ),
     fits AS (
@@ -125,10 +128,10 @@ def q_rdd_sharp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sides = obs.groupBy("treated").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("x"), 12, 4).alias("sx"),
-        _ssum2(F.col("y"), 12, 2).alias("sy"),
-        _ssum2(F.col("x") * F.col("y"), 12, 2).alias("sxy"),
-        _ssum2(F.col("x") * F.col("x"), 12, 2).alias("sxx"),
+        split_term_sum(F.col("x"), 12, 4).alias("sx"),
+        split_term_sum(F.col("y"), 12, 2).alias("sy"),
+        split_term_sum(F.col("x") * F.col("y"), 12, 2).alias("sxy"),
+        split_term_sum(F.col("x") * F.col("x"), 12, 2).alias("sxx"),
     )
     n = F.col("n")
     det = n * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -171,7 +174,7 @@ def q_rdd_sharp(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT z,
                CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(d) AS BIGINT) AS sd,
-               {_dsum2("y", 12, 2)} AS sy
+               {sql_split_term_sum("y", 12, 2)} AS sy
         FROM obs GROUP BY z
     ),
     w AS (
@@ -218,7 +221,7 @@ def q_iv_wald(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = obs.groupBy("z").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("d").cast("bigint").alias("sd"),
-        _ssum2(F.col("y"), 12, 2).alias("sy"),
+        split_term_sum(F.col("y"), 12, 2).alias("sy"),
     )
     d1 = F.max(F.when(F.col("z") == 1, F.col("sd").cast("double") / F.col("n")))
     d0 = F.max(F.when(F.col("z") == 0, F.col("sd").cast("double") / F.col("n")))

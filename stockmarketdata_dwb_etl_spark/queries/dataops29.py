@@ -29,8 +29,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
-from stockmarketdata_dwb_etl_spark.queries.stats_q import _dsum2, _ssum2
+from stockmarketdata_dwb_etl_spark.functions.exact import (
+    portable_round,
+    split_term_sum,
+    sql_split_term_sum,
+)
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -144,8 +147,8 @@ def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     s AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("v", 12, 2)} AS sv,
-               {_dsum2("ln(v)", 12, 8)} AS slv
+               {sql_split_term_sum("v", 12, 2)} AS sv,
+               {sql_split_term_sum("ln(v)", 12, 8)} AS slv
         FROM x
     )
     SELECT n,
@@ -174,8 +177,8 @@ def q_atkinson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = x.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("v"), 12, 2).alias("sv"),
-        _ssum2(F.log(F.col("v")), 12, 8).alias("slv"),
+        split_term_sum(F.col("v"), 12, 2).alias("sv"),
+        split_term_sum(F.log(F.col("v")), 12, 8).alias("slv"),
     )
     mean_v = F.col("sv") / F.col("n")
     geo = F.exp(F.col("slv") / F.col("n"))
@@ -205,8 +208,8 @@ def q_atkinson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     g AS (
         SELECT seg,
                CAST(COUNT(*) AS BIGINT) AS n_g,
-               {_dsum2("v", 12, 2)} AS sv_g,
-               {_dsum2("v * ln(v)", 12, 0)} AS svl_g
+               {sql_split_term_sum("v", 12, 2)} AS sv_g,
+               {sql_split_term_sum("v * ln(v)", 12, 0)} AS svl_g
         FROM x GROUP BY seg
     ),
     tot AS (
@@ -252,8 +255,8 @@ def q_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = x.groupBy("seg").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_g"),
-        _ssum2(F.col("v"), 12, 2).alias("sv_g"),
-        _ssum2(F.col("v") * F.log(F.col("v")), 12, 0).alias("svl_g"),
+        split_term_sum(F.col("v"), 12, 2).alias("sv_g"),
+        split_term_sum(F.col("v") * F.log(F.col("v")), 12, 0).alias("svl_g"),
     )
     tot = g.agg(
         F.sum("n_g").cast("bigint").alias("n"),

@@ -19,6 +19,7 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
     sql_term_sum,
+    term,
 )
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.text import tokenize, word_shingles
@@ -830,7 +831,7 @@ def q_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM ex GROUP BY label, idx
     ), dist AS (
         SELECT e.vec_id, e.label, c.c_label,
-               {sql_portable_round(sql_term_sum("(e.val - c.mean_d) * (e.val - c.mean_d)"), 9)} AS d2
+               {sql_portable_round(sql_term_sum("(e.val - c.mean_d) * (e.val - c.mean_d)", 12), 9)} AS d2
         FROM ex e JOIN cent c ON e.idx = c.idx
         GROUP BY e.vec_id, e.label, c.c_label
     ), best AS (
@@ -885,7 +886,7 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding"),
             F.col("centroid"),
             lambda v, c: (v - c) * (v - c),
-        )
+        ), 12
     )
     from pyspark.sql.window import Window
 
@@ -1041,7 +1042,7 @@ def q_text_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM ex GROUP BY label, idx
     ), dist AS (
         SELECT e.vec_id, e.label, c.c_label,
-               {sql_portable_round(sql_term_sum("(e.val - c.mean_d) * (e.val - c.mean_d)"), 9)} AS d2
+               {sql_portable_round(sql_term_sum("(e.val - c.mean_d) * (e.val - c.mean_d)", 12), 9)} AS d2
         FROM ex e JOIN cent c ON e.idx = c.idx
         GROUP BY e.vec_id, e.label, c.c_label
     ), best AS (
@@ -1137,7 +1138,7 @@ def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(mc), "c_label")
         .crossJoin(F.broadcast(tot))
     )
-    mi_term = portable_round(
+    mi_term = term(
         (F.col("n").cast("double") / F.col("nn"))
         * F.log(
             F.col("nn").cast("double")
@@ -1145,16 +1146,13 @@ def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("ml").cast("double") * F.col("mc"))
         ),
         12,
-    ).cast("decimal(38,12)")
+    )
     mi = joined.agg(F.sum(mi_term).alias("mi_sum"))
 
     def entropy(marg, col):
-        term = portable_round(
-            -(F.col(col).cast("double") / F.col("nn"))
-            * F.log(F.col(col).cast("double") / F.col("nn")),
-            12,
-        ).cast("decimal(38,12)")
-        return marg.crossJoin(F.broadcast(tot)).agg(F.sum(term).alias("h"))
+        p = F.col(col).cast("double") / F.col("nn")
+        h_term = term(-p * F.log(p), 12)
+        return marg.crossJoin(F.broadcast(tot)).agg(F.sum(h_term).alias("h"))
 
     hl = entropy(ml, "ml").withColumnRenamed("h", "hl")
     hc = entropy(mc, "mc").withColumnRenamed("h", "hc")

@@ -140,7 +140,7 @@ def q_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         for x in xs[1:]:
             l = a * x + (1.0 - a) * l
         # OLS slope on (rn, close), rn = 1..n — rounded-term EXACT
-        # integer accumulation (the engine-side _dsum discipline done
+        # integer accumulation (the engine-side term_sum discipline done
         # in Python ints): order-independent and identical to the
         # oracle's floor-scaled DECIMAL sums
         import math

@@ -30,9 +30,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
+from stockmarketdata_dwb_etl_spark.functions.exact import (
+    portable_round,
+    split_term_sum,
+    sql_split_term_sum,
+)
 from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
-from stockmarketdata_dwb_etl_spark.queries.stats_q import _dsum2, _ssum2
 from stockmarketdata_dwb_etl_spark.queries.timeseries import (
     _DUCK_ORD,
     _spark_ord,
@@ -86,9 +89,9 @@ _GERBER_C = 0.5
     sd AS (
         SELECT symbol,
                sqrt(greatest(
-                   ({_dsum2("r * r", 12, 8)}) / COUNT(*)
-                   - (({_dsum2("r", 12, 8)}) / COUNT(*))
-                     * (({_dsum2("r", 12, 8)}) / COUNT(*)), 0.0)) AS sd
+                   ({sql_split_term_sum("r * r", 12, 8)}) / COUNT(*)
+                   - (({sql_split_term_sum("r", 12, 8)}) / COUNT(*))
+                     * (({sql_split_term_sum("r", 12, 8)}) / COUNT(*)), 0.0)) AS sd
         FROM rets GROUP BY symbol
     ),
     flg AS (
@@ -133,9 +136,9 @@ def q_gerber_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     sd = rets.groupBy("symbol").agg(
         F.sqrt(
             F.greatest(
-                _ssum2(F.col("r") * F.col("r"), 12, 8) / F.count(F.lit(1))
-                - (_ssum2(F.col("r"), 12, 8) / F.count(F.lit(1)))
-                * (_ssum2(F.col("r"), 12, 8) / F.count(F.lit(1))),
+                split_term_sum(F.col("r") * F.col("r"), 12, 8) / F.count(F.lit(1))
+                - (split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1)))
+                * (split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1))),
                 F.lit(0.0),
             )
         ).alias("sd")
@@ -210,10 +213,10 @@ _Z05_SQL = "CAST(-1.6448536269514722 AS DOUBLE)"
     m AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("r", 12, 8)} AS s1,
-               {_dsum2("r * r", 12, 8)} AS s2,
-               {_dsum2("r * r * r", 12, 5)} AS s3,
-               {_dsum2("r * r * r * r", 12, 2)} AS s4
+               {sql_split_term_sum("r", 12, 8)} AS s1,
+               {sql_split_term_sum("r * r", 12, 8)} AS s2,
+               {sql_split_term_sum("r * r * r", 12, 5)} AS s3,
+               {sql_split_term_sum("r * r * r * r", 12, 2)} AS s4
         FROM rets GROUP BY symbol
     ),
     cm AS (
@@ -270,10 +273,10 @@ def q_cornish_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = F.col("r")
     m = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(r, 12, 8).alias("s1"),
-        _ssum2(r * r, 12, 8).alias("s2"),
-        _ssum2(r * r * r, 12, 5).alias("s3"),
-        _ssum2(r * r * r * r, 12, 2).alias("s4"),
+        split_term_sum(r, 12, 8).alias("s1"),
+        split_term_sum(r * r, 12, 8).alias("s2"),
+        split_term_sum(r * r * r, 12, 5).alias("s3"),
+        split_term_sum(r * r * r * r, 12, 2).alias("s4"),
     ).filter(F.col("n") >= 4)
     n = F.col("n")
     mu = F.col("s1") / n
@@ -349,7 +352,7 @@ def q_cornish_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + 0.5) AS DOUBLE) / 1000000.0) AS DOUBLE) AS dar90,
            CAST(COUNT(*) FILTER (WHERE d.d >= q.dar90) AS BIGINT)
                AS n_tail,
-           CAST((CAST(floor(CAST((({_dsum2(
+           CAST((CAST(floor(CAST((({sql_split_term_sum(
                 "CASE WHEN d.d >= q.dar90 THEN d.d END", 12, 8)})
                 / COUNT(*) FILTER (WHERE d.d >= q.dar90)) AS DOUBLE)
                 * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS DOUBLE)
@@ -395,7 +398,7 @@ def q_cdar(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_bars"),
             F.count(F.when(in_tail, 1)).cast("bigint").alias("n_tail"),
             portable_round(
-                _ssum2(F.when(in_tail, F.col("d")), 12, 8)
+                split_term_sum(F.when(in_tail, F.col("d")), 12, 8)
                 / F.count(F.when(in_tail, 1)),
                 6,
             )

@@ -32,14 +32,16 @@ from pyspark.sql.window import Window
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
+    split_term_sum,
     sql_portable_round,
+    sql_split_term_sum,
+    sql_term_sum,
+    term_sum,
 )
 from stockmarketdata_dwb_etl_spark.queries.dataops17 import (
     _duck_p_two,
     _spark_p_two,
 )
-from stockmarketdata_dwb_etl_spark.queries.dataops11 import _dsum, _ssum
-from stockmarketdata_dwb_etl_spark.queries.stats_q import _dsum2, _ssum2
 from stockmarketdata_dwb_etl_spark.queries.timeseries import (
     _DUCK_ORD,
     _spark_ord,
@@ -298,8 +300,8 @@ _DUCK_PVALS = f"""
 
 def _duck_pvals() -> str:
     return _DUCK_PVALS.format(
-        s1=_dsum2("r", 12, 8),
-        s2=_dsum2("r * r", 12, 8),
+        s1=sql_split_term_sum("r", 12, 8),
+        s2=sql_split_term_sum("r * r", 12, 8),
         p=sql_portable_round(_duck_p_two("z"), 8),
     )
 
@@ -318,8 +320,8 @@ def _spark_pvals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("r").isNotNull())
     cells = rets.groupBy("symbol", "hod").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("r"), 12, 8).alias("s1"),
-        _ssum2(F.col("r") * F.col("r"), 12, 8).alias("s2"),
+        split_term_sum(F.col("r"), 12, 8).alias("s1"),
+        split_term_sum(F.col("r") * F.col("r"), 12, 8).alias("s2"),
     )
     n = F.col("n")
     var = (F.col("s2") - F.col("s1") * F.col("s1") / n) / (n - 1)
@@ -397,7 +399,7 @@ _BY_ALPHA = 0.10
         FROM pv WHERE p IS NOT NULL
     ),
     harm AS (
-        SELECT {_dsum("1.0 / i", 12)} AS cm FROM ranked
+        SELECT {sql_term_sum("1.0 / i", 12)} AS cm FROM ranked
     ),
     cut AS (
         SELECT COALESCE(MAX(CASE WHEN r.p <= {_BY_ALPHA} * r.i
@@ -440,7 +442,7 @@ def q_by_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the harmonic sum feeds the BY THRESHOLD compare, so it must be
     # bit-identical cross-engine: 12dp rounded-term exact sum
-    harm = ranked.agg(_ssum(F.lit(1.0) / F.col("i"), 12).alias("cm"))
+    harm = ranked.agg(term_sum(F.lit(1.0) / F.col("i"), 12).alias("cm"))
     j = ranked.crossJoin(F.broadcast(harm))
     by_ok = F.col("p") <= F.lit(_BY_ALPHA) * F.col("i") / (
         F.col("m") * F.col("cm")

@@ -28,8 +28,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
-from stockmarketdata_dwb_etl_spark.queries.stats_q import _dsum2, _ssum2
+from stockmarketdata_dwb_etl_spark.functions.exact import (
+    portable_round,
+    split_term_sum,
+    sql_split_term_sum,
+)
 from stockmarketdata_dwb_etl_spark.queries.timeseries import (
     _DUCK_ORD,
     _spark_ord,
@@ -141,8 +144,8 @@ _TOST_MARGIN = 2000.0
     g AS (
         SELECT s,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("v", 12, 2)} AS sv,
-               {_dsum2("v * v", 12, 0)} AS svv
+               {sql_split_term_sum("v", 12, 2)} AS sv,
+               {sql_split_term_sum("v * v", 12, 0)} AS svv
         FROM x GROUP BY s
     ),
     w AS (
@@ -186,8 +189,8 @@ def q_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = x.groupBy("s").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("v"), 12, 2).alias("sv"),
-        _ssum2(F.col("v") * F.col("v"), 12, 0).alias("svv"),
+        split_term_sum(F.col("v"), 12, 2).alias("sv"),
+        split_term_sum(F.col("v") * F.col("v"), 12, 0).alias("svv"),
     )
     mean = F.col("sv") / F.col("n")
     sem2 = (F.col("svv") / F.col("n") - mean * mean) / (F.col("n") - 1)
@@ -381,9 +384,9 @@ def q_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT symbol,
            CAST(COUNT(*) AS BIGINT) AS n_bars,
            CAST(SUM(volume) AS BIGINT) AS total_volume,
-           CAST(CASE WHEN ({_dsum2("abs_r", 12, 8)}) = 0 THEN NULL
+           CAST(CASE WHEN ({sql_split_term_sum("abs_r", 12, 8)}) = 0 THEN NULL
                 ELSE (CAST(floor(CAST((CAST(SUM(volume) AS DOUBLE)
-                      / ({_dsum2("abs_r", 12, 8)})) AS DOUBLE)
+                      / ({sql_split_term_sum("abs_r", 12, 8)})) AS DOUBLE)
                       * 10000.0 + 0.5) AS DOUBLE) / 10000.0) END
                 AS DOUBLE) AS amivest
     FROM seq GROUP BY symbol ORDER BY symbol
@@ -417,7 +420,7 @@ def q_amivest_liquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = seq.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_bars"),
         F.sum("volume").cast("bigint").alias("total_volume"),
-        _ssum2(F.col("abs_r"), 12, 8).alias("sr"),
+        split_term_sum(F.col("abs_r"), 12, 8).alias("sr"),
     )
     return (
         g.select(

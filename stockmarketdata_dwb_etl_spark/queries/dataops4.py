@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
+from stockmarketdata_dwb_etl_spark.functions.exact import portable_round, term
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.text import tokenize, word_shingles
 from stockmarketdata_dwb_etl_spark.registry import query
@@ -617,7 +617,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
             # before the exact-DECIMAL sum (raw double→DECIMAL casts are
             # engine-asymmetric), well under the 2^53 round-trip bound
             portable_round(
-                F.sum(portable_round(err, 12).cast("decimal(38,12)")), 9
+                F.sum(term(err, 12)), 9
             )
             .cast("double")
             .alias("l2_err"),

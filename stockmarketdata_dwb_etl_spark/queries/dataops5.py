@@ -14,11 +14,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
+from stockmarketdata_dwb_etl_spark.functions.exact import (
+    hilo_finish,
+    hilo_term_sum,
+    portable_round,
+    split_term_sum,
+    sql_split_term_sum,
+    sql_term_sum,
+    term_sum,
+)
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.text import tokenize, word_shingles
-from stockmarketdata_dwb_etl_spark.queries.dataops11 import _dsum, _ssum, _ssum_fin, _ssum_hilo
-from stockmarketdata_dwb_etl_spark.queries.stats_q import _dsum2, _ssum2
 from stockmarketdata_dwb_etl_spark.registry import query
 
 
@@ -45,11 +51,11 @@ from stockmarketdata_dwb_etl_spark.registry import query
     ),
     s AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum("x", 12)} AS sx,
-               {_dsum("y", 12)} AS sy,
-               {_dsum("x * y", 12)} AS sxy,
-               {_dsum("x * x", 12)} AS sxx,
-               {_dsum("y * y", 12)} AS syy
+               {sql_term_sum("x", 12)} AS sx,
+               {sql_term_sum("y", 12)} AS sy,
+               {sql_term_sum("x * y", 12)} AS sxy,
+               {sql_term_sum("x * x", 12)} AS sxx,
+               {sql_term_sum("y * y", 12)} AS syy
         FROM xy
     )
     SELECT n AS n_terms,
@@ -91,18 +97,18 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.col("rk").cast("double")).alias("x"),
         F.log(F.col("cnt").cast("double")).alias("y"),
     )
-    # 12dp round-then-DECIMAL (r09 _dterm lesson): a RAW double →
+    # 12dp round-then-DECIMAL (r09 cast-scale lesson): a RAW double →
     # DECIMAL(38,18) cast is engine-asymmetric (DuckDB's conversion
     # mangles digits below double precision, Spark's shortest-repr cast
     # does not); rounding first makes the conversion exact on both.
     # |x| ≤ ln 500, |y*y| ≤ ~625, so the 12dp floor term is safe.
     s = xy.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum(F.col("x"), 12).alias("sx"),
-        _ssum(F.col("y"), 12).alias("sy"),
-        _ssum(F.col("x") * F.col("y"), 12).alias("sxy"),
-        _ssum(F.col("x") * F.col("x"), 12).alias("sxx"),
-        _ssum(F.col("y") * F.col("y"), 12).alias("syy"),
+        term_sum(F.col("x"), 12).alias("sx"),
+        term_sum(F.col("y"), 12).alias("sy"),
+        term_sum(F.col("x") * F.col("y"), 12).alias("sxy"),
+        term_sum(F.col("x") * F.col("x"), 12).alias("sxx"),
+        term_sum(F.col("y") * F.col("y"), 12).alias("syy"),
     )
     n = F.col("n")
     sx, sy, sxy, sxx, syy = (
@@ -372,18 +378,18 @@ def _pi_iteration_sql(vprev: str, tag: str) -> str:
     return f"""
     s{tag} AS (
         SELECT e.vec_id,
-               (CAST(floor(CAST(({_dsum("e.val * v.comp", 12)}) AS DOUBLE) * 1000000000000.0 + 0.5) AS DOUBLE) / 1000000000000.0) AS s
+               (CAST(floor(CAST(({sql_term_sum("e.val * v.comp", 12)}) AS DOUBLE) * 1000000000000.0 + 0.5) AS DOUBLE) / 1000000000000.0) AS s
         FROM ex e JOIN {vprev} v ON v.idx = e.idx
         GROUP BY e.vec_id
     ),
     w{tag} AS (
         SELECT e.idx,
-               (CAST(floor(CAST(({_dsum("e.val * s.s", 12)}) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS w
+               (CAST(floor(CAST(({sql_term_sum("e.val * s.s", 12)}) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS w
         FROM ex e JOIN s{tag} s ON s.vec_id = e.vec_id
         GROUP BY e.idx
     ),
     n{tag} AS (
-        SELECT sqrt({_dsum2("w * w", 12, 6)})
+        SELECT sqrt({sql_split_term_sum("w * w", 12, 6)})
                  AS nrm
         FROM w{tag}
     ),
@@ -455,7 +461,7 @@ def q_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("vec_id")
             .agg(
                 portable_round(
-                    _ssum(F.col("val") * F.col("comp"), 12),
+                    term_sum(F.col("val") * F.col("comp"), 12),
                     12,
                 ).alias("s")
             )
@@ -465,7 +471,7 @@ def q_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("idx")
             .agg(
                 portable_round(
-                    _ssum(F.col("val") * F.col("s"), 12),
+                    term_sum(F.col("val") * F.col("s"), 12),
                     6,
                 ).alias("w")
             )
@@ -477,7 +483,7 @@ def q_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         # same cut global_row_number makes)
         w = w.localCheckpoint(eager=True)
         nrm_df = w.agg(
-            F.sqrt(_ssum2(F.col("w") * F.col("w"), 12, 6)).alias("nrm")
+            F.sqrt(split_term_sum(F.col("w") * F.col("w"), 12, 6)).alias("nrm")
         )
         v = w.crossJoin(F.broadcast(nrm_df)).select(
             "idx", portable_round(F.col("w") / F.col("nrm"), 12).alias("comp")
@@ -833,9 +839,7 @@ def q_embed_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         portable_round(
             # 6dp-pre-rounded norms cast at their OWN scale: exact on
             # both engines (k <= ~1e10 << 2^53)
-            F.sum(portable_round(F.col("nrm"), 6).cast("decimal(38,6)")).cast(
-                "double"
-            )
+            term_sum(F.col("nrm"), 6)
             / F.count(F.lit(1)),
             4,
         )
@@ -1510,7 +1514,7 @@ def q_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                              UNNEST(embedding) AS val) u
     )
     SELECT a.idx AS i, b.idx AS j,
-           CAST((CAST(floor(CAST(({_dsum("CAST(a.val AS DOUBLE) * CAST(b.val AS DOUBLE)", 12)}) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS DOUBLE) AS gram
+           CAST((CAST(floor(CAST(({sql_term_sum("CAST(a.val AS DOUBLE) * CAST(b.val AS DOUBLE)", 12)}) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS DOUBLE) AS gram
     FROM ex a JOIN ex b ON a.vec_id = b.vec_id AND a.idx <= b.idx
     GROUP BY a.idx, b.idx
     ORDER BY i, j
@@ -1557,17 +1561,17 @@ def q_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("t.i", "t.j", "t.p")
     # component products are < 1 (|f32 comp| < 0.6), so the 12dp scaled
     # term fits the two-long-bucket sum (r13: the DECIMAL(38,12) agg was
-    # 2.2× the plain-long agg cost on this d²·n-row stage; _ssum_hilo is
+    # 2.2× the plain-long agg cost on this d²·n-row stage; hilo_term_sum is
     # bit-identical — same exact rational, one double cast per group —
     # and its 9.2e12-rows-per-group overflow bound dwarfs any corpus)
-    hi, lo = _ssum_hilo(F.col("p"), 12)
+    hi, lo = hilo_term_sum(F.col("p"), 12)
     return (
         triples.groupBy("i", "j")
         .agg(hi.alias("sh"), lo.alias("sl"))
         .select(
             "i",
             "j",
-            portable_round(_ssum_fin(F.col("sh"), F.col("sl"), 12), 6)
+            portable_round(hilo_finish(F.col("sh"), F.col("sl"), 12), 6)
             .cast("double")
             .alias("gram"),
         )

@@ -25,7 +25,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
+from stockmarketdata_dwb_etl_spark.functions.exact import (
+    portable_round,
+    split_term_sum,
+    sql_split_term_sum,
+    term,
+    term_sum,
+)
 from stockmarketdata_dwb_etl_spark.functions.text import tokenize, word_shingles
 from stockmarketdata_dwb_etl_spark.functions.vectors import cosine
 from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
@@ -33,7 +39,6 @@ from stockmarketdata_dwb_etl_spark.operators.rank import (
     global_prefix_sum,
     global_row_number,
 )
-from stockmarketdata_dwb_etl_spark.queries.stats_q import _dsum2, _ssum2
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # pre-rounded 12dp terms cast at their OWN scale (mirrors the oracle
@@ -533,13 +538,7 @@ def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("probe_id")
         .agg(
-            F.sum(
-                portable_round(
-                    F.lit(1.0) / F.log2(F.col("i") + 1), 12
-                ).cast(_DEC12_T)
-            )
-            .cast("double")
-            .alias("idcg")
+            term_sum(F.lit(1.0) / F.log2(F.col("i") + 1), 12).alias("idcg")
         )
     )
     return (
@@ -937,13 +936,9 @@ def q_brier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = probs.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_scored"),
         F.sum("y").cast("bigint").alias("n_pos"),
-        F.sum(
-            portable_round(
-                (F.col("p") - F.col("y")) * (F.col("p") - F.col("y")), 12
-            ).cast(_DEC12_T)
-        )
-        .cast("double")
-        .alias("sq_sum"),
+        term_sum((F.col("p") - F.col("y")) * (F.col("p") - F.col("y")), 12).alias(
+            "sq_sum"
+        ),
     )
     pbar = F.col("n_pos").cast("double") / F.col("n_scored")
     unc = pbar * (F.lit(1.0) - pbar)
@@ -1160,7 +1155,7 @@ def q_sentence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
            MIN(norm_v) AS norm_min,
            MAX(norm_v) AS norm_max,
            CAST((CAST(floor(CAST((
-               ({_dsum2("norm_v", 12, 8)}) / COUNT(*)
+               ({sql_split_term_sum("norm_v", 12, 8)}) / COUNT(*)
              ) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS DOUBLE)
                AS norm_mean
     FROM mapped GROUP BY symbol ORDER BY symbol
@@ -1218,7 +1213,7 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("pv").alias("norm_min"),
             F.max("pv").alias("norm_max"),
             (
-                _ssum2(F.col("pv"), 12, 8) / F.count(F.lit(1))
+                split_term_sum(F.col("pv"), 12, 8) / F.count(F.lit(1))
             ).alias("__mean"),
         )
         .select(
@@ -1358,10 +1353,7 @@ def q_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums = rows.agg(
         *[
             F.sum(
-                portable_round(
-                    F.abs(F.col(f"f_{a}") - F.col(f"f_{b}")) * F.col("gap"),
-                    12,
-                ).cast(_DEC12_T)
+                term(F.abs(F.col(f"f_{a}") - F.col(f"f_{b}")) * F.col("gap"), 12)
             ).alias(f"w1_{a}_{b}")
             for a, b in _W1_PAIRS
         ]

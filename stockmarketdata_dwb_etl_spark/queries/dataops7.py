@@ -20,23 +20,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
+from stockmarketdata_dwb_etl_spark.functions.exact import (
+    portable_round,
+    split_term_sum,
+    sql_portable_round,
+    sql_split_term_sum,
+    sql_term_sum,
+    term_sum,
+)
 from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
 from stockmarketdata_dwb_etl_spark.operators.rank import global_prefix_sum
 from stockmarketdata_dwb_etl_spark.queries.graph import _GRAPH_SQL, _graph
-from stockmarketdata_dwb_etl_spark.queries.stats_q import _dsum2, _ssum2
 from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
 
 _DEC18 = "decimal(38,18)"
-
-
-def _pr(expr: str, n: int) -> str:
-    scale = float(10**n)
-    return (
-        f"CAST((CAST(floor(CAST(({expr}) AS DOUBLE) * {scale} + 0.5)"
-        f" AS DOUBLE) / {scale}) AS DOUBLE)"
-    )
 
 
 @query(
@@ -57,23 +55,23 @@ def _pr(expr: str, n: int) -> str:
     m AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("abs(y - yhat)", 12, 8)} AS sae,
-               {_dsum2("(y - yhat) * (y - yhat)", 12, 8)} AS sse,
-               {_dsum2("y", 12, 8)} AS sy,
-               {_dsum2("y * y", 12, 8)} AS syy,
-               {_dsum2("CASE WHEN y <> 0 THEN abs((y - yhat) / y)"
+               {sql_split_term_sum("abs(y - yhat)", 12, 8)} AS sae,
+               {sql_split_term_sum("(y - yhat) * (y - yhat)", 12, 8)} AS sse,
+               {sql_split_term_sum("y", 12, 8)} AS sy,
+               {sql_split_term_sum("y * y", 12, 8)} AS syy,
+               {sql_split_term_sum("CASE WHEN y <> 0 THEN abs((y - yhat) / y)"
                        " ELSE 0 END", 12, 8)} AS sape,
                CAST(SUM(CASE WHEN y <> 0 THEN 1 ELSE 0 END) AS BIGINT)
                    AS n_ape
         FROM p GROUP BY 1
     )
     SELECT symbol, n,
-           {_pr("sae / n", 6)} AS mae,
-           {_pr("sqrt(sse / n)", 6)} AS rmse,
+           {sql_portable_round("sae / n", 6)} AS mae,
+           {sql_portable_round("sqrt(sse / n)", 6)} AS rmse,
            CASE WHEN n_ape = 0 THEN NULL
-                ELSE {_pr("100.0 * sape / n_ape", 6)} END AS mape_pct,
+                ELSE {sql_portable_round("100.0 * sape / n_ape", 6)} END AS mape_pct,
            CASE WHEN syy - sy * sy / n <= 0 THEN NULL
-                ELSE {_pr("1.0 - sse / (syy - sy * sy / n)", 6)} END AS r2
+                ELSE {sql_portable_round("1.0 - sse / (syy - sy * sy / n)", 6)} END AS r2
     FROM m ORDER BY symbol
     """,
 )
@@ -102,11 +100,11 @@ def q_regression_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = F.col("y") - F.col("yhat")
     m = p.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.abs(e), 12, 8).alias("sae"),
-        _ssum2(e * e, 12, 8).alias("sse"),
-        _ssum2(F.col("y"), 12, 8).alias("sy"),
-        _ssum2(F.col("y") * F.col("y"), 12, 8).alias("syy"),
-        _ssum2(
+        split_term_sum(F.abs(e), 12, 8).alias("sae"),
+        split_term_sum(e * e, 12, 8).alias("sse"),
+        split_term_sum(F.col("y"), 12, 8).alias("sy"),
+        split_term_sum(F.col("y") * F.col("y"), 12, 8).alias("syy"),
+        split_term_sum(
             F.when(F.col("y") != 0, F.abs(e / F.col("y"))).otherwise(
                 F.lit(0.0)
             ),
@@ -163,7 +161,7 @@ def q_regression_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     scored AS (
         SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-               {_pr(
+               {sql_portable_round(
                    "1.0 / (1.0 + exp(-("
                    "-2.0 + 0.02 * least(n_words, 200) + 6.0 * stop_ratio"
                    " - 8.0 * digit_ratio + 0.3 * avg_wlen)))", 6)} AS score
@@ -195,13 +193,13 @@ def q_regression_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY 1
     )
     SELECT decile, n, pos,
-           {_pr("CAST(pos AS DOUBLE) / n", 6)} AS response_rate,
+           {sql_portable_round("CAST(pos AS DOUBLE) / n", 6)} AS response_rate,
            CASE WHEN pp = 0 THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "(CAST(pos AS DOUBLE) * nn) / (CAST(n AS DOUBLE) * pp)",
                     6)} END AS lift,
            CASE WHEN pp = 0 THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "100.0 * CAST(SUM(pos) OVER (ORDER BY decile"
                     " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
                     " AS DOUBLE) / pp", 6)} END AS cum_gain_pct
@@ -353,7 +351,7 @@ def q_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT d.node, d.degree,
            CAST(COALESCE(t.triangles, 0) AS BIGINT) AS triangles,
            CASE WHEN d.degree < 2 THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "2.0 * COALESCE(t.triangles, 0)"
                     " / (CAST(d.degree AS DOUBLE) * (d.degree - 1))", 6)} END
                AS clustering_coeff
@@ -442,7 +440,7 @@ def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY 1, 2
     )
     SELECT p.supp_a, p.supp_b, p.shared_parts,
-           {_pr(
+           {sql_portable_round(
                "CAST(p.shared_parts AS DOUBLE)"
                " / (da.sd + db.sd - p.shared_parts)", 6)} AS jaccard
     FROM pairs p
@@ -524,11 +522,10 @@ def q_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT source,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
-           {_pr(
-               "CAST(SUM(CAST(" + _pr("flesch", 10) + " AS DECIMAL(38,10)))"
-               " AS DOUBLE) / COUNT(*)", 6)} AS avg_flesch,
-           {_pr("min(flesch)", 6)} AS min_flesch,
-           {_pr("max(flesch)", 6)} AS max_flesch
+           {sql_portable_round(
+               sql_term_sum("flesch", 10) + " / COUNT(*)", 6)} AS avg_flesch,
+           {sql_portable_round("min(flesch)", 6)} AS min_flesch,
+           {sql_portable_round("max(flesch)", 6)} AS max_flesch
     FROM sc GROUP BY source ORDER BY source
     """,
 )
@@ -573,9 +570,7 @@ def q_flesch_reading(spark: SparkSession, sf_dir: str) -> DataFrame:
             # (raw double→DECIMAL is engine-asymmetric; |flesch| ≤ ~1e4
             # keeps the 10dp floor term far under the 2^53 bound)
             portable_round(
-                F.sum(
-                    portable_round(F.col("flesch"), 10).cast("decimal(38,10)")
-                ).cast("double")
+                term_sum(F.col("flesch"), 10)
                 / F.count(F.lit(1)),
                 6,
             )
@@ -612,15 +607,15 @@ def q_flesch_reading(spark: SparkSession, sf_dir: str) -> DataFrame:
     m AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("(y - seasonal) * (y - seasonal)", 12, 8)} AS sse_s,
-               {_dsum2("(y - naive) * (y - naive)", 12, 8)} AS sse_n
+               {sql_split_term_sum("(y - seasonal) * (y - seasonal)", 12, 8)} AS sse_s,
+               {sql_split_term_sum("(y - naive) * (y - naive)", 12, 8)} AS sse_n
         FROM p GROUP BY 1
     )
     SELECT symbol, n,
-           {_pr("sqrt(sse_s / n)", 6)} AS rmse_seasonal,
-           {_pr("sqrt(sse_n / n)", 6)} AS rmse_naive,
+           {sql_portable_round("sqrt(sse_s / n)", 6)} AS rmse_seasonal,
+           {sql_portable_round("sqrt(sse_n / n)", 6)} AS rmse_naive,
            CASE WHEN sse_n = 0 THEN NULL
-                ELSE {_pr("sqrt(sse_s / n) / sqrt(sse_n / n)", 6)} END
+                ELSE {sql_portable_round("sqrt(sse_s / n) / sqrt(sse_n / n)", 6)} END
                AS theil_u
     FROM m ORDER BY symbol
     """,
@@ -654,8 +649,8 @@ def q_theil_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     en = F.col("y") - F.col("naive")
     m = p.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(es * es, 12, 8).alias("sse_s"),
-        _ssum2(en * en, 12, 8).alias("sse_n"),
+        split_term_sum(es * es, 12, 8).alias("sse_s"),
+        split_term_sum(en * en, 12, 8).alias("sse_n"),
     )
     rmse_s = F.sqrt(F.col("sse_s") / F.col("n"))
     rmse_n = F.sqrt(F.col("sse_n") / F.col("n"))
@@ -695,7 +690,7 @@ def q_theil_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY 1, 2
     )
     SELECT supp_a, supp_b, shared_parts,
-           {_pr("ra", 6)} AS ra_score
+           {sql_portable_round("ra", 6)} AS ra_score
     FROM pairs
     WHERE shared_parts >= 5
     ORDER BY ra_score DESC, supp_a, supp_b
@@ -727,7 +722,6 @@ def q_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = edges.select(F.col("p"), F.col("s").alias("supp_b"))
     # 12dp-pre-rounded terms <= 1 cast at their OWN scale, matching the
     # oracle's DECIMAL(38,12): k <= 1e12 << 2^53, exact on both engines
-    term = portable_round(F.lit(1.0) / F.col("pd"), 12).cast("decimal(38,12)")
     pairs = (
         a.join(b, "p")
         .filter(F.col("supp_a") < F.col("supp_b"))
@@ -735,7 +729,7 @@ def q_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("supp_a", "supp_b")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("shared_parts"),
-            F.sum(term).cast("double").alias("ra"),
+            term_sum(F.lit(1.0) / F.col("pd"), 12).alias("ra"),
         )
     )
     return (
@@ -777,7 +771,7 @@ _DUCK_SCORED = f"""
 
 def _duck_scored() -> str:
     return _DUCK_SCORED.format(
-        score_round=_pr(
+        score_round=sql_portable_round(
             "1.0 / (1.0 + exp(-("
             "-2.0 + 0.02 * least(n_words, 200) + 6.0 * stop_ratio"
             " - 8.0 * digit_ratio + 0.3 * avg_wlen)))",
@@ -852,7 +846,7 @@ def _spark_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT tp, fp, fn, tn,
            CASE WHEN (tp + fp) = 0 OR (tp + fn) = 0
                      OR (tn + fp) = 0 OR (tn + fn) = 0 THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "(CAST(tp AS DOUBLE) * tn - CAST(fp AS DOUBLE) * fn)"
                     " / sqrt((CAST(tp AS DOUBLE) + fp)"
                     "        * (CAST(tp AS DOUBLE) + fn)"
@@ -916,10 +910,9 @@ def q_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM scored
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n,
-           {_pr(
-               "CAST(SUM(CAST("
-               + _pr("-(y * ln(p) + (1 - y) * ln(1.0 - p))", 12)
-               + " AS DECIMAL(38,12))) AS DOUBLE) / COUNT(*)", 6)}
+           {sql_portable_round(
+               sql_term_sum("-(y * ln(p) + (1 - y) * ln(1.0 - p))", 12)
+               + " / COUNT(*)", 6)}
                AS log_loss
     FROM t
     """,
@@ -941,9 +934,7 @@ def q_log_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         portable_round(
-            F.sum(
-                portable_round(F.col("loss"), 12).cast("decimal(38,12)")
-            ).cast("double")
+            term_sum(F.col("loss"), 12)
             / F.count(F.lit(1)),
             6,
         )
@@ -982,8 +973,8 @@ def q_log_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats AS (
         SELECT w,
                CAST(COUNT(*) AS BIGINT) AS k,
-               {_dsum2("freq", 12, 8)} AS sf,
-               {_dsum2("freq * freq", 12, 8)} AS sff
+               {sql_split_term_sum("freq", 12, 8)} AS sf,
+               {sql_split_term_sum("freq * freq", 12, 8)} AS sff
         FROM f GROUP BY w
     ),
     z AS (
@@ -1003,7 +994,7 @@ def q_log_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY 1, 2
     )
     SELECT source_a, source_b, n_words,
-           {_pr("sdz / n_words", 6)} AS delta
+           {sql_portable_round("sdz / n_words", 6)} AS delta
     FROM pairs ORDER BY source_a, source_b
     """,
 )
@@ -1056,8 +1047,8 @@ def q_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stats = f.groupBy("w").agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
-        _ssum2(F.col("freq"), 12, 8).alias("sf"),
-        _ssum2(F.col("freq") * F.col("freq"), 12, 8).alias("sff"),
+        split_term_sum(F.col("freq"), 12, 8).alias("sf"),
+        split_term_sum(F.col("freq") * F.col("freq"), 12, 8).alias("sff"),
     )
     mean = F.col("sf") / F.col("k")
     var = F.col("sff") / F.col("k") - mean * mean
@@ -1072,16 +1063,13 @@ def q_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = z.select(F.col("source").alias("source_b"), "w", F.col("z").alias("zb"))
     # 12dp-pre-rounded z-gaps cast at their OWN scale, matching the
     # oracle's DECIMAL(38,12): |term| <= ~10 -> exact on both engines
-    term = portable_round(F.abs(F.col("za") - F.col("zb")), 12).cast(
-        "decimal(38,12)"
-    )
     pairs = (
         a.join(b, "w")
         .filter(F.col("source_a") < F.col("source_b"))
         .groupBy("source_a", "source_b")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_words"),
-            F.sum(term).cast("double").alias("sdz"),
+            term_sum(F.abs(F.col("za") - F.col("zb")), 12).alias("sdz"),
         )
     )
     return (
@@ -1494,7 +1482,7 @@ def q_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT lang,
            CAST(COUNT(*) AS BIGINT) AS n_bigrams,
            CAST(SUM(oov) AS BIGINT) AS n_unseen,
-           CAST((CAST(floor(CAST(({_dsum2("ll", 12, 8)})
+           CAST((CAST(floor(CAST(({sql_split_term_sum("ll", 12, 8)})
                 / COUNT(*) AS DOUBLE) * 1000000.0 + 0.5)
                 AS DOUBLE) / 1000000.0) AS DOUBLE) AS mean_ll
     FROM scored GROUP BY lang ORDER BY lang
@@ -1574,7 +1562,7 @@ def q_lm_cross_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
             F.sum("oov").cast("bigint").alias("n_unseen"),
             portable_round(
-                _ssum2(F.col("ll"), 12, 8) / F.count(F.lit(1)),
+                split_term_sum(F.col("ll"), 12, 8) / F.count(F.lit(1)),
                 6,
             )
             .cast("double")

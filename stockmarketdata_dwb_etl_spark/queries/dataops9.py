@@ -22,6 +22,7 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
     sql_term_sum,
+    term_sum,
 )
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -29,8 +30,6 @@ _HEX = "0123456789abcdef"
 
 # order-independent per-term decimal Σ (the round-9 hardening for every
 # embedding dot/norm/d² — exact.py documents the ulp/threshold rationale)
-_dsum12 = sql_term_sum
-_sfold12 = fold_term_sum
 
 
 def _duck_hex_bucket(expr: str, n: int) -> str:
@@ -124,8 +123,7 @@ def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(MIN(n_chars) AS BIGINT) AS min_chars,
            CAST(MAX(n_chars) AS BIGINT) AS max_chars,
            CAST({sql_portable_round(
-               "CAST(SUM(CAST(" + sql_portable_round("lex_div", 8)
-               + " AS DECIMAL(38,8))) AS DOUBLE) / COUNT(*)", 6)}
+               sql_term_sum("lex_div", 8) + " / COUNT(*)", 6)}
                AS DOUBLE) AS avg_lex_div
     FROM staged GROUP BY lang, stage ORDER BY lang, stage
     """,
@@ -164,9 +162,7 @@ def q_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("n_chars").cast("bigint").alias("min_chars"),
             F.max("n_chars").cast("bigint").alias("max_chars"),
             portable_round(
-                F.sum(
-                    portable_round(F.col("lex_div"), 8).cast("decimal(38,8)")
-                ).cast("double")
+                term_sum(F.col("lex_div"), 8)
                 / F.count(F.lit(1)),
                 6,
             )
@@ -516,7 +512,7 @@ def q_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM ex GROUP BY label, idx
     ), dist AS (
         SELECT e.vec_id, c.c_label,
-               {sql_portable_round(_dsum12("(e.val - c.mean_d) * (e.val - c.mean_d)"), 9)} AS d2
+               {sql_portable_round(sql_term_sum("(e.val - c.mean_d) * (e.val - c.mean_d)", 12), 9)} AS d2
         FROM ex e JOIN cent c ON e.idx = c.idx
         GROUP BY e.vec_id, c.c_label
     ), assign AS (
@@ -528,11 +524,11 @@ def q_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE rn = 1
     ), norms AS (
         SELECT vec_id,
-               {sql_portable_round(_dsum12("val * val"), 9)} AS n2
+               {sql_portable_round(sql_term_sum("val * val", 12), 9)} AS n2
         FROM ex GROUP BY vec_id
     ), pairs AS (
         SELECT a.cluster, ea.vec_id AS va, eb.vec_id AS vb,
-               {sql_portable_round(_dsum12("ea.val * eb.val"), 9)} AS dot
+               {sql_portable_round(sql_term_sum("ea.val * eb.val", 12), 9)} AS dot
         FROM ex ea
         JOIN assign a ON a.vec_id = ea.vec_id
         JOIN assign b ON b.cluster = a.cluster AND b.vec_id > a.vec_id
@@ -566,8 +562,8 @@ def q_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast centroids, 9dp-rounded L2 argmin with a label tie-break);
     a vector is DROPPED when a smaller-id cluster-mate has cosine ≥ 0.3
     (the keep-lowest-id greedy rule, no transitive closure needed).
-    Dots/norms/d² accumulate per-term 12dp-rounded DECIMAL (_dsum12 /
-    _sfold12 — bit-identical regardless of accumulation order, so no
+    Dots/norms/d² accumulate per-term 12dp-rounded DECIMAL (sql_term_sum /
+    fold_term_sum — bit-identical regardless of accumulation order, so no
     reassociation ulp can flip the cos ≥ 0.3 edge decision) and are
     9dp-rounded before the cosine. Reported per cluster: size,
     dropped, kept. Scale: the
@@ -594,12 +590,12 @@ def q_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("centroid")
         )
     )
-    d2 = _sfold12(
+    d2 = fold_term_sum(
         F.zip_with(
             F.col("embedding"),
             F.col("centroid"),
             lambda v, c: (v - c) * (v - c),
-        )
+        ), 12
     )
     from stockmarketdata_dwb_etl_spark.operators.cache import (
         bounded_persist,
@@ -621,7 +617,7 @@ def q_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_label").alias("cluster"),
             "embedding",
             portable_round(
-                _sfold12(F.transform(F.col("embedding"), lambda x: x * x)),
+                fold_term_sum(F.transform(F.col("embedding"), lambda x: x * x), 12),
                 9,
             ).alias("n2"),
         )
@@ -633,10 +629,10 @@ def q_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = assign.alias("a")
     b = assign.alias("b")
     dot = portable_round(
-        _sfold12(
+        fold_term_sum(
             F.zip_with(
                 F.col("a.embedding"), F.col("b.embedding"), lambda x, y: x * y
-            )
+            ), 12
         ),
         9,
     )
@@ -795,7 +791,7 @@ def q_context_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM ex GROUP BY label, idx
     ), d2 AS (
         SELECT e.vec_id, e.label,
-               {sql_portable_round(_dsum12("(e.val - c.mean_d) * (e.val - c.mean_d)"), 9)} AS d2
+               {sql_portable_round(sql_term_sum("(e.val - c.mean_d) * (e.val - c.mean_d)", 12), 9)} AS d2
         FROM ex e JOIN cent c ON c.label = e.label AND c.idx = e.idx
         GROUP BY e.vec_id, e.label
     ), mom AS (
@@ -825,7 +821,7 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     training signal is trusted (the geometric sibling of
     q_zscore_outliers; SemDeDup removes near-DUPLICATES, this removes
     far-OUTLIERS). d² accumulates per-term 12dp-rounded DECIMAL
-    (_dsum12/_sfold12 — order-independent, no reassociation ulp at the
+    (sql_term_sum/fold_term_sum — order-independent, no reassociation ulp at the
     3σ cut), is 9dp-rounded (the kmeans near-tie defense) and
     its moments are DECIMAL sums (d²² terms 8dp — magnitude ~1e6, far
     under the int64 floor bound); the 3σ cut runs through the identical
@@ -852,12 +848,12 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("centroid")
         )
     )
-    d2x = _sfold12(
+    d2x = fold_term_sum(
         F.zip_with(
             F.col("embedding"),
             F.col("centroid"),
             lambda v, c: (v - c) * (v - c),
-        )
+        ), 12
     )
     from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
 
@@ -870,12 +866,7 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     mom = d2.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.col("d2").cast("decimal(38,9)")).cast("double").alias("sd"),
-        F.sum(
-            portable_round(F.col("d2") * F.col("d2"), 8).cast(
-                "decimal(38,8)"
-            )
-        )
-        .cast("double")
+        term_sum(F.col("d2") * F.col("d2"), 8)
         .alias("sdd"),
     )
     stats = mom.filter(F.col("n") >= 2).select(

@@ -21,12 +21,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
-from stockmarketdata_dwb_etl_spark.queries.stats_q import (
-    _dsum2,
-    _ssum2,
-    _wdsum2,
-    _wssum2,
+from stockmarketdata_dwb_etl_spark.functions.exact import (
+    portable_round,
+    split_term_sum,
+    sql_split_term_sum,
 )
 from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
@@ -273,10 +271,12 @@ def q_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT symbol, bar_ts, close,
            CAST((CAST(floor(CAST((r) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS DOUBLE) AS log_return,
-           CAST((CAST(floor(CAST((exp({_wdsum2(
+           CAST((CAST(floor(CAST((exp({sql_split_term_sum(
                "r",
+               12,
+               8,
                '''OVER (PARTITION BY symbol ORDER BY bar_ts
-                         ROWS UNBOUNDED PRECEDING)''', 12, 8)}
+                         ROWS UNBOUNDED PRECEDING)''')}
                )) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS DOUBLE) AS cum_growth
     FROM seq WHERE r IS NOT NULL
     ORDER BY symbol, bar_ts
@@ -309,7 +309,7 @@ def q_log_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         "close",
         portable_round("r", 6).cast("double").alias("log_return"),
         portable_round(
-            F.exp(_wssum2(F.col("r"), wrun, 12, 8)), 6
+            F.exp(split_term_sum(F.col("r"), 12, 8, wrun)), 6
         )
         .cast("double")
         .alias("cum_growth"),
@@ -337,10 +337,10 @@ def q_log_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE low > 0
     )
     SELECT symbol, CAST(COUNT(*) AS BIGINT) AS n_days,
-           CAST((CAST(floor(CAST(({_dsum2("g", 12, 8)})
+           CAST((CAST(floor(CAST(({sql_split_term_sum("g", 12, 8)})
                       / COUNT(*) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS DOUBLE) AS gk_var,
            CAST((CAST(floor(CAST((sqrt(greatest(
-               ({_dsum2("g", 12, 8)}) / COUNT(*),
+               ({sql_split_term_sum("g", 12, 8)}) / COUNT(*),
                0.0))) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS DOUBLE) AS gk_vol
     FROM gk GROUP BY symbol ORDER BY symbol
     """,
@@ -374,7 +374,7 @@ def q_volatility_gk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = bars.select("symbol", g.alias("g")).groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
-        _ssum2(F.col("g"), 12, 8).alias("__sg"),
+        split_term_sum(F.col("g"), 12, 8).alias("__sg"),
     )
     mean_g = F.col("__sg") / F.col("n_days")
     return agg.select(

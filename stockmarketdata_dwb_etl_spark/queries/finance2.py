@@ -23,12 +23,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
-from stockmarketdata_dwb_etl_spark.queries.stats_q import (
-    _dsum2,
-    _ssum2,
-    _wdsum2,
-    _wssum2,
+from stockmarketdata_dwb_etl_spark.functions.exact import (
+    portable_round,
+    split_term_sum,
+    sql_split_term_sum,
+    term_sum,
 )
 from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
@@ -36,7 +35,7 @@ from stockmarketdata_dwb_etl_spark.registry import query
 _DEC = "decimal(38,6)"
 
 # Return-moment sums here route through the two-bucket split sum
-# (stats_q._ssum2/_dsum2, 2^53 rule in tests/test_split_sum.py): hourly
+# (functions/exact.py::split_term_sum, 2^53 rule in its module docstring): hourly
 # simple returns spike to |r| ~1.5e3 when a close lands near 0, so the
 # legacy raw double->DECIMAL(38,18) cast breached the 2^53 round-trip
 # bound (|x|*10^18 >= 2^53 for any |x| >= 9e-3) and relied on downstream
@@ -342,17 +341,17 @@ def q_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_DUCK_RETURNS},
     mkt AS (
         SELECT bar_ts,
-               {_dsum2("r", 12, 8)}
+               {sql_split_term_sum("r", 12, 8)}
                    / COUNT(*) AS rm
         FROM rets GROUP BY bar_ts
     ),
     moments AS (
         SELECT s.symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("m.rm", 12, 8)} AS sx,
-               {_dsum2("s.r", 12, 8)} AS sy,
-               {_dsum2("s.r * m.rm", 12, 8)} AS sxy,
-               {_dsum2("m.rm * m.rm", 12, 8)} AS sxx
+               {sql_split_term_sum("m.rm", 12, 8)} AS sx,
+               {sql_split_term_sum("s.r", 12, 8)} AS sy,
+               {sql_split_term_sum("s.r * m.rm", 12, 8)} AS sxy,
+               {sql_split_term_sum("m.rm * m.rm", 12, 8)} AS sxx
         FROM rets s JOIN mkt m ON s.bar_ts = m.bar_ts
         GROUP BY s.symbol
     )
@@ -376,15 +375,15 @@ def q_beta_capm(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial+final hash-agg per symbol."""
     rets = _returns(spark, sf_dir)
     mkt = rets.groupBy("bar_ts").agg(
-        (_ssum2(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("rm")
+        (split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("rm")
     )
     joined = rets.join(F.broadcast(mkt), "bar_ts")
     m = joined.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("rm"), 12, 8).alias("sx"),
-        _ssum2(F.col("r"), 12, 8).alias("sy"),
-        _ssum2(F.col("r") * F.col("rm"), 12, 8).alias("sxy"),
-        _ssum2(F.col("rm") * F.col("rm"), 12, 8).alias("sxx"),
+        split_term_sum(F.col("rm"), 12, 8).alias("sx"),
+        split_term_sum(F.col("r"), 12, 8).alias("sy"),
+        split_term_sum(F.col("r") * F.col("rm"), 12, 8).alias("sxy"),
+        split_term_sum(F.col("rm") * F.col("rm"), 12, 8).alias("sxx"),
     )
     beta = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -405,8 +404,8 @@ def q_beta_capm(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("r", 12, 8)} AS s,
-               {_dsum2("r * r", 12, 8)} AS ss
+               {sql_split_term_sum("r", 12, 8)} AS s,
+               {sql_split_term_sum("r * r", 12, 8)} AS ss
         FROM rets GROUP BY symbol
     )
     SELECT symbol, n,
@@ -432,8 +431,8 @@ def q_sharpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     rets = _returns(spark, sf_dir)
     m = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("r"), 12, 8).alias("s"),
-        _ssum2(F.col("r") * F.col("r"), 12, 8).alias("ss"),
+        split_term_sum(F.col("r"), 12, 8).alias("s"),
+        split_term_sum(F.col("r") * F.col("r"), 12, 8).alias("ss"),
     )
     mean = F.col("s") / F.col("n")
     var = F.col("ss") / F.col("n") - mean * mean
@@ -463,11 +462,11 @@ def q_sharpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("x", 12, 8)} AS sx,
-               {_dsum2("y", 12, 8)} AS sy,
-               {_dsum2("x * y", 12, 8)} AS sxy,
-               {_dsum2("x * x", 12, 8)} AS sxx,
-               {_dsum2("y * y", 12, 8)} AS syy
+               {sql_split_term_sum("x", 12, 8)} AS sx,
+               {sql_split_term_sum("y", 12, 8)} AS sy,
+               {sql_split_term_sum("x * y", 12, 8)} AS sxy,
+               {sql_split_term_sum("x * x", 12, 8)} AS sxx,
+               {sql_split_term_sum("y * y", 12, 8)} AS syy
         FROM pairs GROUP BY symbol
     )
     SELECT symbol, n,
@@ -496,11 +495,11 @@ def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("x").isNotNull())
     m = pairs.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("x"), 12, 8).alias("sx"),
-        _ssum2(F.col("y"), 12, 8).alias("sy"),
-        _ssum2(F.col("x") * F.col("y"), 12, 8).alias("sxy"),
-        _ssum2(F.col("x") * F.col("x"), 12, 8).alias("sxx"),
-        _ssum2(F.col("y") * F.col("y"), 12, 8).alias("syy"),
+        split_term_sum(F.col("x"), 12, 8).alias("sx"),
+        split_term_sum(F.col("y"), 12, 8).alias("sy"),
+        split_term_sum(F.col("x") * F.col("y"), 12, 8).alias("sxy"),
+        split_term_sum(F.col("x") * F.col("x"), 12, 8).alias("sxx"),
+        split_term_sum(F.col("y") * F.col("y"), 12, 8).alias("syy"),
     )
     cxx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     cyy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
@@ -615,10 +614,10 @@ def q_rank_ic(spark: SparkSession, sf_dir: str) -> DataFrame:
     m AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("r", 12, 8)} AS s1,
-               {_dsum2("r * r", 12, 8)} AS s2,
-               {_dsum2("r * r * r", 12, 5)} AS s3,
-               {_dsum2("r * r * r * r", 12, 2)} AS s4
+               {sql_split_term_sum("r", 12, 8)} AS s1,
+               {sql_split_term_sum("r * r", 12, 8)} AS s2,
+               {sql_split_term_sum("r * r * r", 12, 5)} AS s3,
+               {sql_split_term_sum("r * r * r * r", 12, 2)} AS s4
         FROM rets GROUP BY symbol
     ),
     cm AS (
@@ -653,10 +652,10 @@ def q_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = F.col("r")
     m = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(r, 12, 8).alias("s1"),
-        _ssum2(r * r, 12, 8).alias("s2"),
-        _ssum2(r * r * r, 12, 5).alias("s3"),
-        _ssum2(r * r * r * r, 12, 2).alias("s4"),
+        split_term_sum(r, 12, 8).alias("s1"),
+        split_term_sum(r * r, 12, 8).alias("s2"),
+        split_term_sum(r * r * r, 12, 5).alias("s3"),
+        split_term_sum(r * r * r * r, 12, 2).alias("s4"),
     )
     n = F.col("n")
     mu = F.col("s1") / n
@@ -695,7 +694,7 @@ def q_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT symbol,
            CAST(COUNT(*) AS BIGINT) AS n_bars,
-           CAST((CAST(floor(CAST(({_dsum2("abs_r / volume", 12, 8)})
+           CAST((CAST(floor(CAST(({sql_split_term_sum("abs_r / volume", 12, 8)})
                            / COUNT(*) * 1e6 AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS DOUBLE)
                AS amihud_x1e6
     FROM seq GROUP BY symbol ORDER BY symbol
@@ -722,7 +721,7 @@ def q_amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_bars"),
             portable_round(
-                _ssum2(F.col("abs_r") / F.col("volume"), 12, 8)
+                split_term_sum(F.col("abs_r") / F.col("volume"), 12, 8)
                 / F.count(F.lit(1))
                 * F.lit(1e6),
                 6,
@@ -751,7 +750,7 @@ def q_amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT symbol,
            CAST(COUNT(*) AS BIGINT) AS n_segments,
            CAST(SUM(dt_us) AS BIGINT) AS total_us,
-           CAST((CAST(floor(CAST(({_dsum2("value * dt_us", 6, 0)})
+           CAST((CAST(floor(CAST(({sql_split_term_sum("value * dt_us", 6, 0)})
                       / CAST(SUM(dt_us) AS DOUBLE) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS DOUBLE) AS twap
     FROM seg GROUP BY symbol ORDER BY symbol
     """,
@@ -785,7 +784,7 @@ def q_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # price*microsecond products reach ~5e13, so the legacy
                 # 6-scale cast breached 2^53; (6,0) keeps sub-1 products
                 # at 6dp and big ones under the integer-scale bound
-                _ssum2(F.col("value") * F.col("dt_us"), 6, 0)
+                split_term_sum(F.col("value") * F.col("dt_us"), 6, 0)
                 / F.sum("dt_us").cast("double"),
                 6,
             )
@@ -978,11 +977,11 @@ def q_forecast_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     m AS (
         SELECT lag,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("ra", 12, 8)} AS sx,
-               {_dsum2("rb", 12, 8)} AS sy,
-               {_dsum2("ra * rb", 12, 8)} AS sxy,
-               {_dsum2("ra * ra", 12, 8)} AS sxx,
-               {_dsum2("rb * rb", 12, 8)} AS syy
+               {sql_split_term_sum("ra", 12, 8)} AS sx,
+               {sql_split_term_sum("rb", 12, 8)} AS sy,
+               {sql_split_term_sum("ra * rb", 12, 8)} AS sxy,
+               {sql_split_term_sum("ra * ra", 12, 8)} AS sxx,
+               {sql_split_term_sum("rb * rb", 12, 8)} AS syy
         FROM joined GROUP BY lag
     )
     SELECT lag, n,
@@ -1041,11 +1040,11 @@ def q_lead_lag_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = joined.groupBy("lag").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("ra"), 12, 8).alias("sx"),
-        _ssum2(F.col("rb"), 12, 8).alias("sy"),
-        _ssum2(F.col("ra") * F.col("rb"), 12, 8).alias("sxy"),
-        _ssum2(F.col("ra") * F.col("ra"), 12, 8).alias("sxx"),
-        _ssum2(F.col("rb") * F.col("rb"), 12, 8).alias("syy"),
+        split_term_sum(F.col("ra"), 12, 8).alias("sx"),
+        split_term_sum(F.col("rb"), 12, 8).alias("sy"),
+        split_term_sum(F.col("ra") * F.col("rb"), 12, 8).alias("sxy"),
+        split_term_sum(F.col("ra") * F.col("ra"), 12, 8).alias("sxx"),
+        split_term_sum(F.col("rb") * F.col("rb"), 12, 8).alias("syy"),
     )
     cxx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     cyy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
@@ -1131,7 +1130,7 @@ def q_volume_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     OR (open < prev_close
                                         AND high >= prev_close))
                 AS BIGINT) AS n_gaps_filled,
-           CAST((CAST(floor(CAST(({_dsum2("abs(open / prev_close - 1.0)", 12, 8)})
+           CAST((CAST(floor(CAST(({sql_split_term_sum("abs(open / prev_close - 1.0)", 12, 8)})
                       / COUNT(*) * 10000 AS DOUBLE) * 10000.0 + 0.5) AS DOUBLE) / 10000.0) AS DOUBLE) AS avg_gap_bps
     FROM seq GROUP BY symbol ORDER BY symbol
     """,
@@ -1167,7 +1166,7 @@ def q_overnight_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(down, 1)).cast("bigint").alias("n_gap_down"),
             F.count(F.when(filled, 1)).cast("bigint").alias("n_gaps_filled"),
             portable_round(
-                _ssum2(gap, 12, 8) / F.count(F.lit(1)) * F.lit(10000.0),
+                split_term_sum(gap, 12, 8) / F.count(F.lit(1)) * F.lit(10000.0),
                 4,
             )
             .cast("double")
@@ -1250,7 +1249,7 @@ def q_price_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST((CAST(floor(CAST((v.var95) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS DOUBLE) AS var95,
            CAST(COUNT(*) FILTER (WHERE r.r <= v.var95) AS BIGINT)
                AS n_tail,
-           CAST((CAST(floor(CAST(({_dsum2("CASE WHEN r.r <= v.var95 THEN r.r END", 12, 8)})
+           CAST((CAST(floor(CAST(({sql_split_term_sum("CASE WHEN r.r <= v.var95 THEN r.r END", 12, 8)})
                       / COUNT(*) FILTER (WHERE r.r <= v.var95) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0)
                 AS DOUBLE) AS cvar95
     FROM rets r JOIN var_t v ON v.symbol = r.symbol
@@ -1284,7 +1283,7 @@ def q_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
             portable_round(
                 # NULL off-tail terms contribute 0 to both split-sum
                 # buckets on both engines, matching the FILTER semantics
-                _ssum2(F.when(in_tail, F.col("r")), 12, 8)
+                split_term_sum(F.when(in_tail, F.col("r")), 12, 8)
                 / F.count(F.when(in_tail, 1)),
                 6,
             )
@@ -1394,10 +1393,10 @@ def q_drawdown_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
     m AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("sv", 12, 8)} AS sx,
-               {_dsum2("r", 12, 8)} AS sy,
-               {_dsum2("sv * r", 12, 8)} AS sxy,
-               {_dsum2("sv * sv", 12, 8)} AS sxx
+               {sql_split_term_sum("sv", 12, 8)} AS sx,
+               {sql_split_term_sum("r", 12, 8)} AS sy,
+               {sql_split_term_sum("sv * r", 12, 8)} AS sxy,
+               {sql_split_term_sum("sv * sv", 12, 8)} AS sxx
         FROM seq GROUP BY symbol
     )
     SELECT symbol, n,
@@ -1427,10 +1426,10 @@ def q_kyle_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("r").isNotNull())
     m = seq.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("sv"), 12, 8).alias("sx"),
-        _ssum2(F.col("r"), 12, 8).alias("sy"),
-        _ssum2(F.col("sv") * F.col("r"), 12, 8).alias("sxy"),
-        _ssum2(F.col("sv") * F.col("sv"), 12, 8).alias("sxx"),
+        split_term_sum(F.col("sv"), 12, 8).alias("sx"),
+        split_term_sum(F.col("r"), 12, 8).alias("sy"),
+        split_term_sum(F.col("sv") * F.col("r"), 12, 8).alias("sxy"),
+        split_term_sum(F.col("sv") * F.col("sv"), 12, 8).alias("sxx"),
     )
     den = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
@@ -1451,11 +1450,11 @@ def q_kyle_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigma AS (
         SELECT symbol,
                sqrt(greatest(
-                   {_dsum2("r * r", 12, 8)}
+                   {sql_split_term_sum("r * r", 12, 8)}
                        / COUNT(*)
-                   - ({_dsum2("r", 12, 8)}
+                   - ({sql_split_term_sum("r", 12, 8)}
                       / COUNT(*))
-                     * ({_dsum2("r", 12, 8)}
+                     * ({sql_split_term_sum("r", 12, 8)}
                         / COUNT(*)), 0.0)) AS sd
         FROM rets GROUP BY symbol
     ),
@@ -1475,7 +1474,7 @@ def q_kyle_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT is_jump,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST((CAST(floor(CAST(({_dsum2(
+           CAST((CAST(floor(CAST(({sql_split_term_sum(
                           "jump_sign * (COALESCE(r1, 0) + COALESCE(r2, 0)"
                           " + COALESCE(r3, 0))", 12, 8)})
                       / COUNT(*) * 10000 AS DOUBLE) * 10000.0 + 0.5) AS DOUBLE) / 10000.0) AS DOUBLE)
@@ -1497,9 +1496,9 @@ def q_event_study_jumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigma = rets.groupBy("symbol").agg(
         F.sqrt(
             F.greatest(
-                _ssum2(F.col("r") * F.col("r"), 12, 8) / F.count(F.lit(1))
-                - (_ssum2(F.col("r"), 12, 8) / F.count(F.lit(1)))
-                * (_ssum2(F.col("r"), 12, 8) / F.count(F.lit(1))),
+                split_term_sum(F.col("r") * F.col("r"), 12, 8) / F.count(F.lit(1))
+                - (split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1)))
+                * (split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1))),
                 F.lit(0.0),
             )
         ).alias("sd")
@@ -1531,7 +1530,7 @@ def q_event_study_jumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             portable_round(
-                _ssum2(drift, 12, 8) / F.count(F.lit(1)) * F.lit(10000.0),
+                split_term_sum(drift, 12, 8) / F.count(F.lit(1)) * F.lit(10000.0),
                 4,
             )
             .cast("double")
@@ -1554,11 +1553,11 @@ def q_event_study_jumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     m AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("x", 12, 8)} AS sx,
-               {_dsum2("y", 12, 8)} AS sy,
-               {_dsum2("x * y", 12, 2)} AS sxy,
-               {_dsum2("x * x", 12, 2)} AS sxx,
-               {_dsum2("y * y", 12, 2)} AS syy
+               {sql_split_term_sum("x", 12, 8)} AS sx,
+               {sql_split_term_sum("y", 12, 8)} AS sy,
+               {sql_split_term_sum("x * y", 12, 2)} AS sxy,
+               {sql_split_term_sum("x * x", 12, 2)} AS sxx,
+               {sql_split_term_sum("y * y", 12, 2)} AS syy
         FROM pairs GROUP BY symbol
     )
     SELECT symbol, n,
@@ -1595,11 +1594,11 @@ def q_arch_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("x").isNotNull())
     m = pairs.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("x"), 12, 8).alias("sx"),
-        _ssum2(F.col("y"), 12, 8).alias("sy"),
-        _ssum2(F.col("x") * F.col("y"), 12, 2).alias("sxy"),
-        _ssum2(F.col("x") * F.col("x"), 12, 2).alias("sxx"),
-        _ssum2(F.col("y") * F.col("y"), 12, 2).alias("syy"),
+        split_term_sum(F.col("x"), 12, 8).alias("sx"),
+        split_term_sum(F.col("y"), 12, 8).alias("sy"),
+        split_term_sum(F.col("x") * F.col("y"), 12, 2).alias("sxy"),
+        split_term_sum(F.col("x") * F.col("x"), 12, 2).alias("sxx"),
+        split_term_sum(F.col("y") * F.col("y"), 12, 2).alias("syy"),
     )
     cxx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     cyy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
@@ -1627,8 +1626,8 @@ def q_arch_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     m AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("r", 12, 8)} AS s,
-               {_dsum2("CASE WHEN r < 0 THEN r * r ELSE 0 END", 12, 8)}
+               {sql_split_term_sum("r", 12, 8)} AS s,
+               {sql_split_term_sum("CASE WHEN r < 0 THEN r * r ELSE 0 END", 12, 8)}
                    AS ssd,
                CAST(COUNT(*) FILTER (WHERE r < 0) AS BIGINT) AS n_down
         FROM rets GROUP BY symbol
@@ -1651,8 +1650,8 @@ def q_sortino(spark: SparkSession, sf_dir: str) -> DataFrame:
     rets = _returns(spark, sf_dir)
     m = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("r"), 12, 8).alias("s"),
-        _ssum2(
+        split_term_sum(F.col("r"), 12, 8).alias("s"),
+        split_term_sum(
             F.when(F.col("r") < 0, F.col("r") * F.col("r")).otherwise(
                 F.lit(0.0)
             ),
@@ -1753,9 +1752,9 @@ def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     m AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("x", 12, 8)} AS sx,
-               {_dsum2("y", 12, 8)} AS sy,
-               {_dsum2("x * y", 12, 8)} AS sxy
+               {sql_split_term_sum("x", 12, 8)} AS sx,
+               {sql_split_term_sum("y", 12, 8)} AS sy,
+               {sql_split_term_sum("x * y", 12, 8)} AS sxy
         FROM pairs GROUP BY symbol
     )
     SELECT symbol, n,
@@ -1793,9 +1792,9 @@ def q_roll_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("x").isNotNull())
     m = pairs.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("x"), 12, 8).alias("sx"),
-        _ssum2(F.col("y"), 12, 8).alias("sy"),
-        _ssum2(F.col("x") * F.col("y"), 12, 8).alias("sxy"),
+        split_term_sum(F.col("x"), 12, 8).alias("sx"),
+        split_term_sum(F.col("y"), 12, 8).alias("sy"),
+        split_term_sum(F.col("x") * F.col("y"), 12, 8).alias("sxy"),
     )
     cov = (F.col("sxy") / F.col("n")) - (F.col("sx") / F.col("n")) * (
         F.col("sy") / F.col("n")
@@ -1817,7 +1816,7 @@ def q_roll_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_DUCK_RETURNS},
     mkt AS (
         SELECT bar_ts,
-               {_dsum2("r", 12, 8)}
+               {sql_split_term_sum("r", 12, 8)}
                    / COUNT(*) AS rm
         FROM rets GROUP BY bar_ts
     ),
@@ -1830,10 +1829,10 @@ def q_roll_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     framed AS (
         SELECT symbol, bar_ts, rn,
                CAST(COUNT(*) OVER f AS BIGINT) AS k,
-               {_wdsum2("rm", "OVER f", 12, 8)} AS sx,
-               {_wdsum2("r", "OVER f", 12, 8)} AS sy,
-               {_wdsum2("r * rm", "OVER f", 12, 8)} AS sxy,
-               {_wdsum2("rm * rm", "OVER f", 12, 8)} AS sxx
+               {sql_split_term_sum("rm", 12, 8, "OVER f")} AS sx,
+               {sql_split_term_sum("r", 12, 8, "OVER f")} AS sy,
+               {sql_split_term_sum("r * rm", 12, 8, "OVER f")} AS sxy,
+               {sql_split_term_sum("rm * rm", 12, 8, "OVER f")} AS sxx
         FROM j
         WINDOW f AS (PARTITION BY symbol ORDER BY rn
                      ROWS BETWEEN 99 PRECEDING AND CURRENT ROW)
@@ -1858,7 +1857,7 @@ def q_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed by symbol."""
     rets = _returns(spark, sf_dir)
     mkt = rets.groupBy("bar_ts").agg(
-        (_ssum2(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("rm")
+        (split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("rm")
     )
     j = rets.join(F.broadcast(mkt), "bar_ts")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
@@ -1871,10 +1870,10 @@ def q_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bar_ts",
         "rn",
         F.count(F.lit(1)).over(f).cast("bigint").alias("k"),
-        _wssum2(F.col("rm"), f, 12, 8).alias("sx"),
-        _wssum2(F.col("r"), f, 12, 8).alias("sy"),
-        _wssum2(F.col("r") * F.col("rm"), f, 12, 8).alias("sxy"),
-        _wssum2(F.col("rm") * F.col("rm"), f, 12, 8).alias("sxx"),
+        split_term_sum(F.col("rm"), 12, 8, f).alias("sx"),
+        split_term_sum(F.col("r"), 12, 8, f).alias("sy"),
+        split_term_sum(F.col("r") * F.col("rm"), 12, 8, f).alias("sxy"),
+        split_term_sum(F.col("rm") * F.col("rm"), 12, 8, f).alias("sxx"),
     ).filter(F.col("rn") >= 100)
     den = F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx")
     num = F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")
@@ -1942,12 +1941,9 @@ def q_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 12dp-pre-rounded log ratios cast at their OWN scale (matching the
     # oracle's DECIMAL(38,12)): k = term*1e12 <= ~4.5e13 << 2^53, exact
-    term = portable_round(F.log(F.col("ar") / F.col("x_min")), 12).cast(
-        "decimal(38,12)"
-    )
     m = topk.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum(term).cast("double").alias("sum_log"),
+        term_sum(F.log(F.col("ar") / F.col("x_min")), 12).alias("sum_log"),
     )
     return m.select(
         "symbol",
@@ -2050,11 +2046,11 @@ def q_market_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     m AS (
         SELECT symbol, lag,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("x", 12, 8)} AS sx,
-               {_dsum2("y", 12, 8)} AS sy,
-               {_dsum2("x * y", 12, 8)} AS sxy,
-               {_dsum2("x * x", 12, 8)} AS sxx,
-               {_dsum2("y * y", 12, 8)} AS syy
+               {sql_split_term_sum("x", 12, 8)} AS sx,
+               {sql_split_term_sum("y", 12, 8)} AS sy,
+               {sql_split_term_sum("x * y", 12, 8)} AS sxy,
+               {sql_split_term_sum("x * x", 12, 8)} AS sxx,
+               {sql_split_term_sum("y * y", 12, 8)} AS syy
         FROM pairs GROUP BY symbol, lag
     )
     SELECT symbol, CAST(lag AS BIGINT) AS lag, n,
@@ -2111,11 +2107,11 @@ def q_acf_correlogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = pairs.groupBy("symbol", "lag").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("x"), 12, 8).alias("sx"),
-        _ssum2(F.col("y"), 12, 8).alias("sy"),
-        _ssum2(F.col("x") * F.col("y"), 12, 8).alias("sxy"),
-        _ssum2(F.col("x") * F.col("x"), 12, 8).alias("sxx"),
-        _ssum2(F.col("y") * F.col("y"), 12, 8).alias("syy"),
+        split_term_sum(F.col("x"), 12, 8).alias("sx"),
+        split_term_sum(F.col("y"), 12, 8).alias("sy"),
+        split_term_sum(F.col("x") * F.col("y"), 12, 8).alias("sxy"),
+        split_term_sum(F.col("x") * F.col("x"), 12, 8).alias("sxx"),
+        split_term_sum(F.col("y") * F.col("y"), 12, 8).alias("syy"),
     )
     cxx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     cyy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
@@ -2149,23 +2145,23 @@ def q_acf_correlogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT m1.symbol, m1.rho AS rho1, m2.rho AS rho2, m1.n
         FROM (
             SELECT symbol, CAST(COUNT(*) AS BIGINT) AS n,
-                   (CAST(floor(CAST(((COUNT(*) * {_dsum2("x * y", 12, 8)}
-                          - {_dsum2("x", 12, 8)}
-                            * {_dsum2("y", 12, 8)})
-                         / (sqrt(COUNT(*) * {_dsum2("x * x", 12, 8)}
-                                 - pow({_dsum2("x", 12, 8)}, 2))
-                            * sqrt(COUNT(*) * {_dsum2("y * y", 12, 8)}
-                                   - pow({_dsum2("y", 12, 8)}, 2)))) AS DOUBLE) * 10000000000.0 + 0.5) AS DOUBLE) / 10000000000.0) AS rho
+                   (CAST(floor(CAST(((COUNT(*) * {sql_split_term_sum("x * y", 12, 8)}
+                          - {sql_split_term_sum("x", 12, 8)}
+                            * {sql_split_term_sum("y", 12, 8)})
+                         / (sqrt(COUNT(*) * {sql_split_term_sum("x * x", 12, 8)}
+                                 - pow({sql_split_term_sum("x", 12, 8)}, 2))
+                            * sqrt(COUNT(*) * {sql_split_term_sum("y * y", 12, 8)}
+                                   - pow({sql_split_term_sum("y", 12, 8)}, 2)))) AS DOUBLE) * 10000000000.0 + 0.5) AS DOUBLE) / 10000000000.0) AS rho
             FROM p1 GROUP BY symbol) m1
         JOIN (
             SELECT symbol,
-                   (CAST(floor(CAST(((COUNT(*) * {_dsum2("x * y", 12, 8)}
-                          - {_dsum2("x", 12, 8)}
-                            * {_dsum2("y", 12, 8)})
-                         / (sqrt(COUNT(*) * {_dsum2("x * x", 12, 8)}
-                                 - pow({_dsum2("x", 12, 8)}, 2))
-                            * sqrt(COUNT(*) * {_dsum2("y * y", 12, 8)}
-                                   - pow({_dsum2("y", 12, 8)}, 2)))) AS DOUBLE) * 10000000000.0 + 0.5) AS DOUBLE) / 10000000000.0) AS rho
+                   (CAST(floor(CAST(((COUNT(*) * {sql_split_term_sum("x * y", 12, 8)}
+                          - {sql_split_term_sum("x", 12, 8)}
+                            * {sql_split_term_sum("y", 12, 8)})
+                         / (sqrt(COUNT(*) * {sql_split_term_sum("x * x", 12, 8)}
+                                 - pow({sql_split_term_sum("x", 12, 8)}, 2))
+                            * sqrt(COUNT(*) * {sql_split_term_sum("y * y", 12, 8)}
+                                   - pow({sql_split_term_sum("y", 12, 8)}, 2)))) AS DOUBLE) * 10000000000.0 + 0.5) AS DOUBLE) / 10000000000.0) AS rho
             FROM p2 GROUP BY symbol) m2
           ON m2.symbol = m1.symbol
     )
@@ -2198,11 +2194,11 @@ def q_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).filter(F.col("x").isNotNull())
         m = pairs.groupBy("symbol").agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
-            _ssum2(F.col("x"), 12, 8).alias("sx"),
-            _ssum2(F.col("y"), 12, 8).alias("sy"),
-            _ssum2(F.col("x") * F.col("y"), 12, 8).alias("sxy"),
-            _ssum2(F.col("x") * F.col("x"), 12, 8).alias("sxx"),
-            _ssum2(F.col("y") * F.col("y"), 12, 8).alias("syy"),
+            split_term_sum(F.col("x"), 12, 8).alias("sx"),
+            split_term_sum(F.col("y"), 12, 8).alias("sy"),
+            split_term_sum(F.col("x") * F.col("y"), 12, 8).alias("sxy"),
+            split_term_sum(F.col("x") * F.col("x"), 12, 8).alias("sxx"),
+            split_term_sum(F.col("y") * F.col("y"), 12, 8).alias("syy"),
         )
         num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
         den = F.sqrt(

@@ -22,12 +22,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
-from stockmarketdata_dwb_etl_spark.queries.stats_q import (
-    _dsum2,
-    _ssum2,
-    _wdsum2,
-    _wssum2,
+from stockmarketdata_dwb_etl_spark.functions.exact import (
+    portable_round,
+    split_term_sum,
+    sql_split_term_sum,
+    term_sum,
 )
 from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
@@ -88,14 +87,14 @@ def _market(rets: DataFrame) -> DataFrame:
     """Equal-weight market return per bar (decimal sum / count) — the
     same benchmark construction as q_beta_capm."""
     return rets.groupBy("bar_ts").agg(
-        (_ssum2(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("rm")
+        (split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("rm")
     )
 
 
 _DUCK_MKT = f"""
     mkt AS (
         SELECT bar_ts,
-               {_dsum2("r", 12, 8)}
+               {sql_split_term_sum("r", 12, 8)}
                    / COUNT(*) AS rm
         FROM rets GROUP BY bar_ts
     )
@@ -103,7 +102,7 @@ _DUCK_MKT = f"""
 
 
 # shared fragment for q_ulcer_index: the squared-drawdown split sum
-DD_SUM = _dsum2("dd_pct * dd_pct", 12, 8)
+DD_SUM = sql_split_term_sum("dd_pct * dd_pct", 12, 8)
 
 
 @query(
@@ -166,7 +165,7 @@ def q_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = dd.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_bars"),
         F.min("dd_pct").alias("__mindd"),
-        _ssum2(F.col("dd_pct") * F.col("dd_pct"), 12, 8).alias("__ssdd"),
+        split_term_sum(F.col("dd_pct") * F.col("dd_pct"), 12, 8).alias("__ssdd"),
         F.max_by("close", F.col("bar_ts")).alias("__last"),
         F.min_by("close", F.col("bar_ts")).alias("__first"),
     )
@@ -196,8 +195,8 @@ def q_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("ra", 12, 8)} AS s,
-               {_dsum2("ra * ra", 12, 8)} AS ss
+               {sql_split_term_sum("ra", 12, 8)} AS s,
+               {sql_split_term_sum("ra * ra", 12, 8)} AS ss
         FROM act GROUP BY symbol
     )
     SELECT symbol, n,
@@ -229,8 +228,8 @@ def q_information_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = act.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("ra"), 12, 8).alias("s"),
-        _ssum2(F.col("ra") * F.col("ra"), 12, 8).alias("ss"),
+        split_term_sum(F.col("ra"), 12, 8).alias("s"),
+        split_term_sum(F.col("ra") * F.col("ra"), 12, 8).alias("ss"),
     )
     mean = F.col("s") / F.col("n")
     var = F.col("ss") / F.col("n") - mean * mean
@@ -260,10 +259,10 @@ def q_information_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT symbol,
                CAST(SUM(CASE WHEN rm > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_up,
                CAST(SUM(CASE WHEN rm < 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_down,
-               {_dsum2("CASE WHEN rm > 0 THEN r END", 12, 8)} AS sr_up,
-               {_dsum2("CASE WHEN rm > 0 THEN rm END", 12, 8)} AS sm_up,
-               {_dsum2("CASE WHEN rm < 0 THEN r END", 12, 8)} AS sr_dn,
-               {_dsum2("CASE WHEN rm < 0 THEN rm END", 12, 8)} AS sm_dn
+               {sql_split_term_sum("CASE WHEN rm > 0 THEN r END", 12, 8)} AS sr_up,
+               {sql_split_term_sum("CASE WHEN rm > 0 THEN rm END", 12, 8)} AS sm_up,
+               {sql_split_term_sum("CASE WHEN rm < 0 THEN r END", 12, 8)} AS sr_dn,
+               {sql_split_term_sum("CASE WHEN rm < 0 THEN rm END", 12, 8)} AS sm_dn
         FROM j GROUP BY symbol
     )
     SELECT symbol, n_up, n_down,
@@ -293,10 +292,10 @@ def q_updown_capture(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = j.groupBy("symbol").agg(
         F.sum(F.when(up, 1).otherwise(0)).cast("bigint").alias("n_up"),
         F.sum(F.when(dn, 1).otherwise(0)).cast("bigint").alias("n_down"),
-        _ssum2(F.when(up, F.col("r")), 12, 8).alias("sr_up"),
-        _ssum2(F.when(up, F.col("rm")), 12, 8).alias("sm_up"),
-        _ssum2(F.when(dn, F.col("r")), 12, 8).alias("sr_dn"),
-        _ssum2(F.when(dn, F.col("rm")), 12, 8).alias("sm_dn"),
+        split_term_sum(F.when(up, F.col("r")), 12, 8).alias("sr_up"),
+        split_term_sum(F.when(up, F.col("rm")), 12, 8).alias("sm_up"),
+        split_term_sum(F.when(dn, F.col("r")), 12, 8).alias("sr_dn"),
+        split_term_sum(F.when(dn, F.col("rm")), 12, 8).alias("sm_dn"),
     )
     upcap = (F.col("sr_up") / F.col("n_up")) / (F.col("sm_up") / F.col("n_up"))
     dncap = (F.col("sr_dn") / F.col("n_down")) / (
@@ -483,20 +482,19 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
                row_number() OVER (PARTITION BY s.symbol, sc.scale,
                    CAST(floor((s.rn - 1) * 1.0 / sc.scale) AS BIGINT)
                    ORDER BY s.rn) AS j,
-               {_wdsum2("s.r", '''OVER (
+               {sql_split_term_sum("s.r", 12, 8, '''OVER (
                    PARTITION BY s.symbol, sc.scale,
                    CAST(floor((s.rn - 1) * 1.0 / sc.scale) AS BIGINT)
                    ORDER BY s.rn
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)''',
-                   12, 8)} AS cum
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)''')} AS cum
         FROM seq s CROSS JOIN (
             SELECT unnest([16, 32, 64]) AS scale) sc
     ),
     bstats AS (
         SELECT symbol, scale, blk,
                CAST(COUNT(*) AS BIGINT) AS nb,
-               {_dsum2("r", 12, 8)} AS s,
-               {_dsum2("r * r", 12, 8)} AS ss
+               {sql_split_term_sum("r", 12, 8)} AS s,
+               {sql_split_term_sum("r * r", 12, 8)} AS ss
         FROM blocks GROUP BY 1, 2, 3
     ),
     dev AS (
@@ -518,17 +516,17 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean_rs AS (
         SELECT symbol, scale,
                CAST(COUNT(*) AS BIGINT) AS n_blocks,
-               {_dsum2("rng / sd", 12, 8)}
+               {sql_split_term_sum("rng / sd", 12, 8)}
                    / COUNT(*) AS avg_rs
         FROM rs WHERE sd > 0 GROUP BY symbol, scale
     ),
     pts AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS k,
-               {_dsum2("ln(scale * 1.0)", 12, 8)} AS sx,
-               {_dsum2("ln(avg_rs)", 12, 8)} AS sy,
-               {_dsum2("ln(scale * 1.0) * ln(avg_rs)", 12, 8)} AS sxy,
-               {_dsum2("ln(scale * 1.0) * ln(scale * 1.0)", 12, 8)} AS sxx
+               {sql_split_term_sum("ln(scale * 1.0)", 12, 8)} AS sx,
+               {sql_split_term_sum("ln(avg_rs)", 12, 8)} AS sy,
+               {sql_split_term_sum("ln(scale * 1.0) * ln(avg_rs)", 12, 8)} AS sxy,
+               {sql_split_term_sum("ln(scale * 1.0) * ln(scale * 1.0)", 12, 8)} AS sxx
         FROM mean_rs GROUP BY symbol
     )
     SELECT symbol, k AS n_scales,
@@ -567,18 +565,18 @@ def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
             "scale",
             "blk",
             F.row_number().over(wb).alias("j"),
-            _wssum2(
+            split_term_sum(
                 F.col("r"),
-                wb.rowsBetween(Window.unboundedPreceding, Window.currentRow),
                 12,
                 8,
+                wb.rowsBetween(Window.unboundedPreceding, Window.currentRow),
             ).alias("cum"),
         )
     )
     bstats = blocks.groupBy("symbol", "scale", "blk").agg(
         F.count(F.lit(1)).cast("bigint").alias("nb"),
-        _ssum2(F.col("r"), 12, 8).alias("s"),
-        _ssum2(F.col("r") * F.col("r"), 12, 8).alias("ss"),
+        split_term_sum(F.col("r"), 12, 8).alias("s"),
+        split_term_sum(F.col("r") * F.col("r"), 12, 8).alias("ss"),
     )
     dev = blocks.join(
         bstats.filter(F.col("nb") == F.col("scale")),
@@ -610,7 +608,7 @@ def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_blocks"),
             (
-                _ssum2(F.col("rng") / F.col("sd"), 12, 8)
+                split_term_sum(F.col("rng") / F.col("sd"), 12, 8)
                 / F.count(F.lit(1))
             ).alias("avg_rs"),
         )
@@ -619,10 +617,10 @@ def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     ly = F.log(F.col("avg_rs"))
     pts = mean_rs.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
-        _ssum2(lx, 12, 8).alias("sx"),
-        _ssum2(ly, 12, 8).alias("sy"),
-        _ssum2(lx * ly, 12, 8).alias("sxy"),
-        _ssum2(lx * lx, 12, 8).alias("sxx"),
+        split_term_sum(lx, 12, 8).alias("sx"),
+        split_term_sum(ly, 12, 8).alias("sy"),
+        split_term_sum(lx * ly, 12, 8).alias("sxy"),
+        split_term_sum(lx * lx, 12, 8).alias("sxx"),
     )
     slope = (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -957,8 +955,7 @@ def q_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_patterns"),
         # 12dp-pre-rounded entropy terms cast at their OWN scale
         # (matching the oracle's DECIMAL(38,12)): |term| < 1 -> exact
-        F.sum(portable_round(-p * F.log(p), 12).cast("decimal(38,12)"))
-        .cast("double")
+        term_sum(-p * F.log(p), 12)
         .alias("h"),
     )
     return ent.select(
@@ -1059,9 +1056,9 @@ def q_calmar(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(COUNT(*) AS BIGINT) AS n_rets,
                CAST(COUNT(*) FILTER (WHERE r > 0) AS BIGINT) AS n_up,
                CAST(COUNT(*) FILTER (WHERE r < 0) AS BIGINT) AS n_down,
-               {_dsum2("CASE WHEN r > 0 THEN r ELSE 0 END", 12, 8)}
+               {sql_split_term_sum("CASE WHEN r > 0 THEN r ELSE 0 END", 12, 8)}
                    AS gains,
-               {_dsum2("CASE WHEN r < 0 THEN -r ELSE 0 END", 12, 8)}
+               {sql_split_term_sum("CASE WHEN r < 0 THEN -r ELSE 0 END", 12, 8)}
                    AS losses
         FROM rets GROUP BY symbol
     )
@@ -1087,10 +1084,10 @@ def q_omega_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_rets"),
         F.count(F.when(F.col("r") > 0, 1)).cast("bigint").alias("n_up"),
         F.count(F.when(F.col("r") < 0, 1)).cast("bigint").alias("n_down"),
-        _ssum2(
+        split_term_sum(
             F.when(F.col("r") > 0, F.col("r")).otherwise(F.lit(0.0)), 12, 8
         ).alias("gains"),
-        _ssum2(
+        split_term_sum(
             F.when(F.col("r") < 0, -F.col("r")).otherwise(F.lit(0.0)), 12, 8
         ).alias("losses"),
     )

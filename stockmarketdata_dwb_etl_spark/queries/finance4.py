@@ -28,17 +28,13 @@ from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
+    split_term_sum,
     sql_portable_round,
+    sql_split_term_sum,
 )
 from stockmarketdata_dwb_etl_spark.queries.finance2 import (
     _duck_ohlcv,
     _ohlcv_bars,
-)
-from stockmarketdata_dwb_etl_spark.queries.stats_q import (
-    _dsum2,
-    _ssum2,
-    _wdsum2,
-    _wssum2,
 )
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -59,14 +55,6 @@ _DUCK_NBARS = f"""
         FROM bars
     )
 """
-
-
-def _pr6(expr: str) -> str:
-    """DuckDB floor-form portable round at 6 dp."""
-    return (
-        f"CAST((CAST(floor(CAST(({expr}) AS DOUBLE) * 1000000.0 + 0.5)"
-        f" AS DOUBLE) / 1000000.0) AS DOUBLE)"
-    )
 
 
 def _nbars(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -97,8 +85,8 @@ def _rows_window(n: int):
                      ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
     )
     SELECT symbol, bar_ts, upper, lower,
-           {_pr6("(upper + lower) / 2.0")} AS mid,
-           {_pr6("(upper - lower) / ((upper + lower) / 2.0) * 100.0")}
+           {sql_portable_round("(upper + lower) / 2.0", 6)} AS mid,
+           {sql_portable_round("(upper - lower) / ((upper + lower) / 2.0) * 100.0", 6)}
                AS width_pct,
            CAST(CASE WHEN close >= upper THEN 1 ELSE 0 END AS INTEGER)
                AS at_upper
@@ -155,7 +143,7 @@ def q_donchian(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT symbol, bar_ts,
            CASE WHEN hh = ll THEN NULL
-                ELSE {_pr6("-100.0 * (hh - close) / (hh - ll)")} END
+                ELSE {sql_portable_round("-100.0 * (hh - close) / (hh - ll)", 6)} END
                AS williams_r
     FROM ch WHERE rn >= 14 ORDER BY symbol, bar_ts
     """,
@@ -205,7 +193,7 @@ def q_williams_r(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     fr AS (
         SELECT symbol, bar_ts, tp, rn,
-               {_wdsum2("tp", "OVER w", 12, 8)}
+               {sql_split_term_sum("tp", 12, 8, "OVER w")}
                    / 20.0 AS sma,
                list(tp) OVER w AS arr
         FROM tpb
@@ -221,10 +209,10 @@ def q_williams_r(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM fr
     )
     SELECT symbol, bar_ts,
-           {_pr6("sma")} AS sma_tp,
-           {_pr6("mad")} AS mean_dev,
+           {sql_portable_round("sma", 6)} AS sma_tp,
+           {sql_portable_round("mad", 6)} AS mean_dev,
            CASE WHEN mad = 0 THEN NULL
-                ELSE {_pr6("(tp - sma) / (0.015 * mad)")} END AS cci
+                ELSE {sql_portable_round("(tp - sma) / (0.015 * mad)", 6)} END AS cci
     FROM md WHERE rn >= 20 ORDER BY symbol, bar_ts
     """,
 )
@@ -249,7 +237,7 @@ def q_cci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bar_ts",
         "tp",
         "rn",
-        (_wssum2(F.col("tp"), w, 12, 8) / 20.0).alias("sma"),
+        (split_term_sum(F.col("tp"), 12, 8, w) / 20.0).alias("sma"),
         F.collect_list("tp").over(w).alias("arr"),
     )
     # fold terms 10dp-pre-round then cast at their OWN scale:
@@ -308,23 +296,23 @@ def q_cci(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     sums AS (
         SELECT symbol, bar_ts, rn,
-               {_wdsum2(
+               {sql_split_term_sum(
                    "CASE WHEN ptp IS NOT NULL AND tp > ptp"
-                   " THEN tp * volume ELSE 0 END", "OVER w", 12, 8)}
+                   " THEN tp * volume ELSE 0 END", 12, 8, "OVER w")}
                    AS pos_mf,
-               {_wdsum2(
+               {sql_split_term_sum(
                    "CASE WHEN ptp IS NOT NULL AND tp < ptp"
-                   " THEN tp * volume ELSE 0 END", "OVER w", 12, 8)}
+                   " THEN tp * volume ELSE 0 END", 12, 8, "OVER w")}
                    AS neg_mf
         FROM fl
         WINDOW w AS (PARTITION BY symbol ORDER BY bar_ts
                      ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
     )
     SELECT symbol, bar_ts,
-           {_pr6("pos_mf")} AS pos_mf,
-           {_pr6("neg_mf")} AS neg_mf,
+           {sql_portable_round("pos_mf", 6)} AS pos_mf,
+           {sql_portable_round("neg_mf", 6)} AS neg_mf,
            CASE WHEN pos_mf + neg_mf = 0 THEN NULL
-                ELSE {_pr6("100.0 * pos_mf / (pos_mf + neg_mf)")} END
+                ELSE {sql_portable_round("100.0 * pos_mf / (pos_mf + neg_mf)", 6)} END
                AS mfi
     FROM sums WHERE rn >= 15 ORDER BY symbol, bar_ts
     """,
@@ -352,19 +340,19 @@ def q_mfi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "symbol",
         "bar_ts",
         "rn",
-        _wssum2(
+        split_term_sum(
             F.when(F.col("ptp").isNotNull() & (F.col("tp") > F.col("ptp")), mf)
             .otherwise(zero),
-            w,
             12,
             8,
+            w,
         ).alias("pos_mf"),
-        _wssum2(
+        split_term_sum(
             F.when(F.col("ptp").isNotNull() & (F.col("tp") < F.col("ptp")), mf)
             .otherwise(zero),
-            w,
             12,
             8,
+            w,
         ).alias("neg_mf"),
     )
     denom = F.col("pos_mf") + F.col("neg_mf")
@@ -396,7 +384,7 @@ def q_mfi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     sums AS (
         SELECT symbol, bar_ts, rn,
-               {_wdsum2("mfv", "OVER w", 12, 8)}
+               {sql_split_term_sum("mfv", 12, 8, "OVER w")}
                    AS s_mfv,
                CAST(sum(volume) OVER w AS BIGINT) AS s_vol
         FROM mfv
@@ -404,7 +392,7 @@ def q_mfi(spark: SparkSession, sf_dir: str) -> DataFrame:
                      ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
     )
     SELECT symbol, bar_ts, s_vol,
-           {_pr6("s_mfv / s_vol")} AS cmf
+           {sql_portable_round("s_mfv / s_vol", 6)} AS cmf
     FROM sums WHERE rn >= 20 ORDER BY symbol, bar_ts
     """,
 )
@@ -433,7 +421,7 @@ def q_cmf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "symbol",
         "bar_ts",
         "rn",
-        _wssum2(F.col("mfv"), w, 12, 8).alias("s_mfv"),
+        split_term_sum(F.col("mfv"), 12, 8, w).alias("s_mfv"),
         F.sum("volume").over(w).cast("bigint").alias("s_vol"),
     )
     return (
@@ -475,10 +463,10 @@ def q_cmf(spark: SparkSession, sf_dir: str) -> DataFrame:
         WINDOW ws AS (PARTITION BY symbol ORDER BY bar_ts)
     )
     SELECT symbol, bar_ts,
-           {_pr6("conv")} AS conversion,
-           {_pr6("base")} AS base,
-           {_pr6("span_a")} AS span_a,
-           {_pr6("span_b")} AS span_b,
+           {sql_portable_round("conv", 6)} AS conversion,
+           {sql_portable_round("base", 6)} AS base,
+           {sql_portable_round("span_a", 6)} AS span_a,
+           {sql_portable_round("span_b", 6)} AS span_b,
            chikou,
            CAST(CASE WHEN close > greatest(span_a, span_b) THEN 1
                      WHEN close < least(span_a, span_b) THEN -1
@@ -568,11 +556,11 @@ def q_ichimoku(spark: SparkSession, sf_dir: str) -> DataFrame:
         WINDOW ws AS (PARTITION BY symbol ORDER BY bar_ts)
     )
     SELECT symbol, CAST(bar_ts AS DATE) AS day,
-           {_pr6("(ph + pl + pc) / 3.0")} AS pivot,
-           {_pr6("2.0 * (ph + pl + pc) / 3.0 - pl")} AS r1,
-           {_pr6("2.0 * (ph + pl + pc) / 3.0 - ph")} AS s1,
-           {_pr6("(ph + pl + pc) / 3.0 + (ph - pl)")} AS r2,
-           {_pr6("(ph + pl + pc) / 3.0 - (ph - pl)")} AS s2,
+           {sql_portable_round("(ph + pl + pc) / 3.0", 6)} AS pivot,
+           {sql_portable_round("2.0 * (ph + pl + pc) / 3.0 - pl", 6)} AS r1,
+           {sql_portable_round("2.0 * (ph + pl + pc) / 3.0 - ph", 6)} AS s1,
+           {sql_portable_round("(ph + pl + pc) / 3.0 + (ph - pl)", 6)} AS r2,
+           {sql_portable_round("(ph + pl + pc) / 3.0 - (ph - pl)", 6)} AS s2,
            CAST(CASE WHEN close > (ph + pl + pc) / 3.0 THEN 1
                 ELSE 0 END AS INTEGER) AS above_pivot
     FROM pv WHERE ph IS NOT NULL ORDER BY symbol, day
@@ -627,9 +615,9 @@ def q_pivot_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     ch AS (
         SELECT symbol, bar_ts, close, rn,
-               {_wdsum2("tp", "OVER w20", 12, 8)}
+               {sql_split_term_sum("tp", 12, 8, "OVER w20")}
                    / 20.0 AS center,
-               {_wdsum2("rng", "OVER w10", 12, 8)}
+               {sql_split_term_sum("rng", 12, 8, "OVER w10")}
                    / 10.0 AS band
         FROM tpb
         WINDOW w20 AS (PARTITION BY symbol ORDER BY bar_ts
@@ -638,11 +626,11 @@ def q_pivot_points(spark: SparkSession, sf_dir: str) -> DataFrame:
                        ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
     )
     SELECT symbol, bar_ts,
-           {_pr6("center")} AS center,
-           {_pr6("center + band")} AS upper,
-           {_pr6("center - band")} AS lower,
+           {sql_portable_round("center", 6)} AS center,
+           {sql_portable_round("center + band", 6)} AS upper,
+           {sql_portable_round("center - band", 6)} AS lower,
            CASE WHEN band = 0 THEN NULL
-                ELSE {_pr6("(close - (center - band)) / (2.0 * band)")} END
+                ELSE {sql_portable_round("(close - (center - band)) / (2.0 * band)", 6)} END
                AS channel_pos
     FROM ch WHERE rn >= 20 ORDER BY symbol, bar_ts
     """,
@@ -666,8 +654,8 @@ def q_keltner(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bar_ts",
         "close",
         "rn",
-        (_wssum2(F.col("tp"), _rows_window(20), 12, 8) / 20.0).alias("center"),
-        (_wssum2(F.col("rng"), _rows_window(10), 12, 8) / 10.0).alias("band"),
+        (split_term_sum(F.col("tp"), 12, 8, _rows_window(20)) / 20.0).alias("center"),
+        (split_term_sum(F.col("rng"), 12, 8, _rows_window(10)) / 10.0).alias("band"),
     )
     return (
         ch.filter(F.col("rn") >= 20)
@@ -710,9 +698,9 @@ def q_keltner(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM mx
     )
     SELECT symbol, bar_ts,
-           {_pr6("aroon_up")} AS aroon_up,
-           {_pr6("aroon_down")} AS aroon_down,
-           {_pr6("aroon_up - aroon_down")} AS aroon_osc
+           {sql_portable_round("aroon_up", 6)} AS aroon_up,
+           {sql_portable_round("aroon_down", 6)} AS aroon_down,
+           {sql_portable_round("aroon_up - aroon_down", 6)} AS aroon_osc
     FROM ar WHERE rn >= 25 ORDER BY symbol, bar_ts
     """,
 )
@@ -798,9 +786,9 @@ def q_aroon(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM r3
     )
     SELECT nb.symbol, nb.bar_ts,
-           {_pr6("tr.e")} AS ema3,
+           {sql_portable_round("tr.e", 6)} AS ema3,
            CASE WHEN tr.pe IS NULL OR tr.pe = 0 THEN NULL
-                ELSE {_pr6("100.0 * (tr.e / tr.pe - 1.0)")} END AS trix
+                ELSE {sql_portable_round("100.0 * (tr.e / tr.pe - 1.0)", 6)} END AS trix
     FROM nb JOIN tr ON tr.symbol = nb.symbol AND tr.rn = nb.rn
     ORDER BY nb.symbol, nb.bar_ts
     """,
@@ -880,10 +868,10 @@ def q_trix(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM rec WHERE rn < n
     )
     SELECT nb.symbol, nb.bar_ts,
-           {_pr6("r.ho")} AS ha_open,
-           {_pr6("nb.hc")} AS ha_close,
-           {_pr6("greatest(nb.high, r.ho, nb.hc)")} AS ha_high,
-           {_pr6("least(nb.low, r.ho, nb.hc)")} AS ha_low,
+           {sql_portable_round("r.ho", 6)} AS ha_open,
+           {sql_portable_round("nb.hc", 6)} AS ha_close,
+           {sql_portable_round("greatest(nb.high, r.ho, nb.hc)", 6)} AS ha_high,
+           {sql_portable_round("least(nb.low, r.ho, nb.hc)", 6)} AS ha_low,
            CAST(CASE WHEN nb.hc > r.ho THEN 1 ELSE 0 END AS INTEGER)
                AS bullish
     FROM nb JOIN rec r ON r.symbol = nb.symbol AND r.rn = nb.rn
@@ -973,8 +961,8 @@ def q_heikin_ashi(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM rec WHERE rn < n
     )
     SELECT nb.symbol, nb.bar_ts, nb.close,
-           {_pr6("r.x")} AS kalman,
-           {_pr6("nb.close - r.x")} AS residual
+           {sql_portable_round("r.x", 6)} AS kalman,
+           {sql_portable_round("nb.close - r.x", 6)} AS residual
     FROM nb JOIN rec r ON r.symbol = nb.symbol AND r.rn = nb.rn
     ORDER BY nb.symbol, nb.bar_ts
     """,
@@ -1049,7 +1037,7 @@ _DUCK_RETS_MKT = f"""
     ),
     mkt AS (
         SELECT bar_ts,
-               {_dsum2("r", 12, 8)}
+               {sql_split_term_sum("r", 12, 8)}
                    / COUNT(*) AS rm
         FROM rets GROUP BY bar_ts
     )
@@ -1075,7 +1063,7 @@ def _rets_mkt(spark: SparkSession, sf_dir: str):
         (F.col("close") / F.lag("close").over(w) - F.lit(1.0)).alias("r"),
     ).filter(F.col("r").isNotNull())
     mkt = rets.groupBy("bar_ts").agg(
-        (_ssum2(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("rm")
+        (split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("rm")
     )
     return rets, mkt
 
@@ -1091,10 +1079,10 @@ def _rets_mkt(spark: SparkSession, sf_dir: str):
     mo AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("r", 12, 8)} AS sr,
-               {_dsum2("rm", 12, 8)} AS sm,
-               {_dsum2("r * rm", 12, 8)} AS srm,
-               {_dsum2("rm * rm", 12, 8)} AS smm
+               {sql_split_term_sum("r", 12, 8)} AS sr,
+               {sql_split_term_sum("rm", 12, 8)} AS sm,
+               {sql_split_term_sum("r * rm", 12, 8)} AS srm,
+               {sql_split_term_sum("rm * rm", 12, 8)} AS smm
         FROM j GROUP BY 1
     ),
     b AS (
@@ -1104,9 +1092,9 @@ def _rets_mkt(spark: SparkSession, sf_dir: str):
         FROM mo
     )
     SELECT symbol, n,
-           {_pr6("beta")} AS beta,
+           {sql_portable_round("beta", 6)} AS beta,
            CASE WHEN mvar = 0 OR abs(beta) < 1e-9 THEN NULL
-                ELSE {_pr6("(sr / n) * 8760.0 / beta")} END AS treynor_ann
+                ELSE {sql_portable_round("(sr / n) * 8760.0 / beta", 6)} END AS treynor_ann
     FROM b ORDER BY symbol
     """,
 )
@@ -1123,10 +1111,10 @@ def q_treynor(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = rets.join(F.broadcast(mkt), "bar_ts").select("symbol", "r", "rm")
     mo = j.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("r"), 12, 8).alias("sr"),
-        _ssum2(F.col("rm"), 12, 8).alias("sm"),
-        _ssum2(F.col("r") * F.col("rm"), 12, 8).alias("srm"),
-        _ssum2(F.col("rm") * F.col("rm"), 12, 8).alias("smm"),
+        split_term_sum(F.col("r"), 12, 8).alias("sr"),
+        split_term_sum(F.col("rm"), 12, 8).alias("sm"),
+        split_term_sum(F.col("r") * F.col("rm"), 12, 8).alias("srm"),
+        split_term_sum(F.col("rm") * F.col("rm"), 12, 8).alias("smm"),
     )
     mvar = F.col("n") * F.col("smm") - F.col("sm") * F.col("sm")
     beta = (F.col("n") * F.col("srm") - F.col("sr") * F.col("sm")) / mvar
@@ -1157,29 +1145,29 @@ def q_treynor(spark: SparkSession, sf_dir: str) -> DataFrame:
     mo AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("r", 12, 8)} AS sr,
-               {_dsum2("r * r", 12, 8)} AS srr,
+               {sql_split_term_sum("r", 12, 8)} AS sr,
+               {sql_split_term_sum("r * r", 12, 8)} AS srr,
                CAST(SUM(CASE WHEN r > 0 THEN 1 ELSE 0 END) AS BIGINT)
                    AS n_up,
-               {_dsum2("CASE WHEN r > 0 THEN r ELSE 0 END", 12, 8)}
+               {sql_split_term_sum("CASE WHEN r > 0 THEN r ELSE 0 END", 12, 8)}
                    AS s_win,
                CAST(SUM(CASE WHEN r < 0 THEN 1 ELSE 0 END) AS BIGINT)
                    AS n_dn,
-               {_dsum2("CASE WHEN r < 0 THEN -r ELSE 0 END", 12, 8)}
+               {sql_split_term_sum("CASE WHEN r < 0 THEN -r ELSE 0 END", 12, 8)}
                    AS s_loss
         FROM rets GROUP BY symbol
     )
     SELECT symbol, n, n_up, n_dn,
            CASE WHEN srr / n - (sr / n) * (sr / n) <= 0 THEN NULL
-                ELSE {_pr6(
-                    "(sr / n) / (srr / n - (sr / n) * (sr / n))")} END
+                ELSE {sql_portable_round(
+                    "(sr / n) / (srr / n - (sr / n) * (sr / n))", 6)} END
                AS kelly_continuous,
            CASE WHEN n_up = 0 OR n_dn = 0 OR s_loss = 0 OR s_win = 0
                      OR n = 0 THEN NULL
-                ELSE {_pr6(
+                ELSE {sql_portable_round(
                     "CAST(n_up AS DOUBLE) / n"
                     " - (1.0 - CAST(n_up AS DOUBLE) / n)"
-                    "   / ((s_win / n_up) / (s_loss / n_dn))")} END
+                    "   / ((s_win / n_up) / (s_loss / n_dn))", 6)} END
                AS kelly_binary
     FROM mo ORDER BY symbol
     """,
@@ -1197,18 +1185,18 @@ def q_kelly_criterion(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero = F.lit(0.0)
     mo = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("r"), 12, 8).alias("sr"),
-        _ssum2(F.col("r") * F.col("r"), 12, 8).alias("srr"),
+        split_term_sum(F.col("r"), 12, 8).alias("sr"),
+        split_term_sum(F.col("r") * F.col("r"), 12, 8).alias("srr"),
         F.sum(F.when(F.col("r") > 0, 1).otherwise(0))
         .cast("bigint")
         .alias("n_up"),
-        _ssum2(
+        split_term_sum(
             F.when(F.col("r") > 0, F.col("r")).otherwise(zero), 12, 8
         ).alias("s_win"),
         F.sum(F.when(F.col("r") < 0, 1).otherwise(0))
         .cast("bigint")
         .alias("n_dn"),
-        _ssum2(
+        split_term_sum(
             F.when(F.col("r") < 0, -F.col("r")).otherwise(zero), 12, 8
         ).alias("s_loss"),
     )

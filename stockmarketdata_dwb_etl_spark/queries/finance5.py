@@ -21,19 +21,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
-from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
-from stockmarketdata_dwb_etl_spark.queries.stats_q import (
-    _dsum2,
-    _ssum2,
-    _wdsum2,
-    _wssum2,
+from stockmarketdata_dwb_etl_spark.functions.exact import (
+    portable_round,
+    split_term_sum,
+    sql_portable_round,
+    sql_split_term_sum,
+    term,
 )
+from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
 from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # Cross-row double sums route through the two-bucket split sum
-# (stats_q._ssum2/_dsum2, 2^53 rule in tests/test_split_sum.py). Hourly
+# (functions/exact.py::split_term_sum, 2^53 rule in its module docstring). Hourly
 # LOG returns are bounded by ln(close ratios) (|r| <= ~11 at the fixture
 # price range) and log prices by ln(560) ~ 6.4, but daily session
 # returns close/open-1 can spike like the simple-return family, so
@@ -57,14 +57,6 @@ _DUCK_LOGRETS = f"""
             AND r IS NOT NULL
     )
 """
-
-
-def _pr(expr: str, n: int) -> str:
-    scale = float(10**n)
-    return (
-        f"CAST((CAST(floor(CAST(({expr}) AS DOUBLE) * {scale} + 0.5)"
-        f" AS DOUBLE) / {scale}) AS DOUBLE)"
-    )
 
 
 def _logrets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -99,7 +91,7 @@ def _logrets(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_DUCK_LOGRETS},
     nr AS (
         SELECT symbol, bar_ts, r,
-               {_wdsum2("r", "OVER w4", 12, 8)} AS rq,
+               {sql_split_term_sum("r", 12, 8, "OVER w4")} AS rq,
                row_number() OVER (PARTITION BY symbol ORDER BY bar_ts) AS rn
         FROM lr
         WINDOW w4 AS (PARTITION BY symbol ORDER BY bar_ts
@@ -108,15 +100,15 @@ def _logrets(spark: SparkSession, sf_dir: str) -> DataFrame:
     m1 AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("r", 12, 8)} AS s,
-               {_dsum2("r * r", 12, 8)} AS ss
+               {sql_split_term_sum("r", 12, 8)} AS s,
+               {sql_split_term_sum("r * r", 12, 8)} AS ss
         FROM nr GROUP BY 1
     ),
     m4 AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS nq,
-               {_dsum2("rq", 12, 8)} AS sq,
-               {_dsum2("rq * rq", 12, 8)} AS ssq
+               {sql_split_term_sum("rq", 12, 8)} AS sq,
+               {sql_split_term_sum("rq * rq", 12, 8)} AS ssq
         FROM nr WHERE rn >= 4 GROUP BY 1
     ),
     vr AS (
@@ -128,8 +120,8 @@ def _logrets(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE m1.ss / m1.n - (m1.s / m1.n) * (m1.s / m1.n) > 0
     )
     SELECT symbol, n,
-           {_pr("vratio", 6)} AS vr4,
-           {_pr(
+           {sql_portable_round("vratio", 6)} AS vr4,
+           {sql_portable_round(
                "(vratio - 1.0) * sqrt(CAST(n AS DOUBLE) * 4.0 / 6.0)",
                6)} AS z_naive
     FROM vr ORDER BY symbol
@@ -156,23 +148,23 @@ def q_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             "symbol",
             "bar_ts",
             "r",
-            _wssum2(F.col("r"), w4, 12, 8).alias("rq"),
+            split_term_sum(F.col("r"), 12, 8, w4).alias("rq"),
             F.row_number().over(wn).alias("rn"),
         ),
         "vr-nr",
     )
     m1 = nr.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("r"), 12, 8).alias("s"),
-        _ssum2(F.col("r") * F.col("r"), 12, 8).alias("ss"),
+        split_term_sum(F.col("r"), 12, 8).alias("s"),
+        split_term_sum(F.col("r") * F.col("r"), 12, 8).alias("ss"),
     )
     m4 = (
         nr.filter(F.col("rn") >= 4)
         .groupBy("symbol")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("nq"),
-            _ssum2(F.col("rq"), 12, 8).alias("sq"),
-            _ssum2(F.col("rq") * F.col("rq"), 12, 8).alias("ssq"),
+            split_term_sum(F.col("rq"), 12, 8).alias("sq"),
+            split_term_sum(F.col("rq") * F.col("rq"), 12, 8).alias("ssq"),
         )
     )
     j = m1.join(m4, "symbol")
@@ -223,7 +215,7 @@ def q_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT symbol_a, symbol_b, n_joint, joint_low,
            CASE WHEN n_joint = 0 THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "10.0 * CAST(joint_low AS DOUBLE) / n_joint", 6)} END
                AS lambda_lower
     FROM pairs ORDER BY symbol_a, symbol_b
@@ -304,10 +296,10 @@ def q_tail_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
     mo AS (
         SELECT symbol_a, symbol_b,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("la", 12, 8)} AS sa,
-               {_dsum2("lb", 12, 8)} AS sb,
-               {_dsum2("la * lb", 12, 8)} AS sab,
-               {_dsum2("lb * lb", 12, 8)} AS sbb
+               {sql_split_term_sum("la", 12, 8)} AS sa,
+               {sql_split_term_sum("lb", 12, 8)} AS sb,
+               {sql_split_term_sum("la * lb", 12, 8)} AS sab,
+               {sql_split_term_sum("lb * lb", 12, 8)} AS sbb
         FROM j GROUP BY 1, 2
     ),
     fit AS (
@@ -332,15 +324,15 @@ def q_tail_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT symbol_a, symbol_b,
                CAST(MAX(beta) AS DOUBLE) AS beta,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("e * e", 12, 8)} AS see,
-               {_dsum2("CASE WHEN de IS NULL THEN 0 ELSE de * de END",
+               {sql_split_term_sum("e * e", 12, 8)} AS see,
+               {sql_split_term_sum("CASE WHEN de IS NULL THEN 0 ELSE de * de END",
                        12, 8)} AS sdd
         FROM dres GROUP BY 1, 2
     )
     SELECT symbol_a, symbol_b, n,
-           {_pr("beta", 6)} AS hedge_beta,
+           {sql_portable_round("beta", 6)} AS hedge_beta,
            CASE WHEN see = 0 THEN NULL
-                ELSE {_pr("sdd / see", 6)} END AS durbin_watson
+                ELSE {sql_portable_round("sdd / see", 6)} END AS durbin_watson
     FROM dw ORDER BY symbol_a, symbol_b
     """,
 )
@@ -372,10 +364,10 @@ def q_cointegration_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mo = j.groupBy("symbol_a", "symbol_b").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("la"), 12, 8).alias("sa"),
-        _ssum2(F.col("lb"), 12, 8).alias("sb"),
-        _ssum2(F.col("la") * F.col("lb"), 12, 8).alias("sab"),
-        _ssum2(F.col("lb") * F.col("lb"), 12, 8).alias("sbb"),
+        split_term_sum(F.col("la"), 12, 8).alias("sa"),
+        split_term_sum(F.col("lb"), 12, 8).alias("sb"),
+        split_term_sum(F.col("la") * F.col("lb"), 12, 8).alias("sab"),
+        split_term_sum(F.col("lb") * F.col("lb"), 12, 8).alias("sbb"),
     )
     det = F.col("n") * F.col("sbb") - F.col("sb") * F.col("sb")
     beta = (F.col("n") * F.col("sab") - F.col("sa") * F.col("sb")) / det
@@ -395,8 +387,8 @@ def q_cointegration_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     dw = dres.groupBy("symbol_a", "symbol_b").agg(
         F.max("beta").cast("double").alias("beta"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("e") * F.col("e"), 12, 8).alias("see"),
-        _ssum2(
+        split_term_sum(F.col("e") * F.col("e"), 12, 8).alias("see"),
+        split_term_sum(
             F.when(F.col("de").isNull(), F.lit(0.0)).otherwise(
                 F.col("de") * F.col("de")
             ),
@@ -443,7 +435,7 @@ def q_cointegration_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
            MAX(value) AS high,
            MIN(value) AS low,
            arg_max(value, ord) AS close,
-           {_pr(
+           {sql_portable_round(
                "CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE)", 4)}
                AS dollar_volume
     FROM bt GROUP BY symbol, bar_id
@@ -572,7 +564,7 @@ def _duck_hex4(expr: str) -> str:
     ),
     means AS (
         SELECT dr.symbol, dr.b,
-               {_dsum2("x.x", 12, 8)} / COUNT(*)
+               {sql_split_term_sum("x.x", 12, 8)} / COUNT(*)
                    AS m
         FROM draws dr JOIN dret x ON x.symbol = dr.symbol AND x.rn = dr.idx
         GROUP BY 1, 2
@@ -585,15 +577,15 @@ def _duck_hex4(expr: str) -> str:
     ),
     pt AS (
         SELECT symbol,
-               {_dsum2("x", 12, 8)} / COUNT(*)
+               {sql_split_term_sum("x", 12, 8)} / COUNT(*)
                    AS mean_x,
                CAST(COUNT(*) AS BIGINT) AS n
         FROM dret GROUP BY 1
     )
     SELECT p.symbol, p.n,
-           {_pr("p.mean_x", 8)} AS mean_ret,
-           {_pr("c.lo", 8)} AS ci_lo,
-           {_pr("c.hi", 8)} AS ci_hi
+           {sql_portable_round("p.mean_x", 8)} AS mean_ret,
+           {sql_portable_round("c.lo", 8)} AS ci_lo,
+           {sql_portable_round("c.hi", 8)} AS ci_hi
     FROM pt p JOIN ci c ON c.symbol = p.symbol
     ORDER BY p.symbol
     """,
@@ -648,14 +640,14 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["symbol", "idx"],
         )
         .groupBy("symbol", "b")
-        .agg((_ssum2(F.col("x"), 12, 8) / F.count(F.lit(1))).alias("m"))
+        .agg((split_term_sum(F.col("x"), 12, 8) / F.count(F.lit(1))).alias("m"))
     )
     ci = means.groupBy("symbol").agg(
         F.percentile("m", 0.025).alias("lo"),
         F.percentile("m", 0.975).alias("hi"),
     )
     pt = dret.groupBy("symbol").agg(
-        (_ssum2(F.col("x"), 12, 8) / F.count(F.lit(1))).alias("mean_x"),
+        (split_term_sum(F.col("x"), 12, 8) / F.count(F.lit(1))).alias("mean_x"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
     return (
@@ -685,13 +677,13 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     mo AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("r", 12, 8)} AS s,
-               {_dsum2("r * r", 12, 8)} AS ss,
-               {_dsum2("CASE WHEN r1 IS NULL THEN 0 ELSE r * r1 END",
+               {sql_split_term_sum("r", 12, 8)} AS s,
+               {sql_split_term_sum("r * r", 12, 8)} AS ss,
+               {sql_split_term_sum("CASE WHEN r1 IS NULL THEN 0 ELSE r * r1 END",
                        12, 8)} AS s1,
                CAST(SUM(CASE WHEN r1 IS NULL THEN 0 ELSE 1 END) AS BIGINT)
                    AS n1,
-               {_dsum2("CASE WHEN r2 IS NULL THEN 0 ELSE r * r2 END",
+               {sql_split_term_sum("CASE WHEN r2 IS NULL THEN 0 ELSE r * r2 END",
                        12, 8)} AS s2,
                CAST(SUM(CASE WHEN r2 IS NULL THEN 0 ELSE 1 END) AS BIGINT)
                    AS n2
@@ -706,13 +698,13 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM mo WHERE n1 > 0 AND n2 > 0
     )
     SELECT symbol, n,
-           {_pr("mu", 8)} AS mean_ret,
-           {_pr(
+           {sql_portable_round("mu", 8)} AS mean_ret,
+           {sql_portable_round(
                "g0 + 2.0 * (2.0 / 3.0) * g1 + 2.0 * (1.0 / 3.0) * g2",
                10)} AS lrv,
            CASE WHEN g0 + 2.0 * (2.0 / 3.0) * g1 + 2.0 * (1.0 / 3.0) * g2
                      <= 0 THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "mu / sqrt((g0 + 2.0 * (2.0 / 3.0) * g1"
                     " + 2.0 * (1.0 / 3.0) * g2) / n)", 6)} END AS t_hac
     FROM g ORDER BY symbol
@@ -737,9 +729,9 @@ def q_newey_west(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mo = lagged.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("r"), 12, 8).alias("s"),
-        _ssum2(F.col("r") * F.col("r"), 12, 8).alias("ss"),
-        _ssum2(
+        split_term_sum(F.col("r"), 12, 8).alias("s"),
+        split_term_sum(F.col("r") * F.col("r"), 12, 8).alias("ss"),
+        split_term_sum(
             F.when(F.col("r1").isNull(), F.lit(0.0)).otherwise(
                 F.col("r") * F.col("r1")
             ),
@@ -749,7 +741,7 @@ def q_newey_west(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("r1").isNull(), 0).otherwise(1))
         .cast("bigint")
         .alias("n1"),
-        _ssum2(
+        split_term_sum(
             F.when(F.col("r2").isNull(), F.lit(0.0)).otherwise(
                 F.col("r") * F.col("r2")
             ),
@@ -814,7 +806,7 @@ def q_newey_west(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     season AS (
         SELECT symbol, hod,
-               (CAST(floor(CAST(({_dsum2("r", 12, 8)})
+               (CAST(floor(CAST(({sql_split_term_sum("r", 12, 8)})
                     / COUNT(*) AS DOUBLE) * 1000000.0 + 0.5)
                     AS DOUBLE) / 1000000.0) AS s
         FROM resid GROUP BY 1, 2
@@ -826,17 +818,17 @@ def q_newey_west(spark: SparkSession, sf_dir: str) -> DataFrame:
     mo AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("r", 12, 8)} AS sr,
-               {_dsum2("r * r", 12, 8)} AS srr,
-               {_dsum2("e", 12, 8)} AS se,
-               {_dsum2("e * e", 12, 8)} AS see
+               {sql_split_term_sum("r", 12, 8)} AS sr,
+               {sql_split_term_sum("r * r", 12, 8)} AS srr,
+               {sql_split_term_sum("e", 12, 8)} AS se,
+               {sql_split_term_sum("e * e", 12, 8)} AS see
         FROM rem GROUP BY 1
     )
     SELECT symbol, n,
-           {_pr("srr / n - (sr / n) * (sr / n)", 8)} AS var_detrended,
-           {_pr("see / n - (se / n) * (se / n)", 8)} AS var_remainder,
+           {sql_portable_round("srr / n - (sr / n) * (sr / n)", 8)} AS var_detrended,
+           {sql_portable_round("see / n - (se / n) * (se / n)", 8)} AS var_remainder,
            CASE WHEN srr / n - (sr / n) * (sr / n) <= 0 THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "greatest(0.0, 1.0 - (see / n - (se / n) * (se / n))"
                     " / (srr / n - (sr / n) * (sr / n)))", 6)} END
                AS seasonal_strength
@@ -892,7 +884,7 @@ def q_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     season = resid.groupBy("symbol", "hod").agg(
         portable_round(
-            _ssum2(F.col("r"), 12, 8) / F.count(F.lit(1)), 6
+            split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1)), 6
         ).alias("s")
     )
     rem = resid.join(F.broadcast(season), ["symbol", "hod"]).select(
@@ -900,10 +892,10 @@ def q_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mo = rem.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(F.col("r"), 12, 8).alias("sr"),
-        _ssum2(F.col("r") * F.col("r"), 12, 8).alias("srr"),
-        _ssum2(F.col("e"), 12, 8).alias("se"),
-        _ssum2(F.col("e") * F.col("e"), 12, 8).alias("see"),
+        split_term_sum(F.col("r"), 12, 8).alias("sr"),
+        split_term_sum(F.col("r") * F.col("r"), 12, 8).alias("srr"),
+        split_term_sum(F.col("e"), 12, 8).alias("se"),
+        split_term_sum(F.col("e") * F.col("e"), 12, 8).alias("see"),
     )
     vr = F.col("srr") / F.col("n") - (F.col("sr") / F.col("n")) * (
         F.col("sr") / F.col("n")
@@ -934,7 +926,7 @@ def q_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_DUCK_LOGRETS},
     mkt AS (
         SELECT bar_ts,
-               {_dsum2("r", 12, 8)} / COUNT(*)
+               {sql_split_term_sum("r", 12, 8)} / COUNT(*)
                    AS rm
         FROM lr GROUP BY 1
     ),
@@ -948,15 +940,15 @@ def q_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     mo AS (
         SELECT symbol_a, symbol_b,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("ra", 12, 8)} AS sa,
-               {_dsum2("rb", 12, 8)} AS sb,
-               {_dsum2("rm", 12, 8)} AS sm,
-               {_dsum2("ra * rb", 12, 8)} AS sab,
-               {_dsum2("ra * rm", 12, 8)} AS sam,
-               {_dsum2("rb * rm", 12, 8)} AS sbm,
-               {_dsum2("ra * ra", 12, 8)} AS saa,
-               {_dsum2("rb * rb", 12, 8)} AS sbb,
-               {_dsum2("rm * rm", 12, 8)} AS smm
+               {sql_split_term_sum("ra", 12, 8)} AS sa,
+               {sql_split_term_sum("rb", 12, 8)} AS sb,
+               {sql_split_term_sum("rm", 12, 8)} AS sm,
+               {sql_split_term_sum("ra * rb", 12, 8)} AS sab,
+               {sql_split_term_sum("ra * rm", 12, 8)} AS sam,
+               {sql_split_term_sum("rb * rm", 12, 8)} AS sbm,
+               {sql_split_term_sum("ra * ra", 12, 8)} AS saa,
+               {sql_split_term_sum("rb * rb", 12, 8)} AS sbb,
+               {sql_split_term_sum("rm * rm", 12, 8)} AS smm
         FROM tri GROUP BY 1, 2
     ),
     rho AS (
@@ -972,9 +964,9 @@ def q_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
           AND (n * smm - sm * sm) > 0
     )
     SELECT symbol_a, symbol_b, n,
-           {_pr("rab", 6)} AS corr_raw,
+           {sql_portable_round("rab", 6)} AS corr_raw,
            CASE WHEN (1.0 - ram * ram) * (1.0 - rbm * rbm) <= 0 THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "(rab - ram * rbm)"
                     " / sqrt((1.0 - ram * ram) * (1.0 - rbm * rbm))",
                     6)} END AS partial_corr
@@ -994,7 +986,7 @@ def q_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the symbol catalog + one moments hash-agg."""
     lr = bounded_persist(_logrets(spark, sf_dir), "pcorr-lr")
     mkt = lr.groupBy("bar_ts").agg(
-        (_ssum2(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("rm")
+        (split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("rm")
     )
     a = lr.select(F.col("symbol").alias("symbol_a"), "bar_ts", F.col("r").alias("ra"))
     b = lr.select(F.col("symbol").alias("symbol_b"), "bar_ts", F.col("r").alias("rb"))
@@ -1005,7 +997,7 @@ def q_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def dsum(col, alias):
-        return _ssum2(col, 12, 8).alias(alias)
+        return split_term_sum(col, 12, 8).alias(alias)
 
     ra, rb, rmc = F.col("ra"), F.col("rb"), F.col("rm")
     mo = tri.groupBy("symbol_a", "symbol_b").agg(
@@ -1064,11 +1056,11 @@ def q_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     mo AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum2("xl", 12, 8)} AS sx,
-               {_dsum2("dx", 12, 8)} AS sy,
-               {_dsum2("xl * xl", 12, 8)} AS sxx,
-               {_dsum2("xl * dx", 12, 8)} AS sxy,
-               {_dsum2("dx * dx", 12, 8)} AS syy
+               {sql_split_term_sum("xl", 12, 8)} AS sx,
+               {sql_split_term_sum("dx", 12, 8)} AS sy,
+               {sql_split_term_sum("xl * xl", 12, 8)} AS sxx,
+               {sql_split_term_sum("xl * dx", 12, 8)} AS sxy,
+               {sql_split_term_sum("dx * dx", 12, 8)} AS syy
         FROM d GROUP BY 1
     ),
     fit AS (
@@ -1081,9 +1073,9 @@ def q_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM mo WHERE n > 2 AND n * sxx - sx * sx > 0
     )
     SELECT symbol, n,
-           {_pr("beta", 8)} AS gamma,
+           {sql_portable_round("beta", 8)} AS gamma,
            CASE WHEN s2 <= 0 OR cxx <= 0 THEN NULL
-                ELSE {_pr("beta / sqrt(s2 / cxx)", 6)} END AS df_t
+                ELSE {sql_portable_round("beta / sqrt(s2 / cxx)", 6)} END AS df_t
     FROM fit ORDER BY symbol
     """,
 )
@@ -1113,11 +1105,11 @@ def q_adf_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     xl, dx = F.col("xl"), F.col("dx")
     mo = d.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum2(xl, 12, 8).alias("sx"),
-        _ssum2(dx, 12, 8).alias("sy"),
-        _ssum2(xl * xl, 12, 8).alias("sxx"),
-        _ssum2(xl * dx, 12, 8).alias("sxy"),
-        _ssum2(dx * dx, 12, 8).alias("syy"),
+        split_term_sum(xl, 12, 8).alias("sx"),
+        split_term_sum(dx, 12, 8).alias("sy"),
+        split_term_sum(xl * xl, 12, 8).alias("sxx"),
+        split_term_sum(xl * dx, 12, 8).alias("sxy"),
+        split_term_sum(dx * dx, 12, 8).alias("syy"),
     )
     n = F.col("n")
     cxx = F.col("sxx") - F.col("sx") * F.col("sx") / n
@@ -1152,7 +1144,7 @@ def q_adf_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_DUCK_LOGRETS},
     mu AS (
         SELECT symbol,
-               {_dsum2("r", 12, 8)} / COUNT(*)
+               {sql_split_term_sum("r", 12, 8)} / COUNT(*)
                    AS mu
         FROM lr GROUP BY 1
     ),
@@ -1175,7 +1167,7 @@ def q_adf_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT symbol,
            CAST(COUNT(*) AS BIGINT) AS n,
-           {_pr("max(ph_t)", 8)} AS ph_stat,
+           {sql_portable_round("max(ph_t)", 8)} AS ph_stat,
            CAST(CASE WHEN max(ph_t) > 0.05 THEN 1 ELSE 0 END AS INTEGER)
                AS drift_alarm
     FROM ph GROUP BY symbol ORDER BY symbol
@@ -1195,13 +1187,11 @@ def q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     the symbol partition."""
     lr = _logrets(spark, sf_dir)
     mu = lr.groupBy("symbol").agg(
-        (_ssum2(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("mu")
+        (split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("mu")
     )
     # 12dp-pre-rounded summands cast at their OWN scale (matching the
     # oracle's DECIMAL(38,12)): |term| <= ~22 -> k <= 2.2e13 << 2^53
-    term = portable_round(
-        F.col("r") - F.col("mu") - F.lit(0.0001), 12
-    ).cast("decimal(38,12)")
+    dev = term(F.col("r") - F.col("mu") - F.lit(0.0001), 12)
     wc = (
         Window.partitionBy("symbol")
         .orderBy("bar_ts")
@@ -1210,7 +1200,7 @@ def q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = lr.join(F.broadcast(mu), "symbol").select(
         "symbol",
         "bar_ts",
-        F.sum(term).over(wc).cast("double").alias("c"),
+        F.sum(dev).over(wc).cast("double").alias("c"),
     )
     ph = cum.select(
         "symbol",

@@ -38,6 +38,8 @@ from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
+    sql_term,
+    term,
 )
 from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
@@ -86,12 +88,10 @@ def _hourly_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         -- both engines, so greatest(NULL-diff, 0.0) is 0.0 and the
         -- first bar would sneak in as a phantom zero move
         SELECT symbol, bar_ts,
-               CAST({sql_portable_round(
-                   "greatest(close - pc, 0.0)", 12)}
-                   AS DECIMAL(38,12)) AS gain,
-               CAST({sql_portable_round(
-                   "greatest(-(close - pc), 0.0)", 12)}
-                   AS DECIMAL(38,12)) AS loss
+               {sql_term(
+                   "greatest(close - pc, 0.0)", 12)} AS gain,
+               {sql_term(
+                   "greatest(-(close - pc), 0.0)", 12)} AS loss
         FROM lagged WHERE pc IS NOT NULL
     ),
     s AS (
@@ -132,11 +132,9 @@ def q_chande_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "symbol",
             "bar_ts",
-            portable_round(F.greatest(diff, F.lit(0.0)), 12)
-            .cast("decimal(38,12)")
+            term(F.greatest(diff, F.lit(0.0)), 12)
             .alias("gain"),
-            portable_round(F.greatest(-diff, F.lit(0.0)), 12)
-            .cast("decimal(38,12)")
+            term(F.greatest(-diff, F.lit(0.0)), 12)
             .alias("loss"),
         )
     )
@@ -182,15 +180,12 @@ def q_chande_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
         -- the first bar's TR would otherwise collapse to high-low while
         -- its vortex movements stay NULL — an inconsistent frame)
         SELECT symbol, bar_ts,
-               CAST({sql_portable_round("abs(high - pl)", 12)}
-                   AS DECIMAL(38,12)) AS vmp,
-               CAST({sql_portable_round("abs(low - ph)", 12)}
-                   AS DECIMAL(38,12)) AS vmm,
-               CAST({sql_portable_round(
+               {sql_term("abs(high - pl)", 12)} AS vmp,
+               {sql_term("abs(low - ph)", 12)} AS vmm,
+               {sql_term(
                    "greatest(high - low,"
                    " abs(high - pc),"
-                   " abs(low - pc))", 12)}
-                   AS DECIMAL(38,12)) AS tr
+                   " abs(low - pc))", 12)} AS tr
         FROM lagged WHERE pc IS NOT NULL
     ),
     s AS (
@@ -236,21 +231,15 @@ def q_vortex(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = lagged.select(
         "symbol",
         "bar_ts",
-        portable_round(F.abs(F.col("high") - F.col("pl")), 12)
-        .cast("decimal(38,12)")
+        term(F.abs(F.col("high") - F.col("pl")), 12)
         .alias("vmp"),
-        portable_round(F.abs(F.col("low") - F.col("ph")), 12)
-        .cast("decimal(38,12)")
+        term(F.abs(F.col("low") - F.col("ph")), 12)
         .alias("vmm"),
-        portable_round(
-            F.greatest(
+        term(F.greatest(
                 F.col("high") - F.col("low"),
                 F.abs(F.col("high") - F.col("pc")),
                 F.abs(F.col("low") - F.col("pc")),
-            ),
-            12,
-        )
-        .cast("decimal(38,12)")
+            ), 12)
         .alias("tr"),
     )
     w7 = Window.partitionBy("symbol").orderBy("bar_ts").rowsBetween(-6, 0)
@@ -290,19 +279,14 @@ def q_vortex(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     t AS (
         SELECT symbol,
-               CAST({sql_portable_round("ln(open / pc)", 12)}
-                   AS DECIMAL(38,12)) AS o1,
-               CAST({sql_portable_round("ln(open / pc) * ln(open / pc)", 12)}
-                   AS DECIMAL(38,12)) AS o2,
-               CAST({sql_portable_round("ln(close / open)", 12)}
-                   AS DECIMAL(38,12)) AS c1,
-               CAST({sql_portable_round(
-                   "ln(close / open) * ln(close / open)", 12)}
-                   AS DECIMAL(38,12)) AS c2,
-               CAST({sql_portable_round(
+               {sql_term("ln(open / pc)", 12)} AS o1,
+               {sql_term("ln(open / pc) * ln(open / pc)", 12)} AS o2,
+               {sql_term("ln(close / open)", 12)} AS c1,
+               {sql_term(
+                   "ln(close / open) * ln(close / open)", 12)} AS c2,
+               {sql_term(
                    "ln(high / close) * ln(high / open)"
-                   " + ln(low / close) * ln(low / open)", 12)}
-                   AS DECIMAL(38,12)) AS rs
+                   " + ln(low / close) * ln(low / open)", 12)} AS rs
         FROM lagged
         WHERE pc IS NOT NULL AND low > 0 AND pc > 0 AND open > 0
     ),
@@ -358,11 +342,11 @@ def q_yang_zhang_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = lagged.select(
         "symbol",
-        portable_round(o, 12).cast("decimal(38,12)").alias("o1"),
-        portable_round(o * o, 12).cast("decimal(38,12)").alias("o2"),
-        portable_round(c, 12).cast("decimal(38,12)").alias("c1"),
-        portable_round(c * c, 12).cast("decimal(38,12)").alias("c2"),
-        portable_round(rs, 12).cast("decimal(38,12)").alias("rs"),
+        term(o, 12).alias("o1"),
+        term(o * o, 12).alias("o2"),
+        term(c, 12).alias("c1"),
+        term(c * c, 12).alias("c2"),
+        term(rs, 12).alias("rs"),
     )
     n = F.count(F.lit(1))
     v = (
@@ -571,10 +555,8 @@ def q_adx(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(COUNT(*) AS BIGINT) AS n,
                CAST(SUM(rn) AS BIGINT) AS sx,
                CAST(SUM(rn * rn) AS BIGINT) AS sxx,
-               SUM(CAST({sql_portable_round("close", 12)}
-                   AS DECIMAL(38,12))) AS sy,
-               SUM(CAST({sql_portable_round("close * rn", 6)}
-                   AS DECIMAL(38,6))) AS sxy
+               SUM({sql_term("close", 12)}) AS sy,
+               SUM({sql_term("close * rn", 6)}) AS sxy
         FROM nb GROUP BY symbol HAVING COUNT(*) >= 3
     ),
     fit AS (
@@ -598,12 +580,11 @@ def q_adx(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     terms AS (
         SELECT symbol,
-               CAST({sql_portable_round("e * e", 8)}
-                   AS DECIMAL(38,8)) AS e2,
-               CAST({sql_portable_round(
+               {sql_term("e * e", 8)} AS e2,
+               {sql_term(
                    "(e - lag(e) OVER (PARTITION BY symbol ORDER BY rn))"
                    " * (e - lag(e) OVER (PARTITION BY symbol ORDER BY rn))",
-                   8)} AS DECIMAL(38,8)) AS d2
+                   8)} AS d2
         FROM res
     )
     SELECT t.symbol, ab.n AS n_bars,
@@ -624,7 +605,7 @@ def q_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     the diagnostic that says whether q_regression's trend fit left
     structure on the table. Slope/intercept come from exact moment sums
     (integer Σx/Σx²; Σy at 12dp, Σxy at 6dp — close·rn·10^dp must stay
-    under the _dterm int64 floor bound, so 6dp holds to |close·rn| <
+    under the int64 floor bound, so 6dp holds to |close·rn| <
     9.2e12 ≈ a million years of hourly bars at price 1e3 where 12dp
     saturated at ~1 year) cast to DOUBLE before the slope numerator so
     BOTH engines evaluate the identical double tree (mixed
@@ -649,9 +630,9 @@ def q_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum("rn").cast("bigint").alias("sx"),
             F.sum(F.col("rn") * F.col("rn")).cast("bigint").alias("sxx"),
-            F.sum(portable_round(F.col("close"), 12).cast("decimal(38,12)")).alias("sy"),
+            F.sum(term(F.col("close"), 12)).alias("sy"),
             F.sum(
-                portable_round(F.col("close") * F.col("rn"), 6).cast("decimal(38,6)")
+                term(F.col("close") * F.col("rn"), 6)
             ).alias("sxy"),
         )
         .filter(
@@ -688,8 +669,8 @@ def q_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
         "symbol",
         "n",
         "b",
-        portable_round(F.col("e") * F.col("e"), 8).cast("decimal(38,8)").alias("e2"),
-        portable_round(d * d, 8).cast("decimal(38,8)").alias("d2"),
+        term(F.col("e") * F.col("e"), 8).alias("e2"),
+        term(d * d, 8).alias("d2"),
     )
     return (
         terms.groupBy("symbol", "n", "b")

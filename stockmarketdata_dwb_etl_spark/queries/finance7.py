@@ -8,7 +8,7 @@ value = price, tick count = volume), the analytics tier the reference
 delegates to BigQuery over its daily bar table
 (``/root/reference/dump_bigq.py:47-56``).
 
-Determinism policy (finance.py / stats_q2.py::_dterm): per-row terms run
+Determinism policy (finance.py / functions/exact.py): per-row terms run
 in double through IDENTICAL expression trees on both engines, are rounded
 with the portable floor round at a digit count that keeps |term|·10^n
 under the int64 floor bound, and accumulate in exact DECIMAL so every sum
@@ -24,6 +24,8 @@ from pyspark.sql.window import Window
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
+    sql_term,
+    term,
 )
 from stockmarketdata_dwb_etl_spark.queries.finance2 import (
     _duck_ohlcv,
@@ -44,9 +46,8 @@ _INV_4LN2 = 0.3606737602222409
     WITH {_duck_ohlcv("day")},
     terms AS (
         SELECT symbol,
-               CAST({sql_portable_round(
-                   "ln(high / low) * ln(high / low)", 10)}
-                   AS DECIMAL(38,10)) AS hl2
+               {sql_term(
+                   "ln(high / low) * ln(high / low)", 10)} AS hl2
         FROM bars WHERE low > 0
     )
     SELECT symbol,
@@ -75,7 +76,7 @@ def q_parkinson_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars = _ohlcv_bars(spark, sf_dir, "day").filter(F.col("low") > 0)
     lhl = F.log(F.col("high") / F.col("low"))
     terms = bars.select(
-        "symbol", portable_round(lhl * lhl, 10).cast("decimal(38,10)").alias("hl2")
+        "symbol", term(lhl * lhl, 10).alias("hl2")
     )
     agg = terms.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
@@ -103,12 +104,10 @@ def q_parkinson_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     bp AS (
         SELECT symbol, bar_ts, rn,
-               CAST({sql_portable_round(
-                   "close - least(low, prev_c)", 8)}
-                   AS DECIMAL(38,8)) AS bp,
-               CAST({sql_portable_round(
-                   "greatest(high, prev_c) - least(low, prev_c)", 8)}
-                   AS DECIMAL(38,8)) AS tr
+               {sql_term(
+                   "close - least(low, prev_c)", 8)} AS bp,
+               {sql_term(
+                   "greatest(high, prev_c) - least(low, prev_c)", 8)} AS tr
         FROM base WHERE prev_c IS NOT NULL
     ),
     sums AS (
@@ -165,16 +164,10 @@ def q_ultimate_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
         "symbol",
         "bar_ts",
         "rn",
-        portable_round(
-            F.col("close") - F.least(F.col("low"), F.col("prev_c")), 8)
-        .cast("decimal(38,8)")
+        term(F.col("close") - F.least(F.col("low"), F.col("prev_c")), 8)
         .alias("bp"),
-        portable_round(
-            F.greatest(F.col("high"), F.col("prev_c"))
-            - F.least(F.col("low"), F.col("prev_c")),
-            8,
-        )
-        .cast("decimal(38,8)")
+        term(F.greatest(F.col("high"), F.col("prev_c"))
+            - F.least(F.col("low"), F.col("prev_c")), 8)
         .alias("tr"),
     )
     def frame(n: int):
@@ -224,9 +217,8 @@ def q_ultimate_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
     fi AS (
         SELECT symbol, bar_ts,
                row_number() OVER w AS rn,
-               CAST({sql_portable_round(
-                   "(close - lag(close) OVER w) * volume", 6)}
-                   AS DECIMAL(38,6)) AS fi
+               {sql_term(
+                   "(close - lag(close) OVER w) * volume", 6)} AS fi
         FROM bars
         WINDOW w AS (PARTITION BY symbol ORDER BY bar_ts)
     )
@@ -258,9 +250,7 @@ def q_force_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "symbol",
         "bar_ts",
         F.row_number().over(w).alias("rn"),
-        portable_round(
-            (F.col("close") - F.lag("close").over(w)) * F.col("volume"), 6)
-        .cast("decimal(38,6)")
+        term((F.col("close") - F.lag("close").over(w)) * F.col("volume"), 6)
         .alias("fi"),
     )
     f13 = Window.partitionBy("symbol").orderBy("bar_ts").rowsBetween(-12, 0)
@@ -290,10 +280,10 @@ def q_force_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_duck_ohlcv("hour")},
     mf AS (
         SELECT symbol, bar_ts,
-               CAST({sql_portable_round(
+               {sql_term(
                    "CASE WHEN high = low THEN 0.0"
                    " ELSE ((close - low) - (high - close)) / (high - low)"
-                   " END * volume", 8)} AS DECIMAL(38,8)) AS mfv
+                   " END * volume", 8)} AS mfv
         FROM bars
     )
     SELECT symbol, bar_ts,
@@ -325,7 +315,7 @@ def q_chaikin_ad(spark: SparkSession, sf_dir: str) -> DataFrame:
     mf = bars.select(
         "symbol",
         "bar_ts",
-        portable_round(mfm * F.col("volume"), 8).cast("decimal(38,8)").alias("mfv"),
+        term(mfm * F.col("volume"), 8).alias("mfv"),
     )
     run = (
         Window.partitionBy("symbol")
@@ -352,8 +342,7 @@ def q_chaikin_ad(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT symbol, bar_ts, close,
                row_number() OVER w AS rn,
                lag(close, 11) OVER w AS displaced,
-               CAST(SUM(CAST({sql_portable_round("close", 8)}
-                             AS DECIMAL(38,8)))
+               CAST(SUM({sql_term("close", 8)})
                     OVER (PARTITION BY symbol ORDER BY bar_ts
                           ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
                     AS DOUBLE) / 20.0 AS sma20
@@ -386,7 +375,7 @@ def q_dpo(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w).alias("rn"),
         F.lag("close", 11).over(w).alias("displaced"),
         (
-            F.sum(portable_round(F.col("close"), 8).cast("decimal(38,8)"))
+            F.sum(term(F.col("close"), 8))
             .over(f20)
             .cast("double")
             / F.lit(20.0)

@@ -22,6 +22,10 @@ from pyspark.sql.window import Window
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
+    sql_term,
+    sql_term_sum,
+    term,
+    term_sum,
 )
 from stockmarketdata_dwb_etl_spark.queries.finance2 import (
     _duck_ohlcv,
@@ -111,18 +115,14 @@ def q_coppock(spark: SparkSession, sf_dir: str) -> DataFrame:
     roc AS (
         SELECT symbol, bar_ts,
                row_number() OVER w AS rn,
-               CAST({sql_portable_round(
-                   "100.0 * (close / lag(close, 10) OVER w - 1.0)", 8)}
-                   AS DECIMAL(38,8)) AS r10,
-               CAST({sql_portable_round(
-                   "100.0 * (close / lag(close, 15) OVER w - 1.0)", 8)}
-                   AS DECIMAL(38,8)) AS r15,
-               CAST({sql_portable_round(
-                   "100.0 * (close / lag(close, 20) OVER w - 1.0)", 8)}
-                   AS DECIMAL(38,8)) AS r20,
-               CAST({sql_portable_round(
-                   "100.0 * (close / lag(close, 30) OVER w - 1.0)", 8)}
-                   AS DECIMAL(38,8)) AS r30
+               {sql_term(
+                   "100.0 * (close / lag(close, 10) OVER w - 1.0)", 8)} AS r10,
+               {sql_term(
+                   "100.0 * (close / lag(close, 15) OVER w - 1.0)", 8)} AS r15,
+               {sql_term(
+                   "100.0 * (close / lag(close, 20) OVER w - 1.0)", 8)} AS r20,
+               {sql_term(
+                   "100.0 * (close / lag(close, 30) OVER w - 1.0)", 8)} AS r30
         FROM bars
         WINDOW w AS (PARTITION BY symbol ORDER BY bar_ts)
     )
@@ -156,10 +156,9 @@ def q_kst(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("symbol").orderBy("bar_ts")
 
     def roc(n: int):
-        return portable_round(
-            F.lit(100.0) * (F.col("close") / F.lag("close", n).over(w) - 1.0),
-            8,
-        ).cast("decimal(38,8)")
+        return term(
+            F.lit(100.0) * (F.col("close") / F.lag("close", n).over(w) - 1.0), 8
+        )
 
     seq = bars.select(
         "symbol",
@@ -199,8 +198,7 @@ def q_kst(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT symbol, bar_ts, high, low,
                row_number() OVER (PARTITION BY symbol ORDER BY bar_ts)
                    AS rn,
-               CAST(SUM(CAST({sql_portable_round("close", 8)}
-                             AS DECIMAL(38,8)))
+               CAST(SUM({sql_term("close", 8)})
                     OVER (PARTITION BY symbol ORDER BY bar_ts
                           ROWS BETWEEN 12 PRECEDING AND CURRENT ROW)
                     AS DOUBLE) / 13.0 AS sma13
@@ -235,7 +233,7 @@ def q_elder_ray(spark: SparkSession, sf_dir: str) -> DataFrame:
         "low",
         F.row_number().over(w).alias("rn"),
         (
-            F.sum(portable_round(F.col("close"), 8).cast("decimal(38,8)"))
+            F.sum(term(F.col("close"), 8))
             .over(f13)
             .cast("double")
             / F.lit(13.0)
@@ -270,14 +268,12 @@ def q_elder_ray(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     terms AS (
         SELECT symbol, bar_ts,
-               CAST({sql_portable_round(
+               {sql_term(
                    "CASE WHEN volume < prev_v AND close > 0 AND prev_c > 0"
-                   " THEN ln(close / prev_c) ELSE 0.0 END", 12)}
-                   AS DECIMAL(38,12)) AS nvi_t,
-               CAST({sql_portable_round(
+                   " THEN ln(close / prev_c) ELSE 0.0 END", 12)} AS nvi_t,
+               {sql_term(
                    "CASE WHEN volume > prev_v AND close > 0 AND prev_c > 0"
-                   " THEN ln(close / prev_c) ELSE 0.0 END", 12)}
-                   AS DECIMAL(38,12)) AS pvi_t
+                   " THEN ln(close / prev_c) ELSE 0.0 END", 12)} AS pvi_t
         FROM base WHERE prev_c IS NOT NULL
     )
     SELECT symbol, bar_ts,
@@ -319,17 +315,14 @@ def q_nvi_pvi(spark: SparkSession, sf_dir: str) -> DataFrame:
     lr = F.log(F.col("close") / F.col("prev_c"))
     ok = (F.col("close") > 0) & (F.col("prev_c") > 0)
 
-    def term(cond):
-        return (
-            portable_round(
-                F.when(cond & ok, lr).otherwise(F.lit(0.0)), 12).cast("decimal(38,12)")
-        )
+    def log_move(cond):
+        return term(F.when(cond & ok, lr).otherwise(F.lit(0.0)), 12)
 
     terms = base.select(
         "symbol",
         "bar_ts",
-        term(F.col("volume") < F.col("prev_v")).alias("nvi_t"),
-        term(F.col("volume") > F.col("prev_v")).alias("pvi_t"),
+        log_move(F.col("volume") < F.col("prev_v")).alias("nvi_t"),
+        log_move(F.col("volume") > F.col("prev_v")).alias("pvi_t"),
     )
     cum = (
         Window.partitionBy("symbol")
@@ -438,8 +431,7 @@ _CHI2_5_01 = 15.086272469388987
     ),
     mom AS (
         SELECT symbol, CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CAST({sql_portable_round("r", 12)}
-                   AS DECIMAL(38,12))) AS DOUBLE) AS sr
+               {sql_term_sum("r", 12)} AS sr
         FROM rets GROUP BY symbol
     ),
     e AS (
@@ -449,8 +441,7 @@ _CHI2_5_01 = 15.086272469388987
     ),
     sse AS (
         SELECT symbol, n,
-               CAST(SUM(CAST({sql_portable_round("e * e", 6)}
-                   AS DECIMAL(38,6))) AS DOUBLE) AS sse
+               {sql_term_sum("e * e", 6)} AS sse
         FROM e GROUP BY symbol, n
     ),
     pairs AS (
@@ -473,8 +464,7 @@ _CHI2_5_01 = 15.086272469388987
     ),
     rho AS (
         SELECT p.symbol, p.lag, s.n,
-               CAST(SUM(CAST({sql_portable_round("p.x * p.y", 6)}
-                   AS DECIMAL(38,6))) AS DOUBLE) / s.sse AS rho
+               {sql_term_sum("p.x * p.y", 6)} / s.sse AS rho
         FROM pairs p JOIN sse s ON s.symbol = p.symbol
         GROUP BY p.symbol, p.lag, s.n, s.sse
     )
@@ -493,7 +483,7 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     (global demeaning, global Σe² denominator) — the "is there ANY
     serial correlation in the first h lags" gate run before fitting any
     ARMA structure (the multi-lag complement of q_durbin_watson's
-    lag-1 diagnostic). ρ̂ numerators/denominator are 6dp-rounded (the fixture's synthetic 'returns' reach |e| ~1e4, so e²·10^12 would saturate Spark's int64 floor — the _dterm bound picks 6dp: |e²| < 9.2e12 holds to |e| ~3e6)
+    lag-1 diagnostic). ρ̂ numerators/denominator are 6dp-rounded (the fixture's synthetic 'returns' reach |e| ~1e4, so e²·10^12 would saturate Spark's int64 floor — that bound picks 6dp: |e²| < 9.2e12 holds to |e| ~3e6)
     demeaned products in exact DECIMAL sums; the mean enters through
     ONE double division so e is bit-identical cross-engine; the
     chi-square(5) 1% critical value 15.0863 is an embedded literal.
@@ -506,8 +496,7 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     rets = _returns(spark, sf_dir)
     mom = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(portable_round(F.col("r"), 12).cast("decimal(38,12)"))
-        .cast("double")
+        term_sum(F.col("r"), 12)
         .alias("sr"),
     )
     e = rets.join(F.broadcast(mom), "symbol").select(
@@ -517,8 +506,7 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("r") - F.col("sr") / F.col("n")).alias("e"),
     )
     sse = e.groupBy("symbol", "n").agg(
-        F.sum(portable_round(F.col("e") * F.col("e"), 6).cast("decimal(38,6)"))
-        .cast("double")
+        term_sum(F.col("e") * F.col("e"), 6)
         .alias("sse")
     )
     w = Window.partitionBy("symbol").orderBy("bar_ts")
@@ -551,10 +539,7 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     rho = (
         pairs.groupBy("symbol", "lag")
         .agg(
-            F.sum(
-                portable_round(F.col("x") * F.col("y"), 6).cast("decimal(38,6)")
-            )
-            .cast("double")
+            term_sum(F.col("x") * F.col("y"), 6)
             .alias("cross")
         )
         .join(F.broadcast(sse), "symbol")
@@ -596,8 +581,7 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     mom AS (
         SELECT symbol, CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CAST({sql_portable_round("r", 12)}
-                   AS DECIMAL(38,12))) AS DOUBLE) AS sr
+               {sql_term_sum("r", 12)} AS sr
         FROM rets GROUP BY symbol
     ),
     e AS (
@@ -611,10 +595,8 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     fit AS (
         SELECT symbol, n,
-               CAST(SUM(CAST({sql_portable_round("x * y", 6)}
-                   AS DECIMAL(38,6))) AS DOUBLE)
-               / nullif(CAST(SUM(CAST({sql_portable_round("x * x", 6)}
-                   AS DECIMAL(38,6))) AS DOUBLE), 0.0) AS phi
+               {sql_term_sum("x * y", 6)}
+               / nullif({sql_term_sum("x * x", 6)}, 0.0) AS phi
         FROM lagged GROUP BY symbol, n
     )
     SELECT symbol, n,
@@ -634,7 +616,7 @@ def q_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pairs/spread series (complements q_hurst_exponent's regime
     classification and q_adf_lite's stationarity gate). Moment sums are
     6dp-rounded DECIMAL (demeaned products reach ~1e8 on the synthetic
-    series — 12dp would saturate the int64 floor, the _dterm bound); φ comes through one double division; ln(½)
+    series — 12dp would saturate the int64 floor); φ comes through one double division; ln(½)
     is an embedded literal and ln(φ) runs on identical input bits with
     the 4dp presentation round absorbing libm ulp (the hurst-class
     exp/ln posture). Scale: moment agg + broadcast join-back + one lag
@@ -644,8 +626,7 @@ def q_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
     rets = _returns(spark, sf_dir)
     mom = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(portable_round(F.col("r"), 12).cast("decimal(38,12)"))
-        .cast("double")
+        term_sum(F.col("r"), 12)
         .alias("sr"),
     )
     e = rets.join(F.broadcast(mom), "symbol").select(
@@ -663,13 +644,9 @@ def q_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("x").isNotNull())
     fit = lagged.groupBy("symbol", "n").agg(
         (
-            F.sum(
-                portable_round(F.col("x") * F.col("y"), 6).cast("decimal(38,6)")
-            ).cast("double")
+            term_sum(F.col("x") * F.col("y"), 6)
             / F.nullif(
-                F.sum(
-                    portable_round(F.col("x") * F.col("x"), 6).cast("decimal(38,6)")
-                ).cast("double"),
+                term_sum(F.col("x") * F.col("x"), 6),
                 F.lit(0.0),
             )
         ).alias("phi")
@@ -697,11 +674,10 @@ def q_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr AS (
         SELECT symbol, bar_ts, high, low, close,
                row_number() OVER w AS rn,
-               CAST({sql_portable_round(
+               {sql_term(
                    "greatest(high - low,"
                    " abs(high - lag(close) OVER w),"
-                   " abs(low - lag(close) OVER w))", 8)}
-                   AS DECIMAL(38,8)) AS trv
+                   " abs(low - lag(close) OVER w))", 8)} AS trv
         FROM bars
         WINDOW w AS (PARTITION BY symbol ORDER BY bar_ts)
     ),
@@ -775,14 +751,11 @@ def q_supertrend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bars = _ohlcv_bars(spark, sf_dir, "hour")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
-    trv = portable_round(
-        F.greatest(
+    trv = term(F.greatest(
             F.col("high") - F.col("low"),
             F.abs(F.col("high") - F.lag("close").over(w)),
             F.abs(F.col("low") - F.lag("close").over(w)),
-        ),
-        8,
-    ).cast("decimal(38,8)")
+        ), 8)
     tr = bars.select(
         "symbol",
         "bar_ts",

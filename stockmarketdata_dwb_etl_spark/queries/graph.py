@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
+from stockmarketdata_dwb_etl_spark.functions.exact import portable_round, term, term_sum
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
 from stockmarketdata_dwb_etl_spark.registry import query
@@ -128,7 +128,7 @@ def _in_sum_iterate(edges, base, state, col: str, update, iters: int) -> DataFra
     # double->DECIMAL cast is engine-asymmetric (DuckDB converts via
     # float scaling), and x·wn <= 2 keeps the 12dp floor term far under
     # the 2^53 round-trip bound
-    t = portable_round(F.col(col) * F.col("wn"), 12).cast("decimal(38,12)")
+    t = term(F.col(col) * F.col("wn"), 12)
     for _ in range(iters):
         msgs = edges.join(state.select(F.col("node").alias("src"), col), "src")
         state = (
@@ -606,9 +606,6 @@ def q_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = edges.select(F.col("p"), F.col("s").alias("supp_b"))
     # 12dp-pre-rounded terms <= 1.45 cast at their OWN scale, matching
     # the oracle's DECIMAL(38,12): exact on both engines
-    term = portable_round(F.lit(1.0) / F.log(F.col("pd")), 12).cast(
-        "decimal(38,12)"
-    )
     pairs = (
         a.join(b, "p")
         .filter(F.col("supp_a") < F.col("supp_b"))
@@ -616,7 +613,7 @@ def q_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("supp_a", "supp_b")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("shared_parts"),
-            F.sum(term).cast("double").alias("aa"),
+            term_sum(F.lit(1.0) / F.log(F.col("pd")), 12).alias("aa"),
         )
     )
     scored = pairs.filter(F.col("shared_parts") >= 5).select(

@@ -18,121 +18,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
+from stockmarketdata_dwb_etl_spark.functions.exact import (
+    portable_round,
+    split_term_sum,
+    sql_split_term_sum,
+    sql_term_sum,
+    term_sum,
+)
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.operators.rank import global_row_number
-from stockmarketdata_dwb_etl_spark.queries.dataops11 import _dsum, _ssum
 from stockmarketdata_dwb_etl_spark.registry import query
 
 _DEC = "decimal(38,6)"
-
-
-def _ssum2(col, fine: int = 12, coarse: int = 8):
-    """Two-bucket order-independent Σ of doubles with a WIDE dynamic
-    range: |x| < 1 terms round at ``fine`` dp, |x| ≥ 1 at ``coarse`` dp,
-    each bucket accumulating in exact DECIMAL at its own scale, added
-    as two doubles at the end. The single-dp _ssum breaks when
-    |term|·10^n exceeds 2^53 ≈ 9.0e15 (NOT the int64 9.2e18): above
-    that, k/10^n stops round-tripping through a double's ≤17 significant
-    digits, so Spark's shortest-repr decimal and DuckDB's float-scaled
-    decimal become DIFFERENT approximations (observed: q_anova_hod
-    ss_between flipping its 8dp round with s_g ~1e6 terms at 12dp).
-    Bucketing keeps k < 10^fine for the small branch and
-    |x|·10^coarse for the big one — with coarse=8 that holds to
-    |x| < 9e7 — while typical sub-1 terms keep full fine-dp precision
-    instead of being zeroed by a coarse uniform round. The branch
-    predicate compares identical doubles, so both engines split
-    identically."""
-    from pyspark.sql import Column
-
-    if isinstance(col, str):
-        col = F.col(col)
-    small = F.sum(
-        F.when(
-            F.abs(col) < 1.0,
-            portable_round(col, fine).cast(f"decimal(38,{fine})"),
-        ).otherwise(F.lit(0).cast(f"decimal(38,{fine})"))
-    ).cast("double")
-    big = F.sum(
-        F.when(
-            F.abs(col) >= 1.0,
-            portable_round(col, coarse).cast(f"decimal(38,{coarse})"),
-        ).otherwise(F.lit(0).cast(f"decimal(38,{coarse})"))
-    ).cast("double")
-    return small + big
-
-
-def _dsum2(expr: str, fine: int = 12, coarse: int = 8) -> str:
-    """DuckDB twin of :func:`_ssum2`."""
-    from stockmarketdata_dwb_etl_spark.functions.exact import (
-        sql_portable_round,
-    )
-
-    small = (
-        f"CASE WHEN abs({expr}) < 1.0 THEN"
-        f" CAST({sql_portable_round(expr, fine)} AS DECIMAL(38,{fine}))"
-        f" ELSE CAST(0 AS DECIMAL(38,{fine})) END"
-    )
-    big = (
-        f"CASE WHEN abs({expr}) >= 1.0 THEN"
-        f" CAST({sql_portable_round(expr, coarse)} AS DECIMAL(38,{coarse}))"
-        f" ELSE CAST(0 AS DECIMAL(38,{coarse})) END"
-    )
-    return f"(CAST(SUM({small}) AS DOUBLE) + CAST(SUM({big}) AS DOUBLE))"
-
-
-def _wssum2(col, window, fine: int = 12, coarse: int = 8):
-    """Windowed :func:`_ssum2`: the same two-bucket split sum as a frame
-    aggregate. Both bucket sums run in the SAME window pass (identical
-    window spec), so the extra bucket costs no additional sort."""
-    from pyspark.sql import Column
-
-    if isinstance(col, str):
-        col = F.col(col)
-    small = (
-        F.sum(
-            F.when(
-                F.abs(col) < 1.0,
-                portable_round(col, fine).cast(f"decimal(38,{fine})"),
-            ).otherwise(F.lit(0).cast(f"decimal(38,{fine})"))
-        )
-        .over(window)
-        .cast("double")
-    )
-    big = (
-        F.sum(
-            F.when(
-                F.abs(col) >= 1.0,
-                portable_round(col, coarse).cast(f"decimal(38,{coarse})"),
-            ).otherwise(F.lit(0).cast(f"decimal(38,{coarse})"))
-        )
-        .over(window)
-        .cast("double")
-    )
-    return small + big
-
-
-def _wdsum2(expr: str, over: str, fine: int = 12, coarse: int = 8) -> str:
-    """DuckDB twin of :func:`_wssum2`; ``over`` is the full ``OVER ...``
-    clause text (e.g. ``"OVER f"``)."""
-    from stockmarketdata_dwb_etl_spark.functions.exact import (
-        sql_portable_round,
-    )
-
-    small = (
-        f"CASE WHEN abs({expr}) < 1.0 THEN"
-        f" CAST({sql_portable_round(expr, fine)} AS DECIMAL(38,{fine}))"
-        f" ELSE CAST(0 AS DECIMAL(38,{fine})) END"
-    )
-    big = (
-        f"CASE WHEN abs({expr}) >= 1.0 THEN"
-        f" CAST({sql_portable_round(expr, coarse)} AS DECIMAL(38,{coarse}))"
-        f" ELSE CAST(0 AS DECIMAL(38,{coarse})) END"
-    )
-    return (
-        f"(CAST(SUM({small}) {over} AS DOUBLE)"
-        f" + CAST(SUM({big}) {over} AS DOUBLE))"
-    )
 
 
 @query(
@@ -158,7 +55,7 @@ def _wdsum2(expr: str, over: str, fine: int = 12, coarse: int = 8) -> str:
                / (CAST(row_tot * col_tot AS DOUBLE) / n) AS c
         FROM tot
     )
-    SELECT CAST((CAST(floor(CAST(({_dsum("c", 8)}) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0)
+    SELECT CAST((CAST(floor(CAST(({sql_term_sum("c", 8)}) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0)
                 AS DOUBLE) AS chi2,
            CAST(((SELECT COUNT(DISTINCT event_type) FROM cells) - 1)
                 * ((SELECT COUNT(DISTINCT is_weekend) FROM cells) - 1)
@@ -204,10 +101,10 @@ def q_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("is_weekend").alias("__c"),
         # 8dp round-then-DECIMAL: a raw double→DECIMAL(38,18) cast is
         # engine-asymmetric (DuckDB converts via float scaling). The
-        # cross-engine bound is 2^53 ≈ 9.0e15 (see _ssum2), so 8dp is
+        # cross-engine bound is 2^53 ≈ 9.0e15 (functions/exact.py), so 8dp is
         # safe while |c| < ~9e7; each cell's c is O(o) and the 2-level
         # contingency keeps cells far below that at any plausible sf.
-        _ssum(F.col("c"), 8).alias("__chi2"),
+        term_sum(F.col("c"), 8).alias("__chi2"),
         F.max("n").cast("bigint").alias("n"),
     )
     return dims.select(
@@ -488,15 +385,15 @@ def q_hist2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     g AS (
         SELECT hod,
                CAST(COUNT(*) AS BIGINT) AS n_g,
-               {_dsum2("r", 12, 8)} AS s_g,
-               {_dsum2("r * r", 12, 6)} AS ss_g
+               {sql_split_term_sum("r", 12, 8)} AS s_g,
+               {sql_split_term_sum("r * r", 12, 6)} AS ss_g
         FROM rets GROUP BY hod
     ),
     tot AS (
         SELECT CAST(SUM(n_g) AS BIGINT) AS n,
                CAST(COUNT(*) AS BIGINT) AS k,
-               {_dsum("s_g", 8)} AS s,
-               {_dsum("ss_g", 6)} AS ss
+               {sql_term_sum("s_g", 8)} AS s,
+               {sql_term_sum("ss_g", 6)} AS ss
         FROM g
     ),
     parts AS (
@@ -543,26 +440,25 @@ def q_anova_hod(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("r").isNotNull())
     # r = hourly close ratio − 1 spikes to ~1e4 on this events table
     # (min close 0.01), so r and r² span ~16 orders of magnitude:
-    # two-bucket split sums (_ssum2/_dsum2) keep sub-1 terms at 12dp
+    # two-bucket split sums (split_term_sum) keep sub-1 terms at 12dp
     # while the outlier bucket rounds at 8dp/6dp — every bucket's
     # |term|·10^n stays under 2^53, the real cross-engine
-    # round-trip bound (see _ssum2). Group-level and term sums are
+    # round-trip bound (functions/exact.py). Group-level and term sums are
     # magnitude-bounded (s_g ≤ ~1e4, ss_g ≤ ~1e8, s_g²/n_g ≤ ~1e6
-    # measured at sf0.1), so single-dp _ssum at 8/6/6 dp suffices.
+    # measured at sf0.1), so single-dp term_sum at 8/6/6 dp suffices.
     g = rets.groupBy("hod").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_g"),
-        _ssum2(F.col("r"), 12, 8).alias("s_g"),
-        _ssum2(F.col("r") * F.col("r"), 12, 6).alias("ss_g"),
+        split_term_sum(F.col("r"), 12, 8).alias("s_g"),
+        split_term_sum(F.col("r") * F.col("r"), 12, 6).alias("ss_g"),
     )
-    term = portable_round(
-        F.col("s_g") * F.col("s_g") / F.col("n_g"), 6
-    ).cast("decimal(38,6)")
     parts = g.agg(
         F.sum("n_g").cast("bigint").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("k"),
-        _ssum(F.col("s_g"), 8).alias("s"),
-        _ssum(F.col("ss_g"), 6).alias("ss"),
-        F.sum(term).cast("double").alias("sum_sq_means"),
+        term_sum(F.col("s_g"), 8).alias("s"),
+        term_sum(F.col("ss_g"), 6).alias("ss"),
+        term_sum(F.col("s_g") * F.col("s_g") / F.col("n_g"), 6).alias(
+            "sum_sq_means"
+        ),
     )
     ssb = F.col("sum_sq_means") - F.col("s") * F.col("s") / F.col("n")
     ssw = F.col("ss") - F.col("sum_sq_means")
@@ -725,7 +621,7 @@ def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM tot
     ),
     agg AS (
-        SELECT {_dsum("c", 8)} AS chi2,
+        SELECT {sql_term_sum("c", 8)} AS chi2,
                CAST(MAX(n) AS BIGINT) AS n,
                (SELECT COUNT(DISTINCT event_type) FROM cells) AS r,
                (SELECT COUNT(DISTINCT day_sixth) FROM cells) AS k
@@ -776,7 +672,7 @@ def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("o") - e) * (F.col("o") - e) / e).alias("c"),
     )
     agg = contrib.agg(
-        _ssum(F.col("c"), 8).alias("chi2"),
+        term_sum(F.col("c"), 8).alias("chi2"),
         F.max("n").cast("bigint").alias("n"),
         F.countDistinct("event_type").alias("r"),
         F.countDistinct("day_sixth").alias("k"),

@@ -12,10 +12,10 @@ parametric reports (reference analysis tier: dump_bigq.py:135-149).
 Determinism policy: rank statistics stay INTEGER via the histogram
 midrank identity (2·midrank = 2·cum_less + t + 1 — the q_mann_whitney
 construction) so every rank sum is exact; k-group Σ over double terms
-rounds each term to a magnitude-scaled digit count (|term|·10^n must
-stay under int64 max — see :func:`_dterm`) and accumulates in
-DECIMAL(38,18) (the q_anova_hod guard — partition-order independent);
-all reported doubles go through the portable floor round on identical
+rounds each term to a magnitude-scaled digit count and accumulates it
+in exact DECIMAL (functions/exact.py::term — partition-order
+independent; digit bounds in that module's docstring); all reported
+doubles go through the portable floor round on identical
 expression trees.
 """
 
@@ -26,49 +26,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
+from stockmarketdata_dwb_etl_spark.functions.exact import (
+    portable_round,
+    sql_portable_round,
+    sql_term,
+    sql_term_sum,
+    term,
+    term_sum,
+)
 from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
 from stockmarketdata_dwb_etl_spark.operators.rank import global_prefix_sum
 from stockmarketdata_dwb_etl_spark.queries.finance2 import _duck_ohlcv, _ohlcv_bars
 from stockmarketdata_dwb_etl_spark.queries.timeseries import _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
-
-def _pr(expr: str, n: int) -> str:
-    scale = float(10**n)
-    return (
-        f"CAST((CAST(floor(CAST(({expr}) AS DOUBLE) * {scale} + 0.5)"
-        f" AS DOUBLE) / {scale}) AS DOUBLE)"
-    )
-
-
-def _dterm(expr: str, n: int = 12) -> str:
-    """DuckDB: n-dp-round a double term and cast DECIMAL for exact Σ.
-
-    n must keep |term|·10^n < 2^53 ≈ 9.0e15 (the superseding r11 bound;
-    see stats_q._ssum2). Two distinct failure modes above it: at int64
-    max (9.2e18) Spark's ``floor(double)`` returns BIGINT and SATURATES
-    while DuckDB's floor stays double, but already past 2^53 the rounded
-    k/10^n stops round-tripping a double's ≤17 significant digits and
-    the two engines' double→DECIMAL conversions diverge (the
-    q_anova_hod failure). Pick n per call site from the term's
-    magnitude bound; the rounding digit only has to make the Σ
-    partition-order independent, not preserve precision. Wide dynamic
-    range: use stats_q._ssum2/_dsum2 (two-bucket split).
-
-    The cast scale MUST equal the rounding digits (r09 lesson): a
-    rounded term k/10^n is converted EXACTLY by both engines at scale
-    n, but DuckDB's double→DECIMAL(38,18) conversion goes through
-    float scaling and mangles digits below the double's precision
-    (~|x|·1e-16 garbage per term — Spark's shortest-repr cast stays
-    clean), which 5 terms of magnitude 2.4e7 amplified to a 1e-8
-    ss_between divergence on q_levene_bf at sf0.1."""
-    return f"CAST({_pr(expr, n)} AS DECIMAL(38,{n}))"
-
-
-def _sterm(col, n: int = 12) -> F.Column:
-    """Spark twin of :func:`_dterm` (same caveats)."""
-    return portable_round(col, n).cast(f"decimal(38,{n})")
-
 
 @query(
     "q_kruskal_wallis",
@@ -102,10 +72,10 @@ def _sterm(col, n: int = 12) -> F.Column:
     ),
     parts AS (
         SELECT n, k,
-               CAST(SUM({_dterm(
+               {sql_term_sum(
                    "(CAST(s2 AS DOUBLE) / CAST(n + 1 AS DOUBLE))"
                    " * (CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE))"
-                   " / (4.0 * CAST(nj AS DOUBLE))", 6)}) AS DOUBLE)
+                   " / (4.0 * CAST(nj AS DOUBLE))", 6)}
                    AS sumnorm
         FROM rj CROSS JOIN tot GROUP BY n, k
     ),
@@ -121,8 +91,8 @@ def _sterm(col, n: int = 12) -> F.Column:
         FROM parts, ties
     )
     SELECT k, n, CAST(k - 1 AS BIGINT) AS df,
-           {_pr("h", 6)} AS h,
-           CASE WHEN c <= 0 THEN NULL ELSE {_pr("h / c", 6)} END AS h_tie_adj
+           {sql_portable_round("h", 6)} AS h,
+           CASE WHEN c <= 0 THEN NULL ELSE {sql_portable_round("h / c", 6)} END AS h_tie_adj
     FROM stat
     """,
 )
@@ -175,7 +145,7 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = (
         rj.crossJoin(F.broadcast(tot))
         .groupBy("n", "k")
-        .agg(F.sum(_sterm(term, 6)).cast("double").alias("sumnorm"))
+        .agg(term_sum(term, 6).alias("sumnorm"))
     )
     ties = pre.agg(
         F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t"))
@@ -214,25 +184,24 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     g AS (
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS nj,
-               CAST(SUM({_dterm("z", 12)}) AS DOUBLE) AS sz,
-               CAST(SUM({_dterm("z * z", 12)}) AS DOUBLE) AS szz
+               {sql_term_sum("z", 12)} AS sz,
+               {sql_term_sum("z * z", 12)} AS szz
         FROM z GROUP BY 1
     ),
     parts AS (
         SELECT CAST(SUM(nj) AS BIGINT) AS n,
                CAST(COUNT(*) AS BIGINT) AS k,
-               CAST(SUM({_dterm("sz", 8)}) AS DOUBLE) AS s,
-               CAST(SUM({_dterm("nj * (sz / nj) * (sz / nj)", 4)}) AS DOUBLE)
+               {sql_term_sum("sz", 8)} AS s,
+               {sql_term_sum("nj * (sz / nj) * (sz / nj)", 4)}
                    AS sum_njzb2,
-               CAST(SUM({_dterm("szz - nj * (sz / nj) * (sz / nj)", 4)})
-                    AS DOUBLE) AS ssw
+               {sql_term_sum("szz - nj * (sz / nj) * (sz / nj)", 4)} AS ssw
         FROM g
     )
     SELECT k, n,
-           {_pr("sum_njzb2 - n * (s / n) * (s / n)", 8)} AS ss_between,
-           {_pr("ssw", 8)} AS ss_within,
+           {sql_portable_round("sum_njzb2 - n * (s / n) * (s / n)", 8)} AS ss_between,
+           {sql_portable_round("ssw", 8)} AS ss_within,
            CASE WHEN ssw <= 0 OR n <= k THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "((sum_njzb2 - n * (s / n) * (s / n)) / (k - 1))"
                     " / (ssw / (n - k))", 6)} END AS f_stat
     FROM parts
@@ -263,19 +232,17 @@ def q_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rational on both engines
     g = z.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("nj"),
-        F.sum(_sterm(F.col("z"), 12)).cast("double").alias("sz"),
-        F.sum(_sterm(F.col("z") * F.col("z"), 12))
-        .cast("double")
+        term_sum(F.col("z"), 12).alias("sz"),
+        term_sum(F.col("z") * F.col("z"), 12)
         .alias("szz"),
     )
     zb = F.col("sz") / F.col("nj")
     parts = g.agg(
         F.sum("nj").cast("bigint").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum(_sterm(F.col("sz"), 8)).cast("double").alias("s"),
-        F.sum(_sterm(F.col("nj") * zb * zb, 4)).cast("double").alias("sum_njzb2"),
-        F.sum(_sterm(F.col("szz") - F.col("nj") * zb * zb, 4))
-        .cast("double")
+        term_sum(F.col("sz"), 8).alias("s"),
+        term_sum(F.col("nj") * zb * zb, 4).alias("sum_njzb2"),
+        term_sum(F.col("szz") - F.col("nj") * zb * zb, 4)
         .alias("ssw"),
     )
     ssb = (
@@ -340,7 +307,7 @@ def q_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT symbol, n, w_plus,
            CASE WHEN var_w <= 0 THEN NULL
-                ELSE {_pr("(w_plus - mu) / sqrt(var_w)", 6)} END AS z
+                ELSE {sql_portable_round("(w_plus - mu) / sqrt(var_w)", 6)} END AS z
     FROM stat ORDER BY symbol
     """,
 )
@@ -436,12 +403,12 @@ def q_wilcoxon_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM rj
     )
     SELECT k, b,
-           {_pr(
+           {sql_portable_round(
                "3.0 * CAST(sumsq AS DOUBLE)"
                " / (CAST(b AS DOUBLE) * k * (k + 1))"
                " - 3.0 * CAST(b AS DOUBLE) * (k + 1)", 6)} AS chi2_f,
            CASE WHEN k <= 1 OR b = 0 THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "(3.0 * CAST(sumsq AS DOUBLE)"
                     " / (CAST(b AS DOUBLE) * k * (k + 1))"
                     " - 3.0 * CAST(b AS DOUBLE) * (k + 1))"
@@ -515,8 +482,8 @@ def q_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     m AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM({_dterm("x", 12)}) AS DOUBLE) AS s,
-               CAST(SUM({_dterm("x * x", 12)}) AS DOUBLE) AS ss
+               {sql_term_sum("x", 12)} AS s,
+               {sql_term_sum("x * x", 12)} AS ss
         FROM x GROUP BY 1
     ),
     dev AS (
@@ -533,9 +500,9 @@ def q_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT symbol, n,
            t.day AS suspect_day,
-           {_pr("t.x", 8)} AS suspect_x,
+           {sql_portable_round("t.x", 8)} AS suspect_x,
            CASE WHEN n < 3 OR (ss - s * s / n) / (n - 1) <= 0 THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "t.d / sqrt((ss - s * s / n) / (n - 1))", 6)} END AS g
     FROM top ORDER BY symbol
     """,
@@ -556,9 +523,8 @@ def q_grubbs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = x.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(_sterm(F.col("x"), 12)).cast("double").alias("s"),
-        F.sum(_sterm(F.col("x") * F.col("x"), 12))
-        .cast("double")
+        term_sum(F.col("x"), 12).alias("s"),
+        term_sum(F.col("x") * F.col("x"), 12)
         .alias("ss"),
     )
     dev = x.join(F.broadcast(m), "symbol").select(
@@ -602,8 +568,8 @@ def q_grubbs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH g AS (
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS nj,
-               CAST(SUM({_dterm("value", 12)}) AS DOUBLE) AS s,
-               CAST(SUM({_dterm("value * value", 12)}) AS DOUBLE)
+               {sql_term_sum("value", 12)} AS s,
+               {sql_term_sum("value * value", 12)}
                    AS ss
         FROM events GROUP BY 1
         HAVING COUNT(*) > 1
@@ -617,15 +583,15 @@ def q_grubbs(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT CAST(SUM(nj) AS BIGINT) AS n,
                CAST(COUNT(*) AS BIGINT) AS k,
                CAST(MIN(var_j) AS DOUBLE) AS min_var,
-               CAST(SUM({_dterm("(nj - 1) * var_j", 6)}) AS DOUBLE) AS sp_num,
-               CAST(SUM({_dterm("(nj - 1) * ln(var_j)", 8)}) AS DOUBLE)
+               {sql_term_sum("(nj - 1) * var_j", 6)} AS sp_num,
+               {sql_term_sum("(nj - 1) * ln(var_j)", 8)}
                    AS sum_lnv,
-               CAST(SUM({_dterm("1.0 / (nj - 1)")}) AS DOUBLE) AS sum_inv
+               {sql_term_sum("1.0 / (nj - 1)", 12)} AS sum_inv
         FROM v
     )
     SELECT k, n,
            CASE WHEN min_var <= 0 OR n <= k OR k < 2 THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "((n - k) * ln(sp_num / (n - k)) - sum_lnv)"
                     " / (1.0 + (sum_inv - 1.0 / (n - k))"
                     "   / (3.0 * (k - 1)))", 6)} END AS chi2,
@@ -648,9 +614,8 @@ def q_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("nj"),
-            F.sum(_sterm(F.col("value"), 12)).cast("double").alias("s"),
-            F.sum(_sterm(F.col("value") * F.col("value"), 12))
-            .cast("double")
+            term_sum(F.col("value"), 12).alias("s"),
+            term_sum(F.col("value") * F.col("value"), 12)
             .alias("ss"),
         )
         .filter(F.col("nj") > 1)
@@ -663,14 +628,11 @@ def q_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("nj").cast("bigint").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("k"),
         F.min("var_j").cast("double").alias("min_var"),
-        F.sum(_sterm((F.col("nj") - 1) * F.col("var_j"), 6))
-        .cast("double")
+        term_sum((F.col("nj") - 1) * F.col("var_j"), 6)
         .alias("sp_num"),
-        F.sum(_sterm((F.col("nj") - 1) * F.log("var_j"), 8))
-        .cast("double")
+        term_sum((F.col("nj") - 1) * F.log("var_j"), 8)
         .alias("sum_lnv"),
-        F.sum(_sterm(F.lit(1.0) / (F.col("nj") - 1)))
-        .cast("double")
+        term_sum(F.lit(1.0) / (F.col("nj") - 1), 12)
         .alias("sum_inv"),
     )
     nk = (F.col("n") - F.col("k")).cast("double")
@@ -727,7 +689,7 @@ def q_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT k, b, n,
            CASE WHEN k * n - srr = 0 THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "CAST(k - 1 AS DOUBLE) * (k * scc - CAST(n AS DOUBLE) * n)"
                     " / (CAST(k AS DOUBLE) * n - srr)", 6)} END AS q,
            CAST(k - 1 AS BIGINT) AS df
@@ -811,13 +773,11 @@ def q_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH mo AS (
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM({_dterm("value", 12)}) AS DOUBLE) AS s1,
-               CAST(SUM({_dterm("value * value", 12)}) AS DOUBLE)
+               {sql_term_sum("value", 12)} AS s1,
+               {sql_term_sum("value * value", 12)}
                    AS s2,
-               CAST(SUM({_dterm("value * value * value", 10)})
-                    AS DOUBLE) AS s3,
-               CAST(SUM({_dterm("value * value * value * value", 7)})
-                    AS DOUBLE) AS s4
+               {sql_term_sum("value * value * value", 10)} AS s3,
+               {sql_term_sum("value * value * value * value", 7)} AS s4
         FROM events GROUP BY 1
     ),
     c AS (
@@ -832,13 +792,13 @@ def q_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM mo
     )
     SELECT event_type, n,
-           {_pr("m1", 6)} AS mean,
-           {_pr("sqrt(m2)", 6)} AS stddev_pop,
+           {sql_portable_round("m1", 6)} AS mean,
+           {sql_portable_round("sqrt(m2)", 6)} AS stddev_pop,
            CASE WHEN m2 <= 0 THEN NULL
-                ELSE {_pr("m3 / (sqrt(m2) * sqrt(m2) * sqrt(m2))", 6)} END
+                ELSE {sql_portable_round("m3 / (sqrt(m2) * sqrt(m2) * sqrt(m2))", 6)} END
                AS skewness,
            CASE WHEN m2 <= 0 THEN NULL
-                ELSE {_pr("m4 / (m2 * m2) - 3.0", 6)} END AS excess_kurtosis
+                ELSE {sql_portable_round("m4 / (m2 * m2) - 3.0", 6)} END AS excess_kurtosis
     FROM c ORDER BY event_type
     """,
 )
@@ -856,15 +816,15 @@ def q_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     v = F.col("value")
     # rounding digits shrink with the power so |term|·10^n stays under
-    # the int64 floor bound (_dterm): value ≤ ~561 → v³ ≤ 1.8e8 (10dp),
+    # the int64 floor bound (functions/exact.py): value ≤ ~561 → v³ ≤ 1.8e8 (10dp),
     # v⁴ ≤ 1e11 (7dp) — still finer than the double ulp at those
     # magnitudes, so no precision is lost, only order dependence
     mo = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(_sterm(v, 12)).cast("double").alias("s1"),
-        F.sum(_sterm(v * v, 12)).cast("double").alias("s2"),
-        F.sum(_sterm(v * v * v, 10)).cast("double").alias("s3"),
-        F.sum(_sterm(v * v * v * v, 7)).cast("double").alias("s4"),
+        term_sum(v, 12).alias("s1"),
+        term_sum(v * v, 12).alias("s2"),
+        term_sum(v * v * v, 10).alias("s3"),
+        term_sum(v * v * v * v, 7).alias("s4"),
     )
     m1 = F.col("s1") / F.col("n")
     m2 = F.col("s2") / F.col("n") - m1 * m1
@@ -917,8 +877,8 @@ def q_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_type,
            CAST(MAX(n) AS BIGINT) AS n_total,
            CAST(COUNT(*) AS BIGINT) AS n_kept,
-           {_pr(
-               f"CAST(SUM({_dterm('value', 12)}) AS DOUBLE)"
+           {sql_portable_round(
+               f"{sql_term_sum('value', 12)}"
                " / COUNT(*)", 6)} AS trimmed_mean
     FROM kept GROUP BY event_type ORDER BY event_type
     """,
@@ -949,7 +909,7 @@ def q_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n").cast("bigint").alias("n_total"),
             F.count(F.lit(1)).cast("bigint").alias("n_kept"),
             portable_round(
-                F.sum(_sterm(F.col("value"), 12)).cast("double")
+                term_sum(F.col("value"), 12)
                 / F.count(F.lit(1)),
                 6,
             )
@@ -976,9 +936,9 @@ _QS = [round(0.05 * i, 2) for i in range(1, 20)]
     )
     SELECT CAST(i AS BIGINT) AS i,
            CAST(0.05 * i AS DOUBLE) AS p,
-           {_pr("qa.qs[CAST(i AS INTEGER)]", 6)} AS q_click,
-           {_pr("qb.qs[CAST(i AS INTEGER)]", 6)} AS q_purchase,
-           {_pr(
+           {sql_portable_round("qa.qs[CAST(i AS INTEGER)]", 6)} AS q_click,
+           {sql_portable_round("qb.qs[CAST(i AS INTEGER)]", 6)} AS q_purchase,
+           {sql_portable_round(
                "qb.qs[CAST(i AS INTEGER)] - qa.qs[CAST(i AS INTEGER)]",
                6)} AS diff
     FROM qa, qb, range(1, 20) t(i)
@@ -1059,15 +1019,15 @@ def q_qq_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     mo AS (
         SELECT sa, sb,
                CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM({_dterm("y", 12)}) AS DOUBLE) AS sy,
-               CAST(SUM({_dterm("y * y", 10)}) AS DOUBLE) AS syy,
-               CAST(SUM({_dterm("x1", 12)}) AS DOUBLE) AS s1,
-               CAST(SUM({_dterm("x2", 12)}) AS DOUBLE) AS s2,
-               CAST(SUM({_dterm("x1 * x1", 10)}) AS DOUBLE) AS s11,
-               CAST(SUM({_dterm("x2 * x2", 10)}) AS DOUBLE) AS s22,
-               CAST(SUM({_dterm("x1 * x2", 10)}) AS DOUBLE) AS s12,
-               CAST(SUM({_dterm("x1 * y", 10)}) AS DOUBLE) AS s1y,
-               CAST(SUM({_dterm("x2 * y", 10)}) AS DOUBLE) AS s2y
+               {sql_term_sum("y", 12)} AS sy,
+               {sql_term_sum("y * y", 10)} AS syy,
+               {sql_term_sum("x1", 12)} AS s1,
+               {sql_term_sum("x2", 12)} AS s2,
+               {sql_term_sum("x1 * x1", 10)} AS s11,
+               {sql_term_sum("x2 * x2", 10)} AS s22,
+               {sql_term_sum("x1 * x2", 10)} AS s12,
+               {sql_term_sum("x1 * y", 10)} AS s1y,
+               {sql_term_sum("x2 * y", 10)} AS s2y
         FROM j GROUP BY 1, 2
     ),
     c AS (
@@ -1097,9 +1057,9 @@ def q_qq_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT sa AS symbol_y, sb AS symbol_x, n,
            CASE WHEN det <= 0 THEN NULL
-                ELSE {_pr("b2n / det", 8)} END AS cross_lag_beta,
+                ELSE {sql_portable_round("b2n / det", 8)} END AS cross_lag_beta,
            CASE WHEN det <= 0 OR c11 <= 0 OR rss_u <= 0 OR n <= 3 THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "(rss_r - rss_u) / (rss_u / (n - 3))", 6)} END AS f_stat
     FROM rss ORDER BY symbol_y, symbol_x
     """,
@@ -1140,9 +1100,9 @@ def q_granger_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # linear return terms round 12dp; PRODUCTS round 10dp — a near-zero
     # lag close makes |r| reach ~1e4 at sf0.1, so r·r ~1e8 would
-    # overflow the int64 floor bound at 12dp (_dterm)
+    # overflow the int64 floor bound at 12dp (functions/exact.py)
     def dsum(col, alias, n=10):
-        return F.sum(_sterm(col, n)).cast("double").alias(alias)
+        return term_sum(col, n).alias(alias)
 
     y, x1, x2 = F.col("y"), F.col("x1"), F.col("x2")
     mo = j.groupBy("sa", "sb").agg(
@@ -1213,29 +1173,29 @@ def q_granger_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     mi AS (
         SELECT CAST(MAX(nn) AS BIGINT) AS n,
-               CAST(SUM({_dterm(
+               {sql_term_sum(
                    "(CAST(n AS DOUBLE) / nn)"
                    " * ln((CAST(n AS DOUBLE) * nn)"
-                   "      / (CAST(nr AS DOUBLE) * nc))", 12)}) AS DOUBLE)
+                   "      / (CAST(nr AS DOUBLE) * nc))", 12)}
                    AS mi_nats
         FROM terms
     ),
     hr AS (
-        SELECT CAST(SUM({_dterm(
+        SELECT {sql_term_sum(
             "-(CAST(nr AS DOUBLE) / t.nn)"
-            " * ln(CAST(nr AS DOUBLE) / t.nn)", 12)}) AS DOUBLE) AS h_row
+            " * ln(CAST(nr AS DOUBLE) / t.nn)", 12)} AS h_row
         FROM rm CROSS JOIN tot t
     ),
     hc AS (
-        SELECT CAST(SUM({_dterm(
+        SELECT {sql_term_sum(
             "-(CAST(nc AS DOUBLE) / t.nn)"
-            " * ln(CAST(nc AS DOUBLE) / t.nn)", 12)}) AS DOUBLE) AS h_col
+            " * ln(CAST(nc AS DOUBLE) / t.nn)", 12)} AS h_col
         FROM cm CROSS JOIN tot t
     )
     SELECT n,
-           {_pr("mi_nats", 6)} AS mi_nats,
+           {sql_portable_round("mi_nats", 6)} AS mi_nats,
            CASE WHEN h_row * h_col <= 0 THEN NULL
-                ELSE {_pr("mi_nats / sqrt(h_row * h_col)", 6)} END
+                ELSE {sql_portable_round("mi_nats / sqrt(h_row * h_col)", 6)} END
                AS nmi
     FROM mi, hr, hc
     """,
@@ -1274,33 +1234,21 @@ def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mi = terms.agg(
         F.max("nn").cast("bigint").alias("n"),
-        F.sum(_sterm(mi_term, 12)).cast("double").alias("mi_nats"),
+        term_sum(mi_term, 12).alias("mi_nats"),
     )
     hr = (
         rm.crossJoin(F.broadcast(tot))
         .agg(
-            F.sum(
-                _sterm(
-                    -(F.col("nr").cast("double") / F.col("nn"))
-                    * F.log(F.col("nr").cast("double") / F.col("nn")),
-                    12,
-                )
-            )
-            .cast("double")
+            term_sum(-(F.col("nr").cast("double") / F.col("nn"))
+                    * F.log(F.col("nr").cast("double") / F.col("nn")), 12)
             .alias("h_row")
         )
     )
     hc = (
         cm.crossJoin(F.broadcast(tot))
         .agg(
-            F.sum(
-                _sterm(
-                    -(F.col("nc").cast("double") / F.col("nn"))
-                    * F.log(F.col("nc").cast("double") / F.col("nn")),
-                    12,
-                )
-            )
-            .cast("double")
+            term_sum(-(F.col("nc").cast("double") / F.col("nn"))
+                    * F.log(F.col("nc").cast("double") / F.col("nn")), 12)
             .alias("h_col")
         )
     )
@@ -1337,18 +1285,18 @@ def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT a, b, c, d,
            CASE WHEN b * c = 0 THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "(CAST(a AS DOUBLE) * d) / (CAST(b AS DOUBLE) * c)",
                     6)} END AS odds_ratio,
            CASE WHEN a = 0 OR b = 0 OR c = 0 OR d = 0 THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "exp(ln((CAST(a AS DOUBLE) * d)"
                     "        / (CAST(b AS DOUBLE) * c))"
                     "    - 1.959963984540054"
                     "      * sqrt(1.0 / a + 1.0 / b + 1.0 / c + 1.0 / d))",
                     6)} END AS ci_lo,
            CASE WHEN a = 0 OR b = 0 OR c = 0 OR d = 0 THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "exp(ln((CAST(a AS DOUBLE) * d)"
                     "        / (CAST(b AS DOUBLE) * c))"
                     "    + 1.959963984540054"
@@ -1420,10 +1368,10 @@ def q_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM events
     )
     SELECT k1, k2, hours,
-           {_pr("CAST(k1 AS DOUBLE) / hours", 6)} AS rate_click,
-           {_pr("CAST(k2 AS DOUBLE) / hours", 6)} AS rate_error,
+           {sql_portable_round("CAST(k1 AS DOUBLE) / hours", 6)} AS rate_click,
+           {sql_portable_round("CAST(k2 AS DOUBLE) / hours", 6)} AS rate_error,
            CASE WHEN k1 + k2 = 0 THEN NULL
-                ELSE {_pr(
+                ELSE {sql_portable_round(
                     "(CAST(k1 AS DOUBLE) - k2)"
                     " / sqrt(CAST(k1 AS DOUBLE) + k2)", 6)} END AS z
     FROM k CROSS JOIN span
@@ -1484,8 +1432,8 @@ def q_poisson_rate_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH mom AS (
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS n,
-               SUM({_dterm("value", 12)}) AS sv,
-               SUM({_dterm("value * value", 10)}) AS svv
+               SUM({sql_term("value", 12)}) AS sv,
+               SUM({sql_term("value * value", 10)}) AS svv
         FROM events GROUP BY event_type HAVING COUNT(*) >= 8
     ),
     ms AS (
@@ -1516,7 +1464,7 @@ def q_poisson_rate_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     terms AS (
         SELECT event_type, n,
-               {_dterm(
+               {sql_term(
                    "(2.0 * i - 1.0) * ln(p)"
                    " + (2.0 * (n - i) + 1.0) * ln(1.0 - p)", 8)} AS t
         FROM phi
@@ -1527,10 +1475,10 @@ def q_poisson_rate_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM terms GROUP BY event_type, n
     )
     SELECT a.event_type, a.n,
-           {_pr("ms.mean", 6)} AS mean,
-           {_pr("ms.std", 6)} AS std,
-           {_pr("a.a2", 4)} AS a2,
-           {_pr("a.a2 * (1.0 + 0.75 / a.n + 2.25 / (a.n * a.n))", 4)}
+           {sql_portable_round("ms.mean", 6)} AS mean,
+           {sql_portable_round("ms.std", 6)} AS std,
+           {sql_portable_round("a.a2", 4)} AS a2,
+           {sql_portable_round("a.a2 * (1.0 + 0.75 / a.n + 2.25 / (a.n * a.n))", 4)}
                AS a2_star
     FROM a JOIN ms ON ms.event_type = a.event_type
     ORDER BY a.event_type
@@ -1547,7 +1495,7 @@ def q_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     1/(1+exp(−(1.5976z+0.070565992z³))) — max |error| < 1.4e-4 —
     embedded as IDENTICAL literals on both engines (no cross-libm
     normal-CDF dependency; exp/ln ulp noise is absorbed by the 8dp term
-    round before the DECIMAL Σ). Unlike most _dterm call sites the term
+    round before the DECIMAL Σ). Unlike most sql_term call sites the term
     bound here GROWS with the group size — |t| ≤ 2n·|ln 1e-15| ≈ 69n —
     so the 8dp round saturates Spark's int64 floor once a single
     event_type exceeds ~1.3e9 rows (and the DECIMAL(38,18) Σ ≈ 69n²
@@ -1564,8 +1512,8 @@ def q_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(_sterm(F.col("value"), 12)).alias("sv"),
-            F.sum(_sterm(F.col("value") * F.col("value"), 10)).alias("svv"),
+            F.sum(term(F.col("value"), 12)).alias("sv"),
+            F.sum(term(F.col("value") * F.col("value"), 10)).alias("svv"),
         )
         .filter(F.col("n") >= 8)
     )
@@ -1615,7 +1563,7 @@ def q_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = z.select(
         "event_type",
         "n",
-        _sterm(
+        term(
             (2.0 * F.col("i") - 1.0) * F.log(p)
             + (2.0 * (F.col("n") - F.col("i")) + 1.0) * F.log(1.0 - p),
             8,

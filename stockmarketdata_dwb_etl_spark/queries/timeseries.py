@@ -24,6 +24,7 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
     sql_term_sum,
+    term_sum,
 )
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.registry import query
@@ -592,7 +593,7 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT symbol, field,
            CAST(COUNT(*) AS BIGINT) AS n_bars,
-           CAST({sql_portable_round(sql_term_sum("v") + " / COUNT(*)", 4)} AS DOUBLE) AS avg_value
+           CAST({sql_portable_round(sql_term_sum("v", 12) + " / COUNT(*)", 4)} AS DOUBLE) AS avg_value
     FROM long GROUP BY symbol, field
     """,
 )
@@ -626,7 +627,7 @@ def q_unpivot_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact order-independent Σ (functions/exact.py::sql_term_sum): a
     # double AVG depends on the order partial sums merge, and DuckDB's
     # threads made the oracle flip at 4dp half boundaries between runs
-    total = F.sum(portable_round("v", 12).cast("decimal(38,12)")).cast("double")
+    total = term_sum("v", 12)
     n = F.count(F.lit(1))
     return long.groupBy("symbol", "field").agg(
         n.alias("n_bars"),

@@ -21,11 +21,14 @@ from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
-    sql_portable_round,
+    split_term_sum,
+    sql_split_term_sum,
+    sql_term,
+    sql_term_sum,
+    term,
+    term_sum,
 )
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.queries.dataops11 import _dsum, _ssum
-from stockmarketdata_dwb_etl_spark.queries.stats_q import _dsum2, _ssum2
 from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -509,8 +512,8 @@ def q_tick_rule(spark: SparkSession, sf_dir: str) -> DataFrame:
     m AS (
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS n,
-               {_dsum("dt_s", 6)} AS s,
-               {_dsum2("dt_s * dt_s", 6, 0)} AS ss
+               {sql_term_sum("dt_s", 6)} AS s,
+               {sql_split_term_sum("dt_s * dt_s", 6, 0)} AS ss
         FROM gaps GROUP BY event_type
     )
     SELECT event_type, n,
@@ -550,8 +553,8 @@ def q_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (safe to |dt_s| < ~9.5e7 s ≈ 3 years — beyond any table span).
     m = gaps.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        _ssum(F.col("dt_s"), 6).alias("s"),
-        _ssum2(F.col("dt_s") * F.col("dt_s"), 6, 0).alias("ss"),
+        term_sum(F.col("dt_s"), 6).alias("s"),
+        split_term_sum(F.col("dt_s") * F.col("dt_s"), 6, 0).alias("ss"),
     )
     mu = F.col("s") / F.col("n")
     sd = F.sqrt(F.greatest(F.col("ss") / F.col("n") - mu * mu, F.lit(0.0)))
@@ -710,10 +713,8 @@ def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     segs AS (
         SELECT symbol, seg,
-               SUM(CAST({sql_portable_round("close", 12)}
-                   AS DECIMAL(38,12))) AS ssum,
-               SUM(CAST({sql_portable_round("close * close", 8)}
-                   AS DECIMAL(38,8))) AS ssq,
+               SUM({sql_term("close", 12)}) AS ssum,
+               SUM({sql_term("close * close", 8)}) AS ssq,
                CAST(COUNT(*) AS BIGINT) AS cnt
         FROM pos GROUP BY symbol, seg
     ),
@@ -788,12 +789,10 @@ def q_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
         # reaches ~3.1e5, so the raw 18-scale cast was engine-asymmetric.
         # Sums STAY decimal so the cross-segment window sums keep exact.
         F.sum(
-            portable_round(F.col("close"), 12).cast("decimal(38,12)")
+            term(F.col("close"), 12)
         ).alias("ssum"),
         F.sum(
-            portable_round(F.col("close") * F.col("close"), 8).cast(
-                "decimal(38,8)"
-            )
+            term(F.col("close") * F.col("close"), 8)
         ).alias("ssq"),
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
     )

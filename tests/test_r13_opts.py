@@ -1,7 +1,8 @@
 """Focused tests for the round-13 optimization internals:
 
-- _ssum_hilo/_ssum_fin (two-long-bucket sum) must be BIT-identical to the
-  DECIMAL(38,n) _ssum over adversarial magnitudes, signs and grouping.
+- hilo_term_sum/hilo_finish (two-long-bucket sum) must be BIT-identical
+  to the DECIMAL(38,n) term_sum over adversarial magnitudes, signs and
+  grouping.
 - connected_components(assume_distinct=True) must produce the identical
   component labeling, and min-label propagation must be idempotent over
   duplicate edges (the property the flag relies on).
@@ -20,10 +21,10 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_ssum_hilo_bit_identical_grouped(spark):
-    from stockmarketdata_dwb_etl_spark.queries.dataops11 import (
-        _ssum,
-        _ssum_fin,
-        _ssum_hilo,
+    from stockmarketdata_dwb_etl_spark.functions.exact import (
+        hilo_finish,
+        hilo_term_sum,
+        term_sum,
     )
 
     # adversarial: mixed signs, half-boundary multiples of 1e-12, tiny
@@ -35,12 +36,12 @@ def test_ssum_hilo_bit_identical_grouped(spark):
         vals.append((i % 7, -((i * 11) % 997) * 1e-9))
     df = spark.createDataFrame(vals, ["g", "x"])
 
-    old = df.groupBy("g").agg(_ssum(F.col("x"), 12).alias("s"))
-    hi, lo = _ssum_hilo(F.col("x"), 12)
+    old = df.groupBy("g").agg(term_sum(F.col("x"), 12).alias("s"))
+    hi, lo = hilo_term_sum(F.col("x"), 12)
     new = (
         df.groupBy("g")
         .agg(hi.alias("sh"), lo.alias("sl"))
-        .select("g", _ssum_fin(F.col("sh"), F.col("sl"), 12).alias("s"))
+        .select("g", hilo_finish(F.col("sh"), F.col("sl"), 12).alias("s"))
     )
     got_old = {r["g"]: r["s"] for r in old.collect()}
     got_new = {r["g"]: r["s"] for r in new.collect()}
@@ -52,18 +53,18 @@ def test_ssum_hilo_bit_identical_grouped(spark):
 
 
 def test_ssum_hilo_order_independent(spark):
-    from stockmarketdata_dwb_etl_spark.queries.dataops11 import (
-        _ssum_fin,
-        _ssum_hilo,
+    from stockmarketdata_dwb_etl_spark.functions.exact import (
+        hilo_finish,
+        hilo_term_sum,
     )
 
     vals = [(((i * 13) % 1000 - 500) / 777.0,) for i in range(1, 800)]
-    hi, lo = _ssum_hilo(F.col("x"), 12)
+    hi, lo = hilo_term_sum(F.col("x"), 12)
 
     def total(df):
         return (
             df.agg(hi.alias("sh"), lo.alias("sl"))
-            .select(_ssum_fin(F.col("sh"), F.col("sl"), 12).alias("s"))
+            .select(hilo_finish(F.col("sh"), F.col("sl"), 12).alias("s"))
             .collect()[0]["s"]
         )
 

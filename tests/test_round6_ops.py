@@ -13,7 +13,7 @@ def test_portable_round_saturates_above_int64(spark):
     """Document the engine-asymmetric overflow: Spark's floor(double)
     returns BIGINT and saturates at int64 max, so portable_round(x, n)
     corrupts any |x| >= ~9.2e18 / 10^n. Call sites with large terms
-    must pre-normalize or lower n (stats_q2._dterm contract)."""
+    must pre-normalize or lower n (functions/exact.py term contract)."""
     row = (
         spark.range(1)
         .select(
