@@ -13,9 +13,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    ohlcv_bars,
+    sql_ohlcv_bars,
+    sql_tick_key,
+    tick_key,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import portable_round, term_sum
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
 
 _DEC = "decimal(38,6)"
@@ -142,12 +147,7 @@ def q_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_index_rebase",
     oracle=f"""
-    WITH bars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    )
+    WITH bars AS ({sql_ohlcv_bars("hour", "close")})
     SELECT symbol, bar_ts,
            CAST((CAST(floor(CAST((close) AS DOUBLE) * 10000.0 + 0.5) AS DOUBLE) / 10000.0) AS DOUBLE) AS close,
            CAST((CAST(floor(CAST((close / first_value(close)
@@ -164,10 +164,7 @@ def q_index_rebase(spark: SparkSession, sf_dir: str) -> DataFrame:
     the quotient is raw-parquet doubles in identical-tree double. One
     window shuffle on symbol, O(1) state per row."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     return bars.select(
         "symbol",
@@ -548,7 +545,7 @@ def q_hll_union_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                    OVER w AS touch_ts
         FROM events
         WINDOW w AS (PARTITION BY user_id
-                     ORDER BY {_DUCK_ORD}
+                     ORDER BY {sql_tick_key()}
                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
     ),
     conv AS (
@@ -579,7 +576,7 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_touch = F.col("event_type").isin("view", "click", "signup")
     w = (
         Window.partitionBy("user_id")
-        .orderBy(_spark_ord())
+        .orderBy(tick_key())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     seq = ev.select(

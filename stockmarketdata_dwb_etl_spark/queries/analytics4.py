@@ -6,7 +6,7 @@ Reports over the event/order warehouse the reference feeds
 analytic queries live in the warehouse this engine replaces natively).
 
 Determinism: conversion grouping and touch ordering run over the padded
-(ts, event_id) total order (timeseries.py::_spark_ord — ties walk the
+(ts, event_id) total order (functions/bars.py::tick_key — ties walk the
 same way on both engines); fractional credits and shares are double
 expressions through identical trees, term-rounded into exact DECIMAL
 sums where they aggregate.
@@ -19,6 +19,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    bar_returns,
+    ohlcv_bars,
+    sql_bar_returns,
+    sql_ohlcv_bars,
+    sql_tick_key,
+    tick_key,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
@@ -26,10 +34,6 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     sql_term_sum,
     term,
     term_sum,
-)
-from stockmarketdata_dwb_etl_spark.queries.timeseries import (
-    _DUCK_ORD,
-    _spark_ord,
 )
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -43,7 +47,7 @@ from stockmarketdata_dwb_etl_spark.registry import query
                event_type IN ('view','click','signup') AS is_touch,
                COALESCE(SUM(CASE WHEN event_type = 'purchase'
                                  THEN 1 ELSE 0 END)
-                   OVER (PARTITION BY user_id ORDER BY {_DUCK_ORD}
+                   OVER (PARTITION BY user_id ORDER BY {sql_tick_key()}
                          ROWS BETWEEN UNBOUNDED PRECEDING
                                   AND 1 PRECEDING), 0) AS conv_idx
         FROM events
@@ -64,7 +68,7 @@ from stockmarketdata_dwb_etl_spark.registry import query
     touches AS (
         SELECT channel,
                row_number() OVER (PARTITION BY user_id, conv_idx
-                                  ORDER BY {_DUCK_ORD}) AS pos,
+                                  ORDER BY {sql_tick_key()}) AS pos,
                COUNT(*) OVER (PARTITION BY user_id, conv_idx) AS n_touch
         FROM attributed
     ),
@@ -108,7 +112,7 @@ def q_attribution_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_touch = F.col("event_type").isin("view", "click", "signup")
     w_prior = (
         Window.partitionBy("user_id")
-        .orderBy(_spark_ord())
+        .orderBy(tick_key())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     seq = ev.select(
@@ -160,7 +164,7 @@ def q_attribution_position(spark: SparkSession, sf_dir: str) -> DataFrame:
         "channel",
         F.row_number()
         .over(
-            Window.partitionBy("user_id", "conv_idx").orderBy(_spark_ord())
+            Window.partitionBy("user_id", "conv_idx").orderBy(tick_key())
         )
         .alias("pos"),
         F.count(F.lit(1)).over(g_full).alias("n_touch"),
@@ -301,19 +305,8 @@ def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_weekday_seasonality",
     oracle=f"""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
-    rets AS (
-        SELECT symbol, bar_ts,
-               close / lag(close) OVER (PARTITION BY symbol
-                                        ORDER BY bar_ts) - 1.0 AS r
-        FROM cbars
-        QUALIFY r IS NOT NULL
-    )
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")})
     SELECT symbol,
            CAST(dayofweek(bar_ts) AS INT) AS dow,
            CAST(COUNT(*) AS BIGINT) AS n_bars,
@@ -334,9 +327,12 @@ def q_weekday_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     12dp-rounded terms in an exact DECIMAL mean. Scales: bar hash-agg,
     one lag window on symbol, then a 7·|symbol| hash-agg — partial
     aggregation collapses the final exchange."""
-    from stockmarketdata_dwb_etl_spark.queries.finance2 import _returns
 
-    rets = _returns(spark, sf_dir)
+    rets = bar_returns(
+
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+
+    )
     return (
         rets.select(
             "symbol",

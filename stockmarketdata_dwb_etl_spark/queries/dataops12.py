@@ -35,6 +35,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    bar_returns,
+    ohlcv_bars,
+    sql_bar_returns,
+    sql_ohlcv_bars,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
@@ -55,20 +61,8 @@ _VAR_K = 3  # ceil(0.05 * 50): the 3rd smallest return = historical 5% VaR
 @query(
     "q_var_backtest",
     oracle=f"""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, printf('%020d-%012d', epoch_us(ts), event_id))
-                   AS close
-        FROM events GROUP BY 1, 2
-    ),
-    rets AS (
-        SELECT symbol, bar_ts,
-               close / lag(close) OVER (PARTITION BY symbol
-                                        ORDER BY bar_ts) - 1.0 AS r
-        FROM cbars
-        QUALIFY r IS NOT NULL
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     var_est AS (
         SELECT symbol, bar_ts, r,
                list_sort(list(r) OVER (PARTITION BY symbol ORDER BY bar_ts
@@ -118,9 +112,12 @@ def q_var_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = n take the analytic limits (0·ln 0 → 0). Scale: one bounded
     {_VAR_WIN}-row array-carrying window per symbol partition (the
     q_cci posture) + a per-symbol hash-agg; no global state."""
-    from stockmarketdata_dwb_etl_spark.queries.finance2 import _returns
 
-    rets = _returns(spark, sf_dir)
+    rets = bar_returns(
+
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+
+    )
     w = (
         Window.partitionBy("symbol")
         .orderBy("bar_ts")

@@ -31,6 +31,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    close_tick,
+    open_tick,
+    sql_close_tick,
+    sql_open_tick,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     split_term_sum,
@@ -367,9 +373,9 @@ def _duck_esd_round(prev: str, rnd: int) -> str:
     oracle=f"""
     WITH bars AS (
         SELECT event_type AS symbol, CAST(ts AS DATE) AS day0,
-               arg_min(value, printf('%020d-%012d', epoch_us(ts), event_id))
+               {sql_open_tick()}
                    AS open,
-               arg_max(value, printf('%020d-%012d', epoch_us(ts), event_id))
+               {sql_close_tick()}
                    AS close
         FROM events GROUP BY 1, 2
     ),
@@ -403,7 +409,6 @@ def q_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax window partitioned by symbol (tie-break day then x), one
     anti-join removal. Scale: everything partitions on the symbol key;
     rounds are a fixed constant, not data-dependent."""
-    from stockmarketdata_dwb_etl_spark.queries.timeseries import _spark_ord
 
     bars = (
         load_table(spark, sf_dir, "events")
@@ -412,8 +417,8 @@ def q_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts").cast("date").alias("day"),
         )
         .agg(
-            F.min_by("value", _spark_ord()).alias("open"),
-            F.max_by("value", _spark_ord()).alias("close"),
+            open_tick().alias("open"),
+            close_tick().alias("close"),
         )
     )
     # (symbol, day)-sized state; cut its lineage once — every GESD

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import ohlcv_bars, sql_ohlcv_bars
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
@@ -266,13 +267,7 @@ def q_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_conformal_intervals",
     oracle=f"""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, printf('%020d-%012d', epoch_us(ts), event_id))
-                   AS close
-        FROM events GROUP BY 1, 2
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
     seq AS (
         SELECT symbol, close,
                CAST(row_number() OVER (PARTITION BY symbol ORDER BY bar_ts)
@@ -349,13 +344,9 @@ def q_conformal_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows, one bounded calibration collect per symbol (calibration
     sets are fractions of a partition by construction), no global
     state."""
-    from stockmarketdata_dwb_etl_spark.queries.timeseries import _spark_ord
 
     ev = load_table(spark, sf_dir, "events")
-    cbars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    cbars = ohlcv_bars(ev, "hour", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     wp = Window.partitionBy("symbol")
     seq = cbars.select(

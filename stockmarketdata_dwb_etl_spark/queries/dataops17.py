@@ -38,6 +38,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    close_tick,
+    open_tick,
+    sql_close_tick,
+    sql_open_tick,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     hilo_finish,
     hilo_term_sum,
@@ -48,7 +54,6 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     sql_term_sum,
     term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -261,8 +266,8 @@ def _spark_p_two(z: Column) -> Column:
     oracle=f"""
     WITH bars AS (
         SELECT event_type AS symbol, CAST(ts AS DATE) AS day,
-               arg_min(value, {_DUCK_ORD}) AS open,
-               arg_max(value, {_DUCK_ORD}) AS close
+               {sql_open_tick()} AS open,
+               {sql_close_tick()} AS close
         FROM events GROUP BY 1, 2
     ),
     rets AS (
@@ -328,8 +333,8 @@ def q_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("symbol"),
         F.col("ts").cast("date").alias("day"),
     ).agg(
-        F.min_by("value", _spark_ord()).alias("open"),
-        F.max_by("value", _spark_ord()).alias("close"),
+        open_tick().alias("open"),
+        close_tick().alias("close"),
     )
     rets = bars.filter(F.col("open") != 0).select(
         "symbol", (F.col("close") / F.col("open") - 1.0).alias("x")

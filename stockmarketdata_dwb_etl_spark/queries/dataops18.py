@@ -37,13 +37,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    close_tick,
+    ohlcv_bars,
+    sql_close_tick,
+    sql_ohlcv_bars,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
     sql_term_sum,
     term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -56,7 +61,7 @@ from stockmarketdata_dwb_etl_spark.registry import query
     oracle=f"""
     WITH bars AS (
         SELECT event_type AS symbol, CAST(ts AS DATE) AS day,
-               arg_max(value, {_DUCK_ORD}) AS close
+               {sql_close_tick()} AS close
         FROM events GROUP BY 1, 2
     ),
     s AS (
@@ -116,7 +121,7 @@ def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars = ev.groupBy(
         F.col("event_type").alias("symbol"),
         F.col("ts").cast("date").alias("day"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    ).agg(close_tick().alias("close"))
     a = bars.select("symbol", F.col("day").alias("da"), F.col("close").alias("ca"))
     b = bars.select(
         F.col("symbol").alias("sb"),
@@ -450,11 +455,7 @@ _HAMPEL_SCALE = 1.4826  # MAD → σ consistency constant for the normal
 @query(
     "q_hampel_filter",
     oracle=f"""
-    WITH cbars AS (
-        SELECT event_type AS symbol, date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
     arrs AS (
         SELECT symbol, bar_ts, close,
                list(close) OVER (PARTITION BY symbol ORDER BY bar_ts
@@ -499,10 +500,7 @@ def q_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     bar hash-agg + one symbol-partitioned 7-row sliding window — the
     array state is 7 elements per row regardless of data size."""
     ev = load_table(spark, sf_dir, "events")
-    cbars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    cbars = ohlcv_bars(ev, "hour", "close")
     w = (
         Window.partitionBy("symbol")
         .orderBy("bar_ts")

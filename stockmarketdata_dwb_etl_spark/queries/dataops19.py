@@ -35,6 +35,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    close_tick,
+    open_tick,
+    sql_close_tick,
+    sql_open_tick,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     hilo_finish,
     hilo_term_sum,
@@ -531,9 +537,9 @@ def _duck_haar_level(prev: str, lvl: int) -> str:
     oracle=f"""
     WITH bars AS (
         SELECT event_type AS symbol, CAST(ts AS DATE) AS day,
-               arg_min(value, printf('%020d-%012d', epoch_us(ts), event_id))
+               {sql_open_tick()}
                    AS open,
-               arg_max(value, printf('%020d-%012d', epoch_us(ts), event_id))
+               {sql_close_tick()}
                    AS close
         FROM events GROUP BY 1, 2
     ),
@@ -575,7 +581,6 @@ def q_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     opens — the q_esd_outliers bound). Scale: each level is one
     hash-agg keyed by (symbol, pair) — depth is a constant, data
     volume HALVES per level."""
-    from stockmarketdata_dwb_etl_spark.queries.timeseries import _spark_ord
 
     bars = (
         load_table(spark, sf_dir, "events")
@@ -584,8 +589,8 @@ def q_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts").cast("date").alias("day"),
         )
         .agg(
-            F.min_by("value", _spark_ord()).alias("open"),
-            F.max_by("value", _spark_ord()).alias("close"),
+            open_tick().alias("open"),
+            close_tick().alias("close"),
         )
     )
     a0 = bars.filter(F.col("open") != 0).select(

@@ -35,6 +35,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    close_tick,
+    open_tick,
+    sql_close_tick,
+    sql_open_tick,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     hilo_finish,
     hilo_term_sum,
@@ -45,7 +51,7 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     term,
     term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.dataops5 import _DUCK_SCORED_EN
+from stockmarketdata_dwb_etl_spark.queries.dataops5 import SQL_SCORED_EN, scored_en
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -58,9 +64,9 @@ from stockmarketdata_dwb_etl_spark.registry import query
     oracle=f"""
     WITH bars AS (
         SELECT event_type AS symbol, CAST(ts AS DATE) AS day,
-               arg_min(value, printf('%020d-%012d', epoch_us(ts), event_id))
+               {sql_open_tick()}
                    AS open,
-               arg_max(value, printf('%020d-%012d', epoch_us(ts), event_id))
+               {sql_close_tick()}
                    AS close
         FROM events GROUP BY 1, 2
     ),
@@ -121,7 +127,6 @@ def q_binseg_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     an identical-tree double rounded 8dp before the argmin. Scale: one
     rank window + one running-sum window + one argmax, all partitioned
     by symbol."""
-    from stockmarketdata_dwb_etl_spark.queries.timeseries import _spark_ord
 
     bars = (
         load_table(spark, sf_dir, "events")
@@ -130,8 +135,8 @@ def q_binseg_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts").cast("date").alias("day"),
         )
         .agg(
-            F.min_by("value", _spark_ord()).alias("open"),
-            F.max_by("value", _spark_ord()).alias("close"),
+            open_tick().alias("open"),
+            close_tick().alias("close"),
         )
     )
     wn = Window.partitionBy("symbol")
@@ -472,7 +477,7 @@ def _temp_grid_sql() -> str:
 @query(
     "q_temperature_scaling",
     oracle=f"""
-    WITH {_DUCK_SCORED_EN},
+    WITH {SQL_SCORED_EN},
     clamped AS (
         SELECT y, least(greatest(score, {_P_EPS}), 1.0 - {_P_EPS}) AS p
         FROM scored
@@ -508,9 +513,7 @@ def q_temperature_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 8dp DECIMAL sum; the winner is the 6dp-rounded mean NLL with a
     T tie-break. Scale: the grid is a 6-row broadcast against a
     map-side scored scan — one hash-agg keyed by T."""
-    from stockmarketdata_dwb_etl_spark.queries.dataops5 import _scored_en
-
-    scored = _scored_en(spark, sf_dir)
+    scored = scored_en(spark, sf_dir)
     p = F.least(
         F.greatest(F.col("score"), F.lit(_P_EPS)), F.lit(1.0 - _P_EPS)
     )

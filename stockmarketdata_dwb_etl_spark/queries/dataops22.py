@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import sql_tick_key, tick_key
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
@@ -41,7 +42,7 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     term,
     term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.dataops5 import _DUCK_SCORED_EN
+from stockmarketdata_dwb_etl_spark.queries.dataops5 import SQL_SCORED_EN, scored_en
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -57,9 +58,9 @@ _JOURNEY_SQL = f"""
     seq AS (
         SELECT user_id, event_type, ts, event_id,
                MIN(CASE WHEN event_type = '{_CONV}'
-                        THEN printf('%020d-%012d', epoch_us(ts), event_id)
+                        THEN {sql_tick_key()}
                    END) OVER (PARTITION BY user_id) AS conv_key,
-               printf('%020d-%012d', epoch_us(ts), event_id) AS ord_key
+               {sql_tick_key()} AS ord_key
         FROM events
     ),
     pre AS (
@@ -178,7 +179,6 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     effects — the data-driven alternative to last-touch rules. Scale:
     journeys shuffle ONCE on user_id; everything after is a
     channels²-sized chain iterated over a ≤|variants|·|states| vector."""
-    from stockmarketdata_dwb_etl_spark.queries.timeseries import _spark_ord
 
     ev = load_table(spark, sf_dir, "events")
     # Journey extraction in ONE window pass (r12 verdict: the former
@@ -196,7 +196,7 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     #     becomes an unbounded-frame MAX over the same asc sort.
     # One Exchange + one Sort; hop and loss edges leave the window as a
     # conditional 1-or-2-element array, so no union re-reads the table.
-    ord_key = _spark_ord()
+    ord_key = tick_key()
     w_ord = Window.partitionBy("user_id").orderBy("ord_key")
     w_full = w_ord.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -426,7 +426,7 @@ _ISO_BINS = 10
            CAST({sql_portable_round("f.iso", 6)} AS DOUBLE) AS iso_rate
     FROM pre p JOIN fit f ON f.bin = p.bin
     ORDER BY p.bin
-    """.replace("{scored}", _DUCK_SCORED_EN),
+    """.replace("{scored}", SQL_SCORED_EN),
 )
 def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic (PAV) calibration of the quality-classifier score over
@@ -439,9 +439,7 @@ def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical doubles in the max-min lattice; the lattice is
     {_ISO_BINS}²-sized regardless of data volume. Scale: one map-side
     binning agg ({_ISO_BINS} keys), then constant-size grid joins."""
-    from stockmarketdata_dwb_etl_spark.queries.dataops5 import _scored_en
-
-    scored = _scored_en(spark, sf_dir)
+    scored = scored_en(spark, sf_dir)
     binned = (
         scored.groupBy(
             F.least(

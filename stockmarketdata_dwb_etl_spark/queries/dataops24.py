@@ -34,6 +34,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    close_tick,
+    open_tick,
+    sql_close_tick,
+    sql_open_tick,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     split_term_sum,
@@ -56,9 +62,9 @@ _SPEC_KS = (1, 2, 3, 5, 7, 10, 15, 21)  # cycles per series
     oracle=f"""
     WITH bars AS (
         SELECT event_type AS symbol, CAST(ts AS DATE) AS day,
-               arg_min(value, printf('%020d-%012d', epoch_us(ts), event_id))
+               {sql_open_tick()}
                    AS open,
-               arg_max(value, printf('%020d-%012d', epoch_us(ts), event_id))
+               {sql_close_tick()}
                    AS close
         FROM events GROUP BY 1, 2
     ),
@@ -111,7 +117,6 @@ def q_spectral_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-bucket split (|v| can reach ~1e4 on degenerate opens). Scale:
     the harmonic fan is a CONSTANT 8× map-side explode into one
     (symbol, k) hash-agg."""
-    from stockmarketdata_dwb_etl_spark.queries.timeseries import _spark_ord
 
     bars = (
         load_table(spark, sf_dir, "events")
@@ -120,8 +125,8 @@ def q_spectral_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts").cast("date").alias("day"),
         )
         .agg(
-            F.min_by("value", _spark_ord()).alias("open"),
-            F.max_by("value", _spark_ord()).alias("close"),
+            open_tick().alias("open"),
+            close_tick().alias("close"),
         )
     )
     wn = Window.partitionBy("symbol")
@@ -488,7 +493,7 @@ def _duck_ols_sse(pre: str) -> str:
     oracle=f"""
     WITH bars AS (
         SELECT event_type AS symbol, CAST(ts AS DATE) AS day,
-               arg_max(value, printf('%020d-%012d', epoch_us(ts), event_id))
+               {sql_close_tick()}
                    AS close
         FROM events GROUP BY 1, 2
     ),
@@ -547,7 +552,6 @@ def q_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     t·y at 2dp ≪ 2^53); SSEs and F are identical trees. Scale: one
     rank window + TWO symbol-keyed hash-aggs (halves, then pooled from
     the halves' own sums — the big table is scanned once)."""
-    from stockmarketdata_dwb_etl_spark.queries.timeseries import _spark_ord
 
     bars = (
         load_table(spark, sf_dir, "events")
@@ -555,7 +559,7 @@ def q_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type").alias("symbol"),
             F.col("ts").cast("date").alias("day"),
         )
-        .agg(F.max_by("value", _spark_ord()).alias("close"))
+        .agg(close_tick().alias("close"))
     )
     wn = Window.partitionBy("symbol")
     x = bars.select(

@@ -33,14 +33,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    ohlcv_bars,
+    simple_return,
+    sql_ohlcv_bars,
+    sql_simple_return,
+    sql_tick_key,
+    tick_key,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     split_term_sum,
     sql_split_term_sum,
-)
-from stockmarketdata_dwb_etl_spark.queries.timeseries import (
-    _DUCK_ORD,
-    _spark_ord,
 )
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -173,11 +177,11 @@ _VPIN_BUCKET = 200  # ticks per volume bucket (tick count = volume proxy)
     oracle=f"""
     WITH t AS (
         SELECT event_type AS symbol, value,
-               {_DUCK_ORD} AS ord,
+               {sql_tick_key()} AS ord,
                lag(value) OVER (PARTITION BY event_type
-                                ORDER BY {_DUCK_ORD}) AS pv,
+                                ORDER BY {sql_tick_key()}) AS pv,
                (row_number() OVER (PARTITION BY event_type
-                                   ORDER BY {_DUCK_ORD}) - 1)
+                                   ORDER BY {sql_tick_key()}) - 1)
                    // {_VPIN_BUCKET} AS bucket,
                COUNT(*) OVER (PARTITION BY event_type) AS n_ticks
         FROM events
@@ -223,7 +227,7 @@ def q_vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-bounded; at 100 TB the bucket id comes from the same
     running prefix machinery as q_dollar_bars."""
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy(_spark_ord())
+    w = Window.partitionBy("event_type").orderBy(tick_key())
     wall = Window.partitionBy("event_type")
     t = ev.select(
         F.col("event_type").alias("symbol"),
@@ -313,16 +317,10 @@ def _spark_phi(z: Column) -> Column:
 @query(
     "q_prob_sharpe",
     oracle=f"""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
     rets AS (
         SELECT symbol,
-               close / lag(close) OVER (PARTITION BY symbol
-                                        ORDER BY bar_ts) - 1.0 AS r
+               {sql_simple_return("(PARTITION BY symbol ORDER BY bar_ts)")} AS r
         FROM cbars
         QUALIFY r IS NOT NULL
     ),
@@ -384,14 +382,11 @@ def q_prob_sharpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-positive deflation bracket yields NULL. Scales: one returns
     window + one hash-agg per symbol."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     rets = bars.select(
         "symbol",
-        (F.col("close") / F.lag("close").over(w) - F.lit(1.0)).alias("r"),
+        simple_return(w).alias("r"),
     ).filter(F.col("r").isNotNull())
     r = F.col("r")
     m = rets.groupBy("symbol").agg(
@@ -443,12 +438,7 @@ def q_prob_sharpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_burke_ratio",
     oracle=f"""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
     uw AS (
         SELECT symbol, bar_ts, close,
                close / max(close) OVER (PARTITION BY symbol ORDER BY bar_ts
@@ -477,8 +467,7 @@ def q_prob_sharpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     rets AS (
         SELECT symbol,
-               close / lag(close) OVER (PARTITION BY symbol
-                                        ORDER BY bar_ts) - 1.0 AS r
+               {sql_simple_return("(PARTITION BY symbol ORDER BY bar_ts)")} AS r
         FROM cbars
         QUALIFY r IS NOT NULL
     ),
@@ -509,10 +498,7 @@ def q_burke_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scales: two stacked windows + two hash-aggs, all keyed by
     symbol — one shuffle."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     uw = bars.select(
@@ -538,7 +524,7 @@ def q_burke_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rets = bars.select(
         "symbol",
-        (F.col("close") / F.lag("close").over(w) - F.lit(1.0)).alias("r"),
+        simple_return(w).alias("r"),
     ).filter(F.col("r").isNotNull())
     mr = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

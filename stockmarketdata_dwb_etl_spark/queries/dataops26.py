@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import ohlcv_bars, sql_ohlcv_bars
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     split_term_sum,
@@ -41,13 +42,9 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
 from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
 from stockmarketdata_dwb_etl_spark.queries.graph import (
     _GRAPH_SQL,
-    _graph,
     _in_sum_iterate,
     _norm_graph,
-)
-from stockmarketdata_dwb_etl_spark.queries.timeseries import (
-    _DUCK_ORD,
-    _spark_ord,
+    _strong_edges,
 )
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -188,16 +185,7 @@ def q_pref_attachment(spark: SparkSession, sf_dir: str) -> DataFrame:
     highest). Candidates come from the catalog-bounded degree table's
     self-join minus an existing-strong-edge anti-join — no
     basket-scale data moves. Top-100 with deterministic tie-break."""
-    edges, _, _ = _graph(spark, sf_dir)
-    thr = edges.agg(
-        F.expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY w)").alias("t")
-    )
-    strong = bounded_persist(
-        edges.crossJoin(F.broadcast(thr))
-        .filter(F.col("w") >= F.col("t"))
-        .select("src", "dst"),
-        "pa-strong-edges",
-    )
+    strong = _strong_edges(spark, sf_dir, 0.9)
     deg = strong.groupBy("src").agg(
         F.count(F.lit(1)).cast("bigint").alias("deg")
     ).select(F.col("src").alias("node"), "deg")
@@ -237,12 +225,7 @@ def q_pref_attachment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_breusch_pagan",
     oracle=f"""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
     nb AS (
         SELECT symbol, close,
                CAST(row_number() OVER (PARTITION BY symbol ORDER BY bar_ts)
@@ -327,10 +310,7 @@ def q_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-symbol moment agg, broadcast fit join-back, second moment
     agg — the q_durbin_watson posture plus one agg."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     nb = bounded_persist(
         bars.select(

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import ohlcv_bars, sql_ohlcv_bars
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     split_term_sum,
@@ -365,14 +366,8 @@ def q_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_turning_points",
-    oracle="""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, printf('%020d-%012d', epoch_us(ts), event_id))
-                   AS close
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
     tri AS (
         SELECT symbol, close,
                lag(close) OVER w AS pc,
@@ -412,12 +407,8 @@ def q_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     the z is one double tree. Scales: one bar hash-agg + one
     lag/lead window + one per-symbol agg — single shuffle."""
     ev = load_table(spark, sf_dir, "events")
-    from stockmarketdata_dwb_etl_spark.queries.timeseries import _spark_ord
 
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     tri = bars.select(
         "symbol",

@@ -33,8 +33,7 @@ from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
-from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
-from stockmarketdata_dwb_etl_spark.queries.graph import _GRAPH_SQL, _graph
+from stockmarketdata_dwb_etl_spark.queries.graph import _GRAPH_SQL, _strong_edges
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -110,16 +109,7 @@ def q_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     1/d over integer d). Scales: state is |V|² pairs of a
     catalog-bounded graph; each superstep shuffles on the frontier
     node key only."""
-    edges, _, _ = _graph(spark, sf_dir)
-    thr = edges.agg(
-        F.expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY w)").alias("t")
-    )
-    strong = bounded_persist(
-        edges.crossJoin(F.broadcast(thr))
-        .filter(F.col("w") >= F.col("t"))
-        .select("src", "dst"),
-        "close-strong-edges",
-    )
+    strong = _strong_edges(spark, sf_dir, 0.9)
     snodes = strong.select(F.col("src").alias("node")).distinct()
     state = snodes.select(
         F.col("node").alias("src"),

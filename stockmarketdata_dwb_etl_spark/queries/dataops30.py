@@ -32,11 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import ohlcv_bars, sql_ohlcv_bars
 from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
-from stockmarketdata_dwb_etl_spark.queries.timeseries import (
-    _DUCK_ORD,
-    _spark_ord,
-)
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -49,12 +46,7 @@ _THETA_ALPHA = 0.4
 @query(
     "q_theta_forecast",
     oracle=f"""
-    WITH RECURSIVE bars AS (
-        SELECT event_type AS symbol,
-               date_trunc('day', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
+    WITH RECURSIVE bars AS ({sql_ohlcv_bars("day", "close")}),
     seq AS (
         SELECT symbol, close,
                row_number() OVER (PARTITION BY symbol ORDER BY bar_ts) AS rn
@@ -120,10 +112,7 @@ def q_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "day", "close")
     a = _THETA_ALPHA
 
     def theta_group(pdf: pd.DataFrame) -> pd.DataFrame:

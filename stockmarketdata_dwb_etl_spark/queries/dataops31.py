@@ -30,47 +30,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    bar_returns,
+    ohlcv_bars,
+    sql_bar_returns,
+    sql_ohlcv_bars,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     split_term_sum,
     sql_split_term_sum,
 )
 from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
-from stockmarketdata_dwb_etl_spark.queries.timeseries import (
-    _DUCK_ORD,
-    _spark_ord,
-)
 from stockmarketdata_dwb_etl_spark.registry import query
-
-_DUCK_RETS = f"""
-    cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
-    rets AS (
-        SELECT symbol, bar_ts,
-               close / lag(close) OVER (PARTITION BY symbol
-                                        ORDER BY bar_ts) - 1.0 AS r
-        FROM cbars
-        QUALIFY r IS NOT NULL
-    )
-"""
-
-
-def _rets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
-    w = Window.partitionBy("symbol").orderBy("bar_ts")
-    return bars.select(
-        "symbol",
-        "bar_ts",
-        (F.col("close") / F.lag("close").over(w) - F.lit(1.0)).alias("r"),
-    ).filter(F.col("r").isNotNull())
 
 
 # ---------------------------------------------------------------------------
@@ -85,7 +57,8 @@ _GERBER_C = 0.5
 @query(
     "q_gerber_statistic",
     oracle=f"""
-    WITH {_DUCK_RETS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     sd AS (
         SELECT symbol,
                sqrt(greatest(
@@ -132,7 +105,8 @@ def q_gerber_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     one outlier dominate. All pair tallies are exact integers. Scales:
     per-symbol σ broadcast back, one bar_ts-co-partitioned pair join
     bounded by the symbol catalog, integer aggs."""
-    rets = bounded_persist(_rets(spark, sf_dir), "gerber-rets")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    rets = bounded_persist(bar_returns(bars), "gerber-rets")
     sd = rets.groupBy("symbol").agg(
         F.sqrt(
             F.greatest(
@@ -209,7 +183,8 @@ _Z05_SQL = "CAST(-1.6448536269514722 AS DOUBLE)"
 @query(
     "q_cornish_fisher",
     oracle=f"""
-    WITH {_DUCK_RETS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     m AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
@@ -269,7 +244,9 @@ def q_cornish_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical double tree with the z literal spelled identically on
     both engines. Scales: one returns window + one hash-agg per
     symbol."""
-    rets = _rets(spark, sf_dir)
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     r = F.col("r")
     m = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -329,12 +306,7 @@ def q_cornish_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_cdar",
     oracle=f"""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
     dd AS (
         SELECT symbol, bar_ts,
                1.0 - close / max(close) OVER (PARTITION BY symbol
@@ -372,10 +344,7 @@ def q_cdar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scales: one running-max window keyed by symbol, a per-group
     percentile, one broadcast join-back + agg."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
     wrun = (
         Window.partitionBy("symbol")
         .orderBy("bar_ts")

@@ -30,6 +30,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    ohlcv_bars,
+    simple_return,
+    sql_ohlcv_bars,
+    sql_simple_return,
+    sql_tick_key,
+    tick_key,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     split_term_sum,
@@ -41,10 +49,6 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
 from stockmarketdata_dwb_etl_spark.queries.dataops17 import (
     _duck_p_two,
     _spark_p_two,
-)
-from stockmarketdata_dwb_etl_spark.queries.timeseries import (
-    _DUCK_ORD,
-    _spark_ord,
 )
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -58,7 +62,7 @@ from stockmarketdata_dwb_etl_spark.registry import query
     oracle=f"""
     WITH ranked AS (
         SELECT event_type AS grp,
-               CAST(row_number() OVER (ORDER BY value, {_DUCK_ORD})
+               CAST(row_number() OVER (ORDER BY value, {sql_tick_key()})
                     AS BIGINT) AS rk,
                CAST(COUNT(*) OVER () AS BIGINT) AS n
         FROM events
@@ -101,7 +105,7 @@ def q_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = ev.select(
         F.col("event_type").alias("grp"),
         F.row_number()
-        .over(Window.orderBy("value", _spark_ord()))
+        .over(Window.orderBy("value", tick_key()))
         .cast("bigint")
         .alias("rk"),
         F.count(F.lit(1)).over(wall).cast("bigint").alias("n"),
@@ -259,17 +263,11 @@ def q_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (symbol, hour-of-day) z-tests of zero mean hourly return
 # ---------------------------------------------------------------------------
 
+# Over a close-bar relation ``cbars``.
 _DUCK_PVALS = f"""
-    cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
     rets AS (
         SELECT symbol, hour(bar_ts) AS hod,
-               close / lag(close) OVER (PARTITION BY symbol
-                                        ORDER BY bar_ts) - 1.0 AS r
+               {sql_simple_return("(PARTITION BY symbol ORDER BY bar_ts)")} AS r
         FROM cbars
         QUALIFY r IS NOT NULL
     ),
@@ -306,17 +304,13 @@ def _duck_pvals() -> str:
     )
 
 
-def _spark_pvals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+def _spark_pvals(bars: DataFrame) -> DataFrame:
+    """Spark twin of :func:`_duck_pvals` over a close-bar frame."""
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     rets = bars.select(
         "symbol",
         F.hour("bar_ts").alias("hod"),
-        (F.col("close") / F.lag("close").over(w) - F.lit(1.0)).alias("r"),
+        simple_return(w).alias("r"),
     ).filter(F.col("r").isNotNull())
     cells = rets.groupBy("symbol", "hod").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -343,7 +337,8 @@ def _spark_pvals(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_storey_pi0",
     oracle=f"""
-    WITH {_duck_pvals()}
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    {_duck_pvals()}
     SELECT CAST(COUNT(p) AS BIGINT) AS m,
            CAST(COUNT(CASE WHEN p > 0.5 THEN 1 END) AS BIGINT)
                AS n_flat_tail,
@@ -365,7 +360,9 @@ def q_storey_pi0(spark: SparkSession, sf_dir: str) -> DataFrame:
     A&S two-sided Φ at 8dp portable rounds (the q_fdr_bh
     construction). Scales: one bar window + one (symbol, hod)
     hash-agg — the hypothesis family is dimension-bounded."""
-    pv = _spark_pvals(spark, sf_dir).filter(F.col("p").isNotNull())
+    pv = _spark_pvals(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    ).filter(F.col("p").isNotNull())
     return pv.agg(
         F.count("p").cast("bigint").alias("m"),
         F.count(F.when(F.col("p") > 0.5, 1)).cast("bigint").alias(
@@ -390,7 +387,8 @@ _BY_ALPHA = 0.10
 @query(
     "q_by_fdr",
     oracle=f"""
-    WITH {_duck_pvals()},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    {_duck_pvals()},
     ranked AS (
         SELECT symbol, hod, p,
                CAST(row_number() OVER (ORDER BY p, symbol, hod)
@@ -428,7 +426,9 @@ def q_by_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     dependence-robustness is a visible column. Ranks and cutoffs are
     exact; the harmonic sum runs over a dimension-bounded table.
     Scales: identical posture to q_fdr_bh."""
-    pv = _spark_pvals(spark, sf_dir).filter(F.col("p").isNotNull())
+    pv = _spark_pvals(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    ).filter(F.col("p").isNotNull())
     wall = Window.partitionBy().rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )

@@ -28,14 +28,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    ohlcv_bars,
+    simple_return,
+    sql_ohlcv_bars,
+    sql_simple_return,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     split_term_sum,
     sql_split_term_sum,
-)
-from stockmarketdata_dwb_etl_spark.queries.timeseries import (
-    _DUCK_ORD,
-    _spark_ord,
 )
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -366,17 +368,10 @@ def q_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_amivest_liquidity",
     oracle=f"""
-    WITH bars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close,
-               CAST(COUNT(*) AS BIGINT) AS volume
-        FROM events GROUP BY 1, 2
-    ),
+    WITH bars AS ({sql_ohlcv_bars("hour", "close", "volume")}),
     seq AS (
         SELECT symbol, volume,
-               abs(close / lag(close) OVER (PARTITION BY symbol
-                                            ORDER BY bar_ts) - 1.0)
+               abs({sql_simple_return("(PARTITION BY symbol ORDER BY bar_ts)")})
                    AS abs_r
         FROM bars
         QUALIFY abs_r IS NOT NULL
@@ -402,20 +397,12 @@ def q_amivest_liquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
     series yields NULL. Scales: one bar hash-agg + one lag window +
     one per-symbol agg."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(
-        F.max_by("value", _spark_ord()).alias("close"),
-        F.count(F.lit(1)).cast("bigint").alias("volume"),
-    )
+    bars = ohlcv_bars(ev, "hour", "close", "volume")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     seq = bars.select(
         "symbol",
         "volume",
-        F.abs(F.col("close") / F.lag("close").over(w) - F.lit(1.0)).alias(
-            "abs_r"
-        ),
+        F.abs(simple_return(w)).alias("abs_r"),
     ).filter(F.col("abs_r").isNotNull())
     g = seq.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_bars"),

@@ -19,6 +19,7 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     hilo_term_sum,
     portable_round,
     split_term_sum,
+    sql_portable_round,
     sql_split_term_sum,
     sql_term_sum,
     term_sum,
@@ -1226,7 +1227,10 @@ def q_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DUCK_SCORED_EN = """
+# The classifier-metric fixture: a quality-classifier sigmoid scoring
+# lang='en' membership, as (y, score) pairs. Shared by the classifier
+# queries here and in dataops7, dataops20 and dataops22.
+SQL_SCORED_EN = f"""
     feat AS (
         SELECT doc_id, lang,
                CAST(len(w) AS BIGINT) AS n_words,
@@ -1244,18 +1248,67 @@ _DUCK_SCORED_EN = """
     ),
     scored AS (
         SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-               (CAST(floor(CAST((1.0 / (1.0 + exp(-(
-                   -2.0 + 0.02 * least(n_words, 200) + 6.0 * stop_ratio
-                   - 8.0 * digit_ratio + 0.3 * avg_wlen)))) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS score
+               {sql_portable_round(
+                   "1.0 / (1.0 + exp(-("
+                   "-2.0 + 0.02 * least(n_words, 200) + 6.0 * stop_ratio"
+                   " - 8.0 * digit_ratio + 0.3 * avg_wlen)))",
+                   6,
+               )} AS score
         FROM feat
     )
 """
 
 
+def scored_en(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of :data:`SQL_SCORED_EN`."""
+    docs = load_table(spark, sf_dir, "documents")
+    words = F.filter(F.split("text", " "), lambda x: x != "")
+    feat = (
+        docs.select("doc_id", "lang", "text", words.alias("w"))
+        .filter((F.size("w") > 0) & (F.length("text") > 0))
+        .select(
+            (F.col("lang") == "en").cast("int").alias("y"),
+            F.size("w").cast("bigint").alias("n_words"),
+            (
+                F.aggregate(
+                    "w", F.lit(0).cast("bigint"), lambda acc, x: acc + F.length(x)
+                ).cast("double")
+                / F.size("w")
+            ).alias("avg_wlen"),
+            (
+                F.size(
+                    F.filter(
+                        "w",
+                        lambda x: x.isin(
+                            "the", "a", "of", "and", "to", "in", "is"
+                        ),
+                    )
+                ).cast("double")
+                / F.size("w")
+            ).alias("stop_ratio"),
+            (
+                F.length(F.regexp_replace("text", "[^0-9]", "")).cast("double")
+                / F.length("text")
+            ).alias("digit_ratio"),
+        )
+    )
+    z = (
+        F.lit(-2.0)
+        + F.lit(0.02) * F.least(F.col("n_words"), F.lit(200)).cast("double")
+        + F.lit(6.0) * F.col("stop_ratio")
+        - F.lit(8.0) * F.col("digit_ratio")
+        + F.lit(0.3) * F.col("avg_wlen")
+    )
+    return feat.select(
+        "y",
+        portable_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("score"),
+    )
+
+
 @query(
     "q_pr_curve",
     oracle=f"""
-    WITH {_DUCK_SCORED_EN},
+    WITH {SQL_SCORED_EN},
     thresholds AS (
         SELECT UNNEST(generate_series(1, 9)) / 10.0 AS t
     ),
@@ -1293,7 +1346,7 @@ def q_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio of integers). Degenerate denominators yield NULL on both
     engines. Scale: scored corpus × 9 thresholds, partial+final agg —
     one shuffle of 9-key width."""
-    scored = _scored_en(spark, sf_dir)
+    scored = scored_en(spark, sf_dir)
     thresholds = spark.range(1, 10).select(
         (F.col("id") / 10.0).alias("t")
     )
@@ -1344,58 +1397,10 @@ def q_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("threshold")
 
 
-def _scored_en(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared (y, score) table: the quality-classifier sigmoid scoring
-    lang='en' membership (the q_roc_auc / q_pr_curve / q_calibration
-    basis)."""
-    docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split("text", " "), lambda x: x != "")
-    feat = (
-        docs.select("doc_id", "lang", "text", words.alias("w"))
-        .filter((F.size("w") > 0) & (F.length("text") > 0))
-        .select(
-            (F.col("lang") == "en").cast("int").alias("y"),
-            F.size("w").cast("bigint").alias("n_words"),
-            (
-                F.aggregate(
-                    "w", F.lit(0).cast("bigint"), lambda acc, x: acc + F.length(x)
-                ).cast("double")
-                / F.size("w")
-            ).alias("avg_wlen"),
-            (
-                F.size(
-                    F.filter(
-                        "w",
-                        lambda x: x.isin(
-                            "the", "a", "of", "and", "to", "in", "is"
-                        ),
-                    )
-                ).cast("double")
-                / F.size("w")
-            ).alias("stop_ratio"),
-            (
-                F.length(F.regexp_replace("text", "[^0-9]", "")).cast("double")
-                / F.length("text")
-            ).alias("digit_ratio"),
-        )
-    )
-    z = (
-        F.lit(-2.0)
-        + F.lit(0.02) * F.least(F.col("n_words"), F.lit(200)).cast("double")
-        + F.lit(6.0) * F.col("stop_ratio")
-        - F.lit(8.0) * F.col("digit_ratio")
-        + F.lit(0.3) * F.col("avg_wlen")
-    )
-    return feat.select(
-        "y",
-        portable_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("score"),
-    )
-
-
 @query(
     "q_calibration_bins",
     oracle=f"""
-    WITH {_DUCK_SCORED_EN},
+    WITH {SQL_SCORED_EN},
     binned AS (
         SELECT least(CAST(floor(score * 10) AS BIGINT), 9) AS bin,
                y, CAST(score AS DECIMAL(18,6)) AS s6
@@ -1422,7 +1427,7 @@ def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit integer-scaled 1e-4 with integer half-up rounding — no float
     at any output boundary. Scale: map-side binning into a 10-key
     partial+final agg."""
-    scored = _scored_en(spark, sf_dir)
+    scored = scored_en(spark, sf_dir)
     binned = scored.select(
         F.least(F.floor(F.col("score") * 10).cast("bigint"), F.lit(9)).alias(
             "bin"

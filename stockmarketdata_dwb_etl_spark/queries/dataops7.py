@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import ohlcv_bars, sql_ohlcv_bars
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     split_term_sum,
@@ -30,8 +31,8 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
 )
 from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
 from stockmarketdata_dwb_etl_spark.operators.rank import global_prefix_sum
+from stockmarketdata_dwb_etl_spark.queries.dataops5 import SQL_SCORED_EN, scored_en
 from stockmarketdata_dwb_etl_spark.queries.graph import _GRAPH_SQL, _graph
-from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
 
 _DEC18 = "decimal(38,18)"
@@ -40,12 +41,7 @@ _DEC18 = "decimal(38,18)"
 @query(
     "q_regression_metrics",
     oracle=f"""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
     p AS (
         SELECT symbol, close AS y,
                lag(close) OVER (PARTITION BY symbol ORDER BY bar_ts) AS yhat
@@ -84,10 +80,7 @@ def q_regression_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     in exact DECIMAL; metrics are identical double trees. Scale: one
     bar hash-agg + one lag window + one moments hash-agg."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     p = (
         bars.select(
@@ -590,12 +583,7 @@ def q_flesch_reading(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_theil_u",
     oracle=f"""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
     p AS (
         SELECT symbol, close AS y,
                lag(close)     OVER ws AS naive,
@@ -631,10 +619,7 @@ def q_theil_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec — the q_acf_correlogram lesson, no per-lag branch union).
     Scale: bar hash-agg + one window + one moments hash-agg."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     p = (
         bars.select(
@@ -745,93 +730,10 @@ def q_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DUCK_SCORED = f"""
-    feat AS (
-        SELECT doc_id, lang,
-               CAST(len(w) AS BIGINT) AS n_words,
-               CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE)
-                   / len(w) AS avg_wlen,
-               CAST(len(list_filter(w, x -> x IN
-                   ('the','a','of','and','to','in','is'))) AS DOUBLE)
-                   / len(w) AS stop_ratio,
-               CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)
-                   / length(text) AS digit_ratio
-        FROM (SELECT doc_id, lang, text,
-                     list_filter(string_split(text, ' '), x -> x <> '') AS w
-              FROM documents)
-        WHERE len(w) > 0 AND length(text) > 0
-    ),
-    scored AS (
-        SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-               {{score_round}} AS score
-        FROM feat
-    )
-"""
-
-
-def _duck_scored() -> str:
-    return _DUCK_SCORED.format(
-        score_round=sql_portable_round(
-            "1.0 / (1.0 + exp(-("
-            "-2.0 + 0.02 * least(n_words, 200) + 6.0 * stop_ratio"
-            " - 8.0 * digit_ratio + 0.3 * avg_wlen)))",
-            6,
-        )
-    )
-
-
-def _spark_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(y, score) pairs: the q_roc_auc quality-classifier score
-    predicting lang='en' — the shared eval fixture for the classifier
-    metric family."""
-    docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split("text", " "), lambda x: x != "")
-    feat = (
-        docs.select("doc_id", "lang", "text", words.alias("w"))
-        .filter((F.size("w") > 0) & (F.length("text") > 0))
-        .select(
-            (F.col("lang") == "en").cast("int").alias("y"),
-            F.size("w").cast("bigint").alias("n_words"),
-            (
-                F.aggregate(
-                    "w", F.lit(0).cast("bigint"), lambda acc, x: acc + F.length(x)
-                ).cast("double")
-                / F.size("w")
-            ).alias("avg_wlen"),
-            (
-                F.size(
-                    F.filter(
-                        "w",
-                        lambda x: x.isin(
-                            "the", "a", "of", "and", "to", "in", "is"
-                        ),
-                    )
-                ).cast("double")
-                / F.size("w")
-            ).alias("stop_ratio"),
-            (
-                F.length(F.regexp_replace("text", "[^0-9]", "")).cast("double")
-                / F.length("text")
-            ).alias("digit_ratio"),
-        )
-    )
-    z = (
-        F.lit(-2.0)
-        + F.lit(0.02) * F.least(F.col("n_words"), F.lit(200)).cast("double")
-        + F.lit(6.0) * F.col("stop_ratio")
-        - F.lit(8.0) * F.col("digit_ratio")
-        + F.lit(0.3) * F.col("avg_wlen")
-    )
-    return feat.select(
-        "y",
-        portable_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("score"),
-    )
-
-
 @query(
     "q_mcc",
     oracle=f"""
-    WITH {_duck_scored()},
+    WITH {SQL_SCORED_EN},
     cm AS (
         SELECT CAST(SUM(CASE WHEN score >= 0.5 AND y = 1 THEN 1 ELSE 0 END)
                     AS BIGINT) AS tp,
@@ -863,7 +765,7 @@ def q_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix is exact integers from one scan; products cast to double
     BEFORE multiplying (int64-safe at any scale), identical trees both
     engines; any empty margin → NULL. Scale: one map + one 1-row agg."""
-    scored = _spark_scored(spark, sf_dir)
+    scored = scored_en(spark, sf_dir)
     pred = F.col("score") >= 0.5
     cm = scored.agg(
         F.sum(F.when(pred & (F.col("y") == 1), 1).otherwise(0))
@@ -903,7 +805,7 @@ def q_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_log_loss",
     oracle=f"""
-    WITH {_duck_scored()},
+    WITH {SQL_SCORED_EN},
     t AS (
         SELECT y,
                greatest(least(score, 0.999999), 0.000001) AS p
@@ -925,7 +827,7 @@ def q_log_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     6dp-rounded (identical bits), each row's loss term rounds to 12dp
     (|term| ≤ ~13.8 — saturation-safe) and sums in DECIMAL. Scale:
     map-only scoring + one 1-row agg."""
-    scored = _spark_scored(spark, sf_dir)
+    scored = scored_en(spark, sf_dir)
     p = F.greatest(F.least(F.col("score"), F.lit(0.999999)), F.lit(0.000001))
     term = -(
         F.col("y") * F.log(p) + (1 - F.col("y")) * F.log(F.lit(1.0) - p)

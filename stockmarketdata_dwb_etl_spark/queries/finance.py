@@ -5,8 +5,8 @@ These are the canonical post-load indicator queries a market-data
 warehouse serves (the reference loads scraped histories into BigQuery for
 exactly this kind of analysis — /root/reference/dump_bigq.py:135-149);
 each is expressed as windows/aggregations over the deterministic hourly
-or daily bar series derived from `events` (bars via the same padded
-(ts,event_id) ordering key as q_ohlc_resample).
+or daily bar series derived from `events` (functions/bars.py: the
+padded (ts,event_id) ordering key of q_ohlc_resample).
 
 Determinism policy (same as timeseries.py): frame/group sums accumulate
 in exact DECIMAL; any double math (ln, sqrt, divisions, EMA recurrences)
@@ -21,35 +21,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    OHLC,
+    ohlcv_bars,
+    sql_close_tick,
+    sql_ohlcv_bars,
+    sql_open_tick,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     split_term_sum,
     sql_split_term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
 
 _DEC = "decimal(38,6)"
-
-
-def _close_bars(spark: SparkSession, sf_dir: str, grain: str = "hour") -> DataFrame:
-    """Per-symbol close series at the given grain, deterministic close =
-    max_by on the padded (ts,event_id) key — the shared bar basis."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc(grain, F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
-
-
-_DUCK_CLOSE_BARS = f"""
-    bars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    )
-"""
 
 
 @query(
@@ -100,7 +86,7 @@ def q_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_rsi",
     oracle=f"""
-    WITH {_DUCK_CLOSE_BARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", "close")}),
     seq AS (
         SELECT symbol, bar_ts, close,
                close - lag(close) OVER w AS diff,
@@ -136,7 +122,7 @@ def q_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Wilder's recurrence (that smoothing shape is q_macd's territory) —
     so the whole indicator stays JVM-side: two stacked windows, one
     shuffle on symbol."""
-    bars = _close_bars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     seq = bars.select(
         "symbol",
@@ -174,7 +160,7 @@ def q_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_macd",
     oracle=f"""
-    WITH RECURSIVE {_DUCK_CLOSE_BARS},
+    WITH RECURSIVE bars AS ({sql_ohlcv_bars("hour", "close")}),
     seq AS (
         SELECT symbol, bar_ts, close,
                row_number() OVER (PARTITION BY symbol ORDER BY bar_ts) AS rn
@@ -221,7 +207,7 @@ def q_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-agg is the only full-data shuffle (same posture as q_ewma)."""
     import pandas as pd
 
-    bars = _close_bars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
     a12, a26, a9 = 2.0 / 13.0, 2.0 / 27.0, 0.2
 
     def macd_group(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -262,7 +248,7 @@ def q_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_log_returns",
     oracle=f"""
-    WITH {_DUCK_CLOSE_BARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", "close")}),
     seq AS (
         SELECT symbol, bar_ts, close,
                ln(close / lag(close) OVER w) AS r
@@ -290,7 +276,7 @@ def q_log_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation is exact and order-independent (a double running sum's
     association order is engine-internal — decimal removes that freedom);
     exp + round at the end. One window shuffle on symbol, O(1) state."""
-    bars = _close_bars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     seq = bars.select(
         "symbol",
@@ -319,15 +305,7 @@ def q_log_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_volatility_gk",
     oracle=f"""
-    WITH bars AS (
-        SELECT event_type AS symbol,
-               date_trunc('day', ts) AS bar_ts,
-               arg_min(value, {_DUCK_ORD}) AS open,
-               MAX(value) AS high,
-               MIN(value) AS low,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
+    WITH bars AS ({sql_ohlcv_bars("day", *OHLC)}),
     gk AS (
         SELECT symbol,
                0.5 * ln(high / low) * ln(high / low)
@@ -357,15 +335,7 @@ def q_volatility_gk(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,18) so the mean is exact and order-independent. Scales:
     tick→daily-bar hash-agg then a tiny per-symbol agg — one shuffle."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("bar_ts"),
-    ).agg(
-        F.min_by("value", _spark_ord()).alias("open"),
-        F.max("value").alias("high"),
-        F.min("value").alias("low"),
-        F.max_by("value", _spark_ord()).alias("close"),
-    ).filter(F.col("low") > 0)
+    bars = ohlcv_bars(ev, "day", *OHLC).filter(F.col("low") > 0)
     lhl = F.log(F.col("high") / F.col("low"))
     lco = F.log(F.col("close") / F.col("open"))
     g = (
@@ -393,10 +363,10 @@ def q_volatility_gk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH bars AS (
         SELECT event_type AS symbol,
                date_trunc('hour', ts) AS bar_ts,
-               arg_min(value, {_DUCK_ORD}) AS open,
+               {sql_open_tick()} AS open,
                MAX(value) AS high,
                MIN(value) AS low,
-               arg_max(value, {_DUCK_ORD}) AS close
+               {sql_close_tick()} AS close
         FROM bars_src
         GROUP BY 1, 2
     ),
@@ -434,15 +404,7 @@ def q_candlestick(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scales: bar hash-agg then one lag window, both keyed by symbol —
     one shuffle, map-side filter emits only pattern bars."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(
-        F.min_by("value", _spark_ord()).alias("open"),
-        F.max("value").alias("high"),
-        F.min("value").alias("low"),
-        F.max_by("value", _spark_ord()).alias("close"),
-    )
+    bars = ohlcv_bars(ev, "hour", *OHLC)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     po, pc = F.lag("open").over(w), F.lag("close").over(w)
     flagged = bars.select(

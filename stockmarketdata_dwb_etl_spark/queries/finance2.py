@@ -23,13 +23,23 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    OHLCV,
+    bar_returns,
+    market_return,
+    ohlcv_bars,
+    simple_return,
+    sql_bar_returns,
+    sql_market_return,
+    sql_ohlcv_bars,
+    sql_simple_return,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     split_term_sum,
     sql_split_term_sum,
     term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
 
 _DEC = "decimal(38,6)"
@@ -44,74 +54,10 @@ _DEC = "decimal(38,6)"
 # max ~3.2e9, bound 9e10), r^4 at (12,2) (observed ~4.7e12, bound 9e13).
 
 
-def _ohlcv_bars(spark: SparkSession, sf_dir: str, grain: str) -> DataFrame:
-    """Per-symbol OHLCV bars at the given grain: open/close deterministic
-    via the padded (ts,event_id) key, volume = tick count (the events
-    stand-in has no size column; bar tick count is the standard proxy)."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc(grain, F.col("ts")).alias("bar_ts"),
-    ).agg(
-        F.min_by("value", _spark_ord()).alias("open"),
-        F.max("value").alias("high"),
-        F.min("value").alias("low"),
-        F.max_by("value", _spark_ord()).alias("close"),
-        F.count(F.lit(1)).cast("bigint").alias("volume"),
-    )
-
-
-def _duck_ohlcv(grain: str) -> str:
-    return f"""
-    bars AS (
-        SELECT event_type AS symbol,
-               date_trunc('{grain}', ts) AS bar_ts,
-               arg_min(value, {_DUCK_ORD}) AS open,
-               MAX(value) AS high,
-               MIN(value) AS low,
-               arg_max(value, {_DUCK_ORD}) AS close,
-               CAST(COUNT(*) AS BIGINT) AS volume
-        FROM events GROUP BY 1, 2
-    )
-    """
-
-
-def _returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-symbol hourly simple returns r = close/prev_close − 1."""
-    ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
-    w = Window.partitionBy("symbol").orderBy("bar_ts")
-    return bars.select(
-        "symbol",
-        "bar_ts",
-        (F.col("close") / F.lag("close").over(w) - F.lit(1.0)).alias("r"),
-    ).filter(F.col("r").isNotNull())
-
-
-_DUCK_RETURNS = f"""
-    cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
-    rets AS (
-        SELECT symbol, bar_ts,
-               close / lag(close) OVER (PARTITION BY symbol
-                                        ORDER BY bar_ts) - 1.0 AS r
-        FROM cbars
-        QUALIFY r IS NOT NULL
-    )
-"""
-
-
 @query(
     "q_atr",
     oracle=f"""
-    WITH {_duck_ohlcv("day")},
+    WITH bars AS ({sql_ohlcv_bars("day", *OHLCV)}),
     tr AS (
         SELECT symbol, bar_ts, high, low, close,
                lag(close) OVER w AS prev_c,
@@ -146,7 +92,7 @@ def q_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
     are engine-exact double; only the quotient runs in float. Scales:
     tick→bar hash-agg then two stacked windows keyed by symbol — one
     shuffle."""
-    bars = _ohlcv_bars(spark, sf_dir, "day")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "day", *OHLCV)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     prev_c = F.lag("close").over(w)
     seq = bars.select(
@@ -193,7 +139,7 @@ def q_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_stochastic",
     oracle=f"""
-    WITH {_duck_ohlcv("hour")},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     ranged AS (
         SELECT symbol, bar_ts, close,
                MAX(high) OVER f AS h14,
@@ -237,7 +183,7 @@ def q_stochastic(spark: SparkSession, sf_dir: str) -> DataFrame:
     rn≥16 so both the 14-bar range and the 3-bar smoothing are fully
     formed. Scales: one bar hash-agg + stacked frames on symbol — one
     shuffle."""
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
     f = Window.partitionBy("symbol").orderBy("bar_ts").rowsBetween(-13, 0)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     ranged = bars.select(
@@ -283,7 +229,7 @@ def q_stochastic(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_obv",
     oracle=f"""
-    WITH {_duck_ohlcv("hour")},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     signed AS (
         SELECT symbol, bar_ts, close,
                CASE WHEN lag(close) OVER w IS NULL THEN CAST(0 AS BIGINT)
@@ -309,7 +255,7 @@ def q_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic end to end, no float accumulation anywhere. Scales: bar
     hash-agg + one lag window + one running-sum window on symbol, O(1)
     state per row."""
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     prev_c = F.lag("close").over(w)
     signed = bars.select(
@@ -338,13 +284,9 @@ def q_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_beta_capm",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
-    mkt AS (
-        SELECT bar_ts,
-               {sql_split_term_sum("r", 12, 8)}
-                   / COUNT(*) AS rm
-        FROM rets GROUP BY bar_ts
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
+    mkt AS ({sql_market_return("rets")}),
     moments AS (
         SELECT s.symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
@@ -373,10 +315,10 @@ def q_beta_capm(spark: SparkSession, sf_dir: str) -> DataFrame:
     double tree. Scales: the market table is calendar-bounded (one row
     per bar) so the returns⨝market join broadcasts; moments are one
     partial+final hash-agg per symbol."""
-    rets = _returns(spark, sf_dir)
-    mkt = rets.groupBy("bar_ts").agg(
-        (split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("rm")
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
     )
+    mkt = market_return(rets)
     joined = rets.join(F.broadcast(mkt), "bar_ts")
     m = joined.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -400,7 +342,8 @@ def q_beta_capm(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_sharpe",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     moments AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
@@ -428,7 +371,9 @@ def q_sharpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     series; an exactly-zero variance yields NULL). Scales: one
     partial+final hash-agg per symbol after the per-symbol lag window —
     one shuffle each."""
-    rets = _returns(spark, sf_dir)
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     m = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         split_term_sum(F.col("r"), 12, 8).alias("s"),
@@ -452,7 +397,8 @@ def q_sharpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_autocorr",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     pairs AS (
         SELECT symbol, r AS y,
                lag(r) OVER (PARTITION BY symbol ORDER BY bar_ts) AS x
@@ -486,7 +432,9 @@ def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the quotient chain in double with the identical tree (degenerate
     variance yields NULL). Scales: lag window + one hash-agg, both keyed
     by symbol."""
-    rets = _returns(spark, sf_dir)
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     pairs = rets.select(
         "symbol",
@@ -517,7 +465,8 @@ def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_rank_ic",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     sig AS (
         SELECT symbol, bar_ts, r,
                lead(r) OVER (PARTITION BY symbol ORDER BY bar_ts) AS fwd_r
@@ -559,7 +508,9 @@ def q_rank_ic(spark: SparkSession, sf_dir: str) -> DataFrame:
     average through exact DECIMAL. Scale: two per-symbol windows + one
     per-bar window whose partition width is the symbol universe
     (catalog-bounded), then a calendar-bounded agg."""
-    rets = _returns(spark, sf_dir)
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     sig = rets.select(
         "symbol", "bar_ts", "r", F.lead("r").over(w).alias("fwd_r")
@@ -610,7 +561,8 @@ def q_rank_ic(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_jarque_bera",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     m AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
@@ -648,7 +600,9 @@ def q_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     compute from those scalars in identical-tree double (deliberately
     NOT Spark's built-in skewness/kurtosis, whose bias corrections
     differ across engines). One hash-agg per symbol."""
-    rets = _returns(spark, sf_dir)
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     r = F.col("r")
     m = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -684,11 +638,11 @@ def q_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_amihud_illiquidity",
     oracle=f"""
-    WITH {_duck_ohlcv("hour")},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     seq AS (
         SELECT symbol, bar_ts, volume,
-               abs(close / lag(close) OVER (PARTITION BY symbol
-                                            ORDER BY bar_ts) - 1.0) AS abs_r
+               abs({sql_simple_return("(PARTITION BY symbol ORDER BY bar_ts)")})
+                   AS abs_r
         FROM bars
         QUALIFY abs_r IS NOT NULL
     )
@@ -706,15 +660,13 @@ def q_amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists (volume = bar tick count here). Per-bar ratios compute in
     identical-tree double, accumulate in exact DECIMAL, and average at
     the end. One bar hash-agg + one lag window + one per-symbol agg."""
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     seq = bars.select(
         "symbol",
         "bar_ts",
         "volume",
-        F.abs(F.col("close") / F.lag("close").over(w) - F.lit(1.0)).alias(
-            "abs_r"
-        ),
+        F.abs(simple_return(w)).alias("abs_r"),
     ).filter(F.col("abs_r").isNotNull())
     return (
         seq.groupBy("symbol")
@@ -861,12 +813,7 @@ def q_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_forecast_holt",
     oracle=f"""
-    WITH RECURSIVE bars AS (
-        SELECT event_type AS symbol,
-               date_trunc('day', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
+    WITH RECURSIVE bars AS ({sql_ohlcv_bars("day", "close")}),
     seq AS (
         SELECT symbol, close,
                row_number() OVER (PARTITION BY symbol ORDER BY bar_ts) AS rn
@@ -916,10 +863,7 @@ def q_forecast_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "day", "close")
     a, bb = 0.5, 0.3
 
     def holt_group(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -956,7 +900,8 @@ def q_forecast_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_lead_lag_xcorr",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     two AS (
         SELECT MIN(symbol) AS sa,
                MIN(CASE WHEN symbol > (SELECT MIN(symbol) FROM rets)
@@ -1019,7 +964,9 @@ def q_lead_lag_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # symbols and materialized — ra and rb both read the checkpointed
     # 2-symbol series instead of re-running bars+window per side
     r2 = (
-        _returns(spark, sf_dir)
+        bar_returns(
+            ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+        )
         .join(F.broadcast(ranked), "symbol")
         .localCheckpoint(eager=True)
     )
@@ -1111,7 +1058,7 @@ def q_volume_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_overnight_gaps",
     oracle=f"""
-    WITH {_duck_ohlcv("day")},
+    WITH bars AS ({sql_ohlcv_bars("day", *OHLCV)}),
     seq AS (
         SELECT symbol, bar_ts, open, high, low, close,
                lag(close) OVER (PARTITION BY symbol ORDER BY bar_ts)
@@ -1143,7 +1090,7 @@ def q_overnight_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap in basis points (per-day ratios in identical-tree double,
     decimal accumulation). One bar hash-agg + one lag window + one
     per-symbol agg."""
-    bars = _ohlcv_bars(spark, sf_dir, "day")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "day", *OHLCV)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     seq = bars.select(
         "symbol",
@@ -1238,7 +1185,8 @@ def q_price_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_var_cvar",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     var_t AS (
         SELECT symbol,
                percentile_disc(0.05) WITHIN GROUP (ORDER BY r) AS var95
@@ -1267,7 +1215,9 @@ def q_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-group sort for the exact percentile (the honest cost; the
     sketch path is q_approx_percentile) + one broadcast join back +
     one agg."""
-    rets = _returns(spark, sf_dir)
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     var_t = rets.groupBy("symbol").agg(
         F.expr("percentile_disc(0.05) WITHIN GROUP (ORDER BY r)").alias(
             "var95"
@@ -1304,7 +1254,7 @@ def q_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_drawdown_duration",
     oracle=f"""
-    WITH {_duck_ohlcv("hour")},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     uw AS (
         SELECT symbol, bar_ts,
                CASE WHEN close < MAX(close) OVER (PARTITION BY symbol
@@ -1341,7 +1291,7 @@ def q_drawdown_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
     A strict < against the running max is engine-exact on raw doubles.
     Scale: three stacked windows all keyed by symbol + one hash-agg —
     one shuffle."""
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     uw = bars.select(
@@ -1379,10 +1329,10 @@ def q_drawdown_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_kyle_lambda",
     oracle=f"""
-    WITH {_duck_ohlcv("hour")},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     seq AS (
         SELECT symbol, bar_ts, volume,
-               close / lag(close) OVER w - 1.0 AS r,
+               {sql_simple_return("w")} AS r,
                CASE WHEN close > lag(close) OVER w THEN CAST(volume AS DOUBLE)
                     WHEN close < lag(close) OVER w THEN -CAST(volume AS DOUBLE)
                     ELSE 0.0 END AS sv
@@ -1413,7 +1363,7 @@ def q_kyle_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope comes from the repo's decimal moment formula with the
     identical double tree, degenerate variance → NULL. One bar
     hash-agg + one lag window + one per-symbol agg."""
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     prev_c = F.lag("close").over(w)
     seq = bars.select(
@@ -1446,7 +1396,8 @@ def q_kyle_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_event_study_jumps",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     sigma AS (
         SELECT symbol,
                sqrt(greatest(
@@ -1492,7 +1443,9 @@ def q_event_study_jumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     signed drift accumulates in decimal and reads in basis points.
     Scale: per-symbol σ broadcast back, one lead window, one 2-row
     agg."""
-    rets = _returns(spark, sf_dir)
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     sigma = rets.groupBy("symbol").agg(
         F.sqrt(
             F.greatest(
@@ -1543,7 +1496,8 @@ def q_event_study_jumps(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_arch_effect",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     pairs AS (
         SELECT symbol, r * r AS y,
                lag(r * r) OVER (PARTITION BY symbol ORDER BY bar_ts) AS x
@@ -1584,7 +1538,9 @@ def q_arch_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-ARCH null; > 3.84 rejects at 5%). All five moment sums in exact
     DECIMAL, statistic in identical-tree double. One lag window + one
     hash-agg per symbol."""
-    rets = _returns(spark, sf_dir)
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     r2 = F.col("r") * F.col("r")
     pairs = rets.select(
@@ -1622,7 +1578,8 @@ def q_arch_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_sortino",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     m AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
@@ -1647,7 +1604,9 @@ def q_sortino(spark: SparkSession, sf_dir: str) -> DataFrame:
     squared sums accumulate in exact DECIMAL; the ratio chain is
     identical-tree double; a loss-free series yields NULL. One
     hash-agg per symbol after the returns window."""
-    rets = _returns(spark, sf_dir)
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     m = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         split_term_sum(F.col("r"), 12, 8).alias("s"),
@@ -1735,7 +1694,8 @@ def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_roll_spread",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     dp AS (
         SELECT c.symbol, c.bar_ts,
                c.close - lag(c.close) OVER (PARTITION BY c.symbol
@@ -1775,10 +1735,7 @@ def q_roll_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     covariance from decimal moment sums, identical double tree. One
     bar hash-agg + two stacked lag windows + one agg per symbol."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     dp = bars.select(
         "symbol",
@@ -1813,13 +1770,9 @@ def q_roll_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_rolling_beta",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
-    mkt AS (
-        SELECT bar_ts,
-               {sql_split_term_sum("r", 12, 8)}
-                   / COUNT(*) AS rm
-        FROM rets GROUP BY bar_ts
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
+    mkt AS ({sql_market_return("rets")}),
     j AS (
         SELECT s.symbol, s.bar_ts, s.r, m.rm,
                row_number() OVER (PARTITION BY s.symbol
@@ -1855,10 +1808,10 @@ def q_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     full. Degenerate frame variance yields NULL. Scale: the market
     table broadcasts, then four stacked frame sums in ONE window pass
     keyed by symbol."""
-    rets = _returns(spark, sf_dir)
-    mkt = rets.groupBy("bar_ts").agg(
-        (split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("rm")
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
     )
+    mkt = market_return(rets)
     j = rets.join(F.broadcast(mkt), "bar_ts")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     jn = j.select(
@@ -1890,7 +1843,8 @@ def q_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_hill_tail_index",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     ranked AS (
         SELECT symbol, abs(r) AS ar,
                row_number() OVER (PARTITION BY symbol
@@ -1926,7 +1880,9 @@ def q_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent). Scale: per-symbol rank window + a 50-row agg — at
     production scale the top-k pre-filters through TakeOrdered per
     symbol."""
-    rets = _returns(spark, sf_dir)
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     w = Window.partitionBy("symbol").orderBy(
         F.abs(F.col("r")).desc(), "bar_ts"
     )
@@ -2019,7 +1975,8 @@ def q_market_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_acf_correlogram",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     pairs AS (
         SELECT * FROM (
         SELECT symbol, 1 AS lag, r AS y,
@@ -2075,7 +2032,9 @@ def q_acf_correlogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     where a union-of-5-branches plan pays ~11 and rescans the bars 5x.
     Scale: explode fan-out is a fixed 5x row multiplier BEFORE the
     partial agg, so the shuffle carries only (symbol, lag) partials."""
-    rets = _returns(spark, sf_dir)
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     lagged = rets.select(
         "symbol",
@@ -2130,7 +2089,8 @@ def q_acf_correlogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_pacf",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     p1 AS (
         SELECT symbol, r AS y,
                lag(r, 1) OVER (PARTITION BY symbol ORDER BY bar_ts) AS x
@@ -2183,7 +2143,9 @@ def q_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 10dp BEFORE the Durbin–Levinson arithmetic so the φ₂₂ quotient
     sees identical inputs; a near-unit ρ₁ yields NULL. Two lag
     windows + two hash-aggs keyed by symbol."""
-    rets = _returns(spark, sf_dir)
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     w = Window.partitionBy("symbol").orderBy("bar_ts")
 
     def rho_at(k):

@@ -22,13 +22,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    bar_returns,
+    market_return,
+    ohlcv_bars,
+    sql_bar_returns,
+    sql_market_return,
+    sql_ohlcv_bars,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     split_term_sum,
     sql_split_term_sum,
     term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # Cross-row double sums route through the two-bucket split sum
@@ -38,68 +45,6 @@ from stockmarketdata_dwb_etl_spark.registry import query
 # round-trip bound; every unrounded sum here uses (12,8) and
 # pre-rounded summands cast at their own exact scale.
 
-_DUCK_BARS = f"""
-    bars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    )
-"""
-
-_DUCK_RETURNS = f"""
-    cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
-    rets AS (
-        SELECT symbol, bar_ts,
-               close / lag(close) OVER (PARTITION BY symbol
-                                        ORDER BY bar_ts) - 1.0 AS r
-        FROM cbars
-        QUALIFY r IS NOT NULL
-    )
-"""
-
-
-def _bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
-
-
-def _returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-symbol hourly simple returns r = close/prev_close − 1."""
-    bars = _bars(spark, sf_dir)
-    w = Window.partitionBy("symbol").orderBy("bar_ts")
-    return bars.select(
-        "symbol",
-        "bar_ts",
-        (F.col("close") / F.lag("close").over(w) - F.lit(1.0)).alias("r"),
-    ).filter(F.col("r").isNotNull())
-
-
-def _market(rets: DataFrame) -> DataFrame:
-    """Equal-weight market return per bar (decimal sum / count) — the
-    same benchmark construction as q_beta_capm."""
-    return rets.groupBy("bar_ts").agg(
-        (split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("rm")
-    )
-
-
-_DUCK_MKT = f"""
-    mkt AS (
-        SELECT bar_ts,
-               {sql_split_term_sum("r", 12, 8)}
-                   / COUNT(*) AS rm
-        FROM rets GROUP BY bar_ts
-    )
-"""
-
 
 # shared fragment for q_ulcer_index: the squared-drawdown split sum
 DD_SUM = sql_split_term_sum("dd_pct * dd_pct", 12, 8)
@@ -108,7 +53,7 @@ DD_SUM = sql_split_term_sum("dd_pct * dd_pct", 12, 8)
 @query(
     "q_ulcer_index",
     oracle=f"""
-    WITH {_DUCK_BARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", "close")}),
     dd AS (
         SELECT symbol, bar_ts, close,
                (close / max(close) OVER (PARTITION BY symbol ORDER BY bar_ts
@@ -148,7 +93,7 @@ def q_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one window pass for the running max (shuffles once on
     symbol), then one partial+final hash-agg — no self-join, state
     O(1) per row."""
-    bars = _bars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
     w = (
         Window.partitionBy("symbol")
         .orderBy("bar_ts")
@@ -186,8 +131,9 @@ def q_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_information_ratio",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
-    {_DUCK_MKT},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
+    mkt AS ({sql_market_return("rets")}),
     act AS (
         SELECT s.symbol, s.r - m.rm AS ra
         FROM rets s JOIN mkt m ON s.bar_ts = m.bar_ts
@@ -222,8 +168,10 @@ def q_information_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 0 via greatest(). Scale: the market table is calendar-bounded
     (one row per bar) so the returns⨝market join broadcasts; moments
     are one partial+final hash-agg per symbol."""
-    rets = _returns(spark, sf_dir)
-    act = rets.join(F.broadcast(_market(rets)), "bar_ts").select(
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
+    act = rets.join(F.broadcast(market_return(rets)), "bar_ts").select(
         "symbol", (F.col("r") - F.col("rm")).alias("ra")
     )
     m = act.groupBy("symbol").agg(
@@ -249,8 +197,9 @@ def q_information_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_updown_capture",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
-    {_DUCK_MKT},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
+    mkt AS ({sql_market_return("rets")}),
     j AS (
         SELECT s.symbol, s.r, m.rm
         FROM rets s JOIN mkt m ON s.bar_ts = m.bar_ts
@@ -286,8 +235,10 @@ def q_updown_capture(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation (one pass, no per-regime re-scan); quotient chain
     identical both engines; empty regimes yield NULL. Scale: broadcast
     market join + one hash-agg per symbol."""
-    rets = _returns(spark, sf_dir)
-    j = rets.join(F.broadcast(_market(rets)), "bar_ts")
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
+    j = rets.join(F.broadcast(market_return(rets)), "bar_ts")
     up, dn = F.col("rm") > 0, F.col("rm") < 0
     agg = j.groupBy("symbol").agg(
         F.sum(F.when(up, 1).otherwise(0)).cast("bigint").alias("n_up"),
@@ -319,19 +270,8 @@ def q_updown_capture(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_kendall_tau",
     oracle=f"""
-    WITH dbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('day', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
-    drets AS (
-        SELECT symbol, bar_ts,
-               close / lag(close) OVER (PARTITION BY symbol
-                                        ORDER BY bar_ts) - 1.0 AS r
-        FROM dbars
-        QUALIFY r IS NOT NULL
-    ),
+    WITH dbars AS ({sql_ohlcv_bars("day", "close")}),
+    drets AS ({sql_bar_returns("dbars")}),
     pairs AS (
         SELECT a.symbol AS symbol_a, b.symbol AS symbol_b,
                a.bar_ts, a.r AS ra, b.r AS rb
@@ -383,16 +323,9 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles on the (symbol_a, symbol_b) pair key so each pair's
     quadratic work parallelizes across executors."""
     ev = load_table(spark, sf_dir, "events")
-    dbars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    dbars = ohlcv_bars(ev, "day", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
-    drets = dbars.select(
-        "symbol",
-        "bar_ts",
-        (F.col("close") / F.lag("close").over(w) - F.lit(1.0)).alias("r"),
-    ).filter(F.col("r").isNotNull())
+    drets = bar_returns(dbars)
     a, b = drets.alias("a"), drets.alias("b")
     pairs = (
         a.join(b, "bar_ts")
@@ -470,7 +403,8 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_hurst_exponent",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     seq AS (
         SELECT symbol, bar_ts, r,
                row_number() OVER (PARTITION BY symbol ORDER BY bar_ts) AS rn
@@ -550,7 +484,9 @@ def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-symbol row_number (one window shuffle); everything after is
     hash-aggs keyed by (symbol, scale, block) — no self-joins, state
     bounded by block size 64."""
-    rets = _returns(spark, sf_dir)
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     seq = rets.select("symbol", "bar_ts", "r", F.row_number().over(w).alias("rn"))
     scales = F.explode(F.array(F.lit(16), F.lit(32), F.lit(64))).alias("scale")
@@ -636,20 +572,9 @@ def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Over a daily close-bar relation ``dbars``.
 _DUCK_DAILY_PAIRS = f"""
-    dbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('day', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
-    drets AS (
-        SELECT symbol, bar_ts,
-               close / lag(close) OVER (PARTITION BY symbol
-                                        ORDER BY bar_ts) - 1.0 AS r
-        FROM dbars
-        QUALIFY r IS NOT NULL
-    ),
+    drets AS ({sql_bar_returns("dbars")}),
     pairs AS (
         SELECT a.symbol AS symbol_a, b.symbol AS symbol_b,
                a.bar_ts, a.r AS ra, b.r AS rb
@@ -662,7 +587,8 @@ _DUCK_DAILY_PAIRS = f"""
 @query(
     "q_spearman_corr",
     oracle=f"""
-    WITH {_DUCK_DAILY_PAIRS},
+    WITH dbars AS ({sql_ohlcv_bars("day", "close")}),
+    {_DUCK_DAILY_PAIRS},
     ranked AS (
         SELECT symbol_a, symbol_b,
                2 * rank() OVER (PARTITION BY symbol_a, symbol_b ORDER BY ra)
@@ -709,16 +635,9 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic pass (unlike tau's day-pair join), so Spearman is the one
     of the three that stays cheap at long horizons."""
     ev = load_table(spark, sf_dir, "events")
-    dbars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    dbars = ohlcv_bars(ev, "day", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
-    drets = dbars.select(
-        "symbol",
-        "bar_ts",
-        (F.col("close") / F.lag("close").over(w) - F.lit(1.0)).alias("r"),
-    ).filter(F.col("r").isNotNull())
+    drets = bar_returns(dbars)
     a, b = drets.alias("a"), drets.alias("b")
     pairs = (
         a.join(b, "bar_ts")
@@ -781,7 +700,7 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_theil_sen",
     oracle=f"""
-    WITH {_DUCK_BARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", "close")}),
     idx AS (
         SELECT symbol, close,
                row_number() OVER (PARTITION BY symbol
@@ -825,7 +744,7 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     MAP-SIDE from one collected array per symbol — one shuffle keyed on
     symbol, no self-join, mirroring the basket-pair pattern
     (q_pair_affinity)."""
-    bars = _bars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
     w = Window.partitionBy("symbol").orderBy(F.col("bar_ts").desc())
     idx = bars.select(
         "symbol", "close", F.row_number().over(w).alias("rn")
@@ -876,7 +795,7 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_permutation_entropy",
     oracle=f"""
-    WITH {_DUCK_BARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", "close")}),
     tri AS (
         SELECT symbol,
                lag(close, 2) OVER w AS a,
@@ -927,7 +846,7 @@ def q_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines — never engine-computed ln(6), which may differ one ulp).
     Scale: two lags over ONE per-symbol window pass, then a ≤6-row
     hash-agg per symbol; O(1) state per row."""
-    bars = _bars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     tri = bars.select(
         "symbol",
@@ -971,7 +890,7 @@ def q_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_calmar",
     oracle=f"""
-    WITH {_DUCK_BARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", "close")}),
     path AS (
         SELECT symbol, bar_ts, close,
                max(close) OVER (PARTITION BY symbol ORDER BY bar_ts
@@ -1014,7 +933,7 @@ def q_calmar(spark: SparkSession, sf_dir: str) -> DataFrame:
     running-peak window, max is order-free, and all reported doubles
     are identical scalar trees floor-rounded. Scale: one per-symbol
     window pass + one hash-agg, O(1) state per row."""
-    bars = _bars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     path = bars.select(
         "symbol",
@@ -1050,7 +969,8 @@ def q_calmar(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_omega_ratio",
     oracle=f"""
-    WITH {_DUCK_RETURNS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     agg AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n_rets,
@@ -1079,7 +999,9 @@ def q_omega_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation, the q_updown_capture idiom), so partition order cannot
     move the ratio; the single division is floor-rounded. Scale: the
     returns window pass then ONE hash-agg per symbol."""
-    rets = _returns(spark, sf_dir)
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     agg = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rets"),
         F.count(F.when(F.col("r") > 0, 1)).cast("bigint").alias("n_up"),

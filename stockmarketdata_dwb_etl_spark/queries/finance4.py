@@ -26,15 +26,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    OHLCV,
+    bar_returns,
+    market_return,
+    ohlcv_bars,
+    sql_bar_returns,
+    sql_market_return,
+    sql_ohlcv_bars,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     split_term_sum,
     sql_portable_round,
     sql_split_term_sum,
-)
-from stockmarketdata_dwb_etl_spark.queries.finance2 import (
-    _duck_ohlcv,
-    _ohlcv_bars,
 )
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -45,9 +51,8 @@ from stockmarketdata_dwb_etl_spark.registry import query
 # unrounded sum uses (12,8); pre-rounded fold terms cast at their own
 # exact scale.
 
-# DuckDB twin of the gated hourly bar base: OHLCV bars + row_number.
-_DUCK_NBARS = f"""
-    {_duck_ohlcv("hour")},
+# The full-frame gate over hourly OHLCV bars: a per-symbol row number.
+_DUCK_NUMBERED = """
     nbars AS (
         SELECT symbol, bar_ts, open, high, low, close, volume,
                CAST(row_number() OVER (PARTITION BY symbol ORDER BY bar_ts)
@@ -57,9 +62,8 @@ _DUCK_NBARS = f"""
 """
 
 
-def _nbars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly OHLCV bars + per-symbol row_number (the full-frame gate)."""
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+def _numbered(bars: DataFrame) -> DataFrame:
+    """Spark twin of ``_DUCK_NUMBERED``: ``bars`` plus its row number."""
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     return bars.withColumn("rn", F.row_number().over(w).cast("bigint"))
 
@@ -75,7 +79,8 @@ def _rows_window(n: int):
 @query(
     "q_donchian",
     oracle=f"""
-    WITH {_DUCK_NBARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
+    {_DUCK_NUMBERED},
     ch AS (
         SELECT symbol, bar_ts, close, rn,
                max(high) OVER w AS upper,
@@ -100,7 +105,8 @@ def q_donchian(spark: SparkSession, sf_dir: str) -> DataFrame:
     max/min are exact over doubles (no accumulation error), so only the
     derived mid/width divide chains round. Scale: one bounded ROWS
     window over pre-aggregated bars — one shuffle on symbol."""
-    ch = _nbars(spark, sf_dir).select(
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
+    ch = _numbered(bars).select(
         "symbol",
         "bar_ts",
         "close",
@@ -132,7 +138,8 @@ def q_donchian(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_williams_r",
     oracle=f"""
-    WITH {_DUCK_NBARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
+    {_DUCK_NUMBERED},
     ch AS (
         SELECT symbol, bar_ts, close, rn,
                max(high) OVER w AS hh,
@@ -154,7 +161,8 @@ def q_williams_r(spark: SparkSession, sf_dir: str) -> DataFrame:
     (0 = at the high, −100 = at the low). Flat-range bars (HH = LL)
     emit NULL rather than a divide-by-zero. Scale: same one-window
     posture as q_donchian."""
-    ch = _nbars(spark, sf_dir).select(
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
+    ch = _numbered(bars).select(
         "symbol",
         "bar_ts",
         "close",
@@ -185,7 +193,8 @@ def q_williams_r(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_cci",
     oracle=f"""
-    WITH {_DUCK_NBARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
+    {_DUCK_NUMBERED},
     tpb AS (
         SELECT symbol, bar_ts, rn,
                (high + low + close) / 3.0 AS tp
@@ -225,7 +234,8 @@ def q_cci(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL before summing, making the fold order-insensitive and
     bit-identical cross-engine. Scale: the array is frame-bounded (20
     doubles/row); still one symbol-partition window pass."""
-    tpb = _nbars(spark, sf_dir).select(
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
+    tpb = _numbered(bars).select(
         "symbol",
         "bar_ts",
         "rn",
@@ -283,7 +293,8 @@ def q_cci(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_mfi",
     oracle=f"""
-    WITH {_DUCK_NBARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
+    {_DUCK_NUMBERED},
     tpb AS (
         SELECT symbol, bar_ts, rn, volume,
                (high + low + close) / 3.0 AS tp
@@ -324,7 +335,8 @@ def q_mfi(spark: SparkSession, sf_dir: str) -> DataFrame:
     MFI = 100·pos/(pos+neg). Gated at rn ≥ 15 so every frame row has a
     defined direction. Scale: lag + one bounded window, single symbol
     shuffle."""
-    tpb = _nbars(spark, sf_dir).select(
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
+    tpb = _numbered(bars).select(
         "symbol",
         "bar_ts",
         "rn",
@@ -374,7 +386,8 @@ def q_mfi(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_cmf",
     oracle=f"""
-    WITH {_DUCK_NBARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
+    {_DUCK_NUMBERED},
     mfv AS (
         SELECT symbol, bar_ts, rn, volume,
                CASE WHEN high = low THEN 0.0
@@ -404,7 +417,8 @@ def q_cmf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Flat bars contribute 0. Money-flow volume sums in exact DECIMAL;
     the volume denominator is an exact integer sum. Scale: one bounded
     window, one shuffle."""
-    nb = _nbars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
+    nb = _numbered(bars)
     mfm = F.when(F.col("high") == F.col("low"), F.lit(0.0)).otherwise(
         ((F.col("close") - F.col("low")) - (F.col("high") - F.col("close")))
         / (F.col("high") - F.col("low"))
@@ -439,7 +453,8 @@ def q_cmf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ichimoku",
     oracle=f"""
-    WITH {_DUCK_NBARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
+    {_DUCK_NUMBERED},
     lines AS (
         SELECT symbol, bar_ts, close, rn,
                (max(high) OVER w9  + min(low) OVER w9)  / 2.0 AS conv,
@@ -484,7 +499,8 @@ def q_ichimoku(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL for each symbol's final 26 bars by construction (identical on
     both engines). Scale: three bounded max/min windows + one
     lag/lead pass, all over the same symbol partition — one shuffle."""
-    nb = _nbars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
+    nb = _numbered(bars)
     lines = nb.select(
         "symbol",
         "bar_ts",
@@ -546,7 +562,7 @@ def q_ichimoku(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_pivot_points",
     oracle=f"""
-    WITH {_duck_ohlcv("day")},
+    WITH bars AS ({sql_ohlcv_bars("day", *OHLCV)}),
     pv AS (
         SELECT symbol, bar_ts, close,
                lag(high)  OVER ws AS ph,
@@ -573,7 +589,7 @@ def q_pivot_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag arithmetic — the identical double tree on both engines; first
     session per symbol drops (no prior bar). Scale: daily bars are tiny
     relative to events; one lag window, one shuffle."""
-    bars = _ohlcv_bars(spark, sf_dir, "day")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "day", *OHLCV)
     ws = Window.partitionBy("symbol").orderBy("bar_ts")
     pv = bars.select(
         "symbol",
@@ -606,7 +622,8 @@ def q_pivot_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_keltner",
     oracle=f"""
-    WITH {_DUCK_NBARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
+    {_DUCK_NUMBERED},
     tpb AS (
         SELECT symbol, bar_ts, close, rn,
                (high + low + close) / 3.0 AS tp,
@@ -641,7 +658,8 @@ def q_keltner(spark: SparkSession, sf_dir: str) -> DataFrame:
     rails at center ± band, plus the close's normalized position in the
     channel. Both SMAs accumulate in exact DECIMAL. Scale: two bounded
     windows over the same symbol partition — one shuffle."""
-    tpb = _nbars(spark, sf_dir).select(
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
+    tpb = _numbered(bars).select(
         "symbol",
         "bar_ts",
         "close",
@@ -682,7 +700,8 @@ def q_keltner(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_aroon",
     oracle=f"""
-    WITH {_DUCK_NBARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
+    {_DUCK_NUMBERED},
     mx AS (
         SELECT symbol, bar_ts, rn,
                max(struct_pack(v := high, rn := rn)) OVER w AS hs,
@@ -712,7 +731,8 @@ def q_aroon(spark: SparkSession, sf_dir: str) -> DataFrame:
     highs and the EARLIEST for lows identically on both engines (struct
     ordering), with no argmax nondeterminism. Scale: one bounded
     window, state is one struct per frame — one shuffle."""
-    nb = _nbars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
+    nb = _numbered(bars)
     w = _rows_window(25)
     mx = nb.select(
         "symbol",
@@ -743,7 +763,7 @@ def q_aroon(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_trix",
     oracle=f"""
-    WITH RECURSIVE {_duck_ohlcv("hour")},
+    WITH RECURSIVE bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     nb AS (
         SELECT symbol, bar_ts, close,
                row_number() OVER (PARTITION BY symbol ORDER BY bar_ts) AS rn
@@ -808,7 +828,11 @@ def q_trix(spark: SparkSession, sf_dir: str) -> DataFrame:
     giant-series escape hatch)."""
     import pandas as pd
 
-    bars = _ohlcv_bars(spark, sf_dir, "hour").select("symbol", "bar_ts", "close")
+    bars = ohlcv_bars(
+
+        load_table(spark, sf_dir, "events"), "hour", *OHLCV
+
+    ).select("symbol", "bar_ts", "close")
 
     def trix_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("bar_ts").reset_index(drop=True)
@@ -846,7 +870,7 @@ def q_trix(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_heikin_ashi",
     oracle=f"""
-    WITH RECURSIVE {_duck_ohlcv("hour")},
+    WITH RECURSIVE bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     nb AS (
         SELECT symbol, bar_ts, open, high, low, close,
                (open + high + low + close) / 4.0 AS hc,
@@ -891,7 +915,7 @@ def q_heikin_ashi(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything else stays map-side over the bar table."""
     import pandas as pd
 
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
     hc = ((F.col("open") + F.col("high") + F.col("low") + F.col("close")) / 4.0)
     nb = bars.select("symbol", "bar_ts", "open", "high", "low", "close", hc.alias("hc"))
 
@@ -936,7 +960,7 @@ def q_heikin_ashi(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_kalman_filter",
     oracle=f"""
-    WITH RECURSIVE {_duck_ohlcv("hour")},
+    WITH RECURSIVE bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     nb AS (
         SELECT symbol, bar_ts, close,
                row_number() OVER (PARTITION BY symbol ORDER BY bar_ts) AS rn
@@ -983,7 +1007,11 @@ def q_kalman_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (x, p) seed."""
     import pandas as pd
 
-    bars = _ohlcv_bars(spark, sf_dir, "hour").select("symbol", "bar_ts", "close")
+    bars = ohlcv_bars(
+
+        load_table(spark, sf_dir, "events"), "hour", *OHLCV
+
+    ).select("symbol", "bar_ts", "close")
 
     def kalman_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("bar_ts").reset_index(drop=True)
@@ -1020,58 +1048,12 @@ def q_kalman_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DUCK_RETS_MKT = f"""
-    cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, printf('%020d-%012d', epoch_us(ts), event_id))
-                   AS close
-        FROM events GROUP BY 1, 2
-    ),
-    rets AS (
-        SELECT symbol, bar_ts,
-               close / lag(close) OVER (PARTITION BY symbol
-                                        ORDER BY bar_ts) - 1.0 AS r
-        FROM cbars
-        QUALIFY r IS NOT NULL
-    ),
-    mkt AS (
-        SELECT bar_ts,
-               {sql_split_term_sum("r", 12, 8)}
-                   / COUNT(*) AS rm
-        FROM rets GROUP BY bar_ts
-    )
-"""
-
-
-def _rets_mkt(spark: SparkSession, sf_dir: str):
-    """Hourly simple returns + the equal-weight market benchmark (the
-    q_beta_capm/finance3 construction, re-derived here so finance4 has
-    no import-order coupling)."""
-    from stockmarketdata_dwb_etl_spark.catalog import load_table
-    from stockmarketdata_dwb_etl_spark.queries.timeseries import _spark_ord
-
-    ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
-    w = Window.partitionBy("symbol").orderBy("bar_ts")
-    rets = bars.select(
-        "symbol",
-        "bar_ts",
-        (F.col("close") / F.lag("close").over(w) - F.lit(1.0)).alias("r"),
-    ).filter(F.col("r").isNotNull())
-    mkt = rets.groupBy("bar_ts").agg(
-        (split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("rm")
-    )
-    return rets, mkt
-
-
 @query(
     "q_treynor",
     oracle=f"""
-    WITH {_DUCK_RETS_MKT},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
+    mkt AS ({sql_market_return("rets")}),
     j AS (
         SELECT s.symbol, s.r, m.rm
         FROM rets s JOIN mkt m ON s.bar_ts = m.bar_ts
@@ -1107,7 +1089,10 @@ def q_treynor(spark: SparkSession, sf_dir: str) -> DataFrame:
     (·8760), never pow. Near-zero beta → NULL (ratio undefined).
     Scale: one returns window + broadcast-joined market + one moments
     hash-agg."""
-    rets, mkt = _rets_mkt(spark, sf_dir)
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
+    mkt = market_return(rets)
     j = rets.join(F.broadcast(mkt), "bar_ts").select("symbol", "r", "rm")
     mo = j.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -1141,7 +1126,8 @@ def q_treynor(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_kelly_criterion",
     oracle=f"""
-    WITH {_DUCK_RETS_MKT},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     mo AS (
         SELECT symbol,
                CAST(COUNT(*) AS BIGINT) AS n,
@@ -1181,7 +1167,9 @@ def q_kelly_criterion(spark: SparkSession, sf_dir: str) -> DataFrame:
     win/loss mass and power sums accumulate in DECIMAL; degenerate
     one-sided histories emit NULL. Scale: one returns window + one
     moments hash-agg (O(1) group state)."""
-    rets, _ = _rets_mkt(spark, sf_dir)
+    rets = bar_returns(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     zero = F.lit(0.0)
     mo = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -21,6 +21,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    market_return,
+    ohlcv_bars,
+    sql_market_return,
+    sql_ohlcv_bars,
+    sql_tick_key,
+    tick_key,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     split_term_sum,
@@ -29,7 +37,6 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     term,
 )
 from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
-from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # Cross-row double sums route through the two-bucket split sum
@@ -40,13 +47,8 @@ from stockmarketdata_dwb_etl_spark.registry import query
 # every moment sum uses (12,8): sub-1 terms keep 12dp, spikes round at
 # 8dp under the 9e7 bound.
 
-_DUCK_LOGRETS = f"""
-    cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
+# Hourly log returns of a close-bar relation, positive closes only.
+_DUCK_LOG_CHAIN = """
     lr AS (
         SELECT symbol, bar_ts,
                ln(close / lag(close) OVER (PARTITION BY symbol
@@ -59,17 +61,9 @@ _DUCK_LOGRETS = f"""
 """
 
 
-def _logrets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-symbol hourly log returns (positive closes only)."""
-    ev = load_table(spark, sf_dir, "events")
-    bars = (
-        ev.groupBy(
-            F.col("event_type").alias("symbol"),
-            F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-        )
-        .agg(F.max_by("value", _spark_ord()).alias("close"))
-        .filter(F.col("close") > 0)
-    )
+def _log_chain(bars: DataFrame) -> DataFrame:
+    """Spark twin of ``_DUCK_LOG_CHAIN``: (symbol, bar_ts, r)."""
+    bars = bars.filter(F.col("close") > 0)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     return (
         bars.select(
@@ -88,7 +82,8 @@ def _logrets(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_variance_ratio",
     oracle=f"""
-    WITH {_DUCK_LOGRETS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    {_DUCK_LOG_CHAIN},
     nr AS (
         SELECT symbol, bar_ts, r,
                {sql_split_term_sum("r", 12, 8, "OVER w4")} AS rq,
@@ -136,7 +131,9 @@ def q_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     (overlapping — no row loss beyond the 3-row warmup); both variance
     estimates from DECIMAL power sums. Zero base variance drops the
     symbol. Scale: one window + two moments hash-aggs."""
-    lr = _logrets(spark, sf_dir)
+    lr = _log_chain(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     w4 = (
         Window.partitionBy("symbol")
         .orderBy("bar_ts")
@@ -196,7 +193,8 @@ def q_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_tail_dependence",
     oracle=f"""
-    WITH {_DUCK_LOGRETS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    {_DUCK_LOG_CHAIN},
     thr AS (
         SELECT symbol, quantile_cont(r, 0.1) AS q10 FROM lr GROUP BY 1
     ),
@@ -231,7 +229,9 @@ def q_tail_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
     counting — the λ estimate is a pure ratio of exact integers.
     Scale: per-symbol percentile + broadcast threshold join + one
     bar_ts-co-partitioned pair join bounded by the symbol catalog."""
-    lr = _logrets(spark, sf_dir)
+    lr = _log_chain(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     thr = lr.groupBy("symbol").agg(F.percentile("r", 0.1).alias("q10"))
     flags = lr.join(F.broadcast(thr), "symbol").select(
         "symbol",
@@ -278,12 +278,7 @@ def q_tail_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_cointegration_screen",
     oracle=f"""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
     lp AS (
         SELECT symbol, bar_ts, ln(close) AS l
         FROM cbars WHERE close > 0
@@ -348,11 +343,7 @@ def q_cointegration_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by the symbol catalog + one residual window per pair."""
     ev = load_table(spark, sf_dir, "events")
     lp = (
-        ev.groupBy(
-            F.col("event_type").alias("symbol"),
-            F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-        )
-        .agg(F.max_by("value", _spark_ord()).alias("close"))
+        ohlcv_bars(ev, "hour", "close")
         .filter(F.col("close") > 0)
         .select("symbol", "bar_ts", F.log("close").alias("l"))
     )
@@ -416,9 +407,9 @@ def q_cointegration_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (
         SELECT event_type AS symbol, value,
-               {_DUCK_ORD} AS ord,
+               {sql_tick_key()} AS ord,
                CAST(sum(CAST(value AS DECIMAL(38,6))) OVER (
-                   PARTITION BY event_type ORDER BY {_DUCK_ORD}
+                   PARTITION BY event_type ORDER BY {sql_tick_key()}
                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
                    AS DOUBLE) AS cum_before
         FROM events
@@ -456,13 +447,13 @@ def q_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     wo = (
         Window.partitionBy("event_type")
-        .orderBy(_spark_ord())
+        .orderBy(tick_key())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     t = ev.select(
         F.col("event_type").alias("symbol"),
         "value",
-        _spark_ord().alias("ord"),
+        tick_key().alias("ord"),
         F.sum(F.col("value").cast("decimal(38,6)"))
         .over(wo)
         .cast("double")
@@ -494,45 +485,6 @@ def q_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DUCK_DAYRET = f"""
-    dbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('day', ts) AS bar_ts,
-               arg_min(value, {_DUCK_ORD}) AS open,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
-    dret AS (
-        SELECT symbol, bar_ts, close / open - 1.0 AS x,
-               CAST(row_number() OVER (PARTITION BY symbol ORDER BY bar_ts)
-                    AS BIGINT) AS rn
-        FROM dbars WHERE open <> 0
-    )
-"""
-
-
-def _dayrets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily session returns close/open − 1 with a per-symbol row index."""
-    ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("day", F.col("ts")).alias("bar_ts"),
-    ).agg(
-        F.min_by("value", _spark_ord()).alias("open"),
-        F.max_by("value", _spark_ord()).alias("close"),
-    )
-    w = Window.partitionBy("symbol").orderBy("bar_ts")
-    return (
-        bars.filter(F.col("open") != 0)
-        .select(
-            "symbol",
-            "bar_ts",
-            (F.col("close") / F.col("open") - 1.0).alias("x"),
-        )
-        .withColumn("rn", F.row_number().over(w).cast("bigint"))
-    )
-
-
 _HEX = "0123456789abcdef"
 
 
@@ -548,7 +500,13 @@ def _duck_hex4(expr: str) -> str:
 @query(
     "q_bootstrap_ci",
     oracle=f"""
-    WITH {_DUCK_DAYRET},
+    WITH dbars AS ({sql_ohlcv_bars("day", "open", "close")}),
+    dret AS (
+        SELECT symbol, bar_ts, close / open - 1.0 AS x,
+               CAST(row_number() OVER (PARTITION BY symbol ORDER BY bar_ts)
+                    AS BIGINT) AS rn
+        FROM dbars WHERE open <> 0
+    ),
     nn AS (
         SELECT symbol, CAST(MAX(rn) AS BIGINT) AS n FROM dret GROUP BY 1
     ),
@@ -601,7 +559,18 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     200 means. Scale: the draw spine is |symbols|·B·n rows of pure
     integers joined on (symbol, rn) — co-partitioned, no value data in
     the spine; B and the percentile state are constants."""
-    dret = bounded_persist(_dayrets(spark, sf_dir), "boot-dret")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "day", "open", "close")
+    w = Window.partitionBy("symbol").orderBy("bar_ts")
+    dret = (
+        bars.filter(F.col("open") != 0)
+        .select(
+            "symbol",
+            "bar_ts",
+            (F.col("close") / F.col("open") - 1.0).alias("x"),
+        )
+        .withColumn("rn", F.row_number().over(w).cast("bigint"))
+    )
+    dret = bounded_persist(dret, "boot-dret")
     nn = dret.groupBy("symbol").agg(F.max("rn").cast("bigint").alias("n"))
     bs = spark.range(0, 200).select(F.col("id").alias("b"))
     # index spine bound: 400 > any per-symbol daily-bar count at the
@@ -666,7 +635,8 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_newey_west",
     oracle=f"""
-    WITH {_DUCK_LOGRETS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    {_DUCK_LOG_CHAIN},
     lagged AS (
         SELECT symbol, r,
                lag(r, 1) OVER ws AS r1,
@@ -719,7 +689,9 @@ def q_newey_west(spark: SparkSession, sf_dir: str) -> DataFrame:
     on. Autocovariances come from ONE window pass (two lag() over the
     same spec) with DECIMAL cross-product sums; non-positive long-run
     variance → NULL. Scale: one window + one moments hash-agg."""
-    lr = _logrets(spark, sf_dir)
+    lr = _log_chain(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     ws = Window.partitionBy("symbol").orderBy("bar_ts")
     lagged = lr.select(
         "symbol",
@@ -780,12 +752,7 @@ def q_newey_west(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_seasonal_strength",
     oracle=f"""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
     seq AS (
         SELECT symbol, bar_ts, close, hour(bar_ts) AS hod,
                row_number() OVER (PARTITION BY symbol ORDER BY bar_ts) AS rn,
@@ -847,10 +814,7 @@ def q_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     from DECIMAL power sums. Scale: one symbol window + one (symbol,
     hod) hash-agg (24·k-row broadcast join-back) + one moments agg."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
     wseq = Window.partitionBy("symbol").orderBy("bar_ts")
     wall = Window.partitionBy("symbol").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -923,13 +887,9 @@ def q_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_partial_corr",
     oracle=f"""
-    WITH {_DUCK_LOGRETS},
-    mkt AS (
-        SELECT bar_ts,
-               {sql_split_term_sum("r", 12, 8)} / COUNT(*)
-                   AS rm
-        FROM lr GROUP BY 1
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    {_DUCK_LOG_CHAIN},
+    mkt AS ({sql_market_return("lr")}),
     tri AS (
         SELECT a.symbol AS symbol_a, b.symbol AS symbol_b,
                a.r AS ra, b.r AS rb, m.rm
@@ -984,10 +944,9 @@ def q_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ra, rb, rm); degenerate variances → row drops; |ρ·m| denominators
     ≤ 0 → NULL. Scale: one bar_ts-co-partitioned pair join bounded by
     the symbol catalog + one moments hash-agg."""
-    lr = bounded_persist(_logrets(spark, sf_dir), "pcorr-lr")
-    mkt = lr.groupBy("bar_ts").agg(
-        (split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("rm")
-    )
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    lr = bounded_persist(_log_chain(bars), "pcorr-lr")
+    mkt = market_return(lr)
     a = lr.select(F.col("symbol").alias("symbol_a"), "bar_ts", F.col("r").alias("ra"))
     b = lr.select(F.col("symbol").alias("symbol_b"), "bar_ts", F.col("r").alias("rb"))
     tri = (
@@ -1039,12 +998,7 @@ def q_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_adf_lite",
     oracle=f"""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
     d AS (
         SELECT symbol,
                lag(close) OVER ws AS xl,
@@ -1089,10 +1043,7 @@ def q_adf_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     joint-moment pass; degenerate regressor variance → row drops.
     Scale: one lag window + one moments hash-agg."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
     ws = Window.partitionBy("symbol").orderBy("bar_ts")
     d = (
         bars.select(
@@ -1141,7 +1092,8 @@ def q_adf_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_page_hinkley",
     oracle=f"""
-    WITH {_DUCK_LOGRETS},
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    {_DUCK_LOG_CHAIN},
     mu AS (
         SELECT symbol,
                {sql_split_term_sum("r", 12, 8)} / COUNT(*)
@@ -1185,7 +1137,9 @@ def q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix sum must be identical on both engines at EVERY t, not just
     in total). Scale: one broadcast mean join + two stacked windows on
     the symbol partition."""
-    lr = _logrets(spark, sf_dir)
+    lr = _log_chain(
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+    )
     mu = lr.groupBy("symbol").agg(
         (split_term_sum(F.col("r"), 12, 8) / F.count(F.lit(1))).alias("mu")
     )

@@ -35,49 +35,24 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    OHLC,
+    ohlcv_bars,
+    sql_ohlcv_bars,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
     sql_term,
     term,
 )
-from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
-
-
-_BARS_SQL = f"""
-    bars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_min(value, {_DUCK_ORD}) AS open,
-               MAX(value) AS high,
-               MIN(value) AS low,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    )
-"""
-
-
-def _hourly_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tick->hourly OHLC bars, deterministic open/close basis (the
-    finance.py recipe: min_by/max_by on the padded (epoch_us,event_id)
-    key so both engines pick the identical tick)."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(
-        F.min_by("value", _spark_ord()).alias("open"),
-        F.max("value").alias("high"),
-        F.min("value").alias("low"),
-        F.max_by("value", _spark_ord()).alias("close"),
-    )
 
 
 @query(
     "q_chande_momentum",
     oracle=f"""
-    WITH {_BARS_SQL},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLC)}),
     lagged AS (
         SELECT symbol, bar_ts, close,
                lag(close) OVER (PARTITION BY symbol ORDER BY bar_ts) AS pc
@@ -121,7 +96,7 @@ def q_chande_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
     summed in exact DECIMAL at the rounding scale; flat frames (Σgain+Σloss = 0) yield NULL
     via nullif rather than a 0/0. Scale: one tick->bar shuffle, then a
     bar-grained window per symbol."""
-    bars = _hourly_bars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLC)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     diff = F.col("close") - F.col("pc")
     # filter on the LAG, not on gain: greatest() ignores NULLs on both
@@ -166,7 +141,7 @@ def q_chande_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_vortex",
     oracle=f"""
-    WITH {_BARS_SQL},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLC)}),
     lagged AS (
         SELECT symbol, bar_ts, high, low,
                lag(low) OVER w AS pl,
@@ -218,7 +193,7 @@ def q_vortex(spark: SparkSession, sf_dir: str) -> DataFrame:
     and summed in exact DECIMAL at the rounding scale; one double division per ratio; full
     7-bar frames only. Scale: identical posture to q_chande_momentum —
     one tick->bar shuffle then catalog-sized windows."""
-    bars = _hourly_bars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLC)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     # filter on the LAG (greatest ignores NULLs on both engines — see
     # the oracle comment)
@@ -271,7 +246,7 @@ def q_vortex(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_yang_zhang_vol",
     oracle=f"""
-    WITH {_BARS_SQL},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLC)}),
     lagged AS (
         SELECT symbol, bar_ts, open, high, low, close,
                lag(close) OVER (PARTITION BY symbol ORDER BY bar_ts) AS pc
@@ -325,7 +300,7 @@ def q_yang_zhang_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit before the 6dp presentation round. Scale: tick->bar
     hash-agg (the only full-data shuffle), then a 1-row-per-symbol agg.
     """
-    bars = _hourly_bars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLC)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     lagged = bars.withColumn("pc", F.lag("close").over(w)).filter(
         F.col("pc").isNotNull()
@@ -392,7 +367,7 @@ def q_yang_zhang_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_adx",
     oracle=f"""
-    WITH RECURSIVE {_BARS_SQL},
+    WITH RECURSIVE bars AS ({sql_ohlcv_bars("hour", *OHLC)}),
     lagged AS (
         SELECT symbol, bar_ts, high, low,
                lag(high) OVER w AS ph,
@@ -486,7 +461,7 @@ def q_adx(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-data shuffle; per-symbol state is three floats."""
     import pandas as pd
 
-    bars = _hourly_bars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLC)
 
     def adx_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("bar_ts").reset_index(drop=True)
@@ -544,7 +519,7 @@ def q_adx(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_durbin_watson",
     oracle=f"""
-    WITH {_BARS_SQL},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLC)}),
     nb AS (
         SELECT symbol, bar_ts, close,
                row_number() OVER (PARTITION BY symbol ORDER BY bar_ts) AS rn
@@ -619,7 +594,11 @@ def q_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     and residual branches)."""
     from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
 
-    bars = _hourly_bars(spark, sf_dir).select("symbol", "bar_ts", "close")
+    bars = ohlcv_bars(
+
+        load_table(spark, sf_dir, "events"), "hour", *OHLC
+
+    ).select("symbol", "bar_ts", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     nb = bounded_persist(
         bars.withColumn("rn", F.row_number().over(w)), "dw-bars"

@@ -21,15 +21,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    OHLCV,
+    ohlcv_bars,
+    sql_ohlcv_bars,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
     sql_term,
     term,
-)
-from stockmarketdata_dwb_etl_spark.queries.finance2 import (
-    _duck_ohlcv,
-    _ohlcv_bars,
 )
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -43,7 +45,7 @@ _INV_4LN2 = 0.3606737602222409
 @query(
     "q_parkinson_vol",
     oracle=f"""
-    WITH {_duck_ohlcv("day")},
+    WITH bars AS ({sql_ohlcv_bars("day", *OHLCV)}),
     terms AS (
         SELECT symbol,
                {sql_term(
@@ -73,7 +75,9 @@ def q_parkinson_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     1/(4ln2) is an embedded literal on both engines, never an
     engine-evaluated ln. Scales: tick→daily-bar hash-agg then a
     per-symbol agg — one shuffle, partial-agg collapses the exchange."""
-    bars = _ohlcv_bars(spark, sf_dir, "day").filter(F.col("low") > 0)
+    bars = ohlcv_bars(
+        load_table(spark, sf_dir, "events"), "day", *OHLCV
+    ).filter(F.col("low") > 0)
     lhl = F.log(F.col("high") / F.col("low"))
     terms = bars.select(
         "symbol", term(lhl * lhl, 10).alias("hl2")
@@ -94,7 +98,7 @@ def q_parkinson_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ultimate_oscillator",
     oracle=f"""
-    WITH {_duck_ohlcv("hour")},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     base AS (
         SELECT symbol, bar_ts, high, low, close,
                lag(close) OVER w AS prev_c,
@@ -149,7 +153,7 @@ def q_ultimate_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit from rn ≥ 29 so the 28-bar frame is fully formed past the
     prev-close seed. Scales: bar hash-agg + one window shuffle on
     symbol."""
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     base = bars.select(
         "symbol",
@@ -213,7 +217,7 @@ def q_ultimate_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_force_index",
     oracle=f"""
-    WITH {_duck_ohlcv("hour")},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     fi AS (
         SELECT symbol, bar_ts,
                row_number() OVER w AS rn,
@@ -244,7 +248,7 @@ def q_force_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum accumulates them in exact DECIMAL. Rows emit from rn ≥ 14 so
     the prev-close seed and the full 13-bar frame both exist. Scales:
     bar hash-agg + one window shuffle on symbol."""
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     fi = bars.select(
         "symbol",
@@ -277,7 +281,7 @@ def q_force_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_chaikin_ad",
     oracle=f"""
-    WITH {_duck_ohlcv("hour")},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     mf AS (
         SELECT symbol, bar_ts,
                {sql_term(
@@ -307,7 +311,7 @@ def q_chaikin_ad(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-order independent and bit-identical cross-engine.
     Scales: bar hash-agg + one running-sum window on symbol — the same
     single-shuffle shape as q_obv."""
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
     mfm = F.when(F.col("high") == F.col("low"), F.lit(0.0)).otherwise(
         ((F.col("close") - F.col("low")) - (F.col("high") - F.col("close")))
         / (F.col("high") - F.col("low"))
@@ -337,7 +341,7 @@ def q_chaikin_ad(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_dpo",
     oracle=f"""
-    WITH {_duck_ohlcv("day")},
+    WITH bars AS ({sql_ohlcv_bars("day", *OHLCV)}),
     base AS (
         SELECT symbol, bar_ts, close,
                row_number() OVER w AS rn,
@@ -366,7 +370,7 @@ def q_dpo(spark: SparkSession, sf_dir: str) -> DataFrame:
     same window partition, so the whole query is one shuffle. Rows emit
     from rn ≥ 20 (full SMA window; the lag-11 value exists from rn=12).
     """
-    bars = _ohlcv_bars(spark, sf_dir, "day")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "day", *OHLCV)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     f20 = Window.partitionBy("symbol").orderBy("bar_ts").rowsBetween(-19, 0)
     base = bars.select(

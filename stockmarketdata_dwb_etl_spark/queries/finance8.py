@@ -19,6 +19,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    OHLCV,
+    bar_returns,
+    ohlcv_bars,
+    sql_bar_returns,
+    sql_ohlcv_bars,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
@@ -27,10 +35,6 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     term,
     term_sum,
 )
-from stockmarketdata_dwb_etl_spark.queries.finance2 import (
-    _duck_ohlcv,
-    _ohlcv_bars,
-)
 from stockmarketdata_dwb_etl_spark.registry import query
 
 
@@ -38,7 +42,7 @@ from stockmarketdata_dwb_etl_spark.registry import query
 @query(
     "q_coppock",
     oracle=f"""
-    WITH {_duck_ohlcv("hour")},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     roc AS (
         SELECT symbol, bar_ts,
                row_number() OVER w AS rn,
@@ -71,7 +75,7 @@ def q_coppock(spark: SparkSession, sf_dir: str) -> DataFrame:
     single window pass (the q_acf_correlogram lesson). Rows emit from
     rn ≥ 24 (ROC₁₄ defined from rn=15, plus 9 WMA lags). Scales: bar
     hash-agg + one window shuffle on symbol."""
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     roc = bars.select(
         "symbol",
@@ -111,7 +115,7 @@ def q_coppock(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_kst",
     oracle=f"""
-    WITH {_duck_ohlcv("hour")},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     roc AS (
         SELECT symbol, bar_ts,
                row_number() OVER w AS rn,
@@ -152,7 +156,7 @@ def q_kst(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass — same-spec window functions coalesce). Rows emit from rn ≥ 45
     (ROC₃₀ from rn=31 plus the 15-bar smoothing). Scales: bar hash-agg
     + one window shuffle."""
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
 
     def roc(n: int):
@@ -193,7 +197,7 @@ def q_kst(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_elder_ray",
     oracle=f"""
-    WITH {_duck_ohlcv("hour")},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     base AS (
         SELECT symbol, bar_ts, high, low,
                row_number() OVER (PARTITION BY symbol ORDER BY bar_ts)
@@ -223,7 +227,7 @@ def q_elder_ray(spark: SparkSession, sf_dir: str) -> DataFrame:
     (b)-path family). Close terms are 8dp-rounded into the exact
     DECIMAL frame sum. Rows emit from rn ≥ 13 (full MA window).
     Scales: bar hash-agg + one window shuffle on symbol."""
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     f13 = Window.partitionBy("symbol").orderBy("bar_ts").rowsBetween(-12, 0)
     base = bars.select(
@@ -258,7 +262,7 @@ def q_elder_ray(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_nvi_pvi",
     oracle=f"""
-    WITH {_duck_ohlcv("hour")},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     base AS (
         SELECT symbol, bar_ts, close, volume,
                lag(close) OVER w AS prev_c,
@@ -302,7 +306,7 @@ def q_nvi_pvi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln-term-rounding convention of q_volatility_gk absorbs cross-libm
     ulp noise). Scales: bar hash-agg + one running-sum window on
     symbol."""
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     base = bars.select(
         "symbol",
@@ -344,7 +348,7 @@ def q_nvi_pvi(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_market_breadth",
     oracle=f"""
-    WITH {_duck_ohlcv("hour")},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     rets AS (
         SELECT symbol, bar_ts,
                close - lag(close) OVER (PARTITION BY symbol
@@ -378,7 +382,7 @@ def q_market_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     not data-sized; the same dimension-bounded-global-window class as
     q_lsh_tuning_curve, documented per the SCALE.md audit). Scales:
     bar hash-agg, one lag window on symbol, one hash-agg on bar_ts."""
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     rets = bars.select(
         "bar_ts",
@@ -416,19 +420,8 @@ _CHI2_5_01 = 15.086272469388987
 @query(
     "q_ljung_box",
     oracle=f"""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, printf('%020d-%012d', epoch_us(ts), event_id))
-                   AS close
-        FROM events GROUP BY 1, 2
-    ),
-    rets AS (
-        SELECT symbol, bar_ts,
-               close / lag(close) OVER (PARTITION BY symbol
-                                        ORDER BY bar_ts) - 1.0 AS r
-        FROM cbars QUALIFY r IS NOT NULL
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     mom AS (
         SELECT symbol, CAST(COUNT(*) AS BIGINT) AS n,
                {sql_term_sum("r", 12)} AS sr
@@ -491,9 +484,12 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern); Q's Σ over 5 rho rows is a tiny per-symbol agg. Scale:
     bar hash-agg, moment agg + broadcast join-back, one lag window —
     the audited returns-pipeline shape."""
-    from stockmarketdata_dwb_etl_spark.queries.finance2 import _returns
 
-    rets = _returns(spark, sf_dir)
+    rets = bar_returns(
+
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+
+    )
     mom = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         term_sum(F.col("r"), 12)
@@ -566,19 +562,8 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_half_life",
     oracle=f"""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, printf('%020d-%012d', epoch_us(ts), event_id))
-                   AS close
-        FROM events GROUP BY 1, 2
-    ),
-    rets AS (
-        SELECT symbol, bar_ts,
-               close / lag(close) OVER (PARTITION BY symbol
-                                        ORDER BY bar_ts) - 1.0 AS r
-        FROM cbars QUALIFY r IS NOT NULL
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
+    rets AS ({sql_bar_returns("cbars")}),
     mom AS (
         SELECT symbol, CAST(COUNT(*) AS BIGINT) AS n,
                {sql_term_sum("r", 12)} AS sr
@@ -621,9 +606,12 @@ def q_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 4dp presentation round absorbing libm ulp (the hurst-class
     exp/ln posture). Scale: moment agg + broadcast join-back + one lag
     window on symbol."""
-    from stockmarketdata_dwb_etl_spark.queries.finance2 import _returns
 
-    rets = _returns(spark, sf_dir)
+    rets = bar_returns(
+
+        ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
+
+    )
     mom = rets.groupBy("symbol").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         term_sum(F.col("r"), 12)
@@ -670,7 +658,7 @@ def q_half_life(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_supertrend",
     oracle=f"""
-    WITH RECURSIVE {_duck_ohlcv("hour")},
+    WITH RECURSIVE bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     tr AS (
         SELECT symbol, bar_ts, high, low, close,
                row_number() OVER w AS rn,
@@ -749,7 +737,7 @@ def q_supertrend(spark: SparkSession, sf_dir: str) -> DataFrame:
     one Arrow pass per symbol partition."""
     import pandas as pd
 
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     trv = term(F.greatest(
             F.col("high") - F.col("low"),
@@ -822,7 +810,7 @@ def q_supertrend(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_zigzag",
     oracle=f"""
-    WITH RECURSIVE {_duck_ohlcv("hour")},
+    WITH RECURSIVE bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     c AS (
         SELECT symbol, bar_ts,
                CAST({sql_portable_round("close", 6)} AS DOUBLE) AS c,
@@ -895,7 +883,7 @@ def q_zigzag(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: bar hash-agg + one Arrow pass per symbol partition."""
     import pandas as pd
 
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     c = bars.select(
         "symbol",
@@ -956,7 +944,7 @@ def q_zigzag(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_anchored_vwap",
     oracle=f"""
-    WITH {_duck_ohlcv("hour")},
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLCV)}),
     terms AS (
         SELECT symbol, bar_ts,
                date_trunc('day', bar_ts) AS anchor,
@@ -996,7 +984,7 @@ def q_anchored_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sums are bounded (≤24·10⁹) at ANY corpus scale because the
     anchor resets daily. Scale: bar hash-agg + one running-sum window
     keyed (symbol, anchor)."""
-    bars = _ohlcv_bars(spark, sf_dir, "hour")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", *OHLCV)
     terms = bars.select(
         "symbol",
         "bar_ts",

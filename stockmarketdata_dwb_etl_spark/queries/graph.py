@@ -370,6 +370,21 @@ def q_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BFS_ITERS = 4
 
 
+def _strong_edges(spark: SparkSession, sf_dir: str, q: float) -> DataFrame:
+    """(src, dst) of the basket edges whose weight reaches the exact
+    discrete q-quantile of all weights, persisted in one slot per q."""
+    edges, _, _ = _graph(spark, sf_dir)
+    thr = edges.agg(
+        F.expr(f"percentile_disc({q}) WITHIN GROUP (ORDER BY w)").alias("w_q")
+    )
+    return bounded_persist(
+        edges.crossJoin(F.broadcast(thr))
+        .filter(F.col("w") >= F.col("w_q"))
+        .select("src", "dst"),
+        f"strong-edges-{q}",
+    )
+
+
 def _bfs_level_sql(prev: str, out: str) -> str:
     return f"""
     {out} AS (
@@ -421,16 +436,7 @@ def q_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     distances into the running vector. Integer distances — exact on
     any engine; unreached nodes stay absent rather than carrying a
     sentinel."""
-    edges, _, _ = _graph(spark, sf_dir)
-    med = edges.agg(
-        F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY w)").alias("m")
-    )
-    strong = bounded_persist(
-        edges.crossJoin(F.broadcast(med))
-        .filter(F.col("w") >= F.col("m"))
-        .select("src", "dst"),
-        "bfs-strong-edges",
-    )
+    strong = _strong_edges(spark, sf_dir, 0.5)
     snodes = strong.select(F.col("src").alias("node")).distinct()
     src_node = snodes.agg(F.min("node").alias("sn"))
     dist = (
@@ -503,16 +509,7 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut), then a size histogram over final labels. String-min labels
     are engine-exact. Scale: one key-partitioned shuffle per
     superstep; O(diameter) rounds as in dedup_transitive."""
-    edges, _, _ = _graph(spark, sf_dir)
-    med = edges.agg(
-        F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY w)").alias("m")
-    )
-    strong = bounded_persist(
-        edges.crossJoin(F.broadcast(med))
-        .filter(F.col("w") >= F.col("m"))
-        .select("src", "dst"),
-        "components-strong-edges",
-    )
+    strong = _strong_edges(spark, sf_dir, 0.5)
     labels = strong.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
@@ -792,7 +789,7 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bfs_level_sql(prev: str, out: str, level: int) -> str:
+def _bfs_frontier_sql(prev: str, out: str, level: int) -> str:
     return f"""
     {out} AS (
         SELECT node, MIN(dist) AS dist FROM (
@@ -814,7 +811,7 @@ def _bfs_level_sql(prev: str, out: str, level: int) -> str:
         SELECT n.node, CAST(0 AS BIGINT) AS dist
         FROM nodes n JOIN seed ON n.node = seed.s
     ),
-    {",".join(_bfs_level_sql(f"d{i}", f"d{i + 1}", i) for i in range(4))}
+    {",".join(_bfs_frontier_sql(f"d{i}", f"d{i + 1}", i) for i in range(4))}
     SELECT COALESCE(d.dist, -1) AS layer,
            CAST(COUNT(*) AS BIGINT) AS n_nodes,
            MIN(n.node) AS min_node

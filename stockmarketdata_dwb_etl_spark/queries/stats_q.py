@@ -18,6 +18,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    ohlcv_bars,
+    simple_return,
+    sql_ohlcv_bars,
+    sql_simple_return,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     split_term_sum,
@@ -368,17 +374,10 @@ def q_hist2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_anova_hod",
     oracle=f"""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, printf('%020d-%012d', epoch_us(ts), event_id))
-                   AS close
-        FROM events GROUP BY 1, 2
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
     rets AS (
         SELECT CAST(hour(bar_ts) AS BIGINT) AS hod,
-               close / lag(close) OVER (PARTITION BY symbol
-                                        ORDER BY bar_ts) - 1.0 AS r
+               {sql_simple_return("(PARTITION BY symbol ORDER BY bar_ts)")} AS r
         FROM cbars
         QUALIFY r IS NOT NULL
     ),
@@ -427,16 +426,12 @@ def q_anova_hod(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (hour-of-day) hash-agg over returns — 24-group state —
     plus two scalar passes."""
     ev = load_table(spark, sf_dir, "events")
-    from stockmarketdata_dwb_etl_spark.queries.timeseries import _spark_ord
 
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     rets = bars.select(
         F.hour("bar_ts").cast("bigint").alias("hod"),
-        (F.col("close") / F.lag("close").over(w) - F.lit(1.0)).alias("r"),
+        simple_return(w).alias("r"),
     ).filter(F.col("r").isNotNull())
     # r = hourly close ratio − 1 spikes to ~1e4 on this events table
     # (min close 0.01), so r and r² span ~16 orders of magnitude:
@@ -484,18 +479,11 @@ def q_anova_hod(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_runs_test",
-    oracle="""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, printf('%020d-%012d', epoch_us(ts), event_id))
-                   AS close
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
     rets AS (
         SELECT symbol, bar_ts,
-               close / lag(close) OVER (PARTITION BY symbol
-                                        ORDER BY bar_ts) - 1.0 AS r
+               {sql_simple_return("(PARTITION BY symbol ORDER BY bar_ts)")} AS r
         FROM cbars
         QUALIFY r IS NOT NULL AND r <> 0
     ),
@@ -538,17 +526,13 @@ def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop (sign undefined). One lag window + one hash-agg per
     symbol."""
     ev = load_table(spark, sf_dir, "events")
-    from stockmarketdata_dwb_etl_spark.queries.timeseries import _spark_ord
 
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
     w = Window.partitionBy("symbol").orderBy("bar_ts")
     rets = bars.select(
         "symbol",
         "bar_ts",
-        (F.col("close") / F.lag("close").over(w) - F.lit(1.0)).alias("r"),
+        simple_return(w).alias("r"),
     ).filter(F.col("r").isNotNull() & (F.col("r") != 0))
     s = F.when(F.col("r") > 0, F.lit(1)).otherwise(F.lit(0))
     signs = rets.select(

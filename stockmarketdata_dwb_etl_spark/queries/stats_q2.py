@@ -26,6 +26,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    OHLCV,
+    ohlcv_bars,
+    simple_return,
+    sql_ohlcv_bars,
+    sql_simple_return,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
@@ -36,8 +43,6 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
 )
 from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
 from stockmarketdata_dwb_etl_spark.operators.rank import global_prefix_sum
-from stockmarketdata_dwb_etl_spark.queries.finance2 import _duck_ohlcv, _ohlcv_bars
-from stockmarketdata_dwb_etl_spark.queries.timeseries import _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
 
 @query(
@@ -271,7 +276,7 @@ def q_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_wilcoxon_signed",
     oracle=f"""
-    WITH {_duck_ohlcv("day")},
+    WITH bars AS ({sql_ohlcv_bars("day", *OHLCV)}),
     d AS (
         SELECT symbol, close - open AS d, abs(close - open) AS ad
         FROM bars WHERE close <> open
@@ -321,7 +326,7 @@ def q_wilcoxon_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tie-corrected normal approximation σ² = n(n+1)(2n+1)/24 −
     Σ(t³−t)/48. Scale: daily-bar hash-agg → per-symbol histogram →
     symbol-partition prefix window → k-row reduce."""
-    bars = _ohlcv_bars(spark, sf_dir, "day")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "day", *OHLCV)
     d = bars.filter(F.col("close") != F.col("open")).select(
         "symbol",
         (F.col("close") - F.col("open")).alias("d"),
@@ -375,7 +380,7 @@ def q_wilcoxon_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_friedman",
     oracle=f"""
-    WITH {_duck_ohlcv("day")},
+    WITH bars AS ({sql_ohlcv_bars("day", *OHLCV)}),
     x AS (
         SELECT symbol, bar_ts, close / open - 1.0 AS x
         FROM bars WHERE open <> 0
@@ -425,7 +430,7 @@ def q_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     Kendall's W = χ²_F/(b(k−1)) — the repeated-measures rank test and
     its agreement effect size. Scale: daily bars are tiny; block
     ranking partitions by day, rank sums hash-agg by symbol."""
-    bars = _ohlcv_bars(spark, sf_dir, "day")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "day", *OHLCV)
     x = bars.filter(F.col("open") != 0).select(
         "symbol", "bar_ts", (F.col("close") / F.col("open") - 1.0).alias("x")
     )
@@ -474,7 +479,7 @@ def q_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_grubbs",
     oracle=f"""
-    WITH {_duck_ohlcv("day")},
+    WITH bars AS ({sql_ohlcv_bars("day", *OHLCV)}),
     x AS (
         SELECT symbol, CAST(bar_ts AS DATE) AS day, close / open - 1.0 AS x
         FROM bars WHERE open <> 0
@@ -515,7 +520,7 @@ def q_grubbs(spark: SparkSession, sf_dir: str) -> DataFrame:
     max on (deviation, day, x) — tie-deterministic on both engines.
     Scale: one hash-agg for moments, broadcast join-back (k-row
     build), one struct-max hash-agg."""
-    bars = _ohlcv_bars(spark, sf_dir, "day")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "day", *OHLCV)
     x = bars.filter(F.col("open") != 0).select(
         "symbol",
         F.col("bar_ts").cast("date").alias("day"),
@@ -662,7 +667,7 @@ def q_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_cochran_q",
     oracle=f"""
-    WITH {_duck_ohlcv("day")},
+    WITH bars AS ({sql_ohlcv_bars("day", *OHLCV)}),
     x AS (
         SELECT symbol, bar_ts,
                CASE WHEN close > open THEN 1 ELSE 0 END AS up
@@ -706,7 +711,7 @@ def q_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     final ratio is double, on an identical tree. Degenerate margin
     (all rows all-up/all-down ⇒ kN = ΣRᵢ²) → NULL. Scale: two tiny
     hash-aggs over the daily-bar table."""
-    bars = _ohlcv_bars(spark, sf_dir, "day")
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "day", *OHLCV)
     # x feeds kk + day counts + the block join, and the gated table
     # feeds both margin aggs — persist each or the tick→bar agg
     # re-executes once per consumer.
@@ -985,17 +990,10 @@ def q_qq_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_granger_lite",
     oracle=f"""
-    WITH cbars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, printf('%020d-%012d', epoch_us(ts), event_id))
-                   AS close
-        FROM events GROUP BY 1, 2
-    ),
+    WITH cbars AS ({sql_ohlcv_bars("hour", "close")}),
     rets0 AS (
         SELECT symbol, bar_ts,
-               close / lag(close) OVER (PARTITION BY symbol
-                                        ORDER BY bar_ts) - 1.0 AS r
+               {sql_simple_return("(PARTITION BY symbol ORDER BY bar_ts)")} AS r
         FROM cbars
     ),
     rets AS (
@@ -1076,12 +1074,9 @@ def q_granger_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     bar_ts-co-partitioned pair join (k² fanout bounded by the symbol
     catalog), one moments hash-agg per pair."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
     ws = Window.partitionBy("symbol").orderBy("bar_ts")
-    r = (F.col("close") / F.lag("close").over(ws) - F.lit(1.0))
+    r = simple_return(ws)
     rets = bars.select("symbol", "bar_ts", r.alias("r")).select(
         "symbol", "bar_ts", "r", F.lag("r").over(ws).alias("rl")
     )

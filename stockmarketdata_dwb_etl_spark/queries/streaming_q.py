@@ -14,6 +14,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    sql_close_tick,
+    sql_open_tick,
+    sql_tick_key,
+    tick_key,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import exact_sum, sql_exact_sum
@@ -523,16 +529,16 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_ohlc",
-    oracle="""
+    oracle=f"""
     WITH bars AS (
         SELECT event_type AS symbol,
                date_trunc('hour', ts) AS window_start,
                date_trunc('hour', ts) + INTERVAL 1 HOUR AS window_end,
-               arg_min(value, printf('%020d-%012d', epoch_us(ts), event_id))
+               {sql_open_tick()}
                    AS open,
                MAX(value) AS high,
                MIN(value) AS low,
-               arg_max(value, printf('%020d-%012d', epoch_us(ts), event_id))
+               {sql_close_tick()}
                    AS close,
                CAST(COUNT(*) AS BIGINT) AS volume
         FROM events GROUP BY 1, 2, 3
@@ -562,13 +568,12 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts − 10 min — which the oracle states in SQL over the batch table.
     Scale: per-microbatch state is one open bar per (symbol, hour) —
     bounded by watermark horizon × symbol count, not stream length."""
-    from stockmarketdata_dwb_etl_spark.queries.timeseries import _spark_ord
 
     chunks = prepare_event_chunks(spark, sf_dir)
     stream = read_events_stream(spark, chunks).withColumn(
         "ts_i", instant_of("ts")
     )
-    ordk = _spark_ord()
+    ordk = tick_key()
     agg = (
         stream.withWatermark("ts_i", "10 minutes")
         .groupBy(
@@ -678,10 +683,10 @@ def q_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (
         SELECT event_type AS symbol, value,
-               printf('%020d-%012d', epoch_us(ts), event_id) AS ord,
+               {sql_tick_key()} AS ord,
                CAST(sum(CAST(value AS DECIMAL(38,6))) OVER (
                    PARTITION BY event_type
-                   ORDER BY printf('%020d-%012d', epoch_us(ts), event_id)
+                   ORDER BY {sql_tick_key()}
                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
                    AS DOUBLE) AS cum_before
         FROM events
@@ -719,14 +724,13 @@ def q_stream_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL running sum, and the bar_id floor runs the identical
     double op order). Scale: state is one bigint per symbol; the
     partial-bar merge shuffles on (symbol, bar_id) only."""
-    from stockmarketdata_dwb_etl_spark.queries.timeseries import _spark_ord
     from stockmarketdata_dwb_etl_spark.streaming.jobs import (
         stateful_dollar_bars,
     )
 
     chunks = prepare_event_chunks(spark, sf_dir)
     stream = read_events_stream(spark, chunks).select(
-        "event_type", "value", _spark_ord().alias("ord")
+        "event_type", "value", tick_key().alias("ord")
     )
     sink = run_stream_to_parquet(
         stateful_dollar_bars(stream), "stream_dollar_bars"

@@ -20,6 +20,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    OHLC,
+    close_tick,
+    ohlcv_bars,
+    open_tick,
+    sql_close_tick,
+    sql_ohlcv_bars,
+    sql_open_tick,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
@@ -29,33 +38,15 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.registry import query
 
-# zero-padded sortable composite: epoch micros then event_id (lazy — a
-# Column cannot be built before the SparkContext exists).
-# timestampdiff from the naive epoch, not unix_micros: ts is TIMESTAMP_NTZ
-# (catalog.load_table) and unix_micros accepts only TIMESTAMP_LTZ; the diff
-# is session-timezone-independent and equals DuckDB's epoch_us(ts).
-def _spark_ord():
-    return F.format_string(
-        "%020d-%012d",
-        F.expr(
-            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-        ),
-        F.col("event_id"),
-    )
-
-
-_DUCK_ORD = "printf('%020d-%012d', epoch_us(ts), event_id)"
-
-
 @query(
     "q_ohlc_resample",
     oracle=f"""
     SELECT event_type,
            date_trunc('hour', ts) AS bar_ts,
-           arg_min(value, {_DUCK_ORD}) AS open,
+           {sql_open_tick()} AS open,
            MAX(value) AS high,
            MIN(value) AS low,
-           arg_max(value, {_DUCK_ORD}) AS close,
+           {sql_close_tick()} AS close,
            CAST(COUNT(*) AS BIGINT) AS n_ticks,
            CAST((CAST(floor(CAST((SUM(value)) AS DOUBLE) * 10000.0 + 0.5) AS DOUBLE) / 10000.0) AS DOUBLE) AS volume_proxy
     FROM events
@@ -73,10 +64,10 @@ def q_ohlc_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     bar = F.date_trunc("hour", F.col("ts")).alias("bar_ts")
     return ev.groupBy("event_type", bar).agg(
-        F.min_by("value", _spark_ord()).alias("open"),
+        open_tick().alias("open"),
         F.max("value").alias("high"),
         F.min("value").alias("low"),
-        F.max_by("value", _spark_ord()).alias("close"),
+        close_tick().alias("close"),
         F.count(F.lit(1)).alias("n_ticks"),
         portable_round(F.sum("value"), 4).alias("volume_proxy"),
     )
@@ -143,10 +134,10 @@ def q_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_drawdown",
-    oracle="""
+    oracle=f"""
     WITH bars AS (
         SELECT event_type, date_trunc('hour', ts) AS h,
-               arg_max(value, printf('%020d-%012d', epoch_us(ts), event_id))
+               {sql_close_tick()}
                    AS price
         FROM events GROUP BY 1, 2
     ), dd AS (
@@ -173,7 +164,7 @@ def q_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     bars = ev.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
-    ).agg(F.max_by("value", _spark_ord()).alias("price"))
+    ).agg(close_tick().alias("price"))
     w = (
         Window.partitionBy("event_type")
         .orderBy("h")
@@ -338,12 +329,7 @@ def q_user_path(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_zscore_outliers",
     oracle=f"""
-    WITH bars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ), stats AS (
+    WITH bars AS ({sql_ohlcv_bars("hour", "close")}), stats AS (
         SELECT symbol, bar_ts, close,
                AVG(close) OVER w AS mu,
                STDDEV_SAMP(close) OVER w AS sigma,
@@ -374,10 +360,7 @@ def q_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     bars, then the window shuffles once on symbol — bar count is already
     ~6 orders below tick count, so the window stage is trivial at 100 TB."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
     w = (
         Window.partitionBy("symbol")
         .orderBy("bar_ts")
@@ -407,12 +390,7 @@ def q_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_corr_pairs",
     oracle=f"""
-    WITH bars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    )
+    WITH bars AS ({sql_ohlcv_bars("hour", "close")})
     SELECT a.symbol AS sym_a, b.symbol AS sym_b,
            CAST(COUNT(*) AS BIGINT) AS n_hours,
            CAST((CAST(floor(CAST((CORR(a.close, b.close)) AS DOUBLE) * 10000.0 + 0.5) AS DOUBLE) / 10000.0) AS DOUBLE) AS pearson_r
@@ -432,10 +410,7 @@ def q_corr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     one side and CORR reduces each pair to a single row; the tick→bar
     hash-agg is the only full-data shuffle."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
     a = bars.alias("a")
     b = bars.alias("b")
     joined = a.join(
@@ -454,12 +429,7 @@ def q_corr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_regression",
     oracle=f"""
-    WITH bars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ), mkt AS (
+    WITH bars AS ({sql_ohlcv_bars("hour", "close")}), mkt AS (
         SELECT bar_ts, close AS mkt_close FROM bars WHERE symbol = 'view'
     )
     SELECT b.symbol,
@@ -485,10 +455,7 @@ def q_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny — so it broadcasts; the deterministic close basis (max_by on the
     padded (ts,event_id) key) keeps both engines' inputs bit-identical."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
     mkt = bars.filter(F.col("symbol") == "view").select(
         "bar_ts", F.col("close").alias("mkt_close")
     )
@@ -511,7 +478,7 @@ def q_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE bars AS (
         SELECT event_type AS symbol,
                date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close,
+               {sql_close_tick()} AS close,
                row_number() OVER (PARTITION BY event_type
                                   ORDER BY date_trunc('hour', ts)) AS rn
         FROM events GROUP BY 1, 2
@@ -554,10 +521,7 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
+    bars = ohlcv_bars(ev, "hour", "close")
 
     def ewma_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("bar_ts").reset_index(drop=True)
@@ -577,15 +541,7 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_unpivot_long",
     oracle=f"""
-    WITH bars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_min(value, {_DUCK_ORD}) AS open,
-               MAX(value) AS high,
-               MIN(value) AS low,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    ), long AS (
+    WITH bars AS ({sql_ohlcv_bars("hour", *OHLC)}), long AS (
         SELECT symbol, 'open' AS field, open AS v FROM bars
         UNION ALL SELECT symbol, 'high', high FROM bars
         UNION ALL SELECT symbol, 'low', low FROM bars
@@ -609,15 +565,7 @@ def q_unpivot_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     data; only the downstream agg shuffles, on the (symbol, field) key
     whose cardinality is symbols × 4."""
     ev = load_table(spark, sf_dir, "events")
-    bars = ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(
-        F.min_by("value", _spark_ord()).alias("open"),
-        F.max("value").alias("high"),
-        F.min("value").alias("low"),
-        F.max_by("value", _spark_ord()).alias("close"),
-    )
+    bars = ohlcv_bars(ev, "hour", *OHLC)
     long = bars.unpivot(
         ids=["symbol", "bar_ts"],
         values=["open", "high", "low", "close"],

@@ -19,6 +19,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from stockmarketdata_dwb_etl_spark.functions.bars import (
+    ohlcv_bars,
+    sql_ohlcv_bars,
+    sql_tick_key,
+    tick_key,
+)
 from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     split_term_sum,
@@ -29,33 +35,15 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     term_sum,
 )
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.queries.timeseries import _DUCK_ORD, _spark_ord
 from stockmarketdata_dwb_etl_spark.registry import query
 
 _DEC = "decimal(38,6)"
-
-_DUCK_BARS = f"""
-    bars AS (
-        SELECT event_type AS symbol,
-               date_trunc('hour', ts) AS bar_ts,
-               arg_max(value, {_DUCK_ORD}) AS close
-        FROM events GROUP BY 1, 2
-    )
-"""
-
-
-def _bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.col("event_type").alias("symbol"),
-        F.date_trunc("hour", F.col("ts")).alias("bar_ts"),
-    ).agg(F.max_by("value", _spark_ord()).alias("close"))
 
 
 @query(
     "q_seasonal_decompose",
     oracle=f"""
-    WITH {_DUCK_BARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", "close")}),
     seq AS (
         SELECT symbol, bar_ts, close, hour(bar_ts) AS hod,
                row_number() OVER (PARTITION BY symbol ORDER BY bar_ts) AS rn,
@@ -92,7 +80,7 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL; the /25 and final mean divide in identical-tree double.
     Scales: one symbol-keyed window + one (symbol,hod)-keyed hash-agg —
     two shuffles, both on bar-grained (calendar-bounded) data."""
-    bars = _bars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
     wseq = Window.partitionBy("symbol").orderBy("bar_ts")
     seq = bars.select(
         "symbol",
@@ -142,7 +130,7 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_forecast_linear",
     oracle=f"""
-    WITH {_DUCK_BARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", "close")}),
     seq AS (
         SELECT symbol, close,
                CAST(row_number() OVER (PARTITION BY symbol ORDER BY bar_ts)
@@ -171,7 +159,7 @@ def q_forecast_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     end via a generated horizon spine. The naive-but-canonical baseline
     every forecasting pipeline is judged against. Scales: one hash-agg
     per symbol + a 5-row explode — nothing global."""
-    bars = _bars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
     seq = bars.select(
         "symbol",
         "close",
@@ -424,13 +412,13 @@ def q_missing_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT event_type AS symbol, ts, event_id, value,
                value - lag(value) OVER w AS dp
         FROM events
-        WINDOW w AS (PARTITION BY event_type ORDER BY {_DUCK_ORD})
+        WINDOW w AS (PARTITION BY event_type ORDER BY {sql_tick_key()})
     ),
     signed AS (
         SELECT symbol, ts, event_id,
                last_value(CASE WHEN dp > 0 THEN 1
                                WHEN dp < 0 THEN -1 END IGNORE NULLS)
-                 OVER (PARTITION BY symbol ORDER BY {_DUCK_ORD}
+                 OVER (PARTITION BY symbol ORDER BY {sql_tick_key()}
                        ROWS UNBOUNDED PRECEDING) AS side
         FROM ticks
     )
@@ -456,11 +444,11 @@ def q_tick_rule(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ts,event_id) key — bit-deterministic; comparisons are raw-parquet
     doubles. One window shuffle on symbol."""
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy(_spark_ord())
+    w = Window.partitionBy("event_type").orderBy(tick_key())
     ticks = ev.select(
         F.col("event_type").alias("symbol"),
         (F.col("value") - F.lag("value").over(w)).alias("dp"),
-        _spark_ord().alias("__ord"),
+        tick_key().alias("__ord"),
     )
     wrun = (
         Window.partitionBy("symbol")
@@ -634,7 +622,7 @@ def q_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_rolling_median",
     oracle=f"""
-    WITH {_DUCK_BARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", "close")}),
     arr AS (
         SELECT symbol, bar_ts, close,
                list_sort(list(close) OVER (
@@ -666,7 +654,7 @@ def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     array per row (O(k log k) per row map-side after ONE per-symbol
     window shuffle); an unbounded-frame median would instead go through
     the global rank operator."""
-    bars = _bars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
     w = (
         Window.partitionBy("symbol")
         .orderBy("bar_ts")
@@ -694,7 +682,7 @@ def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_sax_symbols",
     oracle=f"""
-    WITH {_DUCK_BARS},
+    WITH bars AS ({sql_ohlcv_bars("hour", "close")}),
     idx AS (
         SELECT symbol, close,
                row_number() OVER (PARTITION BY symbol
@@ -768,7 +756,7 @@ def q_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
     index the last 64 bars, one (symbol, seg) hash-agg, then 8-row-per-
     symbol arithmetic; the word assembles from a sorted 8-element array,
     never a cross-row string fold."""
-    bars = _bars(spark, sf_dir)
+    bars = ohlcv_bars(load_table(spark, sf_dir, "events"), "hour", "close")
     w = Window.partitionBy("symbol").orderBy(F.col("bar_ts").desc())
     idx = bars.select(
         "symbol", "close", F.row_number().over(w).alias("rn")

@@ -14,8 +14,9 @@ def test_cmo_bounded_and_frame_full(spark):
     """CMO is bounded to [-100, 100] by construction and only emitted on
     full 7-move frames: per symbol, n_rows == n_bars - 7 (6 warm-up moves
     + the first bar consumed by the lag)."""
+    from stockmarketdata_dwb_etl_spark.catalog import load_table
+    from stockmarketdata_dwb_etl_spark.functions.bars import OHLC, ohlcv_bars
     from stockmarketdata_dwb_etl_spark.queries.finance6 import (
-        _hourly_bars,
         q_chande_momentum,
     )
 
@@ -23,7 +24,7 @@ def test_cmo_bounded_and_frame_full(spark):
     vals = out["cmo"].dropna()
     assert ((vals >= -100.0) & (vals <= 100.0)).all()
     bars = (
-        _hourly_bars(spark, SF_DIR)
+        ohlcv_bars(load_table(spark, SF_DIR, "events"), "hour", *OHLC)
         .groupBy("symbol")
         .count()
         .toPandas()
@@ -53,14 +54,15 @@ def test_yang_zhang_components_reconcile(spark):
     """yz_vol^2 must reproduce yz_var (within the 6dp round), the
     variance must be non-negative on this fixture, and every symbol with
     >1 hourly bar must appear."""
+    from stockmarketdata_dwb_etl_spark.catalog import load_table
+    from stockmarketdata_dwb_etl_spark.functions.bars import OHLC, ohlcv_bars
     from stockmarketdata_dwb_etl_spark.queries.finance6 import (
-        _hourly_bars,
         q_yang_zhang_vol,
     )
 
     out = q_yang_zhang_vol(spark, SF_DIR).toPandas()
     syms = (
-        _hourly_bars(spark, SF_DIR)
+        ohlcv_bars(load_table(spark, SF_DIR, "events"), "hour", *OHLC)
         .groupBy("symbol")
         .count()
         .filter(F.col("count") > 1)
@@ -77,8 +79,9 @@ def test_adx_bounded_and_di_nonnegative(spark):
     ratio of a smoothed non-negative part to the smoothed total, or a
     convex combination of such ratios); rows start at the second bar of
     every symbol."""
+    from stockmarketdata_dwb_etl_spark.catalog import load_table
+    from stockmarketdata_dwb_etl_spark.functions.bars import OHLC, ohlcv_bars
     from stockmarketdata_dwb_etl_spark.queries.finance6 import (
-        _hourly_bars,
         q_adx,
     )
 
@@ -87,7 +90,7 @@ def test_adx_bounded_and_di_nonnegative(spark):
         vals = out[colname].dropna()
         assert ((vals >= 0.0) & (vals <= 100.0)).all(), colname
     bars = (
-        _hourly_bars(spark, SF_DIR)
+        ohlcv_bars(load_table(spark, SF_DIR, "events"), "hour", *OHLC)
         .groupBy("symbol")
         .count()
         .toPandas()

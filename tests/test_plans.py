@@ -338,7 +338,7 @@ def test_acf_correlogram_single_window_pass(spark):
     # the whole correlogram is window sort + (symbol, lag) agg + order
     assert plan.count("Exchange") <= 4, plan.count("Exchange")
     assert "Union" not in plan
-    # two Window nodes share one partitioning: the _returns lag and the
+    # two Window nodes share one partitioning: the bar_returns lag and the
     # five correlogram lags (no per-lag re-sort)
     assert plan.count("Window") <= 2, plan.count("Window")
 

@@ -176,9 +176,13 @@ def test_var_backtest_recompute_violations(spark):
     """Violations recomputed with a pandas rolling exact order statistic
     must match; LR is nonnegative and zero iff x/n == 0.05 exactly."""
     out = QUERIES["q_var_backtest"](spark, SF_DIR).toPandas()
-    from stockmarketdata_dwb_etl_spark.queries.finance2 import _returns
+    from stockmarketdata_dwb_etl_spark.catalog import load_table
+    from stockmarketdata_dwb_etl_spark.functions.bars import bar_returns, ohlcv_bars
 
-    rets = _returns(spark, SF_DIR).toPandas()
+    rets = (
+        bar_returns(ohlcv_bars(load_table(spark, SF_DIR, "events"), "hour", "close"))
+        .toPandas()
+    )
     for _, row in out.iterrows():
         rs = (
             rets[rets.symbol == row.symbol]

@@ -41,7 +41,7 @@ def test_dollar_bars_threshold_parameter_honored(spark):
     change the bar width (the divisor used to be hard-coded at the default).
     A doubled threshold can only merge bars — strictly fewer (or equal)
     bars per symbol, and the first bar absorbs at least the default's."""
-    from stockmarketdata_dwb_etl_spark.queries.timeseries import _spark_ord
+    from stockmarketdata_dwb_etl_spark.functions.bars import tick_key
     from stockmarketdata_dwb_etl_spark.streaming.jobs import (
         prepare_event_chunks,
         read_events_stream,
@@ -53,7 +53,7 @@ def test_dollar_bars_threshold_parameter_honored(spark):
 
     def run(tag: str, threshold: int):
         stream = read_events_stream(spark, chunks).select(
-            "event_type", "value", _spark_ord().alias("ord")
+            "event_type", "value", tick_key().alias("ord")
         )
         sink = run_stream_to_parquet(
             stateful_dollar_bars(stream, threshold_cents=threshold), tag

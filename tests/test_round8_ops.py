@@ -15,14 +15,15 @@ from tests.conftest import SF_DIR
 def test_parkinson_vol_matches_manual_estimator(spark):
     """park_var must equal (1/(4ln2))·mean(ln(H/L)²) recomputed in
     python from the same daily bars, and vol = sqrt(var)."""
-    from stockmarketdata_dwb_etl_spark.queries.finance2 import _ohlcv_bars
+    from stockmarketdata_dwb_etl_spark.catalog import load_table
+    from stockmarketdata_dwb_etl_spark.functions.bars import OHLCV, ohlcv_bars
     from stockmarketdata_dwb_etl_spark.queries.finance7 import (
         q_parkinson_vol,
     )
 
     out = q_parkinson_vol(spark, SF_DIR).toPandas().set_index("symbol")
     bars = (
-        _ohlcv_bars(spark, SF_DIR, "day")
+        ohlcv_bars(load_table(spark, SF_DIR, "events"), "day", *OHLCV)
         .filter(F.col("low") > 0)
         .toPandas()
     )
@@ -67,14 +68,15 @@ def test_force_index_sign_tracks_price_change(spark):
 def test_chaikin_ad_is_cumulative_and_mfm_bounded(spark):
     """|MFV| ≤ volume (|MFM| ≤ 1), and the A/D line must equal the
     running sum of the reported money-flow volumes."""
-    from stockmarketdata_dwb_etl_spark.queries.finance2 import _ohlcv_bars
+    from stockmarketdata_dwb_etl_spark.catalog import load_table
+    from stockmarketdata_dwb_etl_spark.functions.bars import OHLCV, ohlcv_bars
     from stockmarketdata_dwb_etl_spark.queries.finance7 import (
         q_chaikin_ad,
     )
 
     out = q_chaikin_ad(spark, SF_DIR).toPandas()
     vol = (
-        _ohlcv_bars(spark, SF_DIR, "hour")
+        ohlcv_bars(load_table(spark, SF_DIR, "events"), "hour", *OHLCV)
         .select("symbol", "bar_ts", "volume")
         .toPandas()
         .set_index(["symbol", "bar_ts"])["volume"]
@@ -91,11 +93,12 @@ def test_chaikin_ad_is_cumulative_and_mfm_bounded(spark):
 
 def test_dpo_is_displaced_close_minus_sma(spark):
     """Recompute DPO = close[t−11] − SMA20[t] from the daily bars."""
-    from stockmarketdata_dwb_etl_spark.queries.finance2 import _ohlcv_bars
+    from stockmarketdata_dwb_etl_spark.catalog import load_table
+    from stockmarketdata_dwb_etl_spark.functions.bars import OHLCV, ohlcv_bars
     from stockmarketdata_dwb_etl_spark.queries.finance7 import q_dpo
 
     out = q_dpo(spark, SF_DIR).toPandas()
-    bars = _ohlcv_bars(spark, SF_DIR, "day").toPandas()
+    bars = ohlcv_bars(load_table(spark, SF_DIR, "events"), "day", *OHLCV).toPandas()
     for sym, g in bars.groupby("symbol"):
         g = g.sort_values("bar_ts").reset_index(drop=True)
         want = g["close"].shift(11) - g["close"].rolling(20).mean()
@@ -223,12 +226,18 @@ def test_weekday_seasonality_partitions_the_bars(spark):
     from stockmarketdata_dwb_etl_spark.queries.analytics4 import (
         q_weekday_seasonality,
     )
-    from stockmarketdata_dwb_etl_spark.queries.finance2 import _returns
+    from stockmarketdata_dwb_etl_spark.catalog import load_table
+    from stockmarketdata_dwb_etl_spark.functions.bars import bar_returns, ohlcv_bars
 
     out = q_weekday_seasonality(spark, SF_DIR).toPandas()
     assert out["dow"].between(0, 6).all()
     assert (out["n_up"] <= out["n_bars"]).all()
-    rets = _returns(spark, SF_DIR).groupBy("symbol").count().toPandas()
+    rets = (
+        bar_returns(ohlcv_bars(load_table(spark, SF_DIR, "events"), "hour", "close"))
+        .groupBy("symbol")
+        .count()
+        .toPandas()
+    )
     per_sym = out.groupby("symbol")["n_bars"].sum()
     for _, row in rets.iterrows():
         assert per_sym[row["symbol"]] == row["count"]
@@ -237,11 +246,12 @@ def test_weekday_seasonality_partitions_the_bars(spark):
 def test_coppock_matches_manual_wma(spark):
     """Recompute the 10-lag front-weighted WMA of ROC14+ROC11 in pandas
     and compare."""
-    from stockmarketdata_dwb_etl_spark.queries.finance2 import _ohlcv_bars
+    from stockmarketdata_dwb_etl_spark.catalog import load_table
+    from stockmarketdata_dwb_etl_spark.functions.bars import OHLCV, ohlcv_bars
     from stockmarketdata_dwb_etl_spark.queries.finance8 import q_coppock
 
     out = q_coppock(spark, SF_DIR).toPandas()
-    bars = _ohlcv_bars(spark, SF_DIR, "hour").toPandas()
+    bars = ohlcv_bars(load_table(spark, SF_DIR, "events"), "hour", *OHLCV).toPandas()
     sym = out["symbol"].iloc[0]
     g = bars[bars["symbol"] == sym].sort_values("bar_ts").reset_index(
         drop=True
@@ -261,11 +271,12 @@ def test_coppock_matches_manual_wma(spark):
 def test_kst_weights_order_horizons(spark):
     """KST must be finite and respond to all four horizons: recompute
     one symbol's series in pandas."""
-    from stockmarketdata_dwb_etl_spark.queries.finance2 import _ohlcv_bars
+    from stockmarketdata_dwb_etl_spark.catalog import load_table
+    from stockmarketdata_dwb_etl_spark.functions.bars import OHLCV, ohlcv_bars
     from stockmarketdata_dwb_etl_spark.queries.finance8 import q_kst
 
     out = q_kst(spark, SF_DIR).toPandas()
-    bars = _ohlcv_bars(spark, SF_DIR, "hour").toPandas()
+    bars = ohlcv_bars(load_table(spark, SF_DIR, "events"), "hour", *OHLCV).toPandas()
     sym = out["symbol"].iloc[0]
     g = bars[bars["symbol"] == sym].sort_values("bar_ts").reset_index(
         drop=True
@@ -285,13 +296,14 @@ def test_kst_weights_order_horizons(spark):
 def test_elder_ray_brackets_the_sma(spark):
     """bull_power ≥ bear_power always (high ≥ low), and bull−bear =
     high−low exactly."""
-    from stockmarketdata_dwb_etl_spark.queries.finance2 import _ohlcv_bars
+    from stockmarketdata_dwb_etl_spark.catalog import load_table
+    from stockmarketdata_dwb_etl_spark.functions.bars import OHLCV, ohlcv_bars
     from stockmarketdata_dwb_etl_spark.queries.finance8 import q_elder_ray
 
     out = q_elder_ray(spark, SF_DIR).toPandas()
     assert (out["bull_power"] >= out["bear_power"]).all()
     hl = (
-        _ohlcv_bars(spark, SF_DIR, "hour")
+        ohlcv_bars(load_table(spark, SF_DIR, "events"), "hour", *OHLCV)
         .selectExpr("symbol", "bar_ts", "high - low AS range")
         .toPandas()
         .set_index(["symbol", "bar_ts"])["range"]
@@ -456,11 +468,15 @@ def test_bfs_layers_cover_all_nodes(spark):
 def test_ljung_box_matches_manual(spark):
     """Recompute Q for one symbol in pandas with the standard sample
     ACF and compare; reject flag must equal q_stat > 15.0863."""
-    from stockmarketdata_dwb_etl_spark.queries.finance2 import _returns
+    from stockmarketdata_dwb_etl_spark.catalog import load_table
+    from stockmarketdata_dwb_etl_spark.functions.bars import bar_returns, ohlcv_bars
     from stockmarketdata_dwb_etl_spark.queries.finance8 import q_ljung_box
 
     out = q_ljung_box(spark, SF_DIR).toPandas().set_index("symbol")
-    pdf = _returns(spark, SF_DIR).toPandas()
+    pdf = (
+        bar_returns(ohlcv_bars(load_table(spark, SF_DIR, "events"), "hour", "close"))
+        .toPandas()
+    )
     for sym, g in pdf.groupby("symbol"):
         g = g.sort_values("bar_ts")
         e = g["r"] - g["r"].mean()
@@ -482,11 +498,15 @@ def test_half_life_matches_ar1_fit(spark):
     only reported for 0 < phi < 1."""
     import math
 
-    from stockmarketdata_dwb_etl_spark.queries.finance2 import _returns
+    from stockmarketdata_dwb_etl_spark.catalog import load_table
+    from stockmarketdata_dwb_etl_spark.functions.bars import bar_returns, ohlcv_bars
     from stockmarketdata_dwb_etl_spark.queries.finance8 import q_half_life
 
     out = q_half_life(spark, SF_DIR).toPandas().set_index("symbol")
-    pdf = _returns(spark, SF_DIR).toPandas()
+    pdf = (
+        bar_returns(ohlcv_bars(load_table(spark, SF_DIR, "events"), "hour", "close"))
+        .toPandas()
+    )
     for sym, g in pdf.groupby("symbol"):
         g = g.sort_values("bar_ts")
         e = (g["r"] - g["r"].mean()).to_numpy()
@@ -589,13 +609,14 @@ def test_zigzag_alternates_and_reverses_3pct(spark):
 def test_anchored_vwap_resets_per_day_and_matches_manual(spark):
     """Each anchor's first bar AVWAP equals its own typical price
     (4dp half-up), and the line equals the running pv/vol ratio."""
-    from stockmarketdata_dwb_etl_spark.queries.finance2 import _ohlcv_bars
+    from stockmarketdata_dwb_etl_spark.catalog import load_table
+    from stockmarketdata_dwb_etl_spark.functions.bars import OHLCV, ohlcv_bars
     from stockmarketdata_dwb_etl_spark.queries.finance8 import (
         q_anchored_vwap,
     )
 
     out = q_anchored_vwap(spark, SF_DIR).toPandas()
-    bars = _ohlcv_bars(spark, SF_DIR, "hour").toPandas()
+    bars = ohlcv_bars(load_table(spark, SF_DIR, "events"), "hour", *OHLCV).toPandas()
     bars["anchor"] = bars["bar_ts"].dt.floor("D")
     bars["pv_u"] = (
         (bars["high"] + bars["low"] + bars["close"]) / 3.0
