@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pipelines import write_and_read
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
 from stockmarketdata_dwb_etl_spark.functions.text import word_shingles
@@ -187,13 +188,6 @@ def build_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _write_and_read(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    """Write ``df`` as parquet (overwrite) and return the written layer,
-    read back with the schema it was written with (no inference job)."""
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.schema(df.schema).parquet(path)
-
-
 def run_pipeline(
     spark: SparkSession,
     sf_dir: str,
@@ -210,7 +204,7 @@ def run_pipeline(
     surviving canonical texts additionally drop the larger doc_id of
     each verified pair before the gold accounting (the q_dedup_minhash
     operator as a pipeline stage)."""
-    silver = _write_and_read(
+    silver = write_and_read(
         spark, build_silver(spark, sf_dir), os.path.join(out_dir, "silver.parquet")
     )
     kept = exact_dedup(silver)
@@ -227,7 +221,7 @@ def run_pipeline(
             F.greatest("id_a", "id_b").alias("doc_id")
         ).distinct()
         kept = kept.join(losers, "doc_id", "left_anti")
-    corpus = _write_and_read(spark, kept, os.path.join(out_dir, "corpus.parquet"))
+    corpus = write_and_read(spark, kept, os.path.join(out_dir, "corpus.parquet"))
     gold = (
         corpus.groupBy("split", "lang")
         .agg(
@@ -236,4 +230,4 @@ def run_pipeline(
         )
         .orderBy("split", "lang")
     )
-    return _write_and_read(spark, gold, os.path.join(out_dir, "gold.parquet"))
+    return write_and_read(spark, gold, os.path.join(out_dir, "gold.parquet"))

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pipelines import write_and_read
 from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.parsing import (
@@ -109,17 +110,18 @@ def run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, in
     verify row counts (ref L4 post-load verification, dump_bigq.py:147-149).
     """
     counts: dict[str, int] = {}
-    bronze = build_bronze(spark, sf_dir)
-    bronze.write.mode("overwrite").parquet(os.path.join(out_dir, "bronze"))
-    bronze = spark.read.parquet(os.path.join(out_dir, "bronze"))
+    bronze = write_and_read(
+        spark, build_bronze(spark, sf_dir), os.path.join(out_dir, "bronze")
+    )
     counts["bronze"] = bronze.count()
 
-    silver = bronze_to_silver(bronze)
-    silver.write.mode("overwrite").parquet(os.path.join(out_dir, "silver"))
-    silver = spark.read.parquet(os.path.join(out_dir, "silver"))
+    silver = write_and_read(
+        spark, bronze_to_silver(bronze), os.path.join(out_dir, "silver")
+    )
     counts["silver"] = silver.count()
 
-    gold = silver_to_gold(silver)
-    gold.write.mode("overwrite").parquet(os.path.join(out_dir, "gold"))
-    counts["gold"] = spark.read.parquet(os.path.join(out_dir, "gold")).count()
+    gold = write_and_read(
+        spark, silver_to_gold(silver), os.path.join(out_dir, "gold")
+    )
+    counts["gold"] = gold.count()
     return counts

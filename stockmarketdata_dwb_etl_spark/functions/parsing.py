@@ -21,10 +21,16 @@ from pyspark.sql import functions as F
 KMB_MULTIPLIERS = {"K": 1e3, "M": 1e6, "B": 1e9}
 
 
+#: every case spelling of 'nan': the only strings whose ``lower`` is
+#: 'nan' (tests/test_parsing.py enumerates the code points), tested
+#: without a case-mapping call
+NAN_SPELLINGS = ("nan", "naN", "nAn", "nAN", "Nan", "NaN", "NAn", "NAN")
+
+
 def null_if_missing(c: Column) -> Column:
     """Reference null policy: '' and 'nan' (any case) mean missing."""
     t = F.trim(c)
-    return F.when(t.isNull() | (t == "") | (F.lower(t) == "nan"), F.lit(None)).otherwise(t)
+    return F.when(t.isNull() | (t == "") | t.isin(*NAN_SPELLINGS), F.lit(None)).otherwise(t)
 
 
 def parse_money(c: Column) -> Column:

@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
 
 from stockmarketdata_dwb_etl_spark.functions.text import tokenize, word_shingles
+from stockmarketdata_dwb_etl_spark.operators.iterate import iterate, release
 
 MERSENNE_P31 = (1 << 31) - 1  # modulus: products of 31-bit values fit a long
 
@@ -680,12 +681,20 @@ def connected_components(
     # chg reflects the SECOND hop only: chg == 0 means no neighbor
     # undercut any label given the mid-round state, i.e. the mid state
     # was already the fixpoint and the fold emitted it unchanged.
-    for _ in range((max_iter + 1) // 2):
-        mid = _hop(labels).select("id", "label")
-        stepped = _hop(mid).localCheckpoint(eager=False)
-        changed = stepped.filter(F.col("chg")).count()
-        labels = stepped.select("id", "label")
-        if changed == 0:
-            break
+    def two_hops(lbl: DataFrame, i: int) -> DataFrame:
+        if i:  # a cut round's state still carries its chg flag
+            lbl = lbl.select("id", "label")
+        return _hop(_hop(lbl).select("id", "label"))
+
+    stepped = iterate(
+        labels,
+        two_hops,
+        (max_iter + 1) // 2,
+        eager=False,
+        until=lambda s: s.filter(F.col("chg")).count() == 0,
+    )
+    if max_iter > 0:  # a count materialized the final labels: no plan
+        release(und)  # reads the edge copy any more
     und_p.unpersist()
+    labels = stepped.select("id", "label")
     return labels.select("id", F.col("label").alias("cluster_rep"))

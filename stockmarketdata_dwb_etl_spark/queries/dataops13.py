@@ -26,6 +26,8 @@ are portable_round over identical trees.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -45,6 +47,7 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     sql_term_sum,
     term_sum,
 )
+from stockmarketdata_dwb_etl_spark.operators.iterate import iterate
 from stockmarketdata_dwb_etl_spark.queries.dataops11 import _TWIN_SQL, _linkage_records
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -429,7 +432,9 @@ def q_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "symbol", "day", (F.col("close") / F.col("open") - 1.0).alias("x")
     ).localCheckpoint(eager=True)
     outs = []
-    for rnd in range(1, _ESD_ROUNDS + 1):
+
+    def esd_round(keep: DataFrame, i: int) -> DataFrame:
+        rnd = i + 1
         # x = close/open - 1 can reach ~1e4 on this events table, so
         # x*x ~ 1e8. Round-then-DECIMAL terms are cross-engine identical
         # only while |term|*10^n < 2^53 ~ 9.0e15 (NOT the int64 floor
@@ -479,15 +484,14 @@ def q_esd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         rm = r.select(
             F.col("symbol").alias("rm_sym"), F.col("day").alias("rm_day")
         )
-        keep = keep.join(
+        return keep.join(
             rm,
             (keep["symbol"] == rm["rm_sym"]) & (keep["day"] == rm["rm_day"]),
             "left_anti",
-            # lazy cut per survivor set: round k's moments, argmax AND
-            # round k+1's state all read this once-materialized table
-            # inside the final action instead of replaying rounds 1..k
-        ).localCheckpoint(eager=False)
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out.orderBy("symbol", "round")
+        )
+
+    # lazy cut per survivor set: round k's moments, argmax AND round
+    # k+1's state all read this once-materialized table inside the final
+    # action instead of replaying rounds 1..k
+    iterate(keep, esd_round, _ESD_ROUNDS, eager=False)
+    return reduce(lambda a, b: a.unionByName(b), outs).orderBy("symbol", "round")

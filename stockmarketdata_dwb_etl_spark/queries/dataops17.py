@@ -33,6 +33,8 @@ argmax/top-k orders by a ROUNDED key with an id tie-break.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -54,6 +56,7 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     sql_term_sum,
     term_sum,
 )
+from stockmarketdata_dwb_etl_spark.operators.iterate import iterate
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -506,32 +509,31 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "v",
         portable_round(_spark_d2(F.col("v"), F.col("ce")), 8).alias("mind"),
     )
-    out_rows = [(1, 0, 0.0)]
-    rows_df = None
-    for step in range(2, _KCENTER_K + 1):
-        m = m.localCheckpoint(eager=True)
+    picks = []
+
+    def farthest(m: DataFrame) -> DataFrame:
+        """The point farthest from the selected set (ce, cid, cdist); its
+        result row joins ``picks`` as step ``len(picks) + 2``."""
         c = (
             m.orderBy(F.col("mind").desc(), "vec_id")
             .limit(1)
-            .select(
-                F.col("vec_id").alias("cid"), F.col("mind").alias("cdist")
+            .select(F.col("vec_id").alias("cid"), F.col("mind").alias("cdist"))
+        )
+        ce = vecs.join(c, vecs["vec_id"] == c["cid"]).select(
+            F.col("v").alias("ce"), "cid", "cdist"
+        )
+        picks.append(
+            ce.select(
+                F.lit(len(picks) + 2).cast("bigint").alias("step"),
+                F.col("cid").cast("bigint").alias("center_id"),
+                portable_round(F.col("cdist"), 6).cast("double").alias("dist_to_set"),
             )
         )
-        ce = (
-            vecs.join(c, vecs["vec_id"] == c["cid"])
-            .select(F.col("v").alias("ce"), "cid", "cdist")
-        )
-        sel = ce.select(
-            F.lit(step).cast("bigint").alias("step"),
-            F.col("cid").cast("bigint").alias("center_id"),
-            portable_round(F.col("cdist"), 6)
-            .cast("double")
-            .alias("dist_to_set"),
-        )
-        rows_df = sel if rows_df is None else rows_df.unionByName(sel)
-        m = m.crossJoin(
-            F.broadcast(ce.select("ce"))
-        ).select(
+        return ce
+
+    def tighten(m: DataFrame, _: int) -> DataFrame:
+        ce = farthest(m).select("ce")
+        return m.crossJoin(F.broadcast(ce)).select(
             "vec_id",
             "v",
             F.least(
@@ -539,9 +541,15 @@ def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 portable_round(_spark_d2(F.col("v"), F.col("ce")), 8),
             ).alias("mind"),
         )
+
+    # every pick reads its superseded state in the final action: retain
+    m = m.localCheckpoint(eager=True)
+    m = iterate(m, tighten, _KCENTER_K - 2, eager=True, retain=True)
+    farthest(m)  # the k-th center needs no tightening
     first = spark.createDataFrame(
-        out_rows, "step long, center_id long, dist_to_set double"
+        [(1, 0, 0.0)], "step long, center_id long, dist_to_set double"
     )
+    rows_df = reduce(lambda a, b: a.unionByName(b), picks)
     return first.unionByName(rows_df).orderBy("step")
 
 

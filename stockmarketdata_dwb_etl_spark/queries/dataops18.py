@@ -411,14 +411,12 @@ def q_ppr_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
     round at 12dp before the exact-DECIMAL in-sum and ranks round at
     12dp per superstep (the pagerank discipline), so walk mass is
     bit-identical across engines; top-10 by (rank, node). Runs on the
-    shared :func:`queries.graph._in_sum_iterate`: each superstep is
+    shared :func:`queries.graph.in_sum_step`: each superstep is
     ONE per-node sum shuffle over the edge⋈rank messages; rank state is
     node-sized; the seed indicator is carried on the zero-message rows
     and restart is a map-side product."""
-    from stockmarketdata_dwb_etl_spark.queries.graph import (
-        _in_sum_iterate,
-        _norm_graph,
-    )
+    from stockmarketdata_dwb_etl_spark.operators.iterate import iterate
+    from stockmarketdata_dwb_etl_spark.queries.graph import _norm_graph, in_sum_step
 
     edges, nodes = _norm_graph(spark, sf_dir)
     # driver scalar: one job here instead of a global-min stage in every
@@ -436,7 +434,9 @@ def q_ppr_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
         12,
     ).cast("double")
     ranks = base.select("node", F.col("r").alias("rank"))
-    ranks = _in_sum_iterate(edges, base, ranks, "rank", update, _PPR_ITERS)
+    ranks = iterate(
+        ranks, in_sum_step(edges, base, "rank", update), _PPR_ITERS, eager=False
+    )
     return (
         ranks.orderBy(F.col("rank").desc(), "node")
         .limit(10)

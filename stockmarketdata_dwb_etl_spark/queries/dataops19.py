@@ -52,6 +52,7 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     term,
     term_sum,
 )
+from stockmarketdata_dwb_etl_spark.operators.iterate import iterate
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -720,57 +721,35 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stockmarketdata_dwb_etl_spark.queries.graph import _graph
 
     edges, _, nodes = _graph(spark, sf_dir)
+
+    def spread(score: DataFrame, frm: str, to: str, x: str, out: str) -> DataFrame:
+        """One half-step: Σ over ``frm``→``to`` edges of x·w, L1-normalized."""
+        raw = (
+            edges.join(score.withColumnRenamed("node", frm), frm)
+            .select(to, term(F.col(x) * F.col("w"), 8).alias("c"))
+            .groupBy(to)
+            .agg(F.sum("c").cast("double").alias("raw"))
+        )
+        tot = raw.agg(term_sum(F.col("raw"), 8).alias("t"))
+        return (
+            nodes.crossJoin(F.broadcast(tot))
+            .join(raw.withColumnRenamed(to, "node"), "node", "left")
+            .select(
+                "node",
+                portable_round(F.coalesce(F.col("raw"), F.lit(0.0)) / F.col("t"), 12)
+                .cast("double")
+                .alias(out),
+            )
+        )
+
+    def half_step(state: tuple, i: int) -> tuple:
+        hub, auth = state
+        if i % 2 == 0:
+            return hub, spread(hub, "src", "dst", "h", "a")
+        return spread(auth, "dst", "src", "a", "h"), auth
+
     hub = nodes.select("node", F.lit(1.0).alias("h"))
-    auth = None
-    for _ in range(_HITS_ITERS):
-        araw = (
-            edges.join(hub.withColumnRenamed("node", "src"), "src")
-            .select(
-                "dst",
-                term(F.col("h") * F.col("w"), 8)
-                .alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").cast("double").alias("raw"))
-        )
-        atot = araw.agg(term_sum(F.col("raw"), 8).alias("t"))
-        auth = (
-            nodes.crossJoin(F.broadcast(atot))
-            .join(araw.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                portable_round(
-                    F.coalesce(F.col("raw"), F.lit(0.0)) / F.col("t"), 12
-                )
-                .cast("double")
-                .alias("a"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        hraw = (
-            edges.join(auth.withColumnRenamed("node", "dst"), "dst")
-            .select(
-                "src",
-                term(F.col("a") * F.col("w"), 8)
-                .alias("c"),
-            )
-            .groupBy("src")
-            .agg(F.sum("c").cast("double").alias("raw"))
-        )
-        htot = hraw.agg(term_sum(F.col("raw"), 8).alias("t"))
-        hub = (
-            nodes.crossJoin(F.broadcast(htot))
-            .join(hraw.withColumnRenamed("src", "node"), "node", "left")
-            .select(
-                "node",
-                portable_round(
-                    F.coalesce(F.col("raw"), F.lit(0.0)) / F.col("t"), 12
-                )
-                .cast("double")
-                .alias("h"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    hub, auth = iterate((hub, None), half_step, 2 * _HITS_ITERS, eager=True)
     return (
         auth.join(hub, "node")
         .select(

@@ -123,6 +123,66 @@ def _duck_mkv_iter(rnd: int) -> str:
     )"""
 
 
+def journey_edges(ev: DataFrame) -> DataFrame:
+    """(src, dst, n) transition counts of the user journeys in ``ev``:
+    '__start' → first event, each hop up to the first conversion, and
+    last event → '__loss' for a journey without one."""
+    # Journey extraction in ONE window pass (r12 verdict: the former
+    # form stacked three windows — an unordered conv-key min, an asc
+    # lag, and a DESC row_number for the loss edge — costing one sort
+    # per distinct ordering over the full events table). All three
+    # quantities share the (user_id, ord_key) ascending sort:
+    #   - lag BEFORE the truncation filter is sound because the kept
+    #     rows are a per-user PREFIX (ord_key ≤ first-conversion key),
+    #     so every kept row's predecessor is itself kept — the lag over
+    #     the full sequence equals the lag over the filtered one, and
+    #     the first row's NULL still coalesces to __start;
+    #   - the loss edge fires only for conversion-less users, whose
+    #     last kept row is the global max ord_key — row_number DESC
+    #     becomes an unbounded-frame MAX over the same asc sort.
+    # Contract: (user_id, ts, event_id) is unique, so ord_key is unique
+    # per user. A duplicate max key would emit one loss edge per copy
+    # where row_number DESC kept one (tests/test_r13_opts.py compares the
+    # two forms' edges).
+    # One Exchange + one Sort; hop and loss edges leave the window as a
+    # conditional 1-or-2-element array, so no union re-reads the table.
+    ord_key = tick_key()
+    w_ord = Window.partitionBy("user_id").orderBy("ord_key")
+    w_full = w_ord.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    ann = ev.select(
+        "user_id", "event_type", ord_key.alias("ord_key")
+    ).select(
+        "event_type",
+        "ord_key",
+        F.coalesce(F.lag("event_type").over(w_ord), F.lit("__start")).alias(
+            "src"
+        ),
+        F.min(F.when(F.col("event_type") == _CONV, F.col("ord_key")))
+        .over(w_full)
+        .alias("conv_key"),
+        F.max("ord_key").over(w_full).alias("max_key"),
+    )
+    kept = ann.filter(
+        F.col("conv_key").isNull() | (F.col("ord_key") <= F.col("conv_key"))
+    )
+    hop = F.struct(F.col("src"), F.col("event_type").alias("dst"))
+    loss = F.struct(
+        F.col("event_type").alias("src"), F.lit("__loss").alias("dst")
+    )
+    pair_arr = F.when(
+        F.col("conv_key").isNull() & (F.col("ord_key") == F.col("max_key")),
+        F.array(hop, loss),
+    ).otherwise(F.array(hop))
+    return (
+        kept.select(F.explode(pair_arr).alias("e"))
+        .select("e.src", "e.dst")
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    )
+
+
 @query(
     "q_markov_attribution",
     oracle=f"""
@@ -180,57 +240,7 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     journeys shuffle ONCE on user_id; everything after is a
     channels²-sized chain iterated over a ≤|variants|·|states| vector."""
 
-    ev = load_table(spark, sf_dir, "events")
-    # Journey extraction in ONE window pass (r12 verdict: the former
-    # form stacked three windows — an unordered conv-key min, an asc
-    # lag, and a DESC row_number for the loss edge — costing one sort
-    # per distinct ordering over the full events table). All three
-    # quantities share the (user_id, ord_key) ascending sort:
-    #   - lag BEFORE the truncation filter is sound because the kept
-    #     rows are a per-user PREFIX (ord_key ≤ first-conversion key),
-    #     so every kept row's predecessor is itself kept — the lag over
-    #     the full sequence equals the lag over the filtered one, and
-    #     the first row's NULL still coalesces to __start;
-    #   - the loss edge fires only for conversion-less users, whose
-    #     last kept row is the global max ord_key — row_number DESC
-    #     becomes an unbounded-frame MAX over the same asc sort.
-    # One Exchange + one Sort; hop and loss edges leave the window as a
-    # conditional 1-or-2-element array, so no union re-reads the table.
-    ord_key = tick_key()
-    w_ord = Window.partitionBy("user_id").orderBy("ord_key")
-    w_full = w_ord.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    ann = ev.select(
-        "user_id", "event_type", ord_key.alias("ord_key")
-    ).select(
-        "event_type",
-        "ord_key",
-        F.coalesce(F.lag("event_type").over(w_ord), F.lit("__start")).alias(
-            "src"
-        ),
-        F.min(F.when(F.col("event_type") == _CONV, F.col("ord_key")))
-        .over(w_full)
-        .alias("conv_key"),
-        F.max("ord_key").over(w_full).alias("max_key"),
-    )
-    kept = ann.filter(
-        F.col("conv_key").isNull() | (F.col("ord_key") <= F.col("conv_key"))
-    )
-    hop = F.struct(F.col("src"), F.col("event_type").alias("dst"))
-    loss = F.struct(
-        F.col("event_type").alias("src"), F.lit("__loss").alias("dst")
-    )
-    pair_arr = F.when(
-        F.col("conv_key").isNull() & (F.col("ord_key") == F.col("max_key")),
-        F.array(hop, loss),
-    ).otherwise(F.array(hop))
-    edges = (
-        kept.select(F.explode(pair_arr).alias("e"))
-        .select("e.src", "e.dst")
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
+    edges = journey_edges(load_table(spark, sf_dir, "events"))
     wsrc = Window.partitionBy("src")
     probs = edges.select(
         "src",

@@ -40,11 +40,12 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     term,
 )
 from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
+from stockmarketdata_dwb_etl_spark.operators.iterate import iterate
 from stockmarketdata_dwb_etl_spark.queries.graph import (
     _GRAPH_SQL,
-    _in_sum_iterate,
     _norm_graph,
     _strong_edges,
+    in_sum_step,
 )
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -116,7 +117,7 @@ def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     and hubs accumulate reachability). The stochastic normalization is
     what keeps α·A convergent at ANY data scale — raw weighted degrees
     grow with the corpus. Each superstep is the shared
-    :func:`queries.graph._in_sum_iterate`: the edges⋈x messages and
+    :func:`queries.graph.in_sum_step`: the edges⋈x messages and
     one zero message per node sum in ONE shuffle keyed on node, with a
     lazy localCheckpoint at the boundary (the Pregel shape); the vector
     re-rounds to 12dp per step so both engines iterate identical
@@ -127,7 +128,7 @@ def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(_KATZ_BETA) + F.lit(_KATZ_ALPHA) * F.col("s"), 12
     )
     x = nodes.select("node", F.lit(1.0).alias("x"))
-    x = _in_sum_iterate(edges, nodes, x, "x", update, _KATZ_ITERS)
+    x = iterate(x, in_sum_step(edges, nodes, "x", update), _KATZ_ITERS, eager=False)
     return x.select(
         "node", portable_round(F.col("x"), 6).cast("double").alias("katz")
     ).orderBy(F.col("katz").desc(), "node")

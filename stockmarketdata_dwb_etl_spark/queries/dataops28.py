@@ -33,6 +33,7 @@ from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
+from stockmarketdata_dwb_etl_spark.operators.iterate import iterate
 from stockmarketdata_dwb_etl_spark.queries.graph import _GRAPH_SQL, _strong_edges
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -119,22 +120,24 @@ def q_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     hop = strong.select(
         F.col("src").alias("__from"), F.col("dst").alias("__to")
     )
-    for depth in range(1, _BFS_DEPTH + 1):
-        frontier = state.filter(F.col("d") == depth - 1)
+
+    def expand(state: DataFrame, level: int) -> DataFrame:
+        frontier = state.filter(F.col("d") == level)
         expanded = (
             frontier.join(hop, frontier["node"] == hop["__from"])
             .select(
                 F.col("src"),
                 F.col("__to").alias("node"),
-                F.lit(depth).cast("bigint").alias("d"),
+                F.lit(level + 1).cast("bigint").alias("d"),
             )
         )
-        state = (
+        return (
             state.unionByName(expanded)
             .groupBy("src", "node")
             .agg(F.min("d").cast("bigint").alias("d"))
-            .localCheckpoint(eager=True)
         )
+
+    state = iterate(state, expand, _BFS_DEPTH, eager=True)
     harm = F.sum(
         F.when(F.col("d") == 0, F.lit(0.0)).otherwise(
             F.lit(1.0) / F.col("d")

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from stockmarketdata_dwb_etl_spark.functions.exact import portable_round, term
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.text import tokenize, word_shingles
+from stockmarketdata_dwb_etl_spark.operators.iterate import iterate
 from stockmarketdata_dwb_etl_spark.registry import query
 
 _DUCK_TOKENS = "list_filter(string_split(text, ' '), x -> x <> '')"
@@ -895,17 +896,17 @@ def _bpe_learn(
             .agg(F.sum("n").cast("bigint").alias("cnt"))
         )
 
-    merges = []
-    for r in range(1, k + 1):
-        best = (
-            pair_counts(vocab)
-            .orderBy(F.desc("cnt"), "sym_a", "sym_b")
-            .limit(1)
-            .localCheckpoint(eager=True)  # 1 row; reused by 2 branches
-        )
-        merges.append(
-            best.select(F.lit(r).cast("bigint").alias("merge_round"), "*")
-        )
+    bests = []
+
+    def half_round(state: tuple, i: int) -> tuple:
+        """Even i: the round's best pair (1 row, read by the merge table
+        and the rewrite); odd i: the vocabulary rewritten by it."""
+        vocab, best = state
+        if i % 2 == 0:
+            return vocab, pair_counts(vocab).orderBy(
+                F.desc("cnt"), "sym_a", "sym_b"
+            ).limit(1)
+        bests.append(best)
         a, b = F.col("sym_a"), F.col("sym_b")
         rewritten = F.aggregate(
             "syms",
@@ -920,12 +921,21 @@ def _bpe_learn(
                 ),
             ).otherwise(F.concat(acc, F.array(s))),
         )
-        if r < k or rewrite_last:
-            vocab = (
-                vocab.crossJoin(F.broadcast(best.select("sym_a", "sym_b")))
-                .select("word", rewritten.alias("syms"), "n")
-                .localCheckpoint(eager=True)
-            )
+        return (
+            vocab.crossJoin(F.broadcast(best.select("sym_a", "sym_b")))
+            .select("word", rewritten.alias("syms"), "n"),
+            best,
+        )
+
+    # the merge table reads every superseded best: retain
+    iters = 2 * k if rewrite_last else 2 * k - 1
+    vocab, best = iterate((vocab, None), half_round, iters, eager=True, retain=True)
+    if not rewrite_last:
+        bests.append(best)
+    merges = [
+        b.select(F.lit(r).cast("bigint").alias("merge_round"), "*")
+        for r, b in enumerate(bests, 1)
+    ]
     return vocab, merges
 
 

@@ -26,6 +26,7 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
 )
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.text import tokenize, word_shingles
+from stockmarketdata_dwb_etl_spark.operators.iterate import iterate
 from stockmarketdata_dwb_etl_spark.registry import query
 
 
@@ -451,12 +452,20 @@ def q_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
 
     ex = bounded_persist(ex, "power-iter-components")
-    v = (
-        ex.filter(F.col("vec_id") == 0)
-        .select("idx", portable_round(F.col("val"), 12).alias("comp"))
-    )
-    nrm_df = None
-    for _ in range(3):
+
+    def unit(w: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """(w / ‖w‖ as ``comp``, the 1-row norm)."""
+        nrm_df = w.agg(
+            F.sqrt(split_term_sum(F.col("w") * F.col("w"), 12, 6)).alias("nrm")
+        )
+        v = w.crossJoin(F.broadcast(nrm_df)).select(
+            "idx", portable_round(F.col("w") / F.col("nrm"), 12).alias("comp")
+        )
+        return v, nrm_df
+
+    def power_step(w: DataFrame, i: int) -> DataFrame:
+        """w ← Xᵀ(X v) for v = the seed (first step) or w / ‖w‖."""
+        v = w if i == 0 else unit(w)[0]
         s = (
             ex.join(F.broadcast(v), "idx")
             .groupBy("vec_id")
@@ -467,7 +476,7 @@ def q_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("s")
             )
         )
-        w = (
+        return (
             ex.join(F.broadcast(s), "vec_id")
             .groupBy("idx")
             .agg(
@@ -477,18 +486,14 @@ def q_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("w")
             )
         )
-        # materialize the superstep boundary: w is 64 rows, but WITHOUT
-        # this every later broadcast re-executes the whole prior-iteration
-        # lineage (measured: 43 exchanges / 53 broadcasts for 3 steps
-        # unmaterialized vs one superstep per stage checkpointed — the
-        # same cut global_row_number makes)
-        w = w.localCheckpoint(eager=True)
-        nrm_df = w.agg(
-            F.sqrt(split_term_sum(F.col("w") * F.col("w"), 12, 6)).alias("nrm")
-        )
-        v = w.crossJoin(F.broadcast(nrm_df)).select(
-            "idx", portable_round(F.col("w") / F.col("nrm"), 12).alias("comp")
-        )
+
+    # w is 64 rows, but uncut every later broadcast re-executes the whole
+    # prior-iteration lineage (measured: 43 exchanges / 53 broadcasts for
+    # 3 steps uncut vs one superstep per stage cut)
+    seed = ex.filter(F.col("vec_id") == 0).select(
+        "idx", portable_round(F.col("val"), 12).alias("comp")
+    )
+    v, nrm_df = unit(iterate(seed, power_step, 3, eager=True))
     return (
         v.crossJoin(F.broadcast(nrm_df))
         .select(

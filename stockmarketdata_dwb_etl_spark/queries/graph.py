@@ -17,13 +17,14 @@ uses the identical parenthesization (rank · (w / wdeg)) on both sides.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.functions.exact import portable_round, term, term_sum
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
+from stockmarketdata_dwb_etl_spark.operators.iterate import iterate
 from stockmarketdata_dwb_etl_spark.registry import query
 
 _DAMPING = 0.85
@@ -98,29 +99,19 @@ def _norm_graph(spark: SparkSession, sf_dir: str):
     return bounded_persist(norm, "graph-norm-edges"), nodes
 
 
-def _in_sum_iterate(edges, base, state, col: str, update, iters: int) -> DataFrame:
-    """``iters`` supersteps x'(v) = update(s(v)) of the weighted
-    in-neighbour-sum family, s(v) = Σ_{u→v} round12(x(u)·wn(u→v)).
+def in_sum_step(edges, base, col: str, update):
+    """The superstep x'(v) = update(s(v)) of the weighted
+    in-neighbour-sum family, s(v) = Σ_{u→v} round12(x(u)·wn(u→v)), as a
+    step for :func:`operators.iterate.iterate` (PageRank, PPR and Katz
+    run it with lazy cuts).
 
-    ``state`` is (node, ``col``); ``base`` is one row per node: the node
+    The state is (node, ``col``); ``base`` is one row per node: the node
     and any per-node constant ``update`` reads (PPR's seed indicator).
     A superstep UNION ALLs the edge⋈state messages with one exact zero
     message per node carrying ``base``'s constants, and sums them in ONE
     shuffle keyed on node: a node without in-edges sums to exactly 0,
     as ``coalesce(NULL, 0.0)`` did after a left join from the node list.
-    ``update`` reads ``s`` (the DOUBLE sum) and the constants.
-
-    Each superstep is cut by a LAZY ``localCheckpoint``: the next plan
-    reads a LogicalRDD leaf and no count job materializes the cut.
-    Building superstep k runs its map stages; its final stage (sum and
-    update) runs inside the first stage of superstep k+1 that reads the
-    state (the last one's inside the caller's job). When the planner
-    broadcasts the state (the smaller side by estimate; at fixture
-    scale the edge table is broadcast from the second superstep on),
-    that stage is the state broadcast, so superstep k's final stage sits
-    under ``spark.sql.broadcastTimeout`` (300 s default, not set by the
-    engine): node-sized state keeps it small, but a graph whose
-    per-superstep sum nears the timeout needs an eager cut."""
+    ``update`` reads ``s`` (the DOUBLE sum) and the constants."""
     carried = [c for c in base.columns if c != "node"]
     nulls = [F.lit(None).cast(base.schema[c].dataType).alias(c) for c in carried]
     zeros = base.select("node", F.lit(0).cast("decimal(38,12)").alias("t"), *carried)
@@ -129,9 +120,10 @@ def _in_sum_iterate(edges, base, state, col: str, update, iters: int) -> DataFra
     # float scaling), and x·wn <= 2 keeps the 12dp floor term far under
     # the 2^53 round-trip bound
     t = term(F.col(col) * F.col("wn"), 12)
-    for _ in range(iters):
+
+    def step(state: DataFrame, _: int) -> DataFrame:
         msgs = edges.join(state.select(F.col("node").alias("src"), col), "src")
-        state = (
+        return (
             msgs.select(F.col("dst").alias("node"), t.alias("t"), *nulls)
             .unionByName(zeros)
             .groupBy("node")
@@ -140,9 +132,9 @@ def _in_sum_iterate(edges, base, state, col: str, update, iters: int) -> DataFra
                 *(F.max(c).alias(c) for c in carried),
             )
             .select("node", update.alias(col))
-            .localCheckpoint(eager=False)
         )
-    return state
+
+    return step
 
 
 def _pr_level_sql(prev: str, out: str) -> str:
@@ -186,7 +178,7 @@ def _pr_level_sql(prev: str, out: str) -> str:
 def q_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank, 5 supersteps, damping 0.85, over the brand
     co-purchase graph — the iterative message-passing family (Pregel
-    shape), run by the shared :func:`_in_sum_iterate`. Each superstep
+    shape), run by the shared :func:`in_sum_step`. Each superstep
     is ONE shuffle: edges join the current rank vector on src (at
     fixture scale the rank vector broadcasts; at billion-node scale the
     same plan hash-co-partitions edges and ranks on src across
@@ -202,7 +194,9 @@ def q_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     update = portable_round(
         F.lit(0.15) / n_nodes + F.lit(0.85) * F.col("s"), 12
     ).cast("double")
-    ranks = _in_sum_iterate(edges, nodes, ranks, "rank", update, _ITERS)
+    ranks = iterate(
+        ranks, in_sum_step(edges, nodes, "rank", update), _ITERS, eager=False
+    )
     return ranks.orderBy(F.desc("rank"), "node")
 
 
@@ -385,6 +379,21 @@ def _strong_edges(spark: SparkSession, sf_dir: str, q: float) -> DataFrame:
     )
 
 
+def _min_relax(edges: DataFrame, col: str, hop: Column | str):
+    """The Pregel relax superstep for :func:`operators.iterate.iterate`:
+    each node's ``col`` becomes the min of its own and of ``hop``, the
+    candidate an in-neighbour's row offers, named ``col`` (BFS distance
+    + 1, a component label)."""
+
+    def step(state: DataFrame, _: int) -> DataFrame:
+        relaxed = edges.join(state.withColumnRenamed("node", "src"), "src").select(
+            F.col("dst").alias("node"), hop
+        )
+        return state.unionByName(relaxed).groupBy("node").agg(F.min(col).alias(col))
+
+    return step
+
+
 def _bfs_level_sql(prev: str, out: str) -> str:
     return f"""
     {out} AS (
@@ -444,22 +453,8 @@ def q_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("node") == F.col("sn"))
         .select("node", F.lit(0).cast("bigint").alias("dist"))
     )
-    for _ in range(_BFS_ITERS):
-        relaxed = (
-            strong.join(dist.withColumnRenamed("node", "src"), "src")
-            .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").cast("bigint").alias("dist"))
-            # materialize the superstep boundary (node-count rows):
-            # without this each superstep's join re-executes the whole
-            # prior-iteration lineage — the same cut q_power_iteration
-            # and the transitive-closure operator make
-            .localCheckpoint(eager=True)
-        )
-    return dist.orderBy("node")
+    relax = _min_relax(strong, "dist", (F.col("dist") + 1).alias("dist"))
+    return iterate(dist, relax, _BFS_ITERS, eager=True).orderBy("node")
 
 
 def _cc_level_sql(prev: str, out: str) -> str:
@@ -513,17 +508,8 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = strong.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
-    for _ in range(4):
-        relaxed = strong.join(
-            labels.withColumnRenamed("node", "src"), "src"
-        ).select(F.col("dst").alias("node"), "lbl")
-        labels = (
-            labels.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-    comp = labels.groupBy("lbl").agg(
+    relax = _min_relax(strong, "lbl", "lbl")
+    comp = iterate(labels, relax, 4, eager=True).groupBy("lbl").agg(
         F.count(F.lit(1)).cast("bigint").alias("sz")
     )
     return (
@@ -770,20 +756,18 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint(eager) per round to truncate lineage. Reported:
     surviving node + its within-core degree."""
     edges, _, nodes = _graph(spark, sf_dir)
-    alive = nodes.select("node", F.lit(0).cast("bigint").alias("deg"))
-    for _ in range(6):
-        alive = (
-            edges.join(
-                alive.select(F.col("node").alias("src")), "src"
-            )
-            .join(
-                alive.select(F.col("node").alias("dst")), "dst"
-            )
+
+    def peel(alive: DataFrame, _: int) -> DataFrame:
+        return (
+            edges.join(alive.select(F.col("node").alias("src")), "src")
+            .join(alive.select(F.col("node").alias("dst")), "dst")
             .groupBy(F.col("src").alias("node"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
             .filter(F.col("deg") >= 3)
-            .localCheckpoint(eager=True)
         )
+
+    alive = nodes.select("node", F.lit(0).cast("bigint").alias("deg"))
+    alive = iterate(alive, peel, 6, eager=True)
     return alive.select("node", F.col("deg").alias("core_degree")).orderBy(
         "node"
     )
@@ -834,24 +818,19 @@ def q_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed = nodes.agg(F.min("node").alias("node")).select(
         "node", F.lit(0).cast("bigint").alias("dist")
     )
-    dist = seed.localCheckpoint(eager=True)
-    for level in range(4):
+
+    def expand(dist: DataFrame, level: int) -> DataFrame:
         frontier = dist.filter(F.col("dist") == level)
-        expanded = (
-            edges.join(
-                frontier.select(F.col("node").alias("src"), "dist"), "src"
-            )
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("dist") + 1).alias("dist"),
-            )
-        )
-        dist = (
+        expanded = edges.join(
+            frontier.select(F.col("node").alias("src"), "dist"), "src"
+        ).select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
+        return (
             dist.unionByName(expanded)
             .groupBy("node")
             .agg(F.min("dist").cast("bigint").alias("dist"))
-            .localCheckpoint(eager=True)
         )
+
+    dist = iterate(seed.localCheckpoint(eager=True), expand, 4, eager=True)
     return (
         nodes.join(dist, "node", "left")
         .groupBy(F.coalesce(F.col("dist"), F.lit(-1)).alias("layer"))

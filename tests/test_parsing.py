@@ -5,11 +5,13 @@ the cleaning code at /root/reference/dump_bigq.py:70-128)."""
 from __future__ import annotations
 
 import datetime as dt
+import itertools
 
 import pytest
 from pyspark.sql import functions as F
 
 from stockmarketdata_dwb_etl_spark.functions.parsing import (
+    NAN_SPELLINGS,
     parse_kmb,
     parse_mdy_date,
     parse_money,
@@ -95,3 +97,30 @@ def test_kmb_roundtrip_property(spark):
     for r in out:
         base = float(r.raw[:-1]) * mult[r.raw[-1]]
         assert r.parsed == pytest.approx(base)
+
+
+def test_nan_spellings_are_every_string_whose_lower_is_nan(spark):
+    """``null_if_missing`` tests ``t IN NAN_SPELLINGS`` where it once
+    tested ``lower(t) = 'nan'``. Spark's ``lower`` maps a string code
+    point by code point (its only context rule, Greek final sigma, maps
+    to sigma) and maps no code point to the empty string, so
+    ``lower(t) = 'nan'`` holds exactly when t's code points map to
+    pieces that concatenate to 'nan'. Enumerating every code point
+    shows that only n, N, a and A map to a piece of 'nan' at all, and
+    each to one letter: the strings are the 8 case spellings, and the
+    two tests have the same truth table."""
+    # one code point per string: UTF-32 after an explicit BOM, so U+FEFF
+    # itself decodes as a character
+    s = F.decode(
+        F.unhex(F.concat(F.lit("0000FEFF"), F.lpad(F.hex("id"), 8, "0"))), "UTF-32"
+    )
+    chars = (
+        spark.range(0x110000)
+        .filter((F.col("id") < 0xD800) | (F.col("id") > 0xDFFF))
+        .select(s.alias("s"))
+    )
+    pieces = ["n", "a", "na", "an", "nan"]
+    hits = chars.filter((F.length("s") != 1) | F.lower("s").isin(*pieces))
+    got = sorted((r.s, r.low) for r in hits.select("s", F.lower("s").alias("low")).collect())
+    assert got == [("A", "a"), ("N", "n"), ("a", "a"), ("n", "n")]
+    assert sorted(NAN_SPELLINGS) == sorted(map("".join, itertools.product("nN", "aA", "nN")))

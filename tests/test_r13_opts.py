@@ -122,3 +122,57 @@ def test_markov_journey_single_sort_order(spark):
     assert len(user_sorts) == 1, sorts
     assert "ord_key" in user_sorts[0], sorts
     assert not [n for n in sorts if " DESC " in n], "journey pass reintroduced a DESC sort"
+
+
+@pytest.mark.parametrize("lossy", [False, True], ids=["events", "lossy"])
+def test_markov_journey_edges_equal_three_window_form(spark, lossy):
+    """The one-window journey edges equal the three-window form they
+    replaced (unordered conv-key min, ASC lag over the truncated prefix,
+    DESC row_number for the loss edge), as multisets in both directions.
+    Every sf0.001 journey converts, so the ``lossy`` input drops the
+    conversions of every third user to give the loss edge rows."""
+    from stockmarketdata_dwb_etl_spark.catalog import load_table
+    from stockmarketdata_dwb_etl_spark.functions.bars import tick_key
+    from stockmarketdata_dwb_etl_spark.queries.dataops22 import _CONV, journey_edges
+    from pyspark.sql.window import Window
+
+    ev = load_table(spark, SF_DIR, "events")
+    if lossy:
+        ev = ev.filter((F.col("user_id") % 3 != 0) | (F.col("event_type") != _CONV))
+    one = journey_edges(ev)
+    ord_key = tick_key()
+    seq = ev.select(
+        "user_id",
+        "event_type",
+        ord_key.alias("ord_key"),
+        F.min(F.when(F.col("event_type") == _CONV, ord_key))
+        .over(Window.partitionBy("user_id"))
+        .alias("conv_key"),
+    )
+    pre = seq.filter(
+        F.col("conv_key").isNull() | (F.col("ord_key") <= F.col("conv_key"))
+    ).select("user_id", "event_type", "ord_key")
+    hops = pre.select(
+        F.coalesce(
+            F.lag("event_type").over(Window.partitionBy("user_id").orderBy("ord_key")),
+            F.lit("__start"),
+        ).alias("src"),
+        F.col("event_type").alias("dst"),
+    )
+    desc = Window.partitionBy("user_id").orderBy(F.col("ord_key").desc())
+    lasts = (
+        pre.withColumn("rn", F.row_number().over(desc))
+        .filter((F.col("rn") == 1) & (F.col("event_type") != _CONV))
+        .select(F.col("event_type").alias("src"), F.lit("__loss").alias("dst"))
+    )
+    three = (
+        hops.unionByName(lasts)
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    )
+    assert one.exceptAll(three).count() == 0
+    assert three.exceptAll(one).count() == 0
+    dsts = {r.dst for r in one.select("dst").distinct().collect()}
+    srcs = {r.src for r in one.select("src").distinct().collect()}
+    assert _CONV in dsts and "__start" in srcs
+    assert ("__loss" in dsts) == lossy
