@@ -54,7 +54,11 @@ from pyspark.sql.window import Window
 from pipelines import write_and_read
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
-from stockmarketdata_dwb_etl_spark.functions.text import word_shingles
+from stockmarketdata_dwb_etl_spark.functions.text import (
+    canonical_text,
+    distinct_shingle_ratio,
+    tokenize,
+)
 from stockmarketdata_dwb_etl_spark.queries.reports import hash_bucket
 
 _DEC18 = "decimal(38,18)"
@@ -63,26 +67,19 @@ _DEC18 = "decimal(38,18)"
 def build_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical text + quality signals + keep verdict + split label."""
     docs = load_table(spark, sf_dir, "documents")
-    ctext = F.trim(F.regexp_replace(F.lower(F.col("text")), " +", " "))
+    ctext = canonical_text(F.col("text"))
     canon = docs.select("doc_id", "lang", "source", ctext.alias("ctext"))
-    toks = F.filter(F.split(F.col("ctext"), " "), lambda x: x != "")
+    toks = tokenize(F.col("ctext"))
     with_toks = canon.withColumn("__toks", toks)
-    # slice/zip_with shingles (functions/text.py::word_shingles), NOT an
-    # element_at comprehension: the keep-filter below gets predicate-pushed
-    # past this projection, and the pushdown rewrite INLINES __toks into
-    # the predicate — an element_at form then re-evaluates filter(split(
-    # ctext)) per 3-gram per position (measured 0.9 s -> 13.8 s for the
-    # gated silver at probe x1; the slice form references __toks only
-    # k+1 times, restoring ~1 s).
-    g3 = word_shingles(F.col("__toks"), 3)
+    # distinct_shingle_ratio builds its shingles in the slice/zip_with
+    # form of word_shingles, NOT an element_at comprehension: the
+    # keep-filter below gets predicate-pushed past this projection, and
+    # the pushdown rewrite INLINES __toks into the predicate — an
+    # element_at form then re-evaluates tokenize(ctext) per 3-gram per
+    # position (measured 0.9 s -> 13.8 s for the gated silver at probe
+    # x1; the slice form references __toks only k+1 times, restoring ~1 s).
     n_tok = F.size("__toks")
-    distinct_ratio = portable_round(
-        F.when(n_tok < 3, F.lit(1.0)).otherwise(
-            F.size(F.array_distinct(g3)).cast("double")
-            / F.greatest(n_tok - 2, F.lit(1))
-        ),
-        4,
-    )
+    distinct_ratio = portable_round(distinct_shingle_ratio(F.col("__toks"), 3), 4)
     alpha_ratio = portable_round(
         F.length(F.regexp_replace("ctext", "[^a-z ]", "")).cast("double")
         / F.greatest(F.length("ctext"), F.lit(1)),

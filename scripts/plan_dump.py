@@ -9,8 +9,13 @@ hash is over ``queryExecution().optimizedPlan()`` with expression ids
 prints ``<name> ERROR <exception class>``. Run it on two checkouts and
 ``diff`` the outputs: a refactor that keeps every Column tree keeps every
 line. Building a query can run eager jobs (checkpoints, persists), so the
-sort order keeps warm-slot effects the same on both sides.
+sort order keeps warm-slot effects the same on both sides. The JVM
+gets a 3g driver heap unless ``SPARK_GRAFT_DRIVER_MEM`` is set: a full
+sweep finishes in 3g, and two sweeps at the 16g session default can
+outgrow a 16 GB host.
 
+PySpark names a lambda's variables by position (x, y, z), not by the
+Python parameter names, so renaming a parameter is no plan change.
 Catalyst numbers expression ids and lambda variables (``x_15``) from
 JVM-wide counters, so a query's ids depend on every query built before
 it. Masking hides the numbers but not their effect: the distinct-
@@ -104,6 +109,7 @@ def main() -> int:
     if unknown:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "3g")
     spark = get_spark(app_name="plan-dump")
     for slot, name in enumerate(sorted(QUERIES)):
         if only and name not in only:

@@ -1,22 +1,19 @@
-"""End-of-round checklist, one command: the four checks every round runs
+"""End-of-round checklist, one command: the three checks every round runs
 before the driver takes over, with the round-7 budgeting rules baked in.
 
 Usage: python scripts/round_close.py [--skip-battery]
 
-1. rotation: front-50 must be fully never-driver-tested
-   (scripts/rotation_check.py logic inline).
-2. front-50 dry run: the EXACT front-50 through the driver gate in one
+1. front-50 dry run: the EXACT front-50 through the driver gate in one
    fresh session, wall-clock reported against the ~60 s window and the
    1.5x fresh-session rule.
-3. full battery at sf0.01 (skippable; ~5 min).
-4. bench.py (prints the JSON line with machine_state).
+2. full battery at sf0.01 (skippable; ~5 min).
+3. bench.py (prints the JSON line with machine_state).
 
-Exit nonzero on any correctness failure or a stale rotation.
+Exit nonzero on any correctness failure.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import subprocess
@@ -33,28 +30,7 @@ def main() -> int:
 
     registry.load_all()
 
-    # a query counts as driver-GREEN only if its LATEST driver record
-    # passed every check — a red entry (r08: q_feature_scale hash_match
-    # false, q_one_hot_encode canonicalizer err) must stay eligible for
-    # the next front-50 so the driver re-samples the fix
-    latest: dict[str, dict] = {}
-    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        latest.update(json.load(open(f)))
-    green = {
-        n
-        for n, rec in latest.items()
-        if rec.get("err") is None
-        and rec.get("rows_match")
-        and rec.get("schema_match")
-        and rec.get("hash_match") is not False  # None = rows-only check
-    }
     front = list(registry.QUERIES)[:50]
-    stale = [n for n in front if n in green]
-    print(f"[1/4] rotation: {len(stale)} of front-50 already driver-green")
-    if stale:
-        print("      STALE:", stale)
-        return 1
-
     t0 = time.time()
     r = subprocess.run(
         [sys.executable, os.path.join(REPO, "scripts", "driver_sim.py"),
@@ -68,14 +44,14 @@ def main() -> int:
     # the operative upper reference. Over ~130 s, expect a possible
     # driver time-cut — keep heavies LAST so only the retryable tail
     # is at risk.
-    print(f"[2/4] front-50 dry run: {tail} | wall {wall:.0f}s "
+    print(f"[1/3] front-50 dry run: {tail} | wall {wall:.0f}s "
           f"({'OVER' if wall > 130 else 'within'} the measured band; "
           f"heavies must sit LAST so a time-cut only costs the tail)")
     if r.returncode != 0:
         return 1
 
     if skip_battery:
-        print("[3/4] full battery: SKIPPED (--skip-battery)")
+        print("[2/3] full battery: SKIPPED (--skip-battery)")
     else:
         r = subprocess.run(
             [sys.executable, os.path.join(REPO, "scripts", "driver_sim.py"),
@@ -83,14 +59,14 @@ def main() -> int:
             capture_output=True, text=True,
         )
         tail = r.stdout.strip().splitlines()[-1] if r.stdout.strip() else "?"
-        print(f"[3/4] full battery: {tail}")
+        print(f"[2/3] full battery: {tail}")
         if r.returncode != 0:
             return 1
 
     r = subprocess.run([sys.executable, os.path.join(REPO, "bench.py")],
                        capture_output=True, text=True)
     line = r.stdout.strip().splitlines()[-1] if r.stdout.strip() else "?"
-    print(f"[4/4] bench: {line}")
+    print(f"[3/3] bench: {line}")
     if r.returncode == 0:
         # r11 verdict #7: the handoff bench line must carry the probe
         # calibration so BENCH_r{N}.json stays machine-comparable

@@ -35,6 +35,11 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     sql_portable_round,
     sql_term_sum,
 )
+from stockmarketdata_dwb_etl_spark.functions.text import (
+    sql_tokenize,
+    sql_word_shingles,
+    tokenize,
+)
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # the three lexical query terms for the hybrid-retrieval demo (present
@@ -205,10 +210,10 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_preference_pairs",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id, lang,
-               list_filter(string_split(text, ' '), x -> x <> '') AS w
+               {sql_tokenize("text")} AS w
         FROM documents
     ), scored AS (
         SELECT doc_id, lang,
@@ -387,8 +392,7 @@ _MIX_BUDGET = 1_000_000  # literal token budget for the mixture plan
     WITH avail AS (
         SELECT source,
                CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(len(list_filter(string_split(text, ' '),
-                                        x -> x <> ''))) AS BIGINT)
+               CAST(SUM(len({sql_tokenize("text")})) AS BIGINT)
                  AS avail_tokens,
                CAST(100 + 50 * (COALESCE(TRY_CAST(substr(source, 4)
                                          AS INTEGER), 0) % 8)
@@ -423,7 +427,7 @@ def q_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-agg over the corpus for availability + a 1-row total broadcast —
     the mixture table is source-count-sized at any corpus scale."""
     docs = load_table(spark, sf_dir, "documents")
-    ntok = F.size(F.filter(F.split("text", " "), lambda x: x != ""))
+    ntok = F.size(tokenize("text"))
     avail = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum(ntok).cast("bigint").alias("avail_tokens"),
@@ -582,7 +586,7 @@ def q_dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH toks AS (
         SELECT d.doc_id, d.lang, u.pos, u.tok
         FROM (SELECT doc_id, lang,
-                     list_filter(string_split(text, ' '), x -> x <> '') AS ws
+                     {sql_tokenize("text")} AS ws
               FROM documents) d,
              LATERAL (SELECT UNNEST(generate_series(1, len(ws))) AS pos,
                              UNNEST(ws) AS tok) u
@@ -640,9 +644,7 @@ def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "lang",
-        F.posexplode(
-            F.filter(F.split("text", " "), lambda x: x != "")
-        ).alias("pos0", "tok"),
+        F.posexplode(tokenize("text")).alias("pos0", "tok"),
     ).select("doc_id", "lang", (F.col("pos0") + 1).alias("pos"), "tok")
     b = F.when(F.substring(F.md5("tok"), 2, 1) == "0", 1).otherwise(0)
     w = (
@@ -697,7 +699,7 @@ def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # probe must produce exactly the pairs the in-plan pipeline produces
 # (same split, same LSH parameters, same exact-verify threshold) — the
 # only difference is WHERE the corpus signatures come from.
-_CROSS_CORPUS_ORACLE = """
+_CROSS_CORPUS_ORACLE = f"""
     WITH corp AS (
         SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 0
         UNION ALL
@@ -708,11 +710,9 @@ _CROSS_CORPUS_ORACLE = """
     aug AS (SELECT * FROM corp UNION ALL SELECT * FROM hold),
     sh AS (
         SELECT doc_id,
-               list_distinct(list_transform(
-                   generate_series(1, greatest(len(w) - 2, 0)),
-                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingles
+               list_distinct({sql_word_shingles("w", 3)}) AS shingles
         FROM (SELECT doc_id,
-                     list_filter(string_split(text, ' '), x -> x <> '') AS w
+                     {sql_tokenize("text")} AS w
               FROM aug)
     ),
     sizes AS (SELECT doc_id, len(shingles) AS n FROM sh),

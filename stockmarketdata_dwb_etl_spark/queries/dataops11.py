@@ -42,7 +42,7 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     sql_term_sum,
     term_sum,
 )
-from stockmarketdata_dwb_etl_spark.functions.text import tokenize
+from stockmarketdata_dwb_etl_spark.functions.text import sql_tokenize, tokenize
 from stockmarketdata_dwb_etl_spark.registry import query
 
 _HEX = "0123456789abcdef"
@@ -384,8 +384,7 @@ _ZIPF_TOPK = 10_000
     WITH freq AS (
         SELECT lang, tok, CAST(COUNT(*) AS BIGINT) AS f
         FROM (SELECT lang,
-                     unnest(list_filter(string_split(text, ' '),
-                                        x -> x <> '')) AS tok
+                     unnest({sql_tokenize("text")}) AS tok
               FROM documents)
         GROUP BY lang, tok
     ),
@@ -478,8 +477,7 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_heaps_law",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, unnest(list_filter(string_split(text, ' '),
-                                          x -> x <> '')) AS tok
+        SELECT doc_id, unnest({sql_tokenize("text")}) AS tok
         FROM documents
     ),
     per_doc AS (
@@ -606,7 +604,7 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH d AS (
         SELECT doc_id, source,
-               len(list_filter(string_split(text, ' '), x -> x <> ''))
+               len({sql_tokenize("text")})
                    AS n_tok,
                {_duck_md5_int("source", 5)} % 5 AS fold
         FROM documents

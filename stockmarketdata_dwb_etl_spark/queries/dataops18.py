@@ -49,6 +49,7 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     sql_term_sum,
     term_sum,
 )
+from stockmarketdata_dwb_etl_spark.functions.text import sql_tokenize, tokenize
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -201,7 +202,7 @@ _KN_D = 0.75
     WITH toks AS (
         SELECT doc_id, lang, u.t, u.i
         FROM (SELECT doc_id, lang,
-                     list_filter(string_split(text, ' '), x -> x <> '') AS w
+                     {sql_tokenize("text")} AS w
               FROM documents),
              LATERAL (SELECT UNNEST(w) AS t,
                              UNNEST(generate_series(1, len(w))) AS i) u
@@ -276,9 +277,7 @@ def q_kneser_ney_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "lang",
-        F.posexplode(
-            F.filter(F.split("text", " "), lambda x: x != "")
-        ).alias("i0", "t"),
+        F.posexplode(tokenize("text")).alias("i0", "t"),
     ).select("doc_id", "lang", (F.col("i0") + 1).alias("i"), "t")
     a = toks.select("doc_id", "lang", "i", F.col("t").alias("v"))
     b = toks.select(

@@ -52,6 +52,7 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     term,
     term_sum,
 )
+from stockmarketdata_dwb_etl_spark.functions.text import sql_tokenize, tokenize
 from stockmarketdata_dwb_etl_spark.operators.iterate import iterate
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -82,7 +83,7 @@ def _g2_terms_sql() -> str:
     "q_collocation_llr",
     oracle=f"""
     WITH w AS (
-        SELECT list_filter(string_split(text, ' '), x -> x <> '') AS ws
+        SELECT {sql_tokenize("text")} AS ws
         FROM documents
     ), uni AS (SELECT unnest(ws) AS t FROM w),
     uc AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS c FROM uni GROUP BY t),
@@ -126,7 +127,7 @@ def q_collocation_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     with map-side partials; marginals broadcast (vocabulary-sized);
     top-15 is TakeOrdered. Complements q_pmi_bigrams (dataops3.py)."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    words = tokenize(F.col("text"))
     w = docs.select(words.alias("ws"))
     big = w.select(
         F.explode(
@@ -285,7 +286,7 @@ _BM25_B = 0.75
     oracle=f"""
     WITH w AS (
         SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS ws
+               {sql_tokenize("text")} AS ws
         FROM documents
     ),
     dl AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS dl FROM w),
@@ -335,7 +336,7 @@ def q_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings shuffle on the token key; df is vocabulary-sized and
     broadcast; top-10 is TakeOrdered — never a global sort."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    words = tokenize(F.col("text"))
     w = docs.select("doc_id", words.alias("ws"))
     dl = w.select("doc_id", F.size("ws").cast("bigint").alias("dl"))
     stats = dl.agg(

@@ -14,13 +14,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
-from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.text import (
+    LANG_SCORE_COLUMNS,
+    lang_id,
     lang_scores,
     quality_exprs,
+    sql_lang_id,
+    sql_lang_score_columns,
+    sql_quality_exprs,
+    sql_tokenize,
+    sql_word_shingles,
     tokenize,
     word_shingles,
 )
+from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.operators.dedup import (
     embedding_near_dups,
     minhash_near_dups,
@@ -53,7 +60,7 @@ def _docs_with_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_minhash",
-    oracle="""
+    oracle=f"""
     WITH aug AS (
         SELECT doc_id, text FROM documents
         UNION ALL
@@ -61,10 +68,8 @@ def _docs_with_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM documents WHERE doc_id % 10 = 0
     ), sh AS (
         SELECT doc_id,
-               list_distinct(list_transform(
-                   generate_series(1, greatest(len(w) - 2, 0)),
-                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingles
-        FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
+               list_distinct({sql_word_shingles("w", 3)}) AS shingles
+        FROM (SELECT doc_id, {sql_tokenize("text")} AS w
               FROM aug)
     ), sizes AS (
         SELECT doc_id, len(shingles) AS n FROM sh
@@ -140,7 +145,7 @@ def _simhash_oracle() -> str:
         FROM documents WHERE doc_id % 10 = 0
     ), words AS (
         SELECT doc_id,
-               unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS w
+               unnest({sql_tokenize("text")}) AS w
         FROM aug
     ), hashed AS (
         SELECT doc_id,
@@ -178,7 +183,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ngram_jaccard",
-    oracle="""
+    oracle=f"""
     WITH aug AS (
         SELECT doc_id, text FROM documents
         UNION ALL
@@ -186,10 +191,8 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM documents WHERE doc_id % 10 = 0
     ), sh AS (
         SELECT doc_id,
-               list_distinct(list_transform(
-                   generate_series(1, greatest(len(w) - 2, 0)),
-                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingles
-        FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
+               list_distinct({sql_word_shingles("w", 3)}) AS shingles
+        FROM (SELECT doc_id, {sql_tokenize("text")} AS w
               FROM aug)
     )
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -223,20 +226,13 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_lang_id",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
         SELECT doc_id,
-               CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-                    ['the','a','of','and','to'])) AS INTEGER) AS en_score,
-               CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-                    ['el','la','de','y','que'])) AS INTEGER) AS es_score,
-               CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-                    ['der','die','das','und','zu'])) AS INTEGER) AS de_score
+               {sql_lang_score_columns(sql_tokenize("text"))}
         FROM documents)
     SELECT doc_id, en_score, es_score, de_score,
-           CASE WHEN en_score >= es_score AND en_score >= de_score THEN 'en'
-                WHEN es_score >= de_score THEN 'es'
-                ELSE 'de' END AS predicted
+           {sql_lang_id(LANG_SCORE_COLUMNS)} AS predicted
     FROM scored
     """,
 )
@@ -251,33 +247,15 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         en.alias("en_score"),
         es.alias("es_score"),
         de.alias("de_score"),
-        F.when((en >= es) & (en >= de), "en")
-        .when(es >= de, "es")
-        .otherwise("de")
-        .alias("predicted"),
+        lang_id(scores).alias("predicted"),
     )
 
 
 @query(
     "q_text_quality",
-    oracle="""
-    SELECT doc_id,
-           CAST(length(text) AS INTEGER) AS n_chars,
-           CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS INTEGER)
-             AS n_tokens,
-           CAST(len(regexp_extract_all(text, '[A-Za-z0-9_]+|[^A-Za-z0-9_\\s]'))
-             AS INTEGER) AS n_bpe_tokens,
-           CAST((CAST(floor(CAST((len(regexp_extract_all(text, '[^A-Za-z0-9_\\s]'))::DOUBLE
-                / length(text)) AS DOUBLE) * 10000.0 + 0.5) AS DOUBLE) / 10000.0) AS DOUBLE) AS punct_ratio,
-           CAST(len(list_intersect(
-                list_distinct(list_filter(string_split(text, ' '), x -> x <> '')),
-                ['the','a','of','and','to'])) AS INTEGER) AS stopword_hits,
-           CAST((CAST(floor(CAST(((length(text)
-                  - len(list_filter(string_split(text, ' '), x -> x <> '')) + 1)::DOUBLE
-                / nullif(len(list_filter(string_split(text, ' '), x -> x <> '')), 0)) AS DOUBLE) * 10000.0 + 0.5) AS DOUBLE) / 10000.0)
-             AS DOUBLE) AS mean_token_len
-    FROM documents
-    """,
+    oracle="SELECT doc_id, "
+    + ", ".join(f"{e} AS {k}" for k, e in sql_quality_exprs("text").items())
+    + " FROM documents",
 )
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-scoring battery: lengths, token counts (whitespace + BPE-ish
@@ -289,16 +267,14 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_doc_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            MIN(md5(sh)) AS fingerprint,
            CAST(COUNT(DISTINCT sh) AS BIGINT) AS n_shingles
     FROM (
         SELECT doc_id,
-               unnest(list_transform(
-                   generate_series(1, greatest(len(w) - 2, 0)),
-                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
-        FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
+               unnest({sql_word_shingles("w", 3)}) AS sh
+        FROM (SELECT doc_id, {sql_tokenize("text")} AS w
               FROM documents)
     )
     GROUP BY doc_id

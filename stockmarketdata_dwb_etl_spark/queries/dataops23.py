@@ -39,6 +39,7 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     sql_term_sum,
     term_sum,
 )
+from stockmarketdata_dwb_etl_spark.functions.text import sql_tokenize, tokenize
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -379,7 +380,7 @@ def _spark_phonetic(col: Column) -> Column:
     oracle=f"""
     WITH base AS (
         SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '')[1] AS w1
+               {sql_tokenize("text")}[1] AS w1
         FROM documents
     ),
     planted AS (
@@ -410,7 +411,7 @@ def q_dedup_phonetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     desynchronize). Scale: candidates join only on the phonetic block
     key (never all pairs); verify runs on block-join survivors."""
     docs = load_table(spark, sf_dir, "documents")
-    w1 = F.filter(F.split(F.col("text"), " "), lambda x: x != "").getItem(0)
+    w1 = tokenize(F.col("text")).getItem(0)
     base = docs.select("doc_id", w1.alias("w1"))
     planted = base.filter(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 3_000_000).alias("doc_id"),

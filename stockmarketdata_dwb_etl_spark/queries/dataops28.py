@@ -33,6 +33,7 @@ from pyspark.sql.window import Window
 
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
+from stockmarketdata_dwb_etl_spark.functions.text import sql_tokenize, tokenize
 from stockmarketdata_dwb_etl_spark.operators.iterate import iterate
 from stockmarketdata_dwb_etl_spark.queries.graph import _GRAPH_SQL, _strong_edges
 from stockmarketdata_dwb_etl_spark.registry import query
@@ -161,16 +162,13 @@ def q_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_pareto_front",
-    oracle="""
+    oracle=f"""
     WITH m AS (
         SELECT doc_id,
-               CAST(len(list_filter(string_split(text, ' '),
-                                    x -> x <> '')) AS BIGINT) AS n_tokens,
-               CAST(floor(CAST(len(list_distinct(list_filter(
-                        string_split(text, ' '), x -> x <> '')))
+               CAST(len({sql_tokenize("text")}) AS BIGINT) AS n_tokens,
+               CAST(floor(CAST(len(list_distinct({sql_tokenize("text")}))
                     AS DOUBLE)
-                    / nullif(len(list_filter(string_split(text, ' '),
-                                             x -> x <> '')), 0)
+                    / nullif(len({sql_tokenize("text")}), 0)
                     * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0 AS ttr
         FROM documents
     ),
@@ -203,7 +201,7 @@ def q_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
     each partition's prefix max broadcast forward (the
     operators/rank.py prefix pattern)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    toks = tokenize("text")
     m = docs.select(
         "doc_id",
         F.size(toks).cast("bigint").alias("n_tokens"),

@@ -21,29 +21,31 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     sql_term_sum,
     term,
 )
+from stockmarketdata_dwb_etl_spark.functions.text import (
+    canonical_text,
+    distinct_shingle_ratio,
+    sql_canonical_text,
+    sql_distinct_shingle_ratio,
+    sql_tokenize,
+    sql_word_shingles,
+    tokenize,
+    word_shingles,
+)
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.functions.text import tokenize, word_shingles
 from stockmarketdata_dwb_etl_spark.registry import QUERIES, query
 
 # Deterministic stand-in for a benchmark/eval holdout: every 17th doc.
 # Contamination and seen-set checks run the corpus against this slice.
 _BENCH_PRED = "doc_id % 17 = 0"
 
-_DUCK_TOKENS = "list_filter(string_split(text, ' '), x -> x <> '')"
-
-
 @query(
     "q_contamination",
     oracle=f"""
     WITH tok AS (
-        SELECT doc_id, {_DUCK_TOKENS} AS w FROM documents
+        SELECT doc_id, {sql_tokenize("text")} AS w FROM documents
     ), sh AS (
         SELECT doc_id,
-               list_distinct(list_transform(
-                   generate_series(1, greatest(len(w) - 7, 0)),
-                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' ||
-                        w[i+3] || ' ' || w[i+4] || ' ' || w[i+5] || ' ' ||
-                        w[i+6] || ' ' || w[i+7])) AS shingles
+               list_distinct({sql_word_shingles("w", 8)}) AS shingles
         FROM tok
     ), bench AS (
         SELECT DISTINCT unnest(shingles) AS sh FROM sh WHERE {_BENCH_PRED}
@@ -92,7 +94,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_pack_sequences",
     oracle=f"""
     WITH tok AS (
-        SELECT doc_id, CAST(len({_DUCK_TOKENS}) AS BIGINT) AS n_tokens
+        SELECT doc_id, CAST(len({sql_tokenize("text")}) AS BIGINT) AS n_tokens
         FROM documents
     ), pre AS (
         SELECT doc_id, n_tokens,
@@ -136,12 +138,10 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_repetition_score",
     oracle=f"""
     WITH tok AS (
-        SELECT doc_id, {_DUCK_TOKENS} AS w FROM documents
+        SELECT doc_id, {sql_tokenize("text")} AS w FROM documents
     ), sh AS (
         SELECT doc_id,
-               list_transform(
-                   generate_series(1, greatest(len(w) - 2, 0)),
-                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS g
+               {sql_word_shingles("w", 3)} AS g
         FROM tok
     )
     SELECT doc_id,
@@ -502,10 +502,10 @@ def q_url_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_pmi_bigrams",
-    oracle="""
+    oracle=f"""
     WITH w AS (
         SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS ws
+               {sql_tokenize("text")} AS ws
         FROM documents
     ), uni AS (
         SELECT unnest(ws) AS t FROM w
@@ -549,7 +549,7 @@ def q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocabulary-sized) unigram counts; top-20 is TakeOrdered, never a
     global sort."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    words = tokenize(F.col("text"))
     w = docs.select(words.alias("ws"))
     uni = w.select(F.explode(F.col("ws")).alias("t"))
     uc = uni.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
@@ -594,10 +594,10 @@ def q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_lm_score",
-    oracle="""
+    oracle=f"""
     WITH w AS (
         SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS ws
+               {sql_tokenize("text")} AS ws
         FROM documents
     ), uc AS (
         SELECT t, COUNT(*) AS c_a
@@ -640,7 +640,7 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the pair (the LM table is corpus-vocabulary-sized, NOT broadcast);
     unigram marginals broadcast. Three shuffles total, no collect."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    words = tokenize(F.col("text"))
     w = docs.select("doc_id", words.alias("ws"))
     uc = (
         w.select(F.explode("ws").alias("t"))
@@ -907,16 +907,12 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH sig AS (
         SELECT doc_id, lang,
-               len({_DUCK_TOKENS}) AS n_tokens,
-               CASE WHEN len({_DUCK_TOKENS}) < 3 THEN 1.0 ELSE
-                 len(list_distinct(list_transform(
-                     generate_series(1, greatest(len({_DUCK_TOKENS}) - 2, 0)),
-                     i -> {_DUCK_TOKENS}[i] || ' ' || {_DUCK_TOKENS}[i+1]
-                          || ' ' || {_DUCK_TOKENS}[i+2])))::DOUBLE
-                 / greatest(len({_DUCK_TOKENS}) - 2, 1) END AS distinct_ratio,
+               len(ws) AS n_tokens,
+               {sql_distinct_shingle_ratio("ws", 3)} AS distinct_ratio,
                length(regexp_replace(text, '[^A-Za-z ]', '', 'g'))::DOUBLE
                  / greatest(length(text), 1) AS alpha_ratio
-        FROM documents
+        FROM (SELECT doc_id, lang, text, {sql_tokenize("text")} AS ws
+              FROM documents)
     )
     SELECT doc_id, lang,
            CAST(n_tokens AS BIGINT) AS n_tokens,
@@ -940,18 +936,10 @@ def q_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     is THE pass that decides what the expensive downstream stages
     (dedup, LM scoring) even see."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    toks = tokenize(F.col("text"))
     n_tok = F.size(toks)
-    # slice/zip_with form (functions/text.py::word_shingles): an
-    # element_at comprehension re-evaluates __toks per gram per position
-    # whenever an optimizer rewrite (predicate pushdown, collapse)
-    # inlines the alias — the corpus-pipeline round-7 bug class.
-    g3 = word_shingles(F.col("__toks"), 3)
     with_toks = docs.withColumn("__toks", toks)
-    distinct_ratio = F.when(F.size("__toks") < 3, F.lit(1.0)).otherwise(
-        F.size(F.array_distinct(g3)).cast("double")
-        / F.greatest(F.size("__toks") - 2, F.lit(1))
-    )
+    distinct_ratio = distinct_shingle_ratio(F.col("__toks"), 3)
     alpha_ratio = (
         F.length(F.regexp_replace("text", "[^A-Za-z ]", "")).cast("double")
         / F.greatest(F.length("text"), F.lit(1))
@@ -971,10 +959,10 @@ def q_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_canonicalize",
-    oracle="""
+    oracle=f"""
     WITH canon AS (
         SELECT doc_id, lang, text,
-               trim(regexp_replace(lower(text), ' +', ' ', 'g')) AS ctext
+               {sql_canonical_text("text")} AS ctext
         FROM documents
     )
     SELECT lang,
@@ -997,7 +985,7 @@ def q_text_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest is per-group (lang) over doc-id-ordered fixed-width hashes —
     deterministic on both engines."""
     docs = load_table(spark, sf_dir, "documents")
-    ctext = F.trim(F.regexp_replace(F.lower(F.col("text")), " +", " "))
+    ctext = canonical_text(F.col("text"))
     canon = docs.select(
         "doc_id",
         "lang",

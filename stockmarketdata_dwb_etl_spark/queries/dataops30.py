@@ -34,6 +34,7 @@ from pyspark.sql.window import Window
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.bars import ohlcv_bars, sql_ohlcv_bars
 from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
+from stockmarketdata_dwb_etl_spark.functions.text import sql_tokenize, tokenize
 from stockmarketdata_dwb_etl_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -352,9 +353,9 @@ def q_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_chao1_richness",
-    oracle="""
+    oracle=f"""
     WITH words AS (
-        SELECT UNNEST(list_filter(string_split(text, ' '), x -> x <> ''))
+        SELECT UNNEST({sql_tokenize("text")})
             AS w
         FROM documents
     ),
@@ -390,11 +391,7 @@ def q_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the word hash-agg map-side; the frequency-spectrum agg is
     4 scalars."""
     docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(
-        F.explode(
-            F.filter(F.split("text", " "), lambda x: x != "")
-        ).alias("w")
-    )
+    words = docs.select(F.explode(tokenize("text")).alias("w"))
     wc = words.groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     f = wc.agg(
         F.count(F.lit(1)).cast("bigint").alias("v"),

@@ -21,12 +21,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stockmarketdata_dwb_etl_spark.functions.exact import portable_round, term
+from stockmarketdata_dwb_etl_spark.functions.text import (
+    sql_tokenize,
+    sql_word_shingles,
+    tokenize,
+    word_shingles,
+)
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.functions.text import tokenize, word_shingles
 from stockmarketdata_dwb_etl_spark.operators.iterate import iterate
 from stockmarketdata_dwb_etl_spark.registry import query
-
-_DUCK_TOKENS = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 # Fixed retrieval query for BM25 — terms present across fixture vintages
 # (the documents fixture draws from a small engine-vocabulary).
@@ -39,7 +42,7 @@ _BM25_B = 0.75
     "q_bm25_topk",
     oracle=f"""
     WITH tok AS (
-        SELECT doc_id, {_DUCK_TOKENS} AS w FROM documents
+        SELECT doc_id, {sql_tokenize("text")} AS w FROM documents
     ), dl AS (
         SELECT doc_id, len(w) AS dl FROM tok
     ), corpus AS (
@@ -128,7 +131,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_keep_canonical",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE aug AS (
         SELECT doc_id, text, source FROM documents
         UNION ALL
@@ -137,10 +140,8 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM documents WHERE doc_id % 10 = 0
     ), sh AS (
         SELECT doc_id,
-               list_distinct(list_transform(
-                   generate_series(1, greatest(len(w) - 2, 0)),
-                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingles
-        FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
+               list_distinct({sql_word_shingles("w", 3)}) AS shingles
+        FROM (SELECT doc_id, {sql_tokenize("text")} AS w
               FROM aug)
     ), sizes AS (
         SELECT doc_id, len(shingles) AS n FROM sh
@@ -482,7 +483,7 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_word_entropy",
     oracle=f"""
     WITH tok AS (
-        SELECT doc_id, source, {_DUCK_TOKENS} AS w FROM documents
+        SELECT doc_id, source, {sql_tokenize("text")} AS w FROM documents
     ), wc AS (
         SELECT doc_id, source, word, CAST(COUNT(*) AS BIGINT) AS c
         FROM (SELECT doc_id, source, unnest(w) AS word FROM tok)
@@ -740,7 +741,7 @@ def q_pair_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH wf AS (
         SELECT word, CAST(COUNT(*) AS BIGINT) AS n
-        FROM (SELECT unnest({_DUCK_TOKENS}) AS word FROM documents)
+        FROM (SELECT unnest({sql_tokenize("text")}) AS word FROM documents)
         GROUP BY word
     ),
     p AS (
@@ -797,7 +798,7 @@ def _bpe_ctes(k: int = _BPE_K) -> str:
     ctes = [
         f"""wf AS (
         SELECT word, CAST(COUNT(*) AS BIGINT) AS n
-        FROM (SELECT unnest({_DUCK_TOKENS}) AS word FROM documents)
+        FROM (SELECT unnest({sql_tokenize("text")}) AS word FROM documents)
         WHERE regexp_matches(word, '^[a-z0-9]+$')
         GROUP BY word
     ),
@@ -983,7 +984,7 @@ def _bpe_apply_oracle(k: int = _BPE_K) -> str:
     ),
     corpus AS (
         SELECT source, word
-        FROM (SELECT source, unnest({_DUCK_TOKENS}) AS word FROM documents)
+        FROM (SELECT source, unnest({sql_tokenize("text")}) AS word FROM documents)
         WHERE regexp_matches(word, '^[a-z0-9]+$') AND length(word) >= 2
     )
     SELECT c.source,
@@ -1052,10 +1053,8 @@ def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH sh AS (
         SELECT doc_id,
-               list_distinct(list_transform(
-                   generate_series(1, greatest(len(w) - 2, 0)),
-                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingles
-        FROM (SELECT doc_id, {_DUCK_TOKENS} AS w FROM documents)
+               list_distinct({sql_word_shingles("w", 3)}) AS shingles
+        FROM (SELECT doc_id, {sql_tokenize("text")} AS w FROM documents)
     ),
     ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
     df AS (SELECT s, CAST(COUNT(*) AS BIGINT) AS n_docs FROM ex GROUP BY s)

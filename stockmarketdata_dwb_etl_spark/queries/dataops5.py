@@ -19,13 +19,19 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     hilo_term_sum,
     portable_round,
     split_term_sum,
-    sql_portable_round,
     sql_split_term_sum,
     sql_term_sum,
     term_sum,
 )
+from stockmarketdata_dwb_etl_spark.functions.text import (
+    classifier_scored,
+    sql_classifier_scored,
+    sql_tokenize,
+    sql_word_shingles,
+    tokenize,
+    word_shingles,
+)
 from stockmarketdata_dwb_etl_spark.catalog import load_table
-from stockmarketdata_dwb_etl_spark.functions.text import tokenize, word_shingles
 from stockmarketdata_dwb_etl_spark.operators.iterate import iterate
 from stockmarketdata_dwb_etl_spark.registry import query
 
@@ -140,9 +146,9 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_containment",
-    oracle="""
+    oracle=f"""
     WITH base AS (
-        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
+        SELECT doc_id, {sql_tokenize("text")} AS w
         FROM documents
     ),
     snip AS (
@@ -152,16 +158,12 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     sh_orig AS (
         SELECT doc_id,
-               list_distinct(list_transform(
-                   generate_series(1, greatest(len(w) - 2, 0)),
-                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingles
+               list_distinct({sql_word_shingles("w", 3)}) AS shingles
         FROM base
     ),
     sh_snip AS (
         SELECT snip_id, orig_id,
-               list_distinct(list_transform(
-                   generate_series(1, greatest(len(sw) - 2, 0)),
-                   i -> sw[i] || ' ' || sw[i+1] || ' ' || sw[i+2])) AS shingles
+               list_distinct({sql_word_shingles("sw", 3)}) AS shingles
         FROM snip
     )
     SELECT s.snip_id, s.orig_id,
@@ -507,7 +509,7 @@ def q_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_cross_corpus",
-    oracle="""
+    oracle=f"""
     WITH corp AS (
         SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 0
         UNION ALL
@@ -518,11 +520,9 @@ def q_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     aug AS (SELECT * FROM corp UNION ALL SELECT * FROM hold),
     sh AS (
         SELECT doc_id,
-               list_distinct(list_transform(
-                   generate_series(1, greatest(len(w) - 2, 0)),
-                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingles
+               list_distinct({sql_word_shingles("w", 3)}) AS shingles
         FROM (SELECT doc_id,
-                     list_filter(string_split(text, ' '), x -> x <> '') AS w
+                     {sql_tokenize("text")} AS w
               FROM aug)
     ),
     sizes AS (SELECT doc_id, len(shingles) AS n FROM sh),
@@ -612,29 +612,8 @@ def q_dedup_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_quality_classifier",
-    oracle="""
-    WITH feat AS (
-        SELECT doc_id,
-               CAST(len(w) AS BIGINT) AS n_words,
-               CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE)
-                   / len(w) AS avg_wlen,
-               CAST(len(list_filter(w, x -> x IN
-                   ('the','a','of','and','to','in','is'))) AS DOUBLE)
-                   / len(w) AS stop_ratio,
-               CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)
-                   / length(text) AS digit_ratio
-        FROM (SELECT doc_id, text,
-                     list_filter(string_split(text, ' '), x -> x <> '') AS w
-              FROM documents)
-        WHERE len(w) > 0 AND length(text) > 0
-    ),
-    scored AS (
-        SELECT doc_id,
-               (CAST(floor(CAST((1.0 / (1.0 + exp(-(
-                   -2.0 + 0.02 * least(n_words, 200) + 6.0 * stop_ratio
-                   - 8.0 * digit_ratio + 0.3 * avg_wlen)))) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS score
-        FROM feat
-    )
+    oracle=f"""
+    WITH scored AS ({sql_classifier_scored("doc_id")})
     SELECT CAST(least(CAST(floor(score * 10) AS BIGINT), 9) AS BIGINT)
                AS bucket,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -657,51 +636,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles until the decile hash-agg) — streams the corpus once, the
     same posture as q_text_quality / q_quality_gate."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split("text", " "), lambda x: x != "")
-    feat = (
-        docs.select(
-            "doc_id",
-            F.col("text"),
-            words.alias("w"),
-        )
-        .filter((F.size("w") > 0) & (F.length("text") > 0))
-        .select(
-            "doc_id",
-            F.size("w").cast("bigint").alias("n_words"),
-            (
-                F.aggregate(
-                    "w", F.lit(0).cast("bigint"), lambda acc, x: acc + F.length(x)
-                ).cast("double")
-                / F.size("w")
-            ).alias("avg_wlen"),
-            (
-                F.size(
-                    F.filter(
-                        "w",
-                        lambda x: x.isin(
-                            "the", "a", "of", "and", "to", "in", "is"
-                        ),
-                    )
-                ).cast("double")
-                / F.size("w")
-            ).alias("stop_ratio"),
-            (
-                F.length(F.regexp_replace("text", "[^0-9]", "")).cast("double")
-                / F.length("text")
-            ).alias("digit_ratio"),
-        )
-    )
-    z = (
-        F.lit(-2.0)
-        + F.lit(0.02) * F.least(F.col("n_words"), F.lit(200)).cast("double")
-        + F.lit(6.0) * F.col("stop_ratio")
-        - F.lit(8.0) * F.col("digit_ratio")
-        + F.lit(0.3) * F.col("avg_wlen")
-    )
-    scored = feat.select(
-        "doc_id",
-        portable_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("score"),
-    )
+    scored = classifier_scored(docs, "doc_id")
     return (
         scored.groupBy(
             F.least(F.floor(F.col("score") * 10).cast("bigint"), F.lit(9))
@@ -856,29 +791,8 @@ def q_embed_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_token_budget_trim",
-    oracle="""
-    WITH feat AS (
-        SELECT doc_id, source,
-               CAST(len(w) AS BIGINT) AS n_tokens,
-               CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE)
-                   / len(w) AS avg_wlen,
-               CAST(len(list_filter(w, x -> x IN
-                   ('the','a','of','and','to','in','is'))) AS DOUBLE)
-                   / len(w) AS stop_ratio,
-               CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)
-                   / length(text) AS digit_ratio
-        FROM (SELECT doc_id, source, text,
-                     list_filter(string_split(text, ' '), x -> x <> '') AS w
-              FROM documents)
-        WHERE len(w) > 0 AND length(text) > 0
-    ),
-    scored AS (
-        SELECT doc_id, source, n_tokens,
-               (CAST(floor(CAST((1.0 / (1.0 + exp(-(
-                   -2.0 + 0.02 * least(n_tokens, 200) + 6.0 * stop_ratio
-                   - 8.0 * digit_ratio + 0.3 * avg_wlen)))) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS score
-        FROM feat
-    ),
+    oracle=f"""
+    WITH scored AS ({sql_classifier_scored("doc_id", "source", n_words="n_tokens")}),
     budget AS (
         SELECT CAST(ceil(0.25 * SUM(n_tokens)) AS BIGINT) AS b FROM scored
     ),
@@ -914,50 +828,7 @@ def q_token_budget_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stockmarketdata_dwb_etl_spark.operators.rank import global_prefix_sum
 
     docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split("text", " "), lambda x: x != "")
-    feat = (
-        docs.select("doc_id", "source", "text", words.alias("w"))
-        .filter((F.size("w") > 0) & (F.length("text") > 0))
-        .select(
-            "doc_id",
-            "source",
-            F.size("w").cast("bigint").alias("n_tokens"),
-            (
-                F.aggregate(
-                    "w", F.lit(0).cast("bigint"), lambda acc, x: acc + F.length(x)
-                ).cast("double")
-                / F.size("w")
-            ).alias("avg_wlen"),
-            (
-                F.size(
-                    F.filter(
-                        "w",
-                        lambda x: x.isin(
-                            "the", "a", "of", "and", "to", "in", "is"
-                        ),
-                    )
-                ).cast("double")
-                / F.size("w")
-            ).alias("stop_ratio"),
-            (
-                F.length(F.regexp_replace("text", "[^0-9]", "")).cast("double")
-                / F.length("text")
-            ).alias("digit_ratio"),
-        )
-    )
-    z = (
-        F.lit(-2.0)
-        + F.lit(0.02) * F.least(F.col("n_tokens"), F.lit(200)).cast("double")
-        + F.lit(6.0) * F.col("stop_ratio")
-        - F.lit(8.0) * F.col("digit_ratio")
-        + F.lit(0.3) * F.col("avg_wlen")
-    )
-    scored = feat.select(
-        "doc_id",
-        "source",
-        "n_tokens",
-        portable_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("score"),
-    )
+    scored = classifier_scored(docs, "doc_id", "source", n_words="n_tokens")
     budget = scored.agg(
         F.ceil(F.lit(0.25) * F.sum("n_tokens")).cast("bigint").alias("b")
     )
@@ -990,7 +861,7 @@ def q_token_budget_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_chunks",
-    oracle="""
+    oracle=f"""
     WITH aug AS (
         SELECT doc_id, text FROM documents
         UNION ALL
@@ -999,7 +870,7 @@ def q_token_budget_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     w AS (
         SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS ws
+               {sql_tokenize("text")} AS ws
         FROM aug
     ),
     ch AS (
@@ -1050,7 +921,7 @@ def q_dedup_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 4_000_000).alias("doc_id"), "text"
         )
     )
-    ws = F.filter(F.split("text", " "), lambda x: x != "")
+    ws = tokenize("text")
     w = aug.select("doc_id", ws.alias("ws")).filter(F.size("ws") > 0)
     n_ch = F.ceil(F.size("ws") / F.lit(10.0)).cast("int")
     chunks = w.select(
@@ -1096,31 +967,29 @@ def q_dedup_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The classifier-metric fixture: a quality-classifier sigmoid scoring
+# lang='en' membership, as (y, score) pairs. Shared by the classifier
+# queries here and in dataops7, dataops20 and dataops22.
+SQL_SCORED_EN = f"""
+    scored AS (
+        SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y, score
+        FROM ({sql_classifier_scored("lang")})
+    )
+"""
+
+
+def scored_en(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of :data:`SQL_SCORED_EN`."""
+    docs = load_table(spark, sf_dir, "documents")
+    return classifier_scored(docs, "lang").select(
+        (F.col("lang") == "en").cast("int").alias("y"), "score"
+    )
+
+
 @query(
     "q_roc_auc",
-    oracle="""
-    WITH feat AS (
-        SELECT doc_id, lang,
-               CAST(len(w) AS BIGINT) AS n_words,
-               CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE)
-                   / len(w) AS avg_wlen,
-               CAST(len(list_filter(w, x -> x IN
-                   ('the','a','of','and','to','in','is'))) AS DOUBLE)
-                   / len(w) AS stop_ratio,
-               CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)
-                   / length(text) AS digit_ratio
-        FROM (SELECT doc_id, lang, text,
-                     list_filter(string_split(text, ' '), x -> x <> '') AS w
-              FROM documents)
-        WHERE len(w) > 0 AND length(text) > 0
-    ),
-    scored AS (
-        SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-               (CAST(floor(CAST((1.0 / (1.0 + exp(-(
-                   -2.0 + 0.02 * least(n_words, 200) + 6.0 * stop_ratio
-                   - 8.0 * digit_ratio + 0.3 * avg_wlen)))) AS DOUBLE) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0) AS score
-        FROM feat
-    ),
+    oracle=f"""
+    WITH {SQL_SCORED_EN},
     grp AS (
         SELECT score,
                CAST(SUM(y) AS BIGINT) AS pos_at,
@@ -1159,48 +1028,7 @@ def q_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     one score hash-agg + a cumulative window over DISTINCT score values
     (bounded by score resolution, not rows) + one tiny agg — this is
     how AUC stays one pass at 1e12 rows."""
-    docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split("text", " "), lambda x: x != "")
-    feat = (
-        docs.select("doc_id", "lang", "text", words.alias("w"))
-        .filter((F.size("w") > 0) & (F.length("text") > 0))
-        .select(
-            (F.col("lang") == "en").cast("int").alias("y"),
-            F.size("w").cast("bigint").alias("n_words"),
-            (
-                F.aggregate(
-                    "w", F.lit(0).cast("bigint"), lambda acc, x: acc + F.length(x)
-                ).cast("double")
-                / F.size("w")
-            ).alias("avg_wlen"),
-            (
-                F.size(
-                    F.filter(
-                        "w",
-                        lambda x: x.isin(
-                            "the", "a", "of", "and", "to", "in", "is"
-                        ),
-                    )
-                ).cast("double")
-                / F.size("w")
-            ).alias("stop_ratio"),
-            (
-                F.length(F.regexp_replace("text", "[^0-9]", "")).cast("double")
-                / F.length("text")
-            ).alias("digit_ratio"),
-        )
-    )
-    z = (
-        F.lit(-2.0)
-        + F.lit(0.02) * F.least(F.col("n_words"), F.lit(200)).cast("double")
-        + F.lit(6.0) * F.col("stop_ratio")
-        - F.lit(8.0) * F.col("digit_ratio")
-        + F.lit(0.3) * F.col("avg_wlen")
-    )
-    scored = feat.select(
-        "y",
-        portable_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("score"),
-    )
+    scored = scored_en(spark, sf_dir)
     grp = scored.groupBy("score").agg(
         F.sum("y").cast("bigint").alias("pos_at"),
         (F.count(F.lit(1)) - F.sum("y")).cast("bigint").alias("neg_at"),
@@ -1229,84 +1057,6 @@ def q_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("(10000 * num2 + n_pos * n_neg) div (2 * n_pos * n_neg)")
         .cast("bigint")
         .alias("auc_x10000"),
-    )
-
-
-# The classifier-metric fixture: a quality-classifier sigmoid scoring
-# lang='en' membership, as (y, score) pairs. Shared by the classifier
-# queries here and in dataops7, dataops20 and dataops22.
-SQL_SCORED_EN = f"""
-    feat AS (
-        SELECT doc_id, lang,
-               CAST(len(w) AS BIGINT) AS n_words,
-               CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE)
-                   / len(w) AS avg_wlen,
-               CAST(len(list_filter(w, x -> x IN
-                   ('the','a','of','and','to','in','is'))) AS DOUBLE)
-                   / len(w) AS stop_ratio,
-               CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)
-                   / length(text) AS digit_ratio
-        FROM (SELECT doc_id, lang, text,
-                     list_filter(string_split(text, ' '), x -> x <> '') AS w
-              FROM documents)
-        WHERE len(w) > 0 AND length(text) > 0
-    ),
-    scored AS (
-        SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-               {sql_portable_round(
-                   "1.0 / (1.0 + exp(-("
-                   "-2.0 + 0.02 * least(n_words, 200) + 6.0 * stop_ratio"
-                   " - 8.0 * digit_ratio + 0.3 * avg_wlen)))",
-                   6,
-               )} AS score
-        FROM feat
-    )
-"""
-
-
-def scored_en(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark twin of :data:`SQL_SCORED_EN`."""
-    docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split("text", " "), lambda x: x != "")
-    feat = (
-        docs.select("doc_id", "lang", "text", words.alias("w"))
-        .filter((F.size("w") > 0) & (F.length("text") > 0))
-        .select(
-            (F.col("lang") == "en").cast("int").alias("y"),
-            F.size("w").cast("bigint").alias("n_words"),
-            (
-                F.aggregate(
-                    "w", F.lit(0).cast("bigint"), lambda acc, x: acc + F.length(x)
-                ).cast("double")
-                / F.size("w")
-            ).alias("avg_wlen"),
-            (
-                F.size(
-                    F.filter(
-                        "w",
-                        lambda x: x.isin(
-                            "the", "a", "of", "and", "to", "in", "is"
-                        ),
-                    )
-                ).cast("double")
-                / F.size("w")
-            ).alias("stop_ratio"),
-            (
-                F.length(F.regexp_replace("text", "[^0-9]", "")).cast("double")
-                / F.length("text")
-            ).alias("digit_ratio"),
-        )
-    )
-    z = (
-        F.lit(-2.0)
-        + F.lit(0.02) * F.least(F.col("n_words"), F.lit(200)).cast("double")
-        + F.lit(6.0) * F.col("stop_ratio")
-        - F.lit(8.0) * F.col("digit_ratio")
-        + F.lit(0.3) * F.col("avg_wlen")
-    )
-    return feat.select(
-        "y",
-        portable_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("score"),
     )
 
 
@@ -1591,11 +1341,10 @@ def q_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_vocab_coverage",
-    oracle="""
+    oracle=f"""
     WITH counts AS (
         SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM (SELECT UNNEST(list_filter(string_split(text, ' '),
-                                        x -> x <> '')) AS word
+        FROM (SELECT UNNEST({sql_tokenize("text")}) AS word
               FROM documents)
         GROUP BY word
     ),
@@ -1629,7 +1378,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_token_budget_trim). One corpus explode + word hash-agg is the
     only full-data stage."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split("text", " "), lambda x: x != "")
+    words = tokenize("text")
     counts = (
         docs.select(F.explode(words).alias("word"))
         .groupBy("word")
@@ -1664,14 +1413,12 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_source_overlap",
-    oracle="""
+    oracle=f"""
     WITH sh AS (
         SELECT DISTINCT source,
-               unnest(list_transform(
-                   generate_series(1, greatest(len(w) - 2, 0)),
-                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS s
+               unnest({sql_word_shingles("w", 3)}) AS s
         FROM (SELECT source,
-                     list_filter(string_split(text, ' '), x -> x <> '') AS w
+                     {sql_tokenize("text")} AS w
               FROM documents)
     ),
     sizes AS (
@@ -1713,7 +1460,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
 
-    words = F.filter(F.split("text", " "), lambda x: x != "")
+    words = tokenize("text")
     # ONE shuffle keyed on the shingle builds each shingle's sorted
     # source set (collect_set doubles as the DISTINCT); the inverted
     # index persists in a bounded slot because sizes and pair counts
@@ -1835,13 +1582,13 @@ def q_dup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ttr_by_length",
-    oracle="""
+    oracle=f"""
     WITH per_doc AS (
         SELECT doc_id,
                CAST(len(w) AS BIGINT) AS n_tokens,
                CAST(len(list_distinct(w)) AS BIGINT) AS n_types
         FROM (SELECT doc_id,
-                     list_filter(string_split(text, ' '), x -> x <> '') AS w
+                     {sql_tokenize("text")} AS w
               FROM documents)
         WHERE len(w) > 0
     ),
@@ -1870,7 +1617,7 @@ def q_ttr_by_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     (within-doc) and q_word_entropy (corpus-level). Map-only
     extraction into one 6-key hash-agg."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split("text", " "), lambda x: x != "")
+    words = tokenize("text")
     per_doc = (
         docs.select("doc_id", words.alias("w"))
         .filter(F.size("w") > 0)
@@ -1905,10 +1652,10 @@ def q_ttr_by_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_chunk_documents",
-    oracle="""
+    oracle=f"""
     WITH w AS (
         SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS words
+               {sql_tokenize("text")} AS words
         FROM documents
     ),
     st AS (
@@ -1942,7 +1689,7 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero shuffles before the presentation sort; output is corpus ×
     (n_words/stride) rows, the fan-out any chunker pays."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split("text", " "), lambda x: x != "")
+    words = tokenize("text")
     w = docs.select("doc_id", words.alias("w")).filter(F.size("w") > 0)
     st = w.select(
         "doc_id",
@@ -1962,10 +1709,10 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_sequence_packing",
-    oracle="""
+    oracle=f"""
     WITH t AS (
         SELECT source, doc_id,
-               CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
+               CAST(len({sql_tokenize("text")})
                     AS BIGINT) AS n_tokens
         FROM documents
     ),
@@ -2068,10 +1815,10 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_destutter",
-    oracle="""
+    oracle=f"""
     WITH t AS (
         SELECT source,
-               list_filter(string_split(text, ' '), x -> x <> '') AS ws
+               {sql_tokenize("text")} AS ws
         FROM documents
     ),
     marked AS (
@@ -2151,16 +1898,15 @@ def q_destutter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_gopher_repetition",
-    oracle="""
+    oracle=f"""
     WITH t AS (
         SELECT source,
-               list_filter(string_split(text, ' '), x -> x <> '') AS ws
+               {sql_tokenize("text")} AS ws
         FROM documents
     ),
     g AS (
         SELECT source,
-               list_transform(range(1, greatest(len(ws) - 1, 0) + 1),
-                              i -> ws[i] || ' ' || ws[i+1]) AS g2
+               {sql_word_shingles("ws", 2)} AS g2
         FROM t
     ),
     sig AS (

@@ -32,7 +32,17 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     term,
     term_sum,
 )
-from stockmarketdata_dwb_etl_spark.functions.text import tokenize, word_shingles
+from stockmarketdata_dwb_etl_spark.functions.text import (
+    LANG_SCORE_COLUMNS,
+    lang_id,
+    lang_scores,
+    sql_lang_id,
+    sql_lang_score_columns,
+    sql_tokenize,
+    sql_word_shingles,
+    tokenize,
+    word_shingles,
+)
 from stockmarketdata_dwb_etl_spark.functions.vectors import cosine
 from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
 from stockmarketdata_dwb_etl_spark.operators.rank import (
@@ -45,10 +55,10 @@ from stockmarketdata_dwb_etl_spark.registry import query
 # DECIMAL(38,12); exact while |term| < ~9e3 per the 2^53 rule)
 _DEC12_T = "decimal(38,12)"
 
-_DUCK_TOKS = """
+_DUCK_TOKS = f"""
     toks AS (
         SELECT doc_id, source,
-               list_filter(string_split(text, ' '), x -> x <> '') AS ws
+               {sql_tokenize("text")} AS ws
         FROM documents
     )
 """
@@ -128,18 +138,17 @@ def q_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_winnowing",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS ws
+               {sql_tokenize("text")} AS ws
         FROM documents
     ),
     sh AS (
-        SELECT doc_id, i AS pos,
-               ('0x' || substr(md5(ws[i] || ' ' || ws[i+1] || ' '
-                    || ws[i+2] || ' ' || ws[i+3]), 1, 8))::BIGINT AS h
-        FROM toks,
-             unnest(generate_series(1, greatest(len(ws) - 3, 0))) AS t(i)
+        SELECT doc_id, pos,
+               ('0x' || substr(md5(g[pos]), 1, 8))::BIGINT AS h
+        FROM (SELECT doc_id, {sql_word_shingles("ws", 4)} AS g FROM toks),
+             unnest(generate_series(1, len(g))) AS t(pos)
     ),
     fp AS (
         SELECT doc_id, pos,
@@ -328,14 +337,11 @@ def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ngram_novelty",
-    oracle="""
+    oracle=f"""
     WITH dsh AS (
-        SELECT doc_id, source, unnest(list_distinct(list_transform(
-                   generate_series(1, greatest(len(ws) - 4, 0)),
-                   i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                        || ' ' || ws[i+3] || ' ' || ws[i+4]))) AS sh
+        SELECT doc_id, source, unnest(list_distinct({sql_word_shingles("ws", 5)})) AS sh
         FROM (SELECT doc_id, source,
-                     list_filter(string_split(text, ' '), x -> x <> '') AS ws
+                     {sql_tokenize("text")} AS ws
               FROM documents)
     ),
     first AS (
@@ -628,22 +634,15 @@ def q_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("probe_id")
 
 
-_DUCK_PRED = """
+_DUCK_PRED = f"""
     scored AS (
         SELECT doc_id, lang AS actual,
-               CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-                    ['the','a','of','and','to'])) AS INTEGER) AS en_score,
-               CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-                    ['el','la','de','y','que'])) AS INTEGER) AS es_score,
-               CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-                    ['der','die','das','und','zu'])) AS INTEGER) AS de_score
+               {sql_lang_score_columns(sql_tokenize("text"))}
         FROM documents
     ),
     pred AS (
         SELECT doc_id, actual,
-               CASE WHEN en_score >= es_score AND en_score >= de_score THEN 'en'
-                    WHEN es_score >= de_score THEN 'es'
-                    ELSE 'de' END AS predicted
+               {sql_lang_id(LANG_SCORE_COLUMNS)} AS predicted
         FROM scored
     )
 """
@@ -652,18 +651,12 @@ _DUCK_PRED = """
 def _predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, actual, predicted) — q_lang_id's stopword-profile argmax
     beside the stored ground-truth lang column."""
-    from stockmarketdata_dwb_etl_spark.functions.text import lang_scores
-
     docs = load_table(spark, sf_dir, "documents")
     scores = lang_scores(tokenize(F.col("text")))
-    en, es, de = (scores[k].cast("int") for k in ("en", "es", "de"))
     return docs.select(
         "doc_id",
         F.col("lang").alias("actual"),
-        F.when((en >= es) & (en >= de), "en")
-        .when(es >= de, "es")
-        .otherwise("de")
-        .alias("predicted"),
+        lang_id(scores).alias("predicted"),
     )
 
 
@@ -865,16 +858,11 @@ def q_class_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_brier_score",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
         SELECT doc_id,
                CAST(lang = 'en' AS INTEGER) AS y,
-               CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-                    ['the','a','of','and','to'])) AS INTEGER) AS en_score,
-               CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-                    ['el','la','de','y','que'])) AS INTEGER) AS es_score,
-               CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-                    ['der','die','das','und','zu'])) AS INTEGER) AS de_score
+               {sql_lang_score_columns(sql_tokenize("text"))}
         FROM documents
     ),
     probs AS (
@@ -923,8 +911,6 @@ def q_brier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     12dp-rounded terms, DECIMAL sum); zero-evidence docs are excluded
     and reported via n_scored. Scale: one scan, one hash-agg, scalar
     arithmetic after."""
-    from stockmarketdata_dwb_etl_spark.functions.text import lang_scores
-
     docs = load_table(spark, sf_dir, "documents")
     scores = lang_scores(tokenize(F.col("text")))
     en, es, de = (scores[k].cast("int") for k in ("en", "es", "de"))
@@ -960,14 +946,13 @@ def q_brier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_sentence_stats",
-    oracle="""
+    oracle=f"""
     WITH per_doc AS (
         SELECT source,
                list_filter(
                    list_transform(
                        regexp_split_to_array(text, '[.!?]+'),
-                       s -> len(list_filter(string_split(s, ' '),
-                                            w -> w <> ''))),
+                       s -> len({sql_tokenize("s")})),
                    c -> c > 0) AS sent_words
         FROM documents
     ),
@@ -1043,12 +1028,12 @@ def q_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_sentence_dedup",
-    oracle="""
+    oracle=f"""
     WITH sents AS (
         SELECT doc_id, source, trim(s) AS sent
         FROM documents,
              unnest(regexp_split_to_array(text, '[.!?]+')) AS t(s)
-        WHERE len(list_filter(string_split(trim(s), ' '), w -> w <> '')) >= 3
+        WHERE len({sql_tokenize("trim(s)")}) >= 3
     ),
     freq AS (
         SELECT md5(sent) AS h, CAST(COUNT(*) AS BIGINT) AS n_occ
@@ -1086,7 +1071,7 @@ def q_sentence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("source", F.trim(F.col("s")).alias("sent"))
         .filter(
-            F.size(F.filter(F.split(F.col("sent"), " "), lambda w: w != ""))
+            F.size(tokenize(F.col("sent")))
             >= 3
         )
         .select("source", F.md5("sent").alias("h"))
@@ -1455,11 +1440,9 @@ _SPLIT_BUCKET_SQL = (
     ),
     sh AS (
         SELECT doc_id, split,
-               list_distinct(list_transform(
-                   generate_series(1, greatest(len(w) - 2, 0)),
-                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingles
+               list_distinct({sql_word_shingles("w", 3)}) AS shingles
         FROM (SELECT doc_id, split,
-                     list_filter(string_split(text, ' '), x -> x <> '') AS w
+                     {sql_tokenize("text")} AS w
               FROM lab)
     ),
     sizes AS (SELECT doc_id, split, len(shingles) AS n FROM sh),

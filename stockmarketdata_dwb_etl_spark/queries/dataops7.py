@@ -29,6 +29,12 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     sql_term_sum,
     term_sum,
 )
+from stockmarketdata_dwb_etl_spark.functions.text import (
+    canonical_text,
+    sql_canonical_text,
+    sql_tokenize,
+    tokenize,
+)
 from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
 from stockmarketdata_dwb_etl_spark.operators.rank import global_prefix_sum
 from stockmarketdata_dwb_etl_spark.queries.dataops5 import SQL_SCORED_EN, scored_en
@@ -137,29 +143,7 @@ def q_regression_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_lift_gains",
     oracle=f"""
-    WITH feat AS (
-        SELECT doc_id, lang,
-               CAST(len(w) AS BIGINT) AS n_words,
-               CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE)
-                   / len(w) AS avg_wlen,
-               CAST(len(list_filter(w, x -> x IN
-                   ('the','a','of','and','to','in','is'))) AS DOUBLE)
-                   / len(w) AS stop_ratio,
-               CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)
-                   / length(text) AS digit_ratio
-        FROM (SELECT doc_id, lang, text,
-                     list_filter(string_split(text, ' '), x -> x <> '') AS w
-              FROM documents)
-        WHERE len(w) > 0 AND length(text) > 0
-    ),
-    scored AS (
-        SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-               {sql_portable_round(
-                   "1.0 / (1.0 + exp(-("
-                   "-2.0 + 0.02 * least(n_words, 200) + 6.0 * stop_ratio"
-                   " - 8.0 * digit_ratio + 0.3 * avg_wlen)))", 6)} AS score
-        FROM feat
-    ),
+    WITH {SQL_SCORED_EN},
     grp AS (
         SELECT score,
                CAST(COUNT(*) AS BIGINT) AS cnt,
@@ -210,48 +194,7 @@ def q_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative % of all positives captured. Scale: score hash-agg
     (state bounded by score resolution) + range-partitioned prefix sum
     over score groups + 10-row window."""
-    docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split("text", " "), lambda x: x != "")
-    feat = (
-        docs.select("doc_id", "lang", "text", words.alias("w"))
-        .filter((F.size("w") > 0) & (F.length("text") > 0))
-        .select(
-            (F.col("lang") == "en").cast("int").alias("y"),
-            F.size("w").cast("bigint").alias("n_words"),
-            (
-                F.aggregate(
-                    "w", F.lit(0).cast("bigint"), lambda acc, x: acc + F.length(x)
-                ).cast("double")
-                / F.size("w")
-            ).alias("avg_wlen"),
-            (
-                F.size(
-                    F.filter(
-                        "w",
-                        lambda x: x.isin(
-                            "the", "a", "of", "and", "to", "in", "is"
-                        ),
-                    )
-                ).cast("double")
-                / F.size("w")
-            ).alias("stop_ratio"),
-            (
-                F.length(F.regexp_replace("text", "[^0-9]", "")).cast("double")
-                / F.length("text")
-            ).alias("digit_ratio"),
-        )
-    )
-    z = (
-        F.lit(-2.0)
-        + F.lit(0.02) * F.least(F.col("n_words"), F.lit(200)).cast("double")
-        + F.lit(6.0) * F.col("stop_ratio")
-        - F.lit(8.0) * F.col("digit_ratio")
-        + F.lit(0.3) * F.col("avg_wlen")
-    )
-    scored = feat.select(
-        "y",
-        portable_round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("score"),
-    )
+    scored = scored_en(spark, sf_dir)
     grp = scored.groupBy("score").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
         F.sum("y").cast("bigint").alias("pos"),
@@ -499,7 +442,7 @@ def q_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH f AS (
         SELECT source,
-               CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
+               CAST(len({sql_tokenize("text")})
                     AS BIGINT) AS w,
                CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
                     AS BIGINT) AS s,
@@ -537,9 +480,7 @@ def q_flesch_reading(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     f = docs.select(
         "source",
-        F.size(F.filter(F.split("text", " "), lambda x: x != ""))
-        .cast("bigint")
-        .alias("w"),
+        F.size(tokenize("text")).cast("bigint").alias("w"),
         F.greatest(F.regexp_count("text", F.lit(r"[.!?]+")), F.lit(1))
         .cast("bigint")
         .alias("s"),
@@ -849,9 +790,7 @@ def q_log_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_burrows_delta",
     oracle=f"""
     WITH words AS (
-        SELECT source, unnest(list_filter(string_split(
-                   trim(regexp_replace(lower(text), ' +', ' ', 'g')), ' '),
-                   x -> x <> '')) AS w
+        SELECT source, unnest({sql_tokenize(sql_canonical_text("text"))}) AS w
         FROM documents
     ),
     wc AS (
@@ -914,10 +853,10 @@ def q_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle for counts, a 20-row broadcast vocabulary, k×20 z-cells —
     the pair join is catalog-sized."""
     docs = load_table(spark, sf_dir, "documents")
-    ctext = F.trim(F.regexp_replace(F.lower(F.col("text")), " +", " "))
+    ctext = canonical_text(F.col("text"))
     words = docs.select(
         "source",
-        F.explode(F.filter(F.split(ctext, " "), lambda x: x != "")).alias("w"),
+        F.explode(tokenize(ctext)).alias("w"),
     )
     wc = bounded_persist(
         words.groupBy("source", "w").agg(
@@ -989,12 +928,10 @@ def q_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_concordance",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split(
-                   trim(regexp_replace(lower(text), ' +', ' ', 'g')), ' '),
-                   x -> x <> '') AS ws
+               {sql_tokenize(sql_canonical_text("text"))} AS ws
         FROM documents
     ),
     hits AS (
@@ -1022,10 +959,10 @@ def q_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap. Scale: map-only — the per-doc position spine is the token
     array's own index space; no shuffle until the bounded TakeOrdered."""
     docs = load_table(spark, sf_dir, "documents")
-    ctext = F.trim(F.regexp_replace(F.lower(F.col("text")), " +", " "))
+    ctext = canonical_text(F.col("text"))
     toks = docs.select(
         "doc_id",
-        F.filter(F.split(ctext, " "), lambda x: x != "").alias("ws"),
+        tokenize(ctext).alias("ws"),
     )
     hits = (
         toks.select(
@@ -1063,12 +1000,10 @@ def q_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_skipgram_cooc",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split(
-                   trim(regexp_replace(lower(text), ' +', ' ', 'g')), ' '),
-                   x -> x <> '') AS ws
+               {sql_tokenize(sql_canonical_text("text"))} AS ws
         FROM documents
     ),
     pairs AS (
@@ -1098,10 +1033,8 @@ def q_skipgram_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break. Scale: fanout is a constant ×2 of token count; one
     shuffle on the pair key; TakeOrdered for the cap."""
     docs = load_table(spark, sf_dir, "documents")
-    ctext = F.trim(F.regexp_replace(F.lower(F.col("text")), " +", " "))
-    toks = docs.select(
-        F.filter(F.split(ctext, " "), lambda x: x != "").alias("ws")
-    )
+    ctext = canonical_text(F.col("text"))
+    toks = docs.select(tokenize(ctext).alias("ws"))
     pair_list = F.expr(
         "flatten(transform(ws, (x, i) ->"
         " filter(transform(sequence(1, 2),"
@@ -1120,12 +1053,10 @@ def q_skipgram_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_word_burstiness",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split(
-                   trim(regexp_replace(lower(text), ' +', ' ', 'g')), ' '),
-                   x -> x <> '') AS ws
+               {sql_tokenize(sql_canonical_text("text"))} AS ws
         FROM documents
     ),
     nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM toks),
@@ -1175,10 +1106,10 @@ def q_word_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     word-grain rollup; top-30 by exact count with lexicographic
     tie-break."""
     docs = load_table(spark, sf_dir, "documents")
-    ctext = F.trim(F.regexp_replace(F.lower(F.col("text")), " +", " "))
+    ctext = canonical_text(F.col("text"))
     toks = docs.select(
         "doc_id",
-        F.filter(F.split(ctext, " "), lambda x: x != "").alias("ws"),
+        tokenize(ctext).alias("ws"),
     )
     nd = toks.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     wc = (
@@ -1226,9 +1157,7 @@ def _duck_hex1(expr: str) -> str:
     oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split(
-                   trim(regexp_replace(lower(text), ' +', ' ', 'g')), ' '),
-                   x -> x <> '') AS ws
+               {sql_tokenize(sql_canonical_text("text"))} AS ws
         FROM documents
     ),
     flags AS (
@@ -1270,10 +1199,10 @@ def q_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     scheme implies). Scale: map-only — per-position flags are pure
     hash arithmetic inside one array transform; no shuffle at all."""
     docs = load_table(spark, sf_dir, "documents")
-    ctext = F.trim(F.regexp_replace(F.lower(F.col("text")), " +", " "))
+    ctext = canonical_text(F.col("text"))
     toks = docs.select(
         "doc_id",
-        F.filter(F.split(ctext, " "), lambda x: x != "").alias("ws"),
+        tokenize(ctext).alias("ws"),
     )
 
     def start(i):
@@ -1343,7 +1272,7 @@ def q_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
                CASE WHEN bucket < 230 THEN 'train'
                     WHEN bucket < 243 THEN 'val'
                     ELSE 'test' END AS split,
-               list_filter(string_split(text, ' '), x -> x <> '') AS ws
+               {sql_tokenize("text")} AS ws
         FROM b
     ),
     tr_uni AS (
@@ -1416,7 +1345,7 @@ def q_lm_cross_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "lang",
             split.alias("split"),
-            F.filter(F.split("text", " "), lambda x: x != "").alias("ws"),
+            tokenize("text").alias("ws"),
         ),
         "lmx-split-tokens",
     )
@@ -1484,7 +1413,7 @@ _BPE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
         SELECT lang,
                CAST(len(regexp_extract_all(text, '{_BPE_RE}')) AS BIGINT)
                    AS n_bpe,
-               CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
+               CAST(len({sql_tokenize("text")})
                    AS BIGINT) AS n_words
         FROM documents
     ),
@@ -1521,9 +1450,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_bpe = F.size(
         F.regexp_extract_all(F.col("text"), F.lit(_BPE_RE), F.lit(0))
     ).cast("bigint")
-    n_words = F.size(
-        F.filter(F.split("text", " "), lambda x: x != "")
-    ).cast("bigint")
+    n_words = F.size(tokenize("text")).cast("bigint")
     d = (
         docs.select("lang", n_bpe.alias("n_bpe"), n_words.alias("n_words"))
         .filter(F.col("n_words") > 0)
@@ -1552,12 +1479,10 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_prefix",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id, n_chars,
-               list_filter(string_split(
-                   trim(regexp_replace(lower(text), ' +', ' ', 'g')), ' '),
-                   x -> x <> '') AS ws
+               {sql_tokenize(sql_canonical_text("text"))} AS ws
         FROM documents
     ),
     pfx AS (
@@ -1591,11 +1516,11 @@ def q_dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 32-char prefix hash; text never moves. Scale: the
     q_dedup_exact posture with a prefix key; top-100 deterministic."""
     docs = load_table(spark, sf_dir, "documents")
-    ctext = F.trim(F.regexp_replace(F.lower(F.col("text")), " +", " "))
+    ctext = canonical_text(F.col("text"))
     toks = docs.select(
         "doc_id",
         "n_chars",
-        F.filter(F.split(ctext, " "), lambda x: x != "").alias("ws"),
+        tokenize(ctext).alias("ws"),
     ).filter(F.size("ws") > 0)
     pfx = toks.select(
         "doc_id",

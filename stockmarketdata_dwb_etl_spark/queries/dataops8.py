@@ -28,7 +28,15 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     portable_round,
     sql_portable_round,
 )
-from stockmarketdata_dwb_etl_spark.functions.text import lang_scores, tokenize
+from stockmarketdata_dwb_etl_spark.functions.text import (
+    LANG_SCORE_COLUMNS,
+    lang_id,
+    lang_scores,
+    sql_lang_id,
+    sql_lang_score_columns,
+    sql_tokenize,
+    tokenize,
+)
 from stockmarketdata_dwb_etl_spark.operators.cache import bounded_persist
 from stockmarketdata_dwb_etl_spark.queries.reports import _HEX
 from stockmarketdata_dwb_etl_spark.registry import query
@@ -45,7 +53,7 @@ _DUCK_TOK_BUCKET = (
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, lang,
-               unnest(list_filter(string_split(text, ' '), x -> x <> ''))
+               unnest({sql_tokenize("text")})
                    AS tok
         FROM documents
     ),
@@ -156,22 +164,14 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_lang_id_confusion",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
         SELECT doc_id, lang,
-               CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-                    ['the','a','of','and','to'])) AS INTEGER) AS en_score,
-               CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-                    ['el','la','de','y','que'])) AS INTEGER) AS es_score,
-               CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-                    ['der','die','das','und','zu'])) AS INTEGER) AS de_score
+               {sql_lang_score_columns(sql_tokenize("text"))}
         FROM documents),
     pred AS (
         SELECT doc_id, lang,
-               CASE WHEN en_score >= es_score AND en_score >= de_score
-                    THEN 'en'
-                    WHEN es_score >= de_score THEN 'es'
-                    ELSE 'de' END AS predicted
+               {sql_lang_id(LANG_SCORE_COLUMNS)} AS predicted
         FROM scored),
     cells AS (
         SELECT lang, predicted, CAST(COUNT(*) AS BIGINT) AS n_docs
@@ -199,14 +199,7 @@ def q_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan + one (lang,predicted) hash-agg."""
     docs = load_table(spark, sf_dir, "documents")
     scores = lang_scores(tokenize(F.col("text")))
-    en, es, de = (scores[k].cast("int") for k in ("en", "es", "de"))
-    pred = docs.select(
-        "lang",
-        F.when((en >= es) & (en >= de), "en")
-        .when(es >= de, "es")
-        .otherwise("de")
-        .alias("predicted"),
-    )
+    pred = docs.select("lang", lang_id(scores).alias("predicted"))
     cells = pred.groupBy("lang", "predicted").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
     )

@@ -24,6 +24,7 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     sql_term_sum,
     term_sum,
 )
+from stockmarketdata_dwb_etl_spark.functions.text import sql_word_shingles
 from stockmarketdata_dwb_etl_spark.registry import query
 
 _HEX = "0123456789abcdef"
@@ -408,8 +409,7 @@ def q_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     bg AS (
         SELECT DISTINCT lang, split,
-               unnest(list_transform(range(1, len(ws)),
-                                     i -> ws[i] || ' ' || ws[i + 1])) AS bg
+               unnest({sql_word_shingles("ws", 2)}) AS bg
         FROM base WHERE split IS NOT NULL AND len(ws) >= 2
     ),
     flags AS (
@@ -911,9 +911,7 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     g AS (
         SELECT lang,
-               md5(unnest(list_transform(range(1, len(ws) - 3),
-                   i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-                        || ' ' || ws[i+3] || ' ' || ws[i+4]))) AS h
+               md5(unnest({sql_word_shingles("ws", 5)})) AS h
         FROM d WHERE len(ws) >= 5
     ),
     c AS (

@@ -6,7 +6,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
+from stockmarketdata_dwb_etl_spark.functions.exact import (
+    portable_round,
+    sql_portable_round,
+)
+from stockmarketdata_dwb_etl_spark.functions.text import (
+    sql_canonical_text,
+    sql_distinct_shingle_ratio,
+    sql_tokenize,
+)
 
 from pipelines.stock_ingest import build_gold
 from stockmarketdata_dwb_etl_spark.registry import query
@@ -139,29 +147,25 @@ def q_pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CORPUS_PIPELINE_ORACLE = """
+CORPUS_PIPELINE_ORACLE = f"""
     WITH canon AS (
         SELECT doc_id, lang,
-               trim(regexp_replace(lower(text), ' +', ' ', 'g')) AS ctext
+               {sql_canonical_text("text")} AS ctext
         FROM documents
     ),
     sig AS (
         SELECT doc_id, lang, ctext,
                md5(ctext) AS digest,
                CAST(len(ws) AS BIGINT) AS n_tokens,
-               (CAST(floor(CAST((CASE WHEN len(ws) < 3 THEN 1.0
-                    ELSE CAST(len(list_distinct(list_transform(
-                         generate_series(1, greatest(len(ws) - 2, 0)),
-                         i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])))
-                         AS DOUBLE)
-                         / greatest(len(ws) - 2, 1) END) AS DOUBLE)
-                    * 10000.0 + 0.5) AS DOUBLE) / 10000.0) AS distinct_ratio,
-               (CAST(floor(CAST((CAST(length(regexp_replace(ctext,
-                    '[^a-z ]', '', 'g')) AS DOUBLE)
-                    / greatest(length(ctext), 1)) AS DOUBLE)
-                    * 10000.0 + 0.5) AS DOUBLE) / 10000.0) AS alpha_ratio
+               {sql_portable_round(sql_distinct_shingle_ratio("ws", 3), 4)}
+                   AS distinct_ratio,
+               {sql_portable_round(
+                   "CAST(length(regexp_replace(ctext, '[^a-z ]', '', 'g'))"
+                   " AS DOUBLE) / greatest(length(ctext), 1)",
+                   4,
+               )} AS alpha_ratio
         FROM (SELECT doc_id, lang, ctext,
-                     list_filter(string_split(ctext, ' '), x -> x <> '') AS ws
+                     {sql_tokenize("ctext")} AS ws
               FROM canon)
     ),
     gated AS (

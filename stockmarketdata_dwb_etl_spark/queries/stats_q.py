@@ -31,6 +31,15 @@ from stockmarketdata_dwb_etl_spark.functions.exact import (
     sql_term_sum,
     term_sum,
 )
+from stockmarketdata_dwb_etl_spark.functions.text import (
+    LANG_SCORE_COLUMNS,
+    lang_id,
+    lang_scores,
+    sql_lang_id,
+    sql_lang_score_columns,
+    sql_tokenize,
+    tokenize,
+)
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.operators.rank import global_row_number
 from stockmarketdata_dwb_etl_spark.registry import query
@@ -759,22 +768,14 @@ def q_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_mcnemar",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
         SELECT lang AS actual,
-               CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-                    ['the','a','of','and','to'])) AS INTEGER) AS en_score,
-               CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-                    ['el','la','de','y','que'])) AS INTEGER) AS es_score,
-               CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
-                    ['der','die','das','und','zu'])) AS INTEGER) AS de_score
+               {sql_lang_score_columns(sql_tokenize("text"))}
         FROM documents
     ),
     paired AS (
-        SELECT (CASE WHEN en_score >= es_score AND en_score >= de_score
-                       THEN 'en'
-                     WHEN es_score >= de_score THEN 'es'
-                     ELSE 'de' END) = actual AS a_right,
+        SELECT ({sql_lang_id(LANG_SCORE_COLUMNS)}) = actual AS a_right,
                actual = 'en' AS b_right
         FROM scored
     ),
@@ -813,15 +814,8 @@ def q_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     of integers, floor-rounded. Scale: one scan, one count-agg — the
     discordant-cell counts are the only state."""
     docs = load_table(spark, sf_dir, "documents")
-    from stockmarketdata_dwb_etl_spark.functions.text import lang_scores, tokenize
-
     scores = lang_scores(tokenize(F.col("text")))
-    en, es, de = (scores[k].cast("int") for k in ("en", "es", "de"))
-    predicted = (
-        F.when((en >= es) & (en >= de), "en")
-        .when(es >= de, "es")
-        .otherwise("de")
-    )
+    predicted = lang_id(scores)
     paired = docs.select(
         (predicted == F.col("lang")).alias("a_right"),
         (F.col("lang") == "en").alias("b_right"),

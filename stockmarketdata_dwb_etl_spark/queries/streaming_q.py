@@ -23,7 +23,12 @@ from stockmarketdata_dwb_etl_spark.functions.bars import (
 from stockmarketdata_dwb_etl_spark.functions.exact import portable_round
 from stockmarketdata_dwb_etl_spark.catalog import load_table
 from stockmarketdata_dwb_etl_spark.functions.exact import exact_sum, sql_exact_sum
-from stockmarketdata_dwb_etl_spark.functions.text import word_shingles
+from stockmarketdata_dwb_etl_spark.functions.text import (
+    distinct_shingle_ratio,
+    sql_distinct_shingle_ratio,
+    sql_tokenize,
+    tokenize,
+)
 from stockmarketdata_dwb_etl_spark.registry import query
 from stockmarketdata_dwb_etl_spark.streaming.jobs import (
     instant_of,
@@ -604,27 +609,15 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_quality_gate",
-    oracle="""
+    oracle=f"""
     WITH sig AS (
         SELECT doc_id, lang,
-               len(list_filter(string_split(text, ' '), x -> x <> ''))
-                   AS n_tokens,
-               CASE WHEN len(list_filter(string_split(text, ' '),
-                             x -> x <> '')) < 3 THEN 1.0 ELSE
-                 len(list_distinct(list_transform(
-                     generate_series(1, greatest(len(list_filter(
-                         string_split(text, ' '), x -> x <> '')) - 2, 0)),
-                     i -> list_filter(string_split(text, ' '),
-                              x -> x <> '')[i] || ' '
-                          || list_filter(string_split(text, ' '),
-                              x -> x <> '')[i+1] || ' '
-                          || list_filter(string_split(text, ' '),
-                              x -> x <> '')[i+2])))::DOUBLE
-                 / greatest(len(list_filter(string_split(text, ' '),
-                       x -> x <> '')) - 2, 1) END AS distinct_ratio,
+               len(ws) AS n_tokens,
+               {sql_distinct_shingle_ratio("ws", 3)} AS distinct_ratio,
                length(regexp_replace(text, '[^A-Za-z ]', '', 'g'))::DOUBLE
                  / greatest(length(text), 1) AS alpha_ratio
-        FROM documents
+        FROM (SELECT doc_id, lang, text, {sql_tokenize("text")} AS ws
+              FROM documents)
     )
     SELECT doc_id, lang,
            CAST(n_tokens AS BIGINT) AS n_tokens,
@@ -650,18 +643,10 @@ def q_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     chunks = prepare_doc_chunks(spark, sf_dir)
     stream = read_docs_stream(spark, chunks)
-    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    toks = tokenize(F.col("text"))
     with_toks = stream.withColumn("__toks", toks)
-    # slice/zip_with form (functions/text.py::word_shingles): an
-    # element_at comprehension re-evaluates __toks per gram per position
-    # whenever an optimizer rewrite (predicate pushdown, collapse)
-    # inlines the alias — the corpus-pipeline round-7 bug class.
-    g3 = word_shingles(F.col("__toks"), 3)
     n_tok = F.size("__toks")
-    distinct_ratio = F.when(F.size("__toks") < 3, F.lit(1.0)).otherwise(
-        F.size(F.array_distinct(g3)).cast("double")
-        / F.greatest(F.size("__toks") - 2, F.lit(1))
-    )
+    distinct_ratio = distinct_shingle_ratio(F.col("__toks"), 3)
     alpha_ratio = (
         F.length(F.regexp_replace("text", "[^A-Za-z ]", "")).cast("double")
         / F.greatest(F.length("text"), F.lit(1))

@@ -58,10 +58,6 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 #:   - r12 tranche (THIS front): the final 40 never-sampled (26
 #:     cheapest-first originals + 12 dataops17/18) + 8 new dataops19
 #:     + the pre-validated streaming pair dead last -> full 520/520.
-#: Each round: re-time, re-front-load, dry-run the EXACT front-50 via
-#: scripts/round_close.py before handoff. Round-11 VM re-timings for the
-#: staged block: scripts/tranche_timings_r11.json; round-12 additions
-#: timed at birth (this file's PRIORITY comment).
 PRIORITY = (
     # --- r12 front-50: the 40 staged from r11 (26 cheapest-first
     # originals + the 12 dataops17/18 additions) + the 10 CHEAPEST
@@ -71,12 +67,11 @@ PRIORITY = (
     # 522/528 cumulative certification if the driver runs the whole
     # tranche (the 6 heavier additions stage at positions 51+ for
     # r13). Ordering stays cheapest-first
-    # (round-11-VM warm timings, scripts/tranche_timings_r11.json, with
-    # the round-12 additions slotted by their birth-run timings), the
-    # six heaviest non-streaming entries at positions 43-48 and the
-    # two streaming entries DEAD LAST (pre-validated 2x on fresh JVMs
-    # in r11: 9.4/9.0 s and 13.1/11.7 s; re-confirmed by round_close
-    # on this VM), so a driver time-cut only costs the retryable tail.
+    # (round-11-VM warm timings, with the round-12 additions slotted
+    # by their birth-run timings), the six heaviest non-streaming
+    # entries at positions 43-48 and the two streaming entries DEAD
+    # LAST (pre-validated 2x on fresh JVMs in r11: 9.4/9.0 s and
+    # 13.1/11.7 s), so a driver time-cut only costs the retryable tail.
     # Warm sum ~205 s — deliberately the whole remainder: the r11
     # verdict's #1 gap is certification evidence, and every entry here
     # has already passed the full differential at BOTH scales.

@@ -14,6 +14,7 @@ production).
 
 from __future__ import annotations
 
+import glob
 import os
 from contextlib import contextmanager
 
@@ -81,34 +82,42 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
-def prepare_event_chunks(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:
-    """Materialize events as n_chunks ts-range-partitioned parquet files —
-    the replay source. Range partitioning makes file order track event time
-    so watermark progression during replay resembles a live stream.
-    Idempotent per sf_dir."""
+def _stamp_mtimes(paths: list[str]) -> None:
+    """The file-stream source replays files in modification-time order,
+    but a parallel write gives every part file the same mtime — arrival
+    order would be arbitrary and a watermark would late-drop whole
+    chunks. Stamp strictly increasing mtimes in the order of ``paths``."""
+    base = 1_600_000_000
+    for i, path in enumerate(paths):
+        os.utime(path, (base + i, base + i))
+
+
+def _land_chunks(
+    spark: SparkSession, sf_dir: str, table: str, key: str, subdir: str, n_chunks: int
+) -> str:
+    """Materialize ``table`` as n_chunks ``key``-range-partitioned parquet
+    files under ``SCRATCH/subdir/<fixture tag>``, mtimes stamped in
+    part-file (= key-range) order so the file stream replays in key
+    order. Idempotent per sf_dir."""
     from stockmarketdata_dwb_etl_spark.scratch import fixture_tag
 
-    tag = fixture_tag(sf_dir)
-    out = os.path.join(SCRATCH, "stream_chunks", tag)
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
+    out = os.path.join(SCRATCH, subdir, fixture_tag(sf_dir))
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
         (
-            load_table(spark, sf_dir, "events")
-            .repartitionByRange(n_chunks, "ts")
+            load_table(spark, sf_dir, table)
+            .repartitionByRange(n_chunks, key)
             .write.mode("overwrite")
             .parquet(out)
         )
-        # The file-stream source replays files in modification-time order,
-        # but a parallel write gives every part file the same mtime —
-        # arrival order would be arbitrary and the watermark would
-        # late-drop whole chunks. Stamp strictly increasing mtimes in
-        # part-file (= ts-range) order so replay order tracks event time.
-        import glob
-
-        base = 1_600_000_000
-        for i, path in enumerate(sorted(glob.glob(os.path.join(out, "part-*")))):
-            os.utime(path, (base + i, base + i))
+        _stamp_mtimes(sorted(glob.glob(os.path.join(out, "part-*"))))
     return out
+
+
+def prepare_event_chunks(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:
+    """Materialize events as n_chunks ts-range-partitioned parquet files —
+    the replay source. Range partitioning makes file order track event time
+    so watermark progression during replay resembles a live stream."""
+    return _land_chunks(spark, sf_dir, "events", "ts", "stream_chunks", n_chunks)
 
 
 DOCS_SCHEMA = T.StructType(
@@ -125,26 +134,8 @@ DOCS_SCHEMA = T.StructType(
 def prepare_doc_chunks(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:
     """Materialize documents as n_chunks doc_id-range-partitioned parquet
     files — the corpus replay source (the events-chunk recipe applied to
-    the documents table; mtimes stamped in chunk order so the file
-    stream replays deterministically). Idempotent per sf_dir."""
-    from stockmarketdata_dwb_etl_spark.scratch import fixture_tag
-
-    tag = fixture_tag(sf_dir)
-    out = os.path.join(SCRATCH, "doc_chunks", tag)
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        (
-            load_table(spark, sf_dir, "documents")
-            .repartitionByRange(n_chunks, "doc_id")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-        import glob
-
-        base = 1_600_000_000
-        for i, path in enumerate(sorted(glob.glob(os.path.join(out, "part-*")))):
-            os.utime(path, (base + i, base + i))
-    return out
+    the documents table)."""
+    return _land_chunks(spark, sf_dir, "documents", "doc_id", "doc_chunks", n_chunks)
 
 
 def read_docs_stream(spark: SparkSession, chunk_dir: str) -> DataFrame:
@@ -608,7 +599,6 @@ def prepare_warm_start_stream(
     is IN-BAND data, not an engine feature, so it works on any runtime
     (transformWithStateInPandas' initialState needs protobuf this
     container lacks). Idempotent per (sf_dir, split_at)."""
-    import glob
     import shutil
 
     from stockmarketdata_dwb_etl_spark.scratch import fixture_tag
@@ -663,9 +653,7 @@ def prepare_warm_start_stream(
         (src_file,) = glob.glob(os.path.join(tmp, "part-*"))
         os.rename(src_file, os.path.join(out, f"chunk-{i:03d}-events.parquet"))
         shutil.rmtree(tmp)
-    base = 1_600_000_000
-    for i, p in enumerate(sorted(glob.glob(os.path.join(out, "chunk-*")))):
-        os.utime(p, (base + i, base + i))
+    _stamp_mtimes(sorted(glob.glob(os.path.join(out, "chunk-*"))))
     open(marker, "w").close()
     return out
 
